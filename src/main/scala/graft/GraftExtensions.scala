@@ -16,61 +16,43 @@ import graft.functions.{DotProductF, DotProductL, Int8CodesExpr}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("dot_f"),
-      new ExpressionInfo(classOf[DotProductF].getName, "dot_f"),
-      (exprs: Seq[Expression]) => {
-        // Explicit arity check: extra args would otherwise be silently
-        // IGNORED (wrong results, no diagnostic) and one arg would throw
-        // an index error instead of an analysis error.
-        require(exprs.length == 2,
-          s"dot_f expects exactly 2 arguments, got ${exprs.length}")
-        DotProductF(exprs.head, exprs(1))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("dot_l"),
-      new ExpressionInfo(classOf[DotProductL].getName, "dot_l"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2,
-          s"dot_l expects exactly 2 arguments, got ${exprs.length}")
-        DotProductL(exprs.head, exprs(1))
-      }))
-    e.injectFunction((
-      FunctionIdentifier("quantize_i8"),
-      new ExpressionInfo(classOf[Int8CodesExpr].getName, "quantize_i8"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1,
-          s"quantize_i8 expects exactly 1 argument, got ${exprs.length}")
-        Int8CodesExpr(exprs.head)
-      }))
+    GraftExtensions.functions.foreach { f =>
+      e.injectFunction((FunctionIdentifier(f.name),
+        new ExpressionInfo(f.cls.getName, f.name), f.checkedBuilder))
+    }
     e.injectOptimizerRule(_ => graft.plans.BucketedIntervalJoin)
   }
 }
 
 object GraftExtensions {
+  /** One SQL function: name, expression class (for `DESCRIBE FUNCTION`),
+    * arity and builder over exactly `arity` arguments.
+    */
+  private final case class Fn(name: String, cls: Class[_], arity: Int,
+      build: Seq[Expression] => Expression) {
+    // Explicit arity check: extra args would otherwise be silently
+    // IGNORED (wrong results, no diagnostic) and too few would throw an
+    // index error instead of an analysis error.
+    val checkedBuilder: Seq[Expression] => Expression = { exprs =>
+      require(exprs.length == arity, s"$name expects exactly $arity " +
+        s"argument${if (arity == 1) "" else "s"}, got ${exprs.length}")
+      build(exprs)
+    }
+  }
+
+  /** The one table both registration paths read. */
+  private val functions = Seq(
+    Fn("dot_f", classOf[DotProductF], 2, a => DotProductF(a(0), a(1))),
+    Fn("dot_l", classOf[DotProductL], 2, a => DotProductL(a(0), a(1))),
+    Fn("quantize_i8", classOf[Int8CodesExpr], 1, a => Int8CodesExpr(a(0))))
+
   /** Same registrations for an already-built session: the SQL function
     * via the registry, the optimizer rule via experimental
     * extraOptimizations (both session-scoped).
     */
   def register(spark: SparkSession): Unit = {
-    org.apache.spark.sql.GraftSqlBridge.registerFunction(spark, "dot_f",
-      exprs => {
-        require(exprs.length == 2,
-          s"dot_f expects exactly 2 arguments, got ${exprs.length}")
-        DotProductF(exprs.head, exprs(1))
-      })
-    org.apache.spark.sql.GraftSqlBridge.registerFunction(spark, "dot_l",
-      exprs => {
-        require(exprs.length == 2,
-          s"dot_l expects exactly 2 arguments, got ${exprs.length}")
-        DotProductL(exprs.head, exprs(1))
-      })
-    org.apache.spark.sql.GraftSqlBridge.registerFunction(spark, "quantize_i8",
-      exprs => {
-        require(exprs.length == 1,
-          s"quantize_i8 expects exactly 1 argument, got ${exprs.length}")
-        Int8CodesExpr(exprs.head)
-      })
+    functions.foreach(f =>
+      org.apache.spark.sql.GraftSqlBridge.registerFunction(spark, f.name, f.checkedBuilder))
     if (!spark.experimental.extraOptimizations.contains(graft.plans.BucketedIntervalJoin))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ graft.plans.BucketedIntervalJoin

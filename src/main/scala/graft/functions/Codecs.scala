@@ -46,9 +46,6 @@ object Codecs {
   def isCorruptRaw(data: Column): Column =
     !JsonFunctions.jsonValid(data.cast("string"))
 
-  def isCorrupt(decoded: Column): Column =
-    decoded.isNull || decoded.getField(CorruptField).isNotNull
-
   /** payload struct → NDJSON bytes (reference common.py:27-29:
     * `json.dumps(...) + "\n"` then b64encode; base64 applied separately).
     * `ignoreNullFields = false`: json.dumps keeps null-valued keys, and

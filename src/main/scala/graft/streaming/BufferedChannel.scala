@@ -92,11 +92,6 @@ final class BufferedChannel(root: String, maxBytes: Long, maxAgeMillis: Long,
   }
   refreshStagedBytes()
 
-  // The last failure the background age tick swallowed (surfaced for
-  // monitoring; cleared by the next successful tick).
-  @volatile private var tickFailure: Option[Throwable] = None
-  def lastAgeTickFailure: Option[Throwable] = tickFailure
-
   private val ageTick: Option[ScheduledFuture[_]] =
     if (maxAgeMillis <= 0 || maxAgeMillis >= BufferedChannel.NoTickBeyondMs) None
     else {
@@ -107,10 +102,9 @@ final class BufferedChannel(root: String, maxBytes: Long, maxAgeMillis: Long,
         // silently void the "or 60 s" half of the flush contract on the
         // first transient IO failure. Flush is retry-safe (promoted
         // parts moved, the rest still staged and registered), so catch,
-        // record, and let the next tick retry.
-        () => try { maybeFlush(System.currentTimeMillis()); tickFailure = None }
+        // log, and let the next tick retry.
+        () => try maybeFlush(System.currentTimeMillis())
           catch { case scala.util.control.NonFatal(e) =>
-            tickFailure = Some(e)
             System.err.println(s"BufferedChannel[$root] age-tick flush failed " +
               s"(will retry next tick): $e")
           },

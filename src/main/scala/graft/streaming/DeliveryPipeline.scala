@@ -2,6 +2,9 @@ package graft.streaming
 
 import java.util.UUID
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -15,25 +18,30 @@ import graft.model.DeliveryStatus._
   *
   * {{{
   * source (envelope stream, data = base64 NDJSON on the wire)
-  *   ├── writeStream A: raw backup      → 01-backup/         (A9)
-  *   │     └── injected write failures  → 02-backup-failed/
-  *   └── writeStream B: decode → transform → 3-way route     (A3–A5)
-  *         └── foreachBatch: NDJSON fan-out                   (A6–A8)
-  *               Ok               → 03-success/  (buffered, A7)
-  *               Dropped          → (counted, not delivered — Firehose
-  *                                   drops these by contract)
-  *               ProcessingFailed → 04-failed/   (buffered, A7)
+  *   └── writeStream: decode once → persist with the backup-failure flag
+  *         └── foreachBatch (one epoch id for every channel)
+  *               ├── backup thread: raw copy → 01-backup/         (A9)
+  *               │     └── injected write failures → 02-backup-failed/
+  *               └── transform → 3-way route → NDJSON fan-out (A3–A8)
+  *                     Ok               → 03-success/  (buffered, A7)
+  *                     Dropped          → (counted, not delivered — Firehose
+  *                                         drops these by contract)
+  *                     ProcessingFailed → 04-failed/   (buffered, A7)
   * }}}
   *
   * Design notes, scale-first:
-  * - ONE source lineage feeds both queries (reference fan-out A11: two
-  *   delivery streams on the same Kinesis stream). Each micro-batch is a
-  *   distributed DataFrame; the transform is a single codegen'd
+  * - ONE streaming query per delivery stream, like the reference's one
+  *   Firehose stream that writes both the raw backup and the transformed
+  *   output (iac/s2_app.py:720-828). Each micro-batch is read and decoded
+  *   once, persisted, and feeds all four channels under one epoch id.
+  *   The backup pair runs on a thread of its own so its writes overlap
+  *   the delivery writes; it is joined before the epoch returns, so a
+  *   failed backup fails the epoch. The transform is a single codegen'd
   *   projection — no per-record driver work anywhere.
   * - Wire format: the reference envelope carries base64 data
   *   (tests/test_lbd_to_s3.py:18, lbd/common.py:14); `wireBase64 = true`
-  *   runs `unbase64` as the first step of the shared lineage, so both
-  *   the backup copy and the delivery transform see raw NDJSON bytes —
+  *   runs `unbase64` as the first step of the lineage, so both the
+  *   backup copy and the delivery transform see raw NDJSON bytes —
   *   exactly what Firehose hands its Lambda and its S3 backup.
   * - Buffering — the reference buffers TWICE (iac/s2_app.py:810-815):
   *   records→Lambda at 3 MB/60 s and transform-output→S3 at 5 MB/60 s.
@@ -104,33 +112,32 @@ object DeliveryPipeline {
     def finish(): Unit = { successBuf.foreach(_.close()); failedBuf.foreach(_.close()) }
   }
 
-  /** Handle over the running dual-sink graph. Termination through ANY of
+  /** Handle over the running delivery query. Termination through ANY of
     * the methods here delivers the final partial buffers (`sinks.finish()`
     * is also hooked to query termination via listener, so even direct
-    * `StreamingQuery.stop()` on the members flushes).
+    * `StreamingQuery.stop()` flushes).
     */
-  final case class Pipeline(backup: StreamingQuery, delivery: StreamingQuery, sinks: Sinks) {
-    /** Await both queries; on termination deliver the final partial
-      * buffers. Returns true iff both terminated within the timeout.
+  final case class Pipeline(delivery: StreamingQuery, sinks: Sinks) {
+    /** The same query: it writes the backup channels too. */
+    def backup: StreamingQuery = delivery
+
+    /** Await the query; on termination deliver the final partial
+      * buffers. Returns true iff it terminated within the timeout.
       */
     def awaitTermination(timeoutMs: Long): Boolean = {
-      val t0 = System.nanoTime()
-      val a = backup.awaitTermination(timeoutMs)
-      val remaining = math.max(1L, timeoutMs - (System.nanoTime() - t0) / 1000000L)
-      val b = delivery.awaitTermination(remaining)
-      if (a && b) sinks.finish()
-      a && b
+      val done = delivery.awaitTermination(timeoutMs)
+      if (done) sinks.finish()
+      done
     }
 
-    /** Drain all available input, then flush (keeps the queries running). */
+    /** Drain all available input, then flush (keeps the query running). */
     def processAllAvailable(): Unit = {
-      backup.processAllAvailable()
       delivery.processAllAvailable()
       sinks.successBuf.foreach(_.flush())
       sinks.failedBuf.foreach(_.flush())
     }
 
-    def stop(): Unit = { backup.stop(); delivery.stop(); sinks.finish() }
+    def stop(): Unit = { delivery.stop(); sinks.finish() }
   }
 
   /** Effectively-once upgrade for at-least-once sources: drop replayed
@@ -172,8 +179,10 @@ object DeliveryPipeline {
     start(source.envelope(spark), payloadSchema, sinks, checkpointRoot,
       dropIf, wireBase64 = source.wireBase64)
 
-  /** Start the full dual-sink graph over a streaming envelope frame
-    * (columns: recordId, approximateArrivalTimestamp, data). The returned
+  /** Start the delivery query over a streaming envelope frame
+    * (columns: recordId, approximateArrivalTimestamp, data): one query,
+    * checkpointed at `$checkpointRoot/delivery`, writes all four
+    * channels from each epoch. The returned
     * [[Pipeline]] flushes the delivery buffers on termination; callers
     * that bypass it are covered by the termination listener.
     *
@@ -203,54 +212,52 @@ object DeliveryPipeline {
       lambdaFn: Option[LambdaStage.BatchFn] = None,
       lambdaMaxBytes: Long = LambdaStage.DefaultMaxInvocationBytes): Pipeline = {
 
-    // A3 first half: base64 wire form → raw NDJSON bytes, shared by both
-    // sinks (Firehose decodes transport base64 before backup + Lambda).
+    // A3 first half: base64 wire form → raw NDJSON bytes, shared by the
+    // backup and the transform (Firehose decodes transport base64 before
+    // backup + Lambda).
     val env =
       if (wireBase64)
         envelope.withColumn("data", Codecs.decodeBase64(col("data").cast("string")))
       else envelope
 
-    // A9: raw pre-transform copy, untouched bytes; injected write
-    // failures land in 02-backup-failed (4-channel audit contract).
-    val backupQ = env
-      .select(col("recordId"), col("data").cast("string").as("line"))
-      .writeStream
-      .queryName(s"graft-backup-${UUID.randomUUID()}")
-      .trigger(trigger)
-      .option("checkpointLocation", s"$checkpointRoot/backup")
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val flagged = batch
-          .withColumn("_bf", coalesce(backupFailIf(col("recordId")), lit(false)))
-          .persist()
-        try {
-          writeChannel(flagged.filter(!col("_bf")).select("line"),
-            s"${sinks.backup}/epoch=$epochId")
-          writeChannel(flagged.filter(col("_bf")).select("line"),
-            s"${sinks.backupFailed}/epoch=$epochId")
-        } finally flagged.unpersist()
-      }
-      .start()
-
-    // A3–A8: decode → route → fan-out, staged through the A7 buffers.
     val deliveryQ = env.writeStream
       .queryName(s"graft-delivery-${UUID.randomUUID()}")
       .trigger(trigger)
       .option("checkpointLocation", s"$checkpointRoot/delivery")
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val transformed = lambdaFn match {
-          case Some(fn) => LambdaStage.invoke(batch, fn, lambdaMaxBytes)
-          case None     => Codecs.transformEnvelope(batch, payloadSchema, dropIf)
-        }
-        val routed = transformed
-          .withColumn("line", col("data").cast("string"))
-          .select("result", "line")
-          .persist()
+        val src = batch.select(col("recordId"), col("data"),
+          coalesce(backupFailIf(col("recordId")), lit(false)).as("_bf")).persist()
         try {
-          deliver(routed.filter(col("result") === Ok).select("line"),
-            sinks.successBuf, sinks.success, epochId)
-          deliver(routed.filter(col("result") === ProcessingFailed).select("line"),
-            sinks.failedBuf, sinks.failed, epochId)
-        } finally routed.unpersist()
+          // A9: raw pre-transform copy, untouched bytes; injected write
+          // failures land in 02-backup-failed (4-channel audit contract).
+          // A thread this epoch creates inherits the epoch's Spark local
+          // properties (job group, SQL execution id); a pooled thread
+          // keeps those of whichever query first spawned it.
+          val backup = Future {
+            val raw = src.select(col("_bf"), col("data").cast("string").as("line"))
+            writeChannel(raw.filter(!col("_bf")), s"${sinks.backup}/epoch=$epochId")
+            writeChannel(raw.filter(col("_bf")), s"${sinks.backupFailed}/epoch=$epochId")
+          }(ExecutionContext.fromExecutor(r => new Thread(r, s"graft-backup-$epochId").start()))
+          // A3–A8: transform → route → fan-out, staged through the A7 buffers.
+          try {
+            val transformed = lambdaFn match {
+              case Some(fn) => LambdaStage.invoke(src, fn, lambdaMaxBytes)
+              case None     => Codecs.transformEnvelope(src, payloadSchema, dropIf)
+            }
+            val routed = transformed
+              .withColumn("line", col("data").cast("string"))
+              .select("result", "line")
+              .persist()
+            try {
+              deliver(routed.filter(col("result") === Ok).select("line"),
+                sinks.successBuf, sinks.success, epochId)
+              deliver(routed.filter(col("result") === ProcessingFailed).select("line"),
+                sinks.failedBuf, sinks.failed, epochId)
+            } finally routed.unpersist()
+          } finally Await.ready(backup, Duration.Inf)
+          // A failed backup write fails the epoch: it is retried on restart.
+          Await.result(backup, Duration.Inf)
+        } finally src.unpersist()
       }
       .start()
 
@@ -291,7 +298,7 @@ object DeliveryPipeline {
       spark.streams.removeListener(listener)
     }
 
-    Pipeline(backupQ, deliveryQ, sinks)
+    Pipeline(deliveryQ, sinks)
   }
 
   /** One channel write for one epoch: staged through the size-OR-time

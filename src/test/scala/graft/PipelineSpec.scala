@@ -257,6 +257,74 @@ class PipelineSpec extends SparkSpec {
     assert(ids == 80)
   }
 
+  test("one query per pipeline: each source record is read once") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft-one-query").toString
+    (0 until 3).foreach { f =>
+      (1 to 20).map(i => s"""{"recordId": "f$f-r$i", "line": "{\\"event_id\\": ${f * 100 + i}, \\"user_id\\": 1, \\"event_type\\": \\"view\\", \\"value\\": 50.0}"}""")
+        .toDF("value").coalesce(1).write.mode("append").text(s"$tmp/in")
+    }
+    val envelope = spark.readStream
+      .schema(envelopeSchema)
+      .option("maxFilesPerTrigger", 1)
+      .json(s"$tmp/in")
+      .select(col("recordId"), lit(0L).as("approximateArrivalTimestamp"),
+        col("line").cast("binary").as("data"))
+
+    val before = spark.streams.active.map(_.id).toSet
+    val sinks = Sinks(s"$tmp/out")
+    val pipe = DeliveryPipeline.start(envelope, payloadSchema, sinks, s"$tmp/ckpt",
+      dropIf = _ => lit(false), trigger = Trigger.ProcessingTime("100 milliseconds"))
+    try {
+      pipe.processAllAvailable()
+      val mine = spark.streams.active.filterNot(q => before(q.id))
+      assert(mine.map(_.id).toSeq == Seq(pipe.delivery.id), "exactly one active query per pipeline")
+      assert(pipe.backup eq pipe.delivery)
+      val read = pipe.delivery.recentProgress.map(_.numInputRows).sum
+      assert(read == 60, s"source rows read $read times for 60 records")
+    } finally pipe.stop()
+    assert(DeliveryPipeline.countChannel(spark, sinks.backup) == 60)
+    assert(DeliveryPipeline.countChannel(spark, sinks.success) == 60)
+    assert(!new java.io.File(s"$tmp/ckpt/backup").exists, "no second checkpoint")
+  }
+
+  test("a failing backup write fails the epoch; a restart conserves all four channels") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft-backup-fail").toString
+    val n = 60
+    // Every 10th record is Dropped (value < 10); r7 and r42 fail their
+    // backup write by injection.
+    (1 to n).map(i => s"""{"recordId": "r$i", "line": "{\\"event_id\\": $i, \\"user_id\\": 1, \\"event_type\\": \\"view\\", \\"value\\": ${if (i % 10 == 0) 5 else 50}.0}"}""")
+      .toDF("value").coalesce(1).write.mode("overwrite").text(s"$tmp/in")
+    def start(sinks: Sinks) = DeliveryPipeline.start(readEnvelope(s"$tmp/in"), payloadSchema,
+      sinks, s"$tmp/ckpt", dropIf = p => p.getField("value") < 10,
+      backupFailIf = rid => rid.isin("r7", "r42"))
+
+    // A regular file where the backup channel's directory goes: the
+    // epoch's backup write throws, and so must the epoch.
+    val sinks1 = Sinks(s"$tmp/out")
+    val blocker = java.nio.file.Paths.get(sinks1.backup)
+    Files.createDirectories(blocker.getParent)
+    Files.write(blocker, "not a directory".getBytes("UTF-8"))
+    val p1 = start(sinks1)
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](p1.awaitTermination(120000))
+    p1.stop()
+    assert(Files.isRegularFile(blocker))
+
+    Files.delete(blocker)
+    val sinks2 = Sinks(s"$tmp/out")
+    assert(start(sinks2).awaitTermination(120000))
+    val dropped = n / 10
+    assert(DeliveryPipeline.countChannel(spark, sinks2.backup) == n - 2)
+    assert(DeliveryPipeline.countChannel(spark, sinks2.backupFailed) == 2)
+    assert(DeliveryPipeline.countChannel(spark, sinks2.success) == n - dropped)
+    assert(DeliveryPipeline.countChannel(spark, sinks2.failed) == 0)
+    val ids = spark.read.text(sinks2.success + "/object-*")
+      .select(get_json_object(col("value"), "$.event_id").as("id"))
+    assert(ids.count() == n - dropped)
+    assert(ids.distinct().count() == n - dropped, "duplicate recordId in 03-success")
+  }
+
   test("a replayed flushed epoch is not re-delivered (watermark skip)") {
     import spark.implicits._
     val tmp = Files.createTempDirectory("graft-replay").toString
