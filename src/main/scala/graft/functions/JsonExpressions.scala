@@ -1,6 +1,7 @@
 package graft.functions
 
-import com.fasterxml.jackson.core.{JsonFactory, JsonParser, JsonToken}
+import com.fasterxml.jackson.core.{JsonFactory, JsonFactoryBuilder, JsonParser, JsonToken,
+  StreamReadConstraints}
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -22,8 +23,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * Exact-replay contract (vs `VariantBuilder.parseJson(s, false)`, the
   * engine behind try_parse_json — bytecode-audited, CodecSpec
   * property-pinned against try_parse_json itself):
-  *  - same default [[JsonFactory]] (strict RFC dialect, the same
-  *    stream-read constraints: nesting depth, number length);
+  *  - same [[JsonFactory]] dialect (strict RFC) and stream-read
+  *    constraints (number length; nesting depth pinned to the same
+  *    default cap, see [[JsonValidKernel.MaxNestingDepth]]);
   *  - ONE value is parsed; trailing bytes after a complete first value
   *    are never read (variant accepts "{} junk" — so does this);
   *  - empty / whitespace-only input is invalid (no first token);
@@ -40,7 +42,21 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object JsonValidKernel {
 
-  private val factory = new JsonFactory()
+  /** Jackson's default nesting cap, which `VariantBuilder.parseJson`
+    * gets from its own `new JsonFactory()`. Parity rests on that
+    * default staying this value: a deeper document is invalid here and
+    * null under try_parse_json only while the two caps agree (CodecSpec
+    * pins both sides at the cap and one past it). Pinned, so a
+    * process-wide `overrideDefaultStreamReadConstraints` cannot loosen
+    * this side; `walk` recurses once per level, so the cap also bounds
+    * its stack depth.
+    */
+  private[graft] val MaxNestingDepth = 1000
+
+  private val factory: JsonFactory = new JsonFactoryBuilder()
+    .streamReadConstraints(StreamReadConstraints.defaults().rebuild()
+      .maxNestingDepth(MaxNestingDepth).build())
+    .build()
 
   def isValid(s: UTF8String): Boolean = {
     if (s == null) return false

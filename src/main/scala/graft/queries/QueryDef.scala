@@ -111,30 +111,38 @@ object Tables {
   private val fileLenCache =
     scala.collection.concurrent.TrieMap.empty[String, Long]
 
-  private def fileLen(spark: SparkSession, path: String): Long =
-    fileLenCache.getOrElseUpdate(path, {
-      val p = new org.apache.hadoop.fs.Path(path)
-      try p.getFileSystem(spark.sessionState.newHadoopConf()).getFileStatus(p).getLen
-      catch { case scala.util.control.NonFatal(_) => 0L }
+  /** `read` once per path, caching only a success: a failed read (the
+    * path does not exist yet, or is not a readable file) is retried by
+    * the next call, so a file written after the first probe is seen.
+    */
+  private def cachedRead[V](cache: scala.collection.concurrent.TrieMap[String, V],
+      path: String)(read: => V): Option[V] =
+    cache.get(path).orElse(scala.util.Try(read).toOption.map { v =>
+      cache.putIfAbsent(path, v).getOrElse(v)
     })
 
-  private def footerMeta(spark: SparkSession, path: String): (Int, Long) =
-    footerCache.getOrElseUpdate(path, {
-      // An unreadable footer (e.g. a DIRECTORY-shaped table a caller
-      // fed through the single-file loader) safely declines the
-      // rebalance instead of failing the read.
+  /** File size in bytes; 0 when the path cannot be read. */
+  private[graft] def fileLen(spark: SparkSession, path: String): Long =
+    cachedRead(fileLenCache, path) {
+      val p = new org.apache.hadoop.fs.Path(path)
+      p.getFileSystem(spark.sessionState.newHadoopConf()).getFileStatus(p).getLen
+    }.getOrElse(0L)
+
+  // An unreadable footer (e.g. a DIRECTORY-shaped table a caller fed
+  // through the single-file loader) safely declines the rebalance
+  // instead of failing the read.
+  private[graft] def footerMeta(spark: SparkSession, path: String): (Int, Long) =
+    cachedRead(footerCache, path) {
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(path),
+        spark.sessionState.newHadoopConf())
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
       try {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(path),
-          spark.sessionState.newHadoopConf())
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try {
-          import scala.jdk.CollectionConverters._
-          (r.getRowGroups.size,
-            r.getRowGroups.asScala.map(_.getRowCount).sum)
-        } finally r.close()
-      } catch { case scala.util.control.NonFatal(_) => (Int.MaxValue, 0L) }
-    })
+        import scala.jdk.CollectionConverters._
+        (r.getRowGroups.size,
+          r.getRowGroups.asScala.map(_.getRowCount).sum)
+      } finally r.close()
+    }.getOrElse((Int.MaxValue, 0L))
 
   /** `events.ts` has shipped as two different parquet types across
     * testdata generations, so the reader adapts to the file's schema

@@ -26,18 +26,15 @@ object TrainingData {
 
   /** doc_id + lowercase tokens — the corpus's FIRST materialized
     * pipeline artifact, memoized per (session, dir) like the text
-    * index built over it (round-16; VERDICT r15 #6's "tokenized/corpus
-    * stats are already memo-shaped"): ~30 registry keys start from
-    * exactly this frame, and each used to re-run the tokenizer over
-    * the raw corpus per call. Tokenization is deterministic (one regex
-    * split), so sharing changes no result (the model-memo argument);
-    * the localCheckpoint materializes values and drops the scan
-    * lineage, and the applicationId in the key stops a later session
-    * in the same JVM from reading a stopped context's blocks. The
-    * cold build cost stays visible in the bench's queries_first.
+    * index built over it: ~30 registry keys start from exactly this
+    * frame, and each would otherwise re-run the tokenizer over the raw
+    * corpus per call. Tokenization is deterministic (one regex split),
+    * so sharing changes no result (the [[memo]] argument); the
+    * localCheckpoint materializes values and drops the scan lineage.
+    * The cold build cost stays visible in the bench's queries_first.
     */
   private def tokenized(s: SparkSession, dir: String): DataFrame =
-    memo(s"tokenized|${s.sparkContext.applicationId}|$dir") {
+    artifact(s, dir, "tokenized") {
       tokenizedDf(t(s, dir, "documents")).localCheckpoint(true)
     }
 
@@ -114,14 +111,11 @@ object TrainingData {
     * `buildTextIndex` already materializes its frames via
     * localCheckpoint — sharing keeps ONE resident copy per scale
     * factor instead of one per key per rep. Counts are exact integers
-    * (deterministic), so sharing changes no result (the model-memo
-    * argument). Unlike the trained models (driver-side arrays,
-    * session-independent), these entries cache SESSION-BOUND frames —
-    * the applicationId in the key stops a later session in the same
-    * JVM from being served checkpoint blocks of a stopped context.
+    * (deterministic), so sharing changes no result (the [[memo]]
+    * argument).
     */
   private def textIndexFor(s: SparkSession, dir: String): graft.operators.Retrieval.TextIndex =
-    memo(s"textindex|${s.sparkContext.applicationId}|$dir|tokens") {
+    artifact(s, dir, "textindex|tokens") {
       graft.operators.Retrieval.buildTextIndex(s, tokenized(s, dir))
     }
 
@@ -133,7 +127,7 @@ object TrainingData {
     * caller forks its own entry.
     */
   private def chunkIndexFor(s: SparkSession, dir: String): graft.operators.Retrieval.TextIndex =
-    memo(s"chunkindex|${s.sparkContext.applicationId}|$dir|tokens|s32x24") {
+    artifact(s, dir, "chunkindex|tokens|s32x24") {
       graft.operators.Retrieval.buildTextIndex(s,
         graft.operators.Chunker.chunkTokens(tokenized(s, dir), size = 32, stride = 24)
           .select(concat_ws(":", col("doc_id"), col("chunk_id")).as("doc_id"),
@@ -147,7 +141,7 @@ object TrainingData {
     * the body's. Same memo contract as [[textIndexFor]].
     */
   private def titleIndexFor(s: SparkSession, dir: String): graft.operators.Retrieval.TextIndex =
-    memo(s"textindex-title8|${s.sparkContext.applicationId}|$dir|tokens") {
+    artifact(s, dir, "textindex-title8|tokens") {
       graft.operators.Retrieval.buildTextIndex(s,
         tokenized(s, dir).select(col("doc_id"),
           slice(col("toks"), 1, 8).as("toks")))
@@ -162,7 +156,7 @@ object TrainingData {
     * resident to the tiny pair set, not the lineage's shuffles.
     */
   private def jaccardPairs(s: SparkSession, dir: String): DataFrame =
-    memo(s"jacpairs|${s.sparkContext.applicationId}|$dir|sh3|t=0.8") {
+    artifact(s, dir, "jacpairs|sh3|t=0.8") {
       val sh = shingles(s, dir).cache()
       val out = jaccardPairsFrom(sh).localCheckpoint(true)
       sh.unpersist() // the checkpoint holds the VALUES; drop the lineage cache
@@ -211,21 +205,15 @@ object TrainingData {
       .filter(col("jaccard") >= 0.8)
   }
 
-  /** Per-(input dir, config) memo of trained ANN models. Training is
-    * DETERMINISTIC by construction (vec_id-ordered init, means snapped
-    * to the meanRound grid — the properties that make it
-    * oracle-replayable), so the cached model is exactly what retraining
-    * would produce, and sharing it across registry keys changes no
-    * result: a base rung and its recall rung (q76/q96, q77/q97,
-    * q78/q98, q99/q100) and the four IVF consumers each retrain the
-    * same model only because registry entries are independent
-    * functions. Keys spell out the full hyperparameter tuple alongside
-    * the dir, so a call site tuned away from its sharers forks its own
-    * entry instead of silently serving them a stale model. Models are
-    * small driver-side arrays (k·d floats), so the map stays
-    * O(configs) per scale factor. Per-JVM, which is the scope that
-    * matters: one Verify/Bench run executes the whole registry in one
-    * JVM.
+  /** The session-artifact memo behind [[artifact]]. Every artifact
+    * here is DETERMINISTIC by construction — trained models use
+    * vec_id-ordered init with means snapped to the meanRound grid (the
+    * properties that make them oracle-replayable), indexes and pair
+    * sets are exact integer arithmetic — so a cached entry is exactly
+    * what a rebuild would produce, and sharing it across registry keys
+    * changes no result: registry entries are independent functions,
+    * and without the memo a base rung and its recall rung, or the IVF
+    * consumers, would each rebuild the same artifact.
     *
     * Builds nest (the `tokenized` artifact is memoized and read inside
     * other memo builds), and `computeIfAbsent` forbids its mapping
@@ -245,6 +233,20 @@ object TrainingData {
     catch { case e: Throwable => modelMemo.remove(key, cell); throw e }
   }
 
+  /** The one spelling of an artifact key: `name` carries the artifact
+    * and its full configuration tuple (a caller tuned away from its
+    * sharers forks its own entry instead of being served a stale
+    * artifact), and the key always adds the session's applicationId
+    * and the input dir. Frame artifacts hold localCheckpoint blocks
+    * that a stopped context can no longer serve; keying driver-side
+    * models the same way means no call site decides whether an
+    * artifact is session-bound. One Verify/Bench run executes the
+    * whole registry in one session.
+    */
+  private def artifact[T <: AnyRef](s: SparkSession, dir: String, name: String)(
+      build: => T): T =
+    memo(s"$name|${s.sparkContext.applicationId}|$dir")(build)
+
   // --------------------------------------- Q33: vector similarity top-k
 
   /** Embedding width (max array size), memoized per (session, dir):
@@ -253,7 +255,7 @@ object TrainingData {
     * metadata of the corpus; the model-memo argument.
     */
   private def embDim(s: SparkSession, dir: String): Int =
-    memo(s"embdim|${s.sparkContext.applicationId}|$dir")(
+    artifact(s, dir, "embdim")(
       java.lang.Integer.valueOf(
         Option(t(s, dir, "embeddings").agg(max(size(col("embedding")))).head().get(0))
           .map(_.asInstanceOf[Int]).getOrElse(0))).intValue
@@ -316,8 +318,7 @@ object TrainingData {
     // count(*) then equals countDistinct(doc_id) exactly, but the
     // exchange carries vocab-sized (term, partial-count) rows with
     // map-side aggregation instead of every (term, doc_id) pair
-    // through countDistinct's two-phase expand (guide §2.3 — shuffle
-    // fewer bytes; the r15 LM-sweep discipline).
+    // through countDistinct's two-phase expand (shuffle fewer bytes).
     tokenized(s, dir)
       .select(explode(array_distinct(col("toks"))).as("term"))
       .groupBy("term")
@@ -447,7 +448,7 @@ object TrainingData {
     * [[textIndexFor]].
     */
   private def signatures(s: SparkSession, dir: String): DataFrame =
-    memo(s"minhashsig|${s.sparkContext.applicationId}|$dir|nh=$NH") {
+    artifact(s, dir, s"minhashsig|nh=$NH") {
       signaturesFromToks(tokenized(s, dir)).localCheckpoint(true)
     }
 
@@ -455,7 +456,7 @@ object TrainingData {
     signaturesFromToks(tokenizedDf(docs))
 
   private def signaturesFromToks(tk: DataFrame): DataFrame = {
-    // Fused gram-hash kernel (round-15): the signature path only ever
+    // Fused gram-hash kernel: the signature path only ever
     // consumes h64(shingle), so the shingle STRING is never
     // materialized — array_distinct collapses on the 60-bit hash
     // instead of the string, which is EXACTLY equivalent here even
@@ -804,21 +805,18 @@ object TrainingData {
     val docs = t(s, dir, "documents")
       .select(col("doc_id"), col("lang"), lower(col("text")).as("lo"))
       .select(col("doc_id"), col("lang"), charNgrams(col("lo"), 3).as("toks"))
-    // Model-memo (the q79/ANN precedent): the dense weight table is
-    // the train-once artifact; trainMulti localCheckpoints it, so the
-    // memoized model is session-materialized like the IVF models. The
-    // LOCALIZED form (the V×K map the broadcast join would ship anyway)
-    // is memoized beside it: scoring is then one compiled scan-side
-    // pass (functions/NbExpressions.scala) — the tf agg, the
-    // (doc, cls) evidence agg, and the class pivot were all
+    // Model-memo (the q79/ANN precedent): the train-once artifact is
+    // the LOCALIZED model (the V×K map the broadcast join would ship
+    // anyway) — localize collects the dense weight table, so the
+    // trained tables themselves need no entry. Scoring is then one
+    // compiled scan-side pass (functions/NbExpressions.scala) — the
+    // tf agg, the (doc, cls) evidence agg, and the class pivot were all
     // doc_id-keyed, so the kernel replaces BOTH corpus shuffles and
     // the pivot with per-document state; the only exchange left is
     // the output orderBy. NbLocalSpec pins the kernel against the
     // exchange spelling on the emitted rounded scores.
-    val model = memo(s"nbmulti|${s.sparkContext.applicationId}|$dir")(
-      graft.operators.NaiveBayes.trainMulti(docs, col("lang")))
-    val local = memo(s"nbmulti-local|${s.sparkContext.applicationId}|$dir")(
-      graft.operators.NaiveBayes.localize(model))
+    val local = artifact(s, dir, "nbmulti-local")(graft.operators.NaiveBayes.localize(
+      graft.operators.NaiveBayes.trainMulti(docs, col("lang"))))
     val classes = Seq("de", "en", "es", "fr", "zh")
     val ci = local.classes.zipWithIndex.toMap
     // Explicit-class projection (pivot(classes) semantics): a class
@@ -874,9 +872,8 @@ object TrainingData {
     * side, shared with DecontaminateSpec's exact-path reference).
     */
   def gram8Df(docs: DataFrame): DataFrame =
-    // Codegen'd gram kernel (round-14; was the interpreted
-    // transform(sequence(...)) HOF — see NgramExprSpec for the
-    // value-identity pin).
+    // Codegen'd gram kernel (value-identical to the
+    // transform(sequence(...)) HOF spelling — NgramExprSpec pins it).
     tokenizedDf(docs)
       .filter(size(col("toks")) >= 8)
       .select(col("doc_id"),
@@ -928,7 +925,7 @@ object TrainingData {
     // asserts it). The final step is a left_anti join, map-side after
     // AQE broadcasts the (small) contaminated-id set. Standard practice
     // for removing eval-set contamination from a 100 TB crawl.
-    // Round-15: the gram key is the 60-bit h64 digest (the q81 /
+    // The gram key is the 60-bit h64 digest (the q81 /
     // span-dedup exchange design) — the Bloom prefilter probes longs
     // (`mightContainLong`), the verification join carries 8-byte keys,
     // and the oracle hashes with the same portable h64 so parity is by
@@ -1001,9 +998,9 @@ object TrainingData {
        |    CAST((CAST(concat('0x', substr(md5(concat('$p', '|', CAST(d AS VARCHAR))), 1, 15)) AS BIGINT) & 1) * 2 - 1 AS DOUBLE)))
        |  >= 0 THEN '1' ELSE '0' END""".stripMargin
 
-  val q69_ann_lsh: QueryDef = q(
-    "q69_ann_lsh",
-    s"""WITH b AS (SELECT vec_id, embedding,
+  /** q69's oracle chain up to `ranked` — shared with q118. */
+  private val lshChainSql: String =
+    s"""b AS (SELECT vec_id, embedding,
        |        sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm,
        |        ${(0 until 8).map(lshBitSql).mkString(" || ")} AS bucket
        |      FROM embeddings),
@@ -1016,7 +1013,21 @@ object TrainingData {
        |      WHERE p.vec_id < 5),
        |ranked AS (SELECT probe_id, neighbor_id, cos,
        |        row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, neighbor_id) AS rnk
-       |      FROM pairs)
+       |      FROM pairs)""".stripMargin
+
+  /** q69's search, shared with q118: candidates only from the probe's
+    * 8-plane LSH bucket, top-5 for the vec_id < 5 probes.
+    */
+  private def lshTop5(s: SparkSession, dir: String): DataFrame = {
+    val emb = vectors(s, dir)
+    graft.operators.Similarity.lshSearch(s,
+      graft.operators.Similarity.hyperplaneLsh(emb, 8), emb.filter(col("vec_id") < 5),
+      nPlanes = 8, k = 5)
+  }
+
+  val q69_ann_lsh: QueryDef = q(
+    "q69_ann_lsh",
+    s"""WITH $lshChainSql
        |SELECT probe_id, neighbor_id, floor(cos * 100 + 0.5) / 100 AS cos_sim, CAST(rnk AS BIGINT) AS rnk
        |FROM ranked WHERE rnk <= 5 ORDER BY probe_id, rnk""".stripMargin
   ) { (s, dir) =>
@@ -1031,10 +1042,7 @@ object TrainingData {
     // q33's search restricted to 1/2^8 of the corpus per probe — the
     // trade a 100 TB corpus makes. Selection on the raw cosine;
     // rounding on emit only.
-    val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    val withB = graft.operators.Similarity.hyperplaneLsh(emb, 8)
-    graft.operators.Similarity
-      .lshSearch(s, withB, emb.filter(col("vec_id") < 5), nPlanes = 8, k = 5)
+    lshTop5(s, dir)
       .select(col("probe_id"), col("neighbor_id"),
         Par.r2(col("cos")).as("cos_sim"), col("rnk").cast("bigint").as("rnk"))
       .orderBy("probe_id", "rnk")
@@ -1182,9 +1190,12 @@ object TrainingData {
   private def ivfNormSql(e: String): String =
     s"sqrt(list_sum(list_transform($e, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
 
-  val q73_ann_ivf: QueryDef = q(
-    "q73_ann_ivf",
-    s"""WITH v AS (SELECT vec_id, embedding FROM embeddings),
+  /** q73's oracle chain up to the probe table `pe` — the 3-step Lloyd
+    * replay, the cell assignment `idx` and each probe's 2 nearest
+    * cells `pc` — shared with q83.
+    */
+  private val ivfChainSql: String =
+    s"""v AS (SELECT vec_id, embedding FROM embeddings),
        |c0 AS (SELECT CAST(rn - 1 AS INT) AS cell, embedding AS cv FROM
        |       (SELECT row_number() OVER (ORDER BY vec_id) AS rn, embedding FROM v) WHERE rn <= 8),
        |${ivfAssignSql("a1", "c0")}, ${ivfCentroidSql("c1", "a1", "c0")},
@@ -1196,7 +1207,35 @@ object TrainingData {
        |      row_number() OVER (PARTITION BY v.vec_id
        |        ORDER BY ${ivfSqDistSql("v.embedding", "c.cv")}, c.cell) AS rn
        |    FROM v CROSS JOIN c3 c WHERE v.vec_id < 5) WHERE rn <= 2),
-       |pe AS (SELECT vec_id AS probe_id, embedding AS pemb, ${ivfNormSql("embedding")} AS na FROM v WHERE vec_id < 5),
+       |pe AS (SELECT vec_id AS probe_id, embedding AS pemb, ${ivfNormSql("embedding")} AS na FROM v WHERE vec_id < 5)""".stripMargin
+
+  /** (vec_id, embedding): the corpus every ANN rung reads. */
+  private def vectors(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
+
+  /** The q73 coarse quantizer, shared by every IVF consumer (q73/q83,
+    * q75, q89, q139, q163, q180): deterministic k-means, init = first
+    * 8 by vec_id, 3 Lloyd steps, meanRound = 4. A consumer must not
+    * move centroids, so all of them index against this one model.
+    */
+  private def ivfModel(s: SparkSession, dir: String): graft.operators.Ivf.Model =
+    artifact(s, dir, "ivf|k=8|it=3|r=4")(
+      graft.operators.Ivf.train(s, vectors(s, dir), k = 8, iters = 3, meanRound = 4))
+
+  /** q73's search, shared with its q83 recall rung: top-5 cosine over
+    * each probe's 2 nearest cells, probes vec_id < 5.
+    */
+  private def ivfTop5(s: SparkSession, dir: String): DataFrame = {
+    val emb = vectors(s, dir)
+    val model = ivfModel(s, dir)
+    val indexed = graft.operators.Ivf.index(s, emb, model)
+    graft.operators.Ivf.search(s, indexed, model, emb.filter(col("vec_id") < 5),
+      k = 5, nprobe = 2)
+  }
+
+  val q73_ann_ivf: QueryDef = q(
+    "q73_ann_ivf",
+    s"""WITH $ivfChainSql,
        |scored AS (SELECT pc.probe_id, i2.vec_id AS neighbor_id,
        |    CASE WHEN pe.na = 0 OR ${ivfNormSql("i2.embedding")} = 0 THEN -1.0
        |         ELSE $ivfDotSql / (pe.na * ${ivfNormSql("i2.embedding")}) END AS cos
@@ -1222,20 +1261,15 @@ object TrainingData {
     // meanRound = 4: both engines snap each mean to a 1e-4 grid (floor
     // (m·1e4 + 0.5)/1e4) before the float cast, shrinking the collision
     // window by ~3 orders of magnitude below the already-tiny ulp case.
-    val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    val model = memo(s"ivf|$dir|k=8|it=3|r=4")(
-      graft.operators.Ivf.train(s, emb, k = 8, iters = 3, meanRound = 4))
-    val indexed = graft.operators.Ivf.index(s, emb, model)
-    val probes = emb.filter(col("vec_id") < 5)
-    graft.operators.Ivf.search(s, indexed, model, probes, k = 5, nprobe = 2)
+    ivfTop5(s, dir)
       .select(col("probe_id"), col("neighbor_id"),
         Par.r2(col("cos")).as("cos_sim"), col("rnk").cast("bigint").as("rnk"))
       .orderBy("probe_id", "rnk")
   }
 
-  val q74_quantized_ann: QueryDef = q(
-    "q74_quantized_ann",
-    s"""WITH v AS (SELECT vec_id, embedding,
+  /** q74's oracle chain up to `ranked` — shared with q119. */
+  private val int8ChainSql: String =
+    s"""v AS (SELECT vec_id, embedding,
        |        list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS mx
        |      FROM embeddings),
        |qz AS (SELECT vec_id,
@@ -1249,7 +1283,20 @@ object TrainingData {
        |              / (sqrt(CAST(p.nsq AS DOUBLE)) * sqrt(CAST(e.nsq AS DOUBLE))) END AS qcos
        |  FROM n p JOIN n e ON e.vec_id <> p.vec_id WHERE p.vec_id < 5),
        |ranked AS (SELECT probe_id, neighbor_id, qcos,
-       |    row_number() OVER (PARTITION BY probe_id ORDER BY qcos DESC, neighbor_id) AS rnk FROM pairs)
+       |    row_number() OVER (PARTITION BY probe_id ORDER BY qcos DESC, neighbor_id) AS rnk FROM pairs)""".stripMargin
+
+  /** q74's search, shared with q119: int8-coded brute-force top-5 for
+    * the vec_id < 5 probes.
+    */
+  private def int8Top5(s: SparkSession, dir: String): DataFrame = {
+    val emb = t(s, dir, "embeddings").select(col("vec_id").as("id"),
+      graft.operators.Quantize.int8Codes(col("embedding")).as("codes"))
+    graft.operators.Quantize.topKQuantized(emb, emb.filter(col("id") < 5), 5)
+  }
+
+  val q74_quantized_ann: QueryDef = q(
+    "q74_quantized_ann",
+    s"""WITH $int8ChainSql
        |SELECT probe_id, neighbor_id, floor(qcos * 100 + 0.5) / 100 AS qcos, CAST(rnk AS BIGINT) AS rnk
        |FROM ranked WHERE rnk <= 5 ORDER BY probe_id, rnk""".stripMargin
   ) { (s, dir) =>
@@ -1260,10 +1307,7 @@ object TrainingData {
     // order caveat at all. Quantization itself is double math with
     // explicit floor(x + 0.5) rounding on both engines. The top-k shape
     // is q33's broadcast-probe brute force over the coded corpus.
-    val emb = t(s, dir, "embeddings").select(col("vec_id").as("id"),
-      graft.operators.Quantize.int8Codes(col("embedding")).as("codes"))
-    val probes = emb.filter(col("id") < 5)
-    graft.operators.Quantize.topKQuantized(emb, probes, 5)
+    int8Top5(s, dir)
       .select(col("probe_id"), col("neighbor_id"),
         Par.r2(col("qcos")).as("qcos"), col("rnk").cast("bigint").as("rnk"))
       .orderBy("probe_id", "rnk")
@@ -1300,10 +1344,7 @@ object TrainingData {
     // sequential double fold (dot_f), so the threshold comparison is
     // engine-exact; the output carries only integer columns — no float
     // rendering in the hash at all.
-    val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    val model = memo(s"ivf|$dir|k=8|it=3|r=4")(
-      graft.operators.Ivf.train(s, emb, k = 8, iters = 3, meanRound = 4))
-    val indexed = graft.operators.Ivf.index(s, emb, model)
+    val indexed = graft.operators.Ivf.index(s, vectors(s, dir), ivfModel(s, dir))
     graft.operators.Dedup.semDedup(indexed, minCos = 0.4)
       .orderBy("vec_id")
   }
@@ -1354,6 +1395,25 @@ object TrainingData {
        |ranked AS (SELECT probe_id, neighbor_id, pq_cos,
        |    row_number() OVER (PARTITION BY probe_id ORDER BY pq_cos DESC, neighbor_id) AS rnk FROM scored)""".stripMargin
 
+  /** The PQ search of the q76/q78/q99 rungs and their recall rungs:
+    * 4 subspaces x 16 dims, 4-centroid codebooks trained on `vecs`
+    * (2 Lloyd steps, meanRound = 4), then ADC top-5 for the vec_id < 5
+    * probes drawn from the same space. `space` names `vecs` in the
+    * artifact key.
+    */
+  private def pqTop5(s: SparkSession, dir: String, space: String,
+      vecs: DataFrame): DataFrame = {
+    val model = artifact(s, dir, s"pq|$space|sub=4x16|k=4|it=2|r=4")(
+      graft.operators.Pq.train(s, vecs, nSub = 4, subDim = 16, k = 4, iters = 2,
+        meanRound = 4))
+    val encoded = graft.operators.Pq.encode(s, vecs, model)
+    graft.operators.Pq.search(s, encoded, model, vecs.filter(col("vec_id") < 5), k = 5)
+  }
+
+  /** q76's search over the raw corpus, shared with q96. */
+  private def pqRawTop5(s: SparkSession, dir: String): DataFrame =
+    pqTop5(s, dir, "raw", vectors(s, dir))
+
   val q76_pq_ann: QueryDef = q(
     "q76_pq_ann",
     s"""WITH $pqChainSql
@@ -1368,12 +1428,7 @@ object TrainingData {
     // is concatenation. The oracle replays training, encoding, and the
     // table adds with the same float-exact arithmetic as q73, so the
     // whole PQ path is hash-checked end-to-end.
-    val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    val model = memo(s"pq|$dir|sub=4x16|k=4|it=2|r=4")(graft.operators.Pq.train(s, emb,
-      nSub = 4, subDim = 16, k = 4, iters = 2, meanRound = 4))
-    val encoded = graft.operators.Pq.encode(s, emb, model)
-    val probes = emb.filter(col("vec_id") < 5)
-    graft.operators.Pq.search(s, encoded, model, probes, k = 5)
+    pqRawTop5(s, dir)
       .select(col("probe_id"), col("neighbor_id"),
         Par.r2(col("pq_cos")).as("pq_cos"), col("rnk").cast("bigint").as("rnk"))
       .orderBy("probe_id", "rnk")
@@ -1443,6 +1498,19 @@ object TrainingData {
        |ranked AS (SELECT probe_id, neighbor_id, pq_cos,
        |    row_number() OVER (PARTITION BY probe_id ORDER BY pq_cos DESC, neighbor_id) AS rnk FROM scored)""".stripMargin
 
+  /** q77's search, shared with q97: coarse prune to 2 of 4 cells,
+    * residual ADC top-5 for the vec_id < 5 probes.
+    */
+  private def ivfpqTop5(s: SparkSession, dir: String): DataFrame = {
+    val emb = vectors(s, dir)
+    val model = artifact(s, dir, "ivfpq|c=4x2|sub=4x16|k=4|it=2|r=4")(
+      graft.operators.IvfPq.train(s, emb, kCoarse = 4, coarseIters = 2, nSub = 4,
+        subDim = 16, kSub = 4, pqIters = 2, meanRound = 4))
+    val encoded = graft.operators.IvfPq.encode(s, emb, model)
+    graft.operators.IvfPq.search(s, encoded, model, emb.filter(col("vec_id") < 5),
+      k = 5, nprobe = 2)
+  }
+
   val q77_ivfpq_ann: QueryDef = q(
     "q77_ivfpq_ann",
     s"""WITH $ivfpqChainSql
@@ -1458,13 +1526,7 @@ object TrainingData {
     // decomposition, so the oracle replays the ENTIRE path (coarse
     // Lloyd chain, residuals, per-subspace chains, encoding, tables)
     // with q73's float-exact arithmetic.
-    val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    val model = memo(s"ivfpq|$dir|c=4x2|sub=4x16|k=4|it=2|r=4")(graft.operators.IvfPq.train(s, emb,
-      kCoarse = 4, coarseIters = 2, nSub = 4, subDim = 16, kSub = 4,
-      pqIters = 2, meanRound = 4))
-    val encoded = graft.operators.IvfPq.encode(s, emb, model)
-    val probes = emb.filter(col("vec_id") < 5)
-    graft.operators.IvfPq.search(s, encoded, model, probes, k = 5, nprobe = 2)
+    ivfpqTop5(s, dir)
       .select(col("probe_id"), col("neighbor_id"),
         Par.r2(col("pq_cos")).as("pq_cos"), col("rnk").cast("bigint").as("rnk"))
       .orderBy("probe_id", "rnk")
@@ -1534,6 +1596,16 @@ object TrainingData {
        |${(0 until 4).map(pqSubspaceSql(_, 16, 4, src = "p2")).mkString(",\n")},
        |${adcTailSql("p2")}""".stripMargin
 
+  /** The Householder-mixed corpus (Opq.rotation(64)) the q78 and q99
+    * rungs quantize.
+    */
+  private def rotated(s: SparkSession, dir: String): DataFrame =
+    graft.operators.Opq.rotate(s, vectors(s, dir), graft.operators.Opq.rotation(64))
+
+  /** q78's search over the rotated corpus, shared with q98. */
+  private def pqRotatedTop5(s: SparkSession, dir: String): DataFrame =
+    pqTop5(s, dir, "hh64", rotated(s, dir))
+
   val q78_opq_ann: QueryDef = q(
     "q78_opq_ann",
     s"""WITH $opqChainSql
@@ -1550,13 +1622,7 @@ object TrainingData {
     // The rotation is a narrow O(d) map recomputed per training pass at
     // this scale; a 100 TB pipeline materializes the rotated corpus
     // once (checkpoint/write) before training, like any derived table.
-    val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    val remb = graft.operators.Opq.rotate(s, emb, graft.operators.Opq.rotation(64))
-    val model = memo(s"pqrot|$dir|hh64|sub=4x16|k=4|it=2|r=4")(graft.operators.Pq.train(s, remb,
-      nSub = 4, subDim = 16, k = 4, iters = 2, meanRound = 4))
-    val encoded = graft.operators.Pq.encode(s, remb, model)
-    val probes = remb.filter(col("vec_id") < 5)
-    graft.operators.Pq.search(s, encoded, model, probes, k = 5)
+    pqRotatedTop5(s, dir)
       .select(col("probe_id"), col("neighbor_id"),
         Par.r2(col("pq_cos")).as("pq_cos"), col("rnk").cast("bigint").as("rnk"))
       .orderBy("probe_id", "rnk")
@@ -1581,6 +1647,26 @@ object TrainingData {
       |    FROM dtf JOIN c2 USING (w1, w2) JOIN c1 ON c1.w = dtf.w1 CROSS JOIN vc
       |    GROUP BY doc_id)""".stripMargin
 
+  /** Per-doc `n_bigrams` and raw `nll` under the add-one bigram LM —
+    * q79's model, shared by q79/q136/q140 (the Spark twin of
+    * [[lmScoredSql]]). The count tables are the reusable artifact a
+    * 100 TB run trains once and scores every shard against; training
+    * is deterministic, so sharing changes no result, and the bench's
+    * queries_first keeps the cold train path visible beside the
+    * memo-warm min. The LOCALIZED form (size-gated; the NB-kernel
+    * precedent) scores in one compiled scan-side pass — the tf agg,
+    * both count-table joins and the per-doc reduce were all
+    * doc_id-keyed, so no exchange is left. Above the gate (general
+    * vocabulary at scale) the join spelling runs unchanged.
+    */
+  private def lmScored(s: SparkSession, dir: String): DataFrame = {
+    val toks = tokenized(s, dir)
+    val model = artifact(s, dir, "ngramlm")(graft.operators.NgramLm.train(s, toks))
+    artifact(s, dir, "ngramlm-local")(graft.operators.NgramLm.localize(s, model))
+      .map(m => graft.operators.NgramLm.scoreLocal(toks, m))
+      .getOrElse(graft.operators.NgramLm.score(s, toks, model))
+  }
+
   val q79_lm_score: QueryDef = q(
     "q79_lm_score",
     s"""WITH $lmScoredSql
@@ -1594,24 +1680,9 @@ object TrainingData {
     // scoring is key-partitioned joins against the count tables (the
     // model artifact a 100 TB run trains once and reuses) and one
     // reduce per doc. The oracle replays train + score; r2 absorbs the
-    // engines' sum-order and ln last-ulp drift (q35 precedent).
-    val toks = tokenized(s, dir)
-    // Model-memo (the ANN-model precedent): the count tables are the
-    // reusable artifact a 100 TB run trains once and scores every
-    // shard against; training is deterministic so sharing changes no
-    // result, and the bench's queries_first keeps the cold train path
-    // visible beside the memo-warm min.
-    val model = memo(s"ngramlm|${s.sparkContext.applicationId}|$dir")(
-      graft.operators.NgramLm.train(s, toks))
-    // The LOCALIZED form (size-gated; the NB-kernel precedent) scores
-    // in one compiled scan-side pass — the tf agg, both count-table
-    // joins and the per-doc reduce were all doc_id-keyed, so the only
-    // exchange left is the output orderBy. Above the gate (general
-    // vocabulary at scale) the join spelling runs unchanged.
-    val local = memo(s"ngramlm-local|${s.sparkContext.applicationId}|$dir")(
-      graft.operators.NgramLm.localize(s, model))
-    local.map(m => graft.operators.NgramLm.scoreLocal(toks, m))
-      .getOrElse(graft.operators.NgramLm.score(s, toks, model))
+    // engines' sum-order and ln last-ulp drift (q35 precedent). The
+    // only exchange under the localize gate is the output orderBy.
+    lmScored(s, dir)
       .select(col("doc_id"), col("n_bigrams").cast("bigint").as("n_bigrams"),
         Par.r2(col("nll")).as("nll"))
       .orderBy("doc_id")
@@ -1674,9 +1745,9 @@ object TrainingData {
     // residual inter-document overlap. Scale shape: one hash-agg on the
     // gram key (mergeable), one key-partitioned join back, one reduce
     // per doc — gram cardinality bounds everything, never docs².
-    // Round-15: the gram key is the 60-bit h64 DIGEST, not the string
-    // (the span-dedup exchange design, VERDICT r14 scale audit:
-    // "exchanges carry digests not documents") — both engines hash
+    // The gram key is the 60-bit h64 DIGEST, not the string (the
+    // span-dedup exchange design: exchanges carry digests, not
+    // documents) — both engines hash
     // with the same portable h64, so parity is by construction and the
     // two corpus-sized exchanges carry 8-byte keys instead of ~60-byte
     // gram strings; the fused gram-hash kernel never materializes the
@@ -1701,12 +1772,12 @@ object TrainingData {
     * chain (see q82's plan commentary for why the let-binding matters).
     */
   private val curationKeep = {
-    // Round-14 respelling, value-identical booleans: the stopword
-    // count-of-filter > 0 became arrays_overlap (same predicate, one
-    // compiled containment scan instead of an interpreted per-token
-    // lambda), and the trigram ratio rides the codegen'd gram kernel
-    // ([[graft.functions.WordNgramsExpr]]). The exists(array(...))
-    // let-binding and the short-circuiting ANDs stay: tokens bind once,
+    // The stopword test is arrays_overlap (the same predicate as a
+    // count-of-filter > 0, as one compiled containment scan instead of
+    // an interpreted per-token lambda), and the trigram ratio rides
+    // the codegen'd gram kernel ([[graft.functions.WordNgramsExpr]]).
+    // The exists(array(...)) let-binding and the short-circuiting ANDs
+    // stay: tokens bind once,
     // and the trigram branch still never evaluates on sub-10-token
     // docs.
     val stop = array(Seq("the", "a", "of", "and", "to", "in").map(lit): _*)
@@ -1720,10 +1791,10 @@ object TrainingData {
 
   /** The curation chain's survivor frame — fused heuristic filter +
     * window-min exact dedup over the raw corpus — memoized per
-    * (session, dir) (round-16; VERDICT r15 #6): q82 and q92 are
-    * composites over exactly this stage output, and each used to
-    * re-run the filter + the corpus-keyed dedup exchange per call. A
-    * real curation pipeline materializes each stage's output once per
+    * (session, dir): q82 and q92 are composites over exactly this
+    * stage output, and each would otherwise re-run the filter + the
+    * corpus-keyed dedup exchange per call. A real curation pipeline
+    * materializes each stage's output once per
     * run; both consumers are deterministic functions of this frame
     * (exact integers + the portable salted hash), so sharing changes
     * no result. Columns are the union both need: q82 takes (doc_id,
@@ -1732,7 +1803,7 @@ object TrainingData {
     * decoded Ok channel, not the raw corpus.
     */
   private def curated(s: SparkSession, dir: String): DataFrame =
-    memo(s"curated|${s.sparkContext.applicationId}|$dir") {
+    artifact(s, dir, "curated") {
       t(s, dir, "documents")
         .filter(curationKeep)
         .withColumn("min_id",
@@ -1781,8 +1852,8 @@ object TrainingData {
     // groupBy + self-join — the join form computes the filtered subtree
     // twice, the window form gives the whole pipeline exactly ONE
     // exchange (digest-keyed at 100 TB, per q31's note); the sample
-    // filter stays map-side. Round-16: the filter+dedup stage output is
-    // the memoized [[curated]] artifact shared with q92.
+    // filter stays map-side. The filter+dedup stage output is the
+    // memoized [[curated]] artifact shared with q92.
     curated(s, dir)
       .filter(pmod(h64(concat(lit("curate|"), col("doc_id").cast("string"))),
         lit(100)) < 50)
@@ -1792,19 +1863,7 @@ object TrainingData {
 
   val q83_ann_recall: QueryDef = q(
     "q83_ann_recall",
-    s"""WITH v AS (SELECT vec_id, embedding FROM embeddings),
-       |c0 AS (SELECT CAST(rn - 1 AS INT) AS cell, embedding AS cv FROM
-       |       (SELECT row_number() OVER (ORDER BY vec_id) AS rn, embedding FROM v) WHERE rn <= 8),
-       |${ivfAssignSql("a1", "c0")}, ${ivfCentroidSql("c1", "a1", "c0")},
-       |${ivfAssignSql("a2", "c1")}, ${ivfCentroidSql("c2", "a2", "c1")},
-       |${ivfAssignSql("a3", "c2")}, ${ivfCentroidSql("c3", "a3", "c2")},
-       |${ivfAssignSql("idx", "c3")},
-       |pc AS (SELECT probe_id, cell FROM (
-       |    SELECT v.vec_id AS probe_id, c.cell,
-       |      row_number() OVER (PARTITION BY v.vec_id
-       |        ORDER BY ${ivfSqDistSql("v.embedding", "c.cv")}, c.cell) AS rn
-       |    FROM v CROSS JOIN c3 c WHERE v.vec_id < 5) WHERE rn <= 2),
-       |pe AS (SELECT vec_id AS probe_id, embedding AS pemb, ${ivfNormSql("embedding")} AS na FROM v WHERE vec_id < 5),
+    s"""WITH $ivfChainSql,
        |iscored AS (SELECT pc.probe_id, i2.vec_id AS neighbor_id,
        |    CASE WHEN pe.na = 0 OR ${ivfNormSql("i2.embedding")} = 0 THEN -1.0
        |         ELSE $ivfDotSql / (pe.na * ${ivfNormSql("i2.embedding")}) END AS cos
@@ -1842,35 +1901,12 @@ object TrainingData {
     // probe sample over one corpus scan (the ground truth is computed
     // for the SAMPLE, never corpus x corpus); the intersection join is
     // probes x k rows — trivially broadcast.
-    val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    val model = memo(s"ivf|$dir|k=8|it=3|r=4")(
-      graft.operators.Ivf.train(s, emb, k = 8, iters = 3, meanRound = 4))
-    val indexed = graft.operators.Ivf.index(s, emb, model)
-    val probes = emb.filter(col("vec_id") < 5)
-    val ivtop = graft.operators.Ivf.search(s, indexed, model, probes, k = 5, nprobe = 2)
-      .select(col("probe_id"), col("neighbor_id"))
-    val nrm = normed(s, dir)
-    val bprobes = nrm.filter(col("vec_id") < 5).select(
-      col("vec_id").as("probe_id"), col("embedding").as("pe"), col("nrm").as("pn"))
-    val w = Window.partitionBy("probe_id").orderBy(col("cos").desc, col("neighbor_id"))
-    val bftop = nrm.join(broadcast(bprobes), col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-        (dot_f(col("pe"), col("embedding")) / (col("pn") * col("nrm"))).as("cos"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
-      .select(col("probe_id"), col("neighbor_id"))
-    val hits = ivtop.join(bftop, Seq("probe_id", "neighbor_id"))
-      .groupBy("probe_id").agg(count(lit(1)).as("n_hits"))
-    probes.select(col("vec_id").as("probe_id"))
-      .join(hits, Seq("probe_id"), "left")
-      .select(col("probe_id"),
-        coalesce(col("n_hits"), lit(0L)).cast("bigint").as("n_hits"),
-        (coalesce(col("n_hits"), lit(0L)).cast("double") / 5).as("recall"))
-      .orderBy("probe_id")
+    recallVsExhaustive(s, dir, ivfTop5(s, dir))
   }
 
-  /** Exhaustive-ground-truth recall tail shared by the q96–q98 recall
-    * rungs' oracles: intersect a quantized `ranked` CTE's top-5 with
+  /** Exhaustive-ground-truth recall tail shared by the oracles of the
+    * q96/q97/q98/q100/q118/q119/q121/q168 recall rungs: intersect a
+    * quantized `ranked` CTE's top-5 with
     * brute-force cosine top-5 over the RAW corpus `v` (recall is
     * always measured against TRUE neighbors — for OPQ that means the
     * unrotated space). q83's hits/recall contract verbatim: identical
@@ -1896,25 +1932,18 @@ object TrainingData {
        |LEFT JOIN hits ON hits.probe_id = p.probe_id
        |ORDER BY p.probe_id""".stripMargin
 
-  /** Spark side of the recall rungs: recall@5 of a quantized top-5
-    * (`qtop`: probe_id, neighbor_id) against exhaustive cosine search
-    * over the raw corpus. Scale shape is q83's: ground truth only for
-    * the probe SAMPLE (broadcast probes × one corpus scan, per-probe
-    * top-5 under a group limit), never corpus × corpus; the
-    * intersection join is probes × k rows.
-    */
   /** Exhaustive ground-truth top-5 neighbor sets for the recall
-    * rungs, memoized per (session, dir) (round-16): EIGHT registry
-    * keys (q96/q97/q98/q100/q118/q119/q121/q147/q168's shared recall
-    * tail) each re-ran the same brute-force corpus scan + ranked
-    * window per call. The artifact is a 25-row exact-arithmetic set
-    * (raw-cosine ranking, (cos DESC, neighbor_id) tie-break — already
-    * the engine-portable contract), so sharing changes no result; the
-    * ANN-model memo argument, applied to the ground truth the models
-    * are judged against.
+    * rungs, memoized per (session, dir): the nine keys on
+    * [[recallVsExhaustive]] (q83, q96, q97, q98, q100, q118, q119,
+    * q121, q168) would otherwise each re-run the same brute-force
+    * corpus scan + ranked window per call. The artifact is a 25-row
+    * exact-arithmetic set (raw-cosine ranking, (cos DESC, neighbor_id)
+    * tie-break — already the engine-portable contract), so sharing
+    * changes no result; the [[memo]] argument, applied to the ground
+    * truth the models are judged against.
     */
   private def exhaustiveTop5(s: SparkSession, dir: String): DataFrame =
-    memo(s"bftop5|${s.sparkContext.applicationId}|$dir|p<5|k=5") {
+    artifact(s, dir, "bftop5|p<5|k=5") {
       val nrm = normed(s, dir)
       val bprobes = nrm.filter(col("vec_id") < 5).select(
         col("vec_id").as("probe_id"), col("embedding").as("pe"), col("nrm").as("pn"))
@@ -1928,11 +1957,20 @@ object TrainingData {
         .localCheckpoint(true)
     }
 
+  /** Spark side of the recall rungs (q83, q96, q97, q98, q100, q118,
+    * q119, q121, q168): recall@5 of an ANN top-5 (`qtop`: probe_id,
+    * neighbor_id, any other columns are dropped) against exhaustive
+    * cosine search over the raw corpus. Scale shape: ground truth only
+    * for the probe SAMPLE (broadcast probes × one corpus scan,
+    * per-probe top-5 under a group limit), never corpus × corpus; the
+    * intersection join is probes × k rows.
+    */
   private def recallVsExhaustive(s: SparkSession, dir: String,
       qtop: DataFrame): DataFrame = {
     val nrm = normed(s, dir)
     val bftop = exhaustiveTop5(s, dir)
-    val hits = qtop.join(bftop, Seq("probe_id", "neighbor_id"))
+    val hits = qtop.select(col("probe_id"), col("neighbor_id"))
+      .join(bftop, Seq("probe_id", "neighbor_id"))
       .groupBy("probe_id").agg(count(lit(1)).as("n_hits"))
     nrm.filter(col("vec_id") < 5).select(col("vec_id").as("probe_id"))
       .join(hits, Seq("probe_id"), "left")
@@ -1953,14 +1991,7 @@ object TrainingData {
     // quantized top-5 and the ground-truth top-5 are each hash-proven
     // by their own registry entries; this rung hash-checks their
     // intersection as exact integers.
-    val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    val model = memo(s"pq|$dir|sub=4x16|k=4|it=2|r=4")(graft.operators.Pq.train(s, emb,
-      nSub = 4, subDim = 16, k = 4, iters = 2, meanRound = 4))
-    val encoded = graft.operators.Pq.encode(s, emb, model)
-    val probes = emb.filter(col("vec_id") < 5)
-    val qtop = graft.operators.Pq.search(s, encoded, model, probes, k = 5)
-      .select(col("probe_id"), col("neighbor_id"))
-    recallVsExhaustive(s, dir, qtop)
+    recallVsExhaustive(s, dir, pqRawTop5(s, dir))
   }
 
   val q97_ivfpq_recall: QueryDef = q(
@@ -1972,16 +2003,7 @@ object TrainingData {
     // prune to 2 of 4 cells + residual ADC) against exhaustive search.
     // Measures BOTH loss sources at once — cell pruning (q83's axis)
     // and residual quantization (q96's axis).
-    val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    val model = memo(s"ivfpq|$dir|c=4x2|sub=4x16|k=4|it=2|r=4")(graft.operators.IvfPq.train(s, emb,
-      kCoarse = 4, coarseIters = 2, nSub = 4, subDim = 16, kSub = 4,
-      pqIters = 2, meanRound = 4))
-    val encoded = graft.operators.IvfPq.encode(s, emb, model)
-    val probes = emb.filter(col("vec_id") < 5)
-    val qtop = graft.operators.IvfPq.search(s, encoded, model, probes,
-        k = 5, nprobe = 2)
-      .select(col("probe_id"), col("neighbor_id"))
-    recallVsExhaustive(s, dir, qtop)
+    recallVsExhaustive(s, dir, ivfpqTop5(s, dir))
   }
 
   val q98_opq_recall: QueryDef = q(
@@ -1994,15 +2016,17 @@ object TrainingData {
     // truth is always true neighbors; the rotation is part of the
     // index under test, not of the truth. Comparing q98 to q96
     // isolates what the rotation buys (or costs) at equal code budget.
-    val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    val remb = graft.operators.Opq.rotate(s, emb, graft.operators.Opq.rotation(64))
-    val model = memo(s"pqrot|$dir|hh64|sub=4x16|k=4|it=2|r=4")(graft.operators.Pq.train(s, remb,
-      nSub = 4, subDim = 16, k = 4, iters = 2, meanRound = 4))
-    val encoded = graft.operators.Pq.encode(s, remb, model)
-    val probes = remb.filter(col("vec_id") < 5)
-    val qtop = graft.operators.Pq.search(s, encoded, model, probes, k = 5)
-      .select(col("probe_id"), col("neighbor_id"))
-    recallVsExhaustive(s, dir, qtop)
+    recallVsExhaustive(s, dir, pqRotatedTop5(s, dir))
+  }
+
+  /** q99's search, shared with q100: the learned allocation permutes
+    * the rotated corpus, then the q76 PQ path runs over the result.
+    */
+  private def opqTop5(s: SparkSession, dir: String): DataFrame = {
+    val mixed = rotated(s, dir)
+    val alloc = artifact(s, dir, "opqalloc|hh64|d=64|sub=4")(
+      graft.operators.Opq.allocate(s, mixed, dim = 64, nSub = 4))
+    pqTop5(s, dir, "hh64+alloc", graft.operators.Opq.permute(s, mixed, alloc))
   }
 
   val q99_opq_learned: QueryDef = q(
@@ -2022,16 +2046,7 @@ object TrainingData {
     // oracle-replayable — the full alternating optimization
     // (Opq.trainRotation) needs an SVD no SQL engine replays and is
     // spec-gated in OpqSpec instead.
-    val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    val mixed = graft.operators.Opq.rotate(s, emb, graft.operators.Opq.rotation(64))
-    val alloc = memo(s"opqalloc|$dir|hh64|d=64|sub=4")(
-      graft.operators.Opq.allocate(s, mixed, dim = 64, nSub = 4))
-    val remb = graft.operators.Opq.permute(s, mixed, alloc)
-    val model = memo(s"pqrot|$dir|hh64+alloc|sub=4x16|k=4|it=2|r=4")(graft.operators.Pq.train(s, remb,
-      nSub = 4, subDim = 16, k = 4, iters = 2, meanRound = 4))
-    val encoded = graft.operators.Pq.encode(s, remb, model)
-    val probes = remb.filter(col("vec_id") < 5)
-    graft.operators.Pq.search(s, encoded, model, probes, k = 5)
+    opqTop5(s, dir)
       .select(col("probe_id"), col("neighbor_id"),
         Par.r2(col("pq_cos")).as("pq_cos"), col("rnk").cast("bigint").as("rnk"))
       .orderBy("probe_id", "rnk")
@@ -2047,18 +2062,7 @@ object TrainingData {
     // recall ladder (q96 plain PQ, q98 fixed rotation, q100 learned):
     // the three at equal code budget isolate what each rotation rung
     // buys.
-    val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    val mixed = graft.operators.Opq.rotate(s, emb, graft.operators.Opq.rotation(64))
-    val alloc = memo(s"opqalloc|$dir|hh64|d=64|sub=4")(
-      graft.operators.Opq.allocate(s, mixed, dim = 64, nSub = 4))
-    val remb = graft.operators.Opq.permute(s, mixed, alloc)
-    val model = memo(s"pqrot|$dir|hh64+alloc|sub=4x16|k=4|it=2|r=4")(graft.operators.Pq.train(s, remb,
-      nSub = 4, subDim = 16, k = 4, iters = 2, meanRound = 4))
-    val encoded = graft.operators.Pq.encode(s, remb, model)
-    val probes = remb.filter(col("vec_id") < 5)
-    val qtop = graft.operators.Pq.search(s, encoded, model, probes, k = 5)
-      .select(col("probe_id"), col("neighbor_id"))
-    recallVsExhaustive(s, dir, qtop)
+    recallVsExhaustive(s, dir, opqTop5(s, dir))
   }
 
   val q84_dsir_weights: QueryDef = q(
@@ -2105,7 +2109,7 @@ object TrainingData {
       buckets = 1024)
     // Model-memo like q79's LM: the ≤1024-row count tables are the
     // train-once artifact; queries_first keeps the cold path visible.
-    val model = memo(s"dsir|${s.sparkContext.applicationId}|$dir|b=1024")(
+    val model = artifact(s, dir, "dsir|b=1024")(
       graft.operators.Dsir.train(s, feats, targetFeats, buckets = 1024))
     graft.operators.Dsir.logWeights(s, feats, model)
       .select(col("doc_id"), col("n_feat").cast("bigint").as("n_feat"),
@@ -2384,8 +2388,7 @@ object TrainingData {
     // filtered — the query vector needs no label.
     val embT = t(s, dir, "embeddings")
     val emb = embT.select(col("vec_id"), col("embedding"))
-    val model = memo(s"ivf|$dir|k=8|it=3|r=4")(
-      graft.operators.Ivf.train(s, emb, k = 8, iters = 3, meanRound = 4))
+    val model = ivfModel(s, dir)
     val indexed = graft.operators.Ivf.index(s, emb, model)
     val filtered = indexed
       .join(embT.filter(col("label") < 3).select("vec_id"), "vec_id")
@@ -2489,8 +2492,8 @@ object TrainingData {
        |SELECT doc_id, source, n_tok, CAST(cum_tok AS BIGINT) AS cum_tok
        |FROM bud WHERE cum_tok <= 600 ORDER BY doc_id""".stripMargin
   ) { (s, dir) =>
-    // The ROUND-7 curation chain end-to-end — what a user runs over a
-    // crawl with this round's stages composed: q82's fused heuristic
+    // The curation chain end-to-end — what a user runs over a crawl:
+    // q82's fused heuristic
     // filters → exact dedup (window min per text) → SPAN-coverage cap
     // (drop docs whose duplicated-run mass exceeds half their tokens —
     // q87/q88's operator, computed over the dedup SURVIVORS, the
@@ -2499,7 +2502,7 @@ object TrainingData {
     // heuristic doubles is EXACT INTEGER arithmetic — the coverage cap
     // is the cross-multiplied dup_tok·2 ≤ n_tok, so the whole chain
     // hashes with no rounding guard. The survivor frame is the
-    // memoized [[curated]] artifact (round-16, shared with q82): it
+    // memoized [[curated]] artifact (shared with q82): it
     // feeds both the span branch and the output join, and the two
     // consumers would otherwise each re-run the filter+dedup subtree.
     val ded = curated(s, dir)
@@ -2814,7 +2817,7 @@ object TrainingData {
     // NbLocalSpec pins the binary kernel against the join spelling.
     val lab = t(s, dir, "documents")
       .select(col("doc_id"), tokens(col("text")).as("toks"), col("lang"))
-    val local = memo(s"nbbin-local|${s.sparkContext.applicationId}|$dir|en")(
+    val local = artifact(s, dir, "nbbin-local|en")(
       graft.operators.NaiveBayes.localizeBinary(
         graft.operators.NaiveBayes.train(lab, col("lang") === "en")))
     lab.select(col("doc_id"),
@@ -3067,20 +3070,7 @@ object TrainingData {
   val q118_lsh_recall: QueryDef = q(
     "q118_lsh_recall",
     s"""WITH v AS (SELECT vec_id, embedding FROM embeddings),
-       |b AS (SELECT vec_id, embedding,
-       |        sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm,
-       |        ${(0 until 8).map(lshBitSql).mkString(" || ")} AS bucket
-       |      FROM embeddings),
-       |pairs AS (SELECT p.vec_id AS probe_id, e.vec_id AS neighbor_id,
-       |        CASE WHEN p.nrm = 0 OR e.nrm = 0 THEN -1.0
-       |             ELSE list_sum(list_transform(range(1, len(p.embedding) + 1),
-       |               i -> CAST(p.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE))) / (p.nrm * e.nrm)
-       |        END AS cos
-       |      FROM b p JOIN b e ON p.bucket = e.bucket AND e.vec_id <> p.vec_id
-       |      WHERE p.vec_id < 5),
-       |ranked AS (SELECT probe_id, neighbor_id, cos,
-       |        row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, neighbor_id) AS rnk
-       |      FROM pairs),
+       |$lshChainSql,
        |$recallTailSql""".stripMargin
   ) { (s, dir) =>
     // Recall@5 of the hyperplane-LSH search (q69's exact
@@ -3092,31 +3082,12 @@ object TrainingData {
     // must be measured per corpus before choosing nPlanes. Both top-5
     // sets are hash-proven by their own entries (q69/q33); recall is
     // an exact integer division.
-    val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    val withB = graft.operators.Similarity.hyperplaneLsh(emb, 8)
-    val qtop = graft.operators.Similarity
-      .lshSearch(s, withB, emb.filter(col("vec_id") < 5), nPlanes = 8, k = 5)
-      .select(col("probe_id"), col("neighbor_id"))
-    recallVsExhaustive(s, dir, qtop)
+    recallVsExhaustive(s, dir, lshTop5(s, dir))
   }
 
   val q119_int8_recall: QueryDef = q(
     "q119_int8_recall",
-    s"""WITH v AS (SELECT vec_id, embedding,
-       |        list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS mx
-       |      FROM embeddings),
-       |qz AS (SELECT vec_id,
-       |    list_transform(embedding, x -> CASE WHEN mx = 0 THEN 0
-       |      ELSE CAST(least(127, greatest(-127, floor(CAST(x AS DOUBLE) * 127.0 / mx + 0.5))) AS BIGINT) END) AS codes
-       |  FROM v),
-       |n AS (SELECT vec_id, codes, list_sum(list_transform(codes, c -> c * c)) AS nsq FROM qz),
-       |pairs AS (SELECT p.vec_id AS probe_id, e.vec_id AS neighbor_id,
-       |    CASE WHEN p.nsq = 0 OR e.nsq = 0 THEN -1.0
-       |         ELSE CAST(list_sum(list_transform(range(1, len(p.codes) + 1), i -> p.codes[i] * e.codes[i])) AS DOUBLE)
-       |              / (sqrt(CAST(p.nsq AS DOUBLE)) * sqrt(CAST(e.nsq AS DOUBLE))) END AS qcos
-       |  FROM n p JOIN n e ON e.vec_id <> p.vec_id WHERE p.vec_id < 5),
-       |ranked AS (SELECT probe_id, neighbor_id, qcos,
-       |    row_number() OVER (PARTITION BY probe_id ORDER BY qcos DESC, neighbor_id) AS rnk FROM pairs),
+    s"""WITH $int8ChainSql,
        |$recallTailSql""".stripMargin
   ) { (s, dir) =>
     // Recall@5 of int8 scalar quantization (q74's exact configuration)
@@ -3127,12 +3098,7 @@ object TrainingData {
     // q119 to q96 at equal bytes tells a user which quantizer to
     // deploy). Integer-exact scoring on the quantized side; exact
     // integer division for recall.
-    val emb = t(s, dir, "embeddings").select(col("vec_id").as("id"),
-      graft.operators.Quantize.int8Codes(col("embedding")).as("codes"))
-    val qtop = graft.operators.Quantize
-      .topKQuantized(emb, emb.filter(col("id") < 5), 5)
-      .select(col("probe_id"), col("neighbor_id"))
-    recallVsExhaustive(s, dir, qtop)
+    recallVsExhaustive(s, dir, int8Top5(s, dir))
   }
 
   // ------------------------------ q120/q121: multi-table LSH + its recall
@@ -3169,6 +3135,15 @@ object TrainingData {
        |    row_number() OVER (PARTITION BY probe_id ORDER BY cos DESC, neighbor_id) AS rnk
        |  FROM pairs)""".stripMargin
 
+  /** q120's search, shared with q121: 4 tables of 4 planes, union
+    * candidates exact-scored once, top-5 for the vec_id < 5 probes.
+    */
+  private def lshMultiTop5(s: SparkSession, dir: String): DataFrame = {
+    val emb = vectors(s, dir)
+    graft.operators.Similarity.lshSearchMulti(s, emb, emb.filter(col("vec_id") < 5),
+      nPlanes = 4, tables = 4, k = 5, dim = embDim(s, dir))
+  }
+
   val q120_ann_lsh_multi: QueryDef = q(
     "q120_ann_lsh_multi",
     s"""WITH $lshMultiChainSql
@@ -3187,10 +3162,7 @@ object TrainingData {
     // bucket)-keyed join against broadcast probe signatures, distinct
     // collapses duplicate pairs BEFORE scoring, and the scoring join
     // is candidate-bounded.
-    val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    graft.operators.Similarity
-      .lshSearchMulti(s, emb, emb.filter(col("vec_id") < 5),
-        nPlanes = 4, tables = 4, k = 5, dim = embDim(s, dir))
+    lshMultiTop5(s, dir)
       .select(col("probe_id"), col("neighbor_id"),
         Par.r2(col("cos")).as("cos_sim"), col("rnk").cast("bigint").as("rnk"))
       .orderBy("probe_id", "rnk")
@@ -3205,12 +3177,7 @@ object TrainingData {
     // Recall@5 of the 4×4 multi-table search — the measured payoff of
     // q120's amplification next to q118's single-table 0.0, same
     // exhaustive ground truth, exact integer division.
-    val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    val qtop = graft.operators.Similarity
-      .lshSearchMulti(s, emb, emb.filter(col("vec_id") < 5),
-        nPlanes = 4, tables = 4, k = 5, dim = embDim(s, dir))
-      .select(col("probe_id"), col("neighbor_id"))
-    recallVsExhaustive(s, dir, qtop)
+    recallVsExhaustive(s, dir, lshMultiTop5(s, dir))
   }
 
   // ------------------------------------------ q124: query_string search
@@ -3621,13 +3588,7 @@ object TrainingData {
     // over per-source DISTINCT rounded scores (2-dp domain), never a
     // doc-level sort, and the cutoff table broadcasts back — the
     // two-phase percentile discipline at any corpus size.
-    val toks = tokenized(s, dir)
-    val model = memo(s"ngramlm|${s.sparkContext.applicationId}|$dir")(
-      graft.operators.NgramLm.train(s, toks))
-    val local = memo(s"ngramlm-local|${s.sparkContext.applicationId}|$dir")(
-      graft.operators.NgramLm.localize(s, model))
-    val scored = local.map(m => graft.operators.NgramLm.scoreLocal(toks, m))
-      .getOrElse(graft.operators.NgramLm.score(s, toks, model))
+    val scored = lmScored(s, dir)
       .select(col("doc_id"), Par.r2(col("nll")).as("nll"))
       .join(t(s, dir, "documents").select(col("doc_id"), col("source")), "doc_id")
       .select("doc_id", "source", "nll")
@@ -3751,10 +3712,8 @@ object TrainingData {
     // must not move centroids (the shared-index discipline); the
     // planted corpus is only INDEXED (assigned to cells), never
     // retrained on.
-    val embT = t(s, dir, "embeddings")
-    val emb = embT.select(col("vec_id"), col("embedding"))
-    val model = memo(s"ivf|$dir|k=8|it=3|r=4")(
-      graft.operators.Ivf.train(s, emb, k = 8, iters = 3, meanRound = 4))
+    val emb = vectors(s, dir)
+    val model = ivfModel(s, dir)
     val planted = emb.filter(col("vec_id") < 5)
       .select((col("vec_id") + 100000L).as("vec_id"), col("embedding"))
     val indexed = graft.operators.Ivf.index(s, emb.unionByName(planted), model)
@@ -3803,7 +3762,7 @@ object TrainingData {
     // each), Gopher pass rate (q135's gates on the RAW text, rate over
     // docs with >= 1 analyzer token), and mean LM score (q79's shared
     // memoized model). Portability: every mean divides exact BIGINTs —
-    // token counts natively, nll via the r12 long-cents policy (per-doc
+    // token counts natively, nll via the long-cents policy (per-doc
     // r2 score -> integer cents, order-independent BIGINT sum, one
     // identical IEEE division at the end) — so no mean depends on
     // double summation order. Scale shape: four mergeable aggregates
@@ -3812,7 +3771,7 @@ object TrainingData {
     val docs = t(s, dir, "documents")
     val src = docs.select("doc_id", "source")
     // Sizes fold from the memoized token artifact instead of a fourth
-    // tokenizer pass over the raw corpus (round-16); the doc-keyed join
+    // tokenizer pass over the raw corpus; the doc-keyed join
     // back to source carries two ints per doc.
     val sizes = tokenized(s, dir)
       .select(col("doc_id"), size(col("toks")).cast("long").as("n_toks"))
@@ -3830,13 +3789,7 @@ object TrainingData {
       .join(src, "doc_id")
       .groupBy("source")
       .agg(count(lit(1)).as("n_gated"), sum("passes").cast("long").as("n_pass"))
-    val toks = tokenized(s, dir)
-    val model = memo(s"ngramlm|${s.sparkContext.applicationId}|$dir")(
-      graft.operators.NgramLm.train(s, toks))
-    val local = memo(s"ngramlm-local|${s.sparkContext.applicationId}|$dir")(
-      graft.operators.NgramLm.localize(s, model))
-    val lsrc = local.map(m => graft.operators.NgramLm.scoreLocal(toks, m))
-      .getOrElse(graft.operators.NgramLm.score(s, toks, model))
+    val lsrc = lmScored(s, dir)
       .select(col("doc_id"),
         floor(col("nll") * 100 + lit(0.5)).cast("long").as("cents"))
       .join(src, "doc_id")
@@ -4125,10 +4078,10 @@ object TrainingData {
       .orderBy("round")
   }
 
-  /** Memoized 6-rule BPE model per dir — a driver-side O(k) list
-    * (session-independent, like the ANN models). */
+  /** Memoized 6-rule BPE model per (session, dir) — a driver-side
+    * O(k) list. */
   private def bpeMerges(s: SparkSession, dir: String): Seq[graft.operators.Bpe.Merge] =
-    memo(s"bpe|$dir|k=6")(graft.operators.Bpe.trainMerges(s, tokenized(s, dir), k = 6))
+    artifact(s, dir, "bpe|k=6")(graft.operators.Bpe.trainMerges(s, tokenized(s, dir), k = 6))
 
   /** The q146 oracle's per-word encode: bracketize then the 6 learned
     * replaces in training order, rule literals joined in from the
@@ -4802,14 +4755,14 @@ object TrainingData {
     // folded 0.4*0.4 differs from literal 0.16 in the last ulp.
     val toks = t(s, dir, "documents")
       .select(col("doc_id"), tokens(col("text")).as("toks"))
-    val model = memo(s"backofflm|${s.sparkContext.applicationId}|$dir")(
+    val model = artifact(s, dir, "backofflm")(
       graft.operators.NgramLm.trainBackoff(s,
         toks.filter(pmod(col("doc_id"), lit(2L)) === 0)))
     // Size-gated compiled scorer (the q79/NB-kernel shape): all five
     // count-table joins plus the per-doc reduce were doc_id-keyed, so
     // under the gate scoring is one scan-side pass; above it the
     // key-partitioned join spelling runs unchanged.
-    val local = memo(s"backofflm-local|${s.sparkContext.applicationId}|$dir")(
+    val local = artifact(s, dir, "backofflm-local")(
       graft.operators.NgramLm.localizeBackoff(s, model))
     local.map(m => graft.operators.NgramLm.scoreBackoffLocal(toks, m))
       .getOrElse(graft.operators.NgramLm.scoreBackoff(s, toks, model))
@@ -4859,8 +4812,8 @@ object TrainingData {
     val est = graft.operators.Sketch.countMinEstimate(cells, probes,
       depth = 3, width = 64)
     // True counts are only ever read for the 5 probe terms — filter
-    // BEFORE the groupBy (round-15): the unfiltered spelling shuffled
-    // a vocabulary-sized partial-agg state to answer 5 keys.
+    // BEFORE the groupBy: unfiltered, the groupBy would shuffle a
+    // vocabulary-sized partial-agg state to answer 5 keys.
     val tru = words.filter(col("w").isin("and", "data", "query", "the", "zzzabsent"))
       .groupBy(col("w").as("term")).agg(count(lit(1)).as("c"))
     est.join(tru, Seq("term"), "left")
@@ -4976,17 +4929,16 @@ object TrainingData {
     import graft.operators.{PrefixSum, Sketch}
     val ps = Seq(0.5, 0.9, 0.99)
     val xs = t(s, dir, "lineitem").select(col("l_extendedprice").as("x"))
-    // ONE corpus pass for the WHOLE query (round-16; guide §2.3/§2.4):
+    // ONE corpus pass for the WHOLE query:
     // the corpus reduces to its value-count table once (map-side
     // partial agg into a value-cardinality exchange), PrefixSum
     // range-materializes it, and EVERYTHING downstream — the (mn, mx,
     // n) scalars, the 128-bin histogram estimate, and the exact
     // value-at-rank ground truth — derives from that one materialized
-    // frame. The r15 spelling paid three more corpus-shaped jobs:
-    // histogram min/max scan, histogram binning scan, and a duplicate
-    // vc exchange behind broadcast(total). Estimates are bit-identical
-    // (histogramWeighted's equivalence note); n = coalesce(sum(c), 0)
-    // keeps count(*)'s empty-input zero (ADVICE r15).
+    // frame — no separate histogram min/max scan, binning scan, or
+    // duplicate vc exchange behind broadcast(total). Estimates are
+    // bit-identical (histogramWeighted's equivalence note);
+    // n = coalesce(sum(c), 0) keeps count(*)'s empty-input zero.
     val vc = xs.groupBy("x").agg(count(lit(1)).as("c"))
     val cumv = PrefixSum.withRunningTotal(vc, "x", "c", "cum")
     val stats = cumv.agg(min(col("x")).as("mn"), max(col("x")).as("mx"),
@@ -5219,10 +5171,8 @@ object TrainingData {
     // engines with r4 as emission-only. Scale shape: centroids
     // broadcast, then ONE mergeable min(struct(dist, vec_id))
     // hash-agg — k output rows, no window over the corpus.
-    val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    val model = memo(s"ivf|$dir|k=8|it=3|r=4")(
-      graft.operators.Ivf.train(s, emb, k = 8, iters = 3, meanRound = 4))
-    val indexed = graft.operators.Ivf.index(s, emb, model)
+    val model = ivfModel(s, dir)
+    val indexed = graft.operators.Ivf.index(s, vectors(s, dir), model)
     graft.operators.Ivf.prototypes(s, indexed, model)
       .select(col("cell").cast("int").as("cell"), col("vec_id"),
         Par.r4(col("sqdist")).as("sqdist"))
@@ -5467,7 +5417,7 @@ object TrainingData {
       // projection is narrow scan-side compute (4× less downstream
       // I/O); candidates ride the broadcast probe set.
       import graft.operators.RandomProjection
-      val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
+      val emb = vectors(s, dir)
       val proj = emb.select(col("vec_id"),
         RandomProjection.project(col("embedding"), signs).as("p"))
       val pdot = (a: String, b: String) => expr(
@@ -5484,7 +5434,6 @@ object TrainingData {
             pdot("pp", "p"), col("pnrm"), col("nrm")).as("pcos"))
         .withColumn("rnk", row_number().over(w))
         .filter(col("rnk") <= 5)
-        .select(col("probe_id"), col("neighbor_id"))
       recallVsExhaustive(s, dir, qtop)
     }
   }
@@ -6033,10 +5982,8 @@ object TrainingData {
     // REAL-cast replay) quantized per row to 1e-6 units so the
     // inertia sums are ORDER-FREE long sums (the q175 integer-sum
     // rule). One broadcast + one k-row mergeable agg.
-    val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    val model = memo(s"ivf|$dir|k=8|it=3|r=4")(
-      graft.operators.Ivf.train(s, emb, k = 8, iters = 3, meanRound = 4))
-    val indexed = graft.operators.Ivf.index(s, emb, model)
+    val model = ivfModel(s, dir)
+    val indexed = graft.operators.Ivf.index(s, vectors(s, dir), model)
     graft.operators.Ivf.cellQuality(s, indexed, model)
       .select(col("cell").cast("int").as("cell"), col("n"),
         col("sum_qdist"), col("max_qdist"),

@@ -296,13 +296,6 @@ object IndexSink {
     spark.read.parquet(s"$indexPath/*").drop("_epoch").createOrReplaceTempView(name)
   }
 
-  /** Last-write-per-key resolution over the epoch history (shared by the
-    * query-time view and compaction so the two can never diverge — and
-    * with every other epoch store, via [[EpochStore.latestPerKey]]).
-    */
-  private def latestPerKey(df: DataFrame, key: String): DataFrame =
-    EpochStore.latestPerKey(df, key)
-
   /** UPSERT semantics (the actual OpenSearch contract: indexing a doc id
     * again OVERWRITES it — reference iac/s2_app.py:841-858 delivers by
     * document id): last write per key wins, resolved at query time over
@@ -311,7 +304,7 @@ object IndexSink {
   def registerLatestView(spark: SparkSession, indexPath: String,
       name: String, key: String): Unit = {
     healCompaction(spark, indexPath)
-    latestPerKey(spark.read.parquet(s"$indexPath/*"), key)
+    EpochStore.latestPerKey(spark.read.parquet(s"$indexPath/*"), key)
       .drop("_epoch")
       .createOrReplaceTempView(name)
   }
@@ -344,7 +337,7 @@ object IndexSink {
       leaseTtlMs: Long = MaintenanceLease.DefaultTtlMs,
       leaseTimeoutMs: Long = MaintenanceLease.DefaultAcquireTimeoutMs): Long =
     EpochStore.compact(spark, indexPath,
-      resolve = latestPerKey(_, key),
+      resolve = EpochStore.latestPerKey(_, key),
       writeSnapshot = (df, tmp) =>
         df.repartition(shards).write.mode("overwrite").parquet(tmp),
       leaseTtlMs = leaseTtlMs, leaseTimeoutMs = leaseTimeoutMs)
@@ -359,7 +352,7 @@ object IndexSink {
   def liveVectors(spark: SparkSession, indexPath: String,
       key: String): DataFrame = {
     healCompaction(spark, indexPath)
-    latestPerKey(spark.read.parquet(s"$indexPath/*"), key).drop("_epoch")
+    EpochStore.latestPerKey(spark.read.parquet(s"$indexPath/*"), key).drop("_epoch")
   }
 
   /** A13: the `_count` + match_all surface over the index. */

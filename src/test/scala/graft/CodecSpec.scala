@@ -138,6 +138,20 @@ class CodecSpec extends SparkSpec {
     assert(!nullRow.getBoolean(0))
   }
 
+  test("json_valid == try_parse_json IS NOT NULL at the nesting cap and " +
+      "one past it, and neither side throws") {
+    import spark.implicits._
+    val cap = graft.functions.JsonValidKernel.MaxNestingDepth
+    def nested(depth: Int): String = "[" * depth + "]" * depth
+    val out = Seq((0, nested(cap)), (1, nested(cap + 1))).toDF("i", "s")
+      .select(col("i"),
+        graft.functions.JsonFunctions.jsonValid(col("s")).as("kernel"),
+        try_parse_json(col("s")).isNotNull.as("variant"))
+      .orderBy("i").collect()
+      .map(r => (r.getBoolean(1), r.getBoolean(2)))
+    assert(out.toSeq == Seq((true, true), (false, false)), out.toSeq)
+  }
+
   test("routing is total and 3-way: Ok / Dropped / ProcessingFailed") {
     import spark.implicits._
     val rows = Seq(

@@ -24,6 +24,22 @@ class StorageSpec extends SparkSpec {
     assert(dirs.exists(_.startsWith("o_year=1997")))
   }
 
+  test("loader footer probe: a failed read is not cached; a file written " +
+      "at the path later is read for real") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-footer")
+    val path = s"$dir/late.parquet"
+    // Nothing at the path yet: both probes decline the rebalance.
+    assert(queries.Tables.fileLen(spark, path) == 0L)
+    assert(queries.Tables.footerMeta(spark, path) == ((Int.MaxValue, 0L)))
+    // One single-row-group parquet file, moved to exactly that path.
+    spark.range(0, 100, 1, 1).write.parquet(s"$dir/staging")
+    val part = new java.io.File(s"$dir/staging").listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(path))
+    assert(queries.Tables.fileLen(spark, path) == new java.io.File(path).length())
+    assert(queries.Tables.footerMeta(spark, path) == ((1, 100L)))
+  }
+
   test("bucketed tables join WITHOUT a shuffle (co-located sort-merge)") {
     // (warehouse dir is a static conf; tables land in the default
     // ./spark-warehouse, which is gitignored and dropped below)
