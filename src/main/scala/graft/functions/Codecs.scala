@@ -94,15 +94,30 @@ object Codecs {
       df: DataFrame,
       payloadSchema: StructType,
       dropIf: Column => Column,
+      transform: Column => Column = identity): DataFrame =
+    routeEnvelope(df, payloadSchema, dropIf, transform)
+      .withColumn("data", col("routed"))
+      .select("recordId", "result", "data", "payload")
+
+  /** [[transformEnvelope]] that keeps every input column — the raw
+    * `data` included — and adds `payload`, `result` and `routed` (the
+    * delivered bytes: transformed when Ok, raw otherwise). The delivery
+    * epoch writes the raw backup and the routed output from this one
+    * projection.
+    */
+  private[graft] def routeEnvelope(
+      df: DataFrame,
+      payloadSchema: StructType,
+      dropIf: Column => Column,
       transform: Column => Column = identity): DataFrame = {
     val decoded = decodeJson(col("data"), payloadSchema)
     df.withColumn("payload", decoded)
       .withColumn("result", route(col("data"), dropIf(col("payload"))))
       .withColumn("payload", col("payload").dropFields(CorruptField))
       .withColumn("out", transform(col("payload")))
-      .withColumn("data",
+      .withColumn("routed",
         when(col("result") === DeliveryStatus.Ok, encodeJson(col("out")))
           .otherwise(col("data")))
-      .select("recordId", "result", "data", "payload")
+      .drop("out")
   }
 }

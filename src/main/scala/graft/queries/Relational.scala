@@ -522,18 +522,21 @@ object Relational {
       |  CAST(len(json_keys(props)) AS INT) AS n_keys
       |FROM events ORDER BY event_id""".stripMargin
   ) { (s, dir) =>
-    // ONE JSON parse per row: k_val, key_list and n_keys all read the
-    // same from_json map, so runtime subexpression elimination evaluates
-    // the parse once — a get_json_object for k_val would be a second
-    // full scan of the JSON text per row (JSON parsing dominates this
-    // query; projection work is trivial).
-    val asMap = from_json(col("props"), org.apache.spark.sql.types.MapType(
-      org.apache.spark.sql.types.StringType, org.apache.spark.sql.types.IntegerType))
+    // ONE JSON parse per row: the map is its own column, and k_val,
+    // key_list and n_keys all read it. Spelled inline three times, the
+    // parse would be three `from_json` calls in one Project; as a column,
+    // CollapseProject keeps the two projections apart (the parse is not
+    // cheap to repeat). JSON parsing dominates this query.
     t(s, dir, "events").select(
       col("event_id"),
-      element_at(asMap, "k").as("k_val"),
-      concat_ws(",", map_keys(asMap)).as("key_list"),
-      size(map_keys(asMap)).as("n_keys")
+      from_json(col("props"), org.apache.spark.sql.types.MapType(
+        org.apache.spark.sql.types.StringType, org.apache.spark.sql.types.IntegerType))
+        .as("props_map")
+    ).select(
+      col("event_id"),
+      element_at(col("props_map"), "k").as("k_val"),
+      concat_ws(",", map_keys(col("props_map"))).as("key_list"),
+      size(map_keys(col("props_map"))).as("n_keys")
     ).orderBy("event_id")
   }
 

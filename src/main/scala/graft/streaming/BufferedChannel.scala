@@ -115,7 +115,17 @@ final class BufferedChannel(root: String, maxBytes: Long, maxAgeMillis: Long,
     * @param nowMs injectable clock for tests
     */
   def append(lines: DataFrame, epochId: Long,
-      nowMs: () => Long = () => System.currentTimeMillis()): Unit = {
+      nowMs: () => Long = () => System.currentTimeMillis()): Unit =
+    stage(epochId, nowMs)(dir => DeliveryPipeline.writeNdjson(lines, dir.toString))
+
+  /** Stage one epoch: `place` puts the epoch's part files into the given
+    * staging dir (writing them, or moving parts written elsewhere, and
+    * replacing whatever a replay left there); then flush if a threshold
+    * trips. The replay guard and the register step around `place` are
+    * the same for every caller.
+    */
+  private[streaming] def stage(epochId: Long,
+      nowMs: () => Long = () => System.currentTimeMillis())(place: Path => Unit): Unit = {
     // Replay guard + unregister in ONE synchronized block: with the
     // guard and the unregister in separate critical sections, an age-
     // tick flush slipping between them could promote the still-
@@ -142,7 +152,7 @@ final class BufferedChannel(root: String, maxBytes: Long, maxAgeMillis: Long,
     }
     if (alreadyFlushed) return
     val dir = new Path(staging, s"epoch=$epochId")
-    DeliveryPipeline.writeNdjson(lines, dir.toString)
+    place(dir)
     // Only payload part-files count toward the size threshold (not
     // _SUCCESS markers or .crc checksums).
     val added = partFiles(dir).map(_.getLen).sum

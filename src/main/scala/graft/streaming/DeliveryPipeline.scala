@@ -2,10 +2,8 @@ package graft.streaming
 
 import java.util.UUID
 
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
-
 import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
@@ -18,26 +16,40 @@ import graft.model.DeliveryStatus._
   *
   * {{{
   * source (envelope stream, data = base64 NDJSON on the wire)
-  *   └── writeStream: decode once → persist with the backup-failure flag
+  *   └── writeStream: decode once
   *         └── foreachBatch (one epoch id for every channel)
-  *               ├── backup thread: raw copy → 01-backup/         (A9)
-  *               │     └── injected write failures → 02-backup-failed/
-  *               └── transform → 3-way route → NDJSON fan-out (A3–A8)
-  *                     Ok               → 03-success/  (buffered, A7)
-  *                     Dropped          → (counted, not delivered — Firehose
-  *                                         drops these by contract)
-  *                     ProcessingFailed → 04-failed/   (buffered, A7)
+  *               ├── transform → 3-way route (A3–A8), raw bytes kept
+  *               ├── ONE projection: per record a backup row → 01-backup
+  *               │     | 02-backup-failed (A9), and a routed row → 03-success
+  *               │     (Ok) | 04-failed (ProcessingFailed) | none (Dropped:
+  *               │     Firehose drops these by contract)
+  *               ├── ONE write → <root>/.scratch-epoch=N/channel=<channel>/
+  *               └── placement, one rename per channel → 01/02 epoch=N,
+  *                     03/04 → the A7 buffer's .staging/epoch=N
+  *                     (<channel>/epoch=N when unbuffered)
   * }}}
   *
   * Design notes, scale-first:
   * - ONE streaming query per delivery stream, like the reference's one
   *   Firehose stream that writes both the raw backup and the transformed
-  *   output (iac/s2_app.py:720-828). Each micro-batch is read and decoded
-  *   once, persisted, and feeds all four channels under one epoch id.
-  *   The backup pair runs on a thread of its own so its writes overlap
-  *   the delivery writes; it is joined before the epoch returns, so a
-  *   failed backup fails the epoch. The transform is a single codegen'd
-  *   projection — no per-record driver work anywhere.
+  *   output from one buffer (iac/s2_app.py:720-828). Each micro-batch is
+  *   read and decoded once and written by ONE Spark job, partitioned by
+  *   channel into a hidden per-epoch scratch dir: a write job has a
+  *   fixed cost (job setup, commit protocol, listing) whatever its size,
+  *   so one job instead of one per channel is what bounds a small epoch.
+  *   No batch is persisted, no second thread runs, and the transform is
+  *   codegen'd — no per-record driver work anywhere.
+  * - Placement renames each channel's partition dir into place (backup
+  *   pair first, so a failed backup placement fails the epoch before
+  *   anything is staged). A rename is O(1) on local FS and HDFS but a
+  *   copy on object stores (S3A), where placement copies the epoch's
+  *   bytes once. An empty channel still gets its empty `epoch=N` dir.
+  *   The scratch write overwrites and each placement replaces its
+  *   destination, so a replayed epoch (Structured Streaming's epoch-
+  *   idempotent sink contract) rewrites exactly what its first attempt
+  *   wrote, and a crashed attempt's scratch dir never reaches a channel.
+  *   Lines within a part keep source order (the write's per-task sort on
+  *   `channel` is stable in memory); no order is promised across parts.
   * - Wire format: the reference envelope carries base64 data
   *   (tests/test_lbd_to_s3.py:18, lbd/common.py:14); `wireBase64 = true`
   *   runs `unbase64` as the first step of the lineage, so both the
@@ -55,7 +67,7 @@ import graft.model.DeliveryStatus._
   *   shutdown flush — by BOTH the returned [[Pipeline]] handle's
   *   `awaitTermination`/`stop` and a [[StreamingQueryListener]] that
   *   fires on query termination, so no caller can strand staged data.
-  *   `Sinks(root, buffer = None)` writes per-epoch objects directly
+  *   `Sinks(root, buffer = None)` places per-epoch objects directly
   *   (test/debug convenience).
   * - The four-channel audit layout (reference iac/s2_app.py:804-815,
   *   enumerated by debug/s2_inspect_data_in_s3.py:11-16): backup-write
@@ -71,7 +83,7 @@ import graft.model.DeliveryStatus._
   *   replayed source to effectively-once end-to-end.
   * - NDJSON framing: one JSON object + \n per line (the reference's
   *   invariant counted by debug/s2_inspect_data_in_s3.py:19-23) — text
-  *   writer over `to_json` rows.
+  *   writer over `to_json` rows ([[writeNdjson]]).
   */
 object DeliveryPipeline {
 
@@ -98,6 +110,13 @@ object DeliveryPipeline {
     private def resolvedConf: Configuration =
       if (hadoopConf != null) hadoopConf
       else SparkSession.active.sessionState.newHadoopConf()
+
+    private[streaming] lazy val fs: FileSystem = new Path(root).getFileSystem(resolvedConf)
+
+    /** Hidden per-epoch scratch dir of the epoch's one write; removed
+      * once its parts are placed, overwritten by a replay.
+      */
+    private[streaming] def scratch(epochId: Long): Path = new Path(root, s".scratch-epoch=$epochId")
 
     private[streaming] lazy val successBuf: Option[BufferedChannel] =
       buffer.map(b => new BufferedChannel(success, b.maxBytes, b.maxAgeMillis, resolvedConf))
@@ -225,39 +244,18 @@ object DeliveryPipeline {
       .trigger(trigger)
       .option("checkpointLocation", s"$checkpointRoot/delivery")
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val src = batch.select(col("recordId"), col("data"),
-          coalesce(backupFailIf(col("recordId")), lit(false)).as("_bf")).persist()
-        try {
-          // A9: raw pre-transform copy, untouched bytes; injected write
-          // failures land in 02-backup-failed (4-channel audit contract).
-          // A thread this epoch creates inherits the epoch's Spark local
-          // properties (job group, SQL execution id); a pooled thread
-          // keeps those of whichever query first spawned it.
-          val backup = Future {
-            val raw = src.select(col("_bf"), col("data").cast("string").as("line"))
-            writeChannel(raw.filter(!col("_bf")), s"${sinks.backup}/epoch=$epochId")
-            writeChannel(raw.filter(col("_bf")), s"${sinks.backupFailed}/epoch=$epochId")
-          }(ExecutionContext.fromExecutor(r => new Thread(r, s"graft-backup-$epochId").start()))
-          // A3–A8: transform → route → fan-out, staged through the A7 buffers.
-          try {
-            val transformed = lambdaFn match {
-              case Some(fn) => LambdaStage.invoke(src, fn, lambdaMaxBytes)
-              case None     => Codecs.transformEnvelope(src, payloadSchema, dropIf)
-            }
-            val routed = transformed
-              .withColumn("line", col("data").cast("string"))
-              .select("result", "line")
-              .persist()
-            try {
-              deliver(routed.filter(col("result") === Ok).select("line"),
-                sinks.successBuf, sinks.success, epochId)
-              deliver(routed.filter(col("result") === ProcessingFailed).select("line"),
-                sinks.failedBuf, sinks.failed, epochId)
-            } finally routed.unpersist()
-          } finally Await.ready(backup, Duration.Inf)
-          // A failed backup write fails the epoch: it is retried on restart.
-          Await.result(backup, Duration.Inf)
-        } finally src.unpersist()
+        // A3–A8: transform → route, each record's raw bytes kept beside
+        // its routed bytes for the A9 backup.
+        val src = batch.select(col("recordId"), col("data"))
+        val routed = lambdaFn match {
+          case Some(fn) => LambdaStage.invokeWithRaw(src, fn, lambdaMaxBytes)
+          case None     => Codecs.routeEnvelope(src, payloadSchema, dropIf)
+        }
+        // One write job for all four channels, then placement.
+        val scratch = sinks.scratch(epochId)
+        writeNdjson(channelLines(routed, backupFailIf), scratch.toString,
+          partitionBy = Some("channel"))
+        place(sinks, scratch, epochId)
       }
       .start()
 
@@ -301,28 +299,67 @@ object DeliveryPipeline {
     Pipeline(deliveryQ, sinks)
   }
 
-  /** One channel write for one epoch: staged through the size-OR-time
-    * buffer when configured, direct per-epoch object otherwise.
+  /** The epoch's one projection: every source record yields its backup
+    * row (`01-backup`, or `02-backup-failed` where `backupFailIf` holds;
+    * untouched raw bytes) and its routed row (`03-success` for Ok,
+    * `04-failed` for ProcessingFailed, none for Dropped).
     */
-  private def deliver(lines: DataFrame, buf: Option[BufferedChannel],
-      dir: String, epochId: Long): Unit = buf match {
-    case Some(b) => b.append(lines, epochId)
-    case None    => writeChannel(lines, s"$dir/epoch=$epochId")
+  private def channelLines(routed: DataFrame, backupFailIf: Column => Column): DataFrame = {
+    val backupRow = struct(
+      when(coalesce(backupFailIf(col("recordId")), lit(false)), BackupFailedPrefix)
+        .otherwise(BackupPrefix).as("channel"),
+      col("data").cast("string").as("line"))
+    val routedRow = struct(
+      when(col("result") === Ok, SuccessPrefix)
+        .when(col("result") === ProcessingFailed, FailedPrefix).as("channel"),
+      col("routed").cast("string").as("line"))
+    routed.select(inline(array(backupRow, routedRow))).filter(col("channel").isNotNull)
   }
 
-  /** NDJSON channel write: per-epoch overwrite = idempotent on replay.
-    * `line` already carries its trailing newline from the codec; exactly
-    * ONE is stripped so the text writer's separator reproduces the
-    * original bytes ([[Codecs.stripOneTrailingNewline]]).
+  /** Moves each channel's part of the epoch's scratch write into place:
+    * the backup pair first, so a failed backup placement fails the epoch
+    * before anything is staged; then the delivery pair, staged through
+    * the A7 buffers or placed as per-epoch objects. A channel with no
+    * rows in the epoch still gets its (empty) destination.
     */
-  private def writeChannel(lines: DataFrame, path: String): Unit =
-    writeNdjson(lines.select("line"), path)
+  private def place(sinks: Sinks, scratch: Path, epochId: Long): Unit = {
+    val fs = sinks.fs
+    def part(dir: String) = new Path(scratch, s"channel=${new Path(dir).getName}")
+    def asObject(dir: String): Unit = {
+      val dst = new Path(dir, s"epoch=$epochId")
+      move(fs, part(dir), dst)
+      fs.create(new Path(dst, "_SUCCESS"), true).close()
+    }
+    asObject(sinks.backup)
+    asObject(sinks.backupFailed)
+    Seq(sinks.success -> sinks.successBuf, sinks.failed -> sinks.failedBuf).foreach {
+      case (dir, Some(buf)) => buf.stage(epochId)(move(fs, part(dir), _))
+      case (dir, None)      => asObject(dir)
+    }
+    fs.delete(scratch, true)
+  }
 
-  /** The ONE NDJSON framing write, shared by every channel (direct
-    * per-epoch objects here, staged parts in [[BufferedChannel]], the
-    * index backup in [[IndexSink]]) so the framing can never drift
-    * between them. Requires exactly one column — a multi-column frame is
-    * a caller bug that must fail fast, not silently write one column.
+  /** Replace `dst` (whatever a replay left there) with the directory
+    * `src`, or with an empty directory when `src` is absent.
+    */
+  private def move(fs: FileSystem, src: Path, dst: Path): Unit = {
+    fs.delete(dst, true)
+    val moved =
+      if (fs.exists(src)) fs.mkdirs(dst.getParent) && fs.rename(src, dst)
+      else fs.mkdirs(dst)
+    if (!moved) throw new java.io.IOException(s"epoch placement failed: $src -> $dst")
+  }
+
+  /** The ONE NDJSON framing write, shared by every channel (the epoch's
+    * channel-partitioned scratch write here, staged parts written by
+    * [[BufferedChannel.append]], the index backup in [[IndexSink]]) so
+    * the framing can never drift between them. `line` already carries
+    * its trailing newline from the codec; exactly ONE is stripped so the
+    * text writer's separator reproduces the original bytes
+    * ([[Codecs.stripOneTrailingNewline]]). Overwrite: a replayed epoch
+    * replaces its own output. Requires exactly one column besides
+    * `partitionBy` — a wider frame is a caller bug that must fail fast,
+    * not silently write one column.
     *
     * Channel payload contract: the channels are TEXT sinks, so payloads
     * are UTF-8 by contract — the reference's wire form is base64-wrapped
@@ -331,11 +368,14 @@ object DeliveryPipeline {
     * contract and would have each invalid sequence replaced with U+FFFD
     * on write (the string round-trip), not preserved byte-for-byte.
     */
-  private[streaming] def writeNdjson(lines: DataFrame, path: String): Unit = {
-    require(lines.columns.length == 1,
-      s"NDJSON frame must have exactly one column, got ${lines.columns.toSeq}")
-    lines.select(Codecs.stripOneTrailingNewline(col(lines.columns.head)).as("value"))
-      .write.mode("overwrite").text(path)
+  private[streaming] def writeNdjson(lines: DataFrame, path: String,
+      partitionBy: Option[String] = None): Unit = {
+    val payload = lines.columns.filterNot(partitionBy.contains)
+    require(payload.length == 1,
+      s"NDJSON frame must have exactly one column besides $partitionBy, got ${lines.columns.toSeq}")
+    lines.select(partitionBy.map(col).toSeq :+
+        Codecs.stripOneTrailingNewline(col(payload.head)).as("value"): _*)
+      .write.partitionBy(partitionBy.toSeq: _*).mode("overwrite").text(path)
   }
 
   /** Count records across all delivered objects of a channel (epoch= dirs
@@ -348,7 +388,7 @@ object DeliveryPipeline {
     * glob-expanded roots), which would count staged-but-undelivered data.
     */
   def countChannel(spark: SparkSession, path: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(p)) return 0L
     val delivered = fs.listStatus(p).toSeq

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 import graft.model.{DeliveryStatus, RoutedRecord}
 
@@ -73,27 +74,40 @@ object LambdaStage {
     */
   def invoke(envelope: DataFrame, fn: BatchFn,
       maxInvocationBytes: Long = DefaultMaxInvocationBytes,
+      retries: Int = DefaultRetries): DataFrame =
+    invokeWithRaw(envelope, fn, maxInvocationBytes, retries)
+      .select(col("recordId"), col("result"), col("routed").as("data"))
+
+  /** [[invoke]] that keeps each record's raw bytes beside its result:
+    * columns recordId, data (raw), result, routed (the Lambda's bytes).
+    * The delivery epoch writes the raw backup and the routed output from
+    * this one pass.
+    */
+  private[streaming] def invokeWithRaw(envelope: DataFrame, fn: BatchFn,
+      maxInvocationBytes: Long = DefaultMaxInvocationBytes,
       retries: Int = DefaultRetries): DataFrame = {
     val spark = envelope.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     // data may arrive string-typed (Dataset.as cannot upcast string →
     // binary); the cast keeps both envelope spellings working, like the
     // declarative transformEnvelope path does.
     envelope.select(col("recordId"), col("data").cast("binary").as("data")).as[Rec]
-      .mapPartitions(it => invokePartition(it, fn, maxInvocationBytes, retries))
-      .toDF("recordId", "result", "data")
+      .mapPartitions(it => invokePartition(it, fn, maxInvocationBytes, retries)
+        .map { case (in, out) => (in.recordId, in.data, out.result, out.data) })
+      .toDF("recordId", "data", "result", "routed")
   }
 
+  /** Each input record paired with its result, in input order. */
   private def invokePartition(it: Iterator[Rec], fn: BatchFn,
-      maxBytes: Long, retries: Int): Iterator[RoutedRecord] =
+      maxBytes: Long, retries: Int): Iterator[(Rec, RoutedRecord)] =
     groupByBytes(it, maxBytes).flatMap { batch =>
       // 1 + `retries` attempts against the same batch; the first
       // conforming result wins. Only TOTAL failure fails the batch.
-      Iterator.range(0, 1 + math.max(0, retries))
+      val out = Iterator.range(0, 1 + math.max(0, retries))
         .map(_ => attemptInvoke(batch, fn))
         .collectFirst { case Some(out) => out }
         .getOrElse(failAll(batch))
+      batch.zip(out)
     }
 
   /** One invocation attempt: Some(per-record results, input order) when

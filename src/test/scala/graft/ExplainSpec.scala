@@ -38,6 +38,11 @@ class ExplainSpec extends SparkSpec {
     assert("HashAggregate".r.findAllIn(p).size >= 2, p)
   }
 
+  test("q28_json: props is parsed once per row (one from_json in the plan)") {
+    val p = plan("q28_json")
+    assert("from_json\\(".r.findAllIn(p).size == 1, p)
+  }
+
   test("q18: sort+limit fuses to TakeOrderedAndProject (no global sort)") {
     val p = plan("q18_sort_limit")
     assert(p.contains("TakeOrderedAndProject"), p)

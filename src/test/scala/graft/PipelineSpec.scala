@@ -8,8 +8,17 @@ import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 import graft.model.DeliveryStatus._
-import graft.streaming.DeliveryPipeline
+import graft.model.RoutedRecord
+import graft.streaming.{DeliveryPipeline, LambdaStage}
 import graft.streaming.DeliveryPipeline.{BufferConfig, Sinks}
+
+object PipelineSpec {
+  /** An identity Lambda: every record Ok with its own bytes. Lives here
+    * so the closure captures nothing.
+    */
+  val identityFn: LambdaStage.BatchFn = batch =>
+    batch.map(r => RoutedRecord(r.recordId, Ok, r.data))
+}
 
 /** E2E streaming pipeline test — the reference's own correctness bar
   * (README.rst:113-124): count conservation across the audit channels,
@@ -323,6 +332,147 @@ class PipelineSpec extends SparkSpec {
       .select(get_json_object(col("value"), "$.event_id").as("id"))
     assert(ids.count() == n - dropped)
     assert(ids.distinct().count() == n - dropped, "duplicate recordId in 03-success")
+  }
+
+  /** Runs `body` and counts the file-write commands it ran per epoch
+    * (the `epoch=N` in each write's output path).
+    */
+  private def writesPerEpoch(body: => Unit): Map[Long, Int] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val outputs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      private def record(qe: QueryExecution): Unit = qe.logical.foreach {
+        case c: InsertIntoHadoopFsRelationCommand => outputs.add(c.outputPath.toString)
+        case _ =>
+      }
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = record(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = record(qe)
+    }
+    // Registered before the query starts: its session clones the
+    // listeners it sees then.
+    spark.listenerManager.register(listener)
+    try {
+      body
+      // Listener events arrive asynchronously, in order: once a marker
+      // write shows up, every earlier write has been seen.
+      val marker = Files.createTempDirectory("graft-marker").toString
+      spark.range(1).selectExpr("'m'").write.mode("overwrite").text(marker)
+      def seen = outputs.toArray.exists(_.toString.endsWith(marker))
+      val deadline = System.currentTimeMillis() + 30000
+      while (!seen && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      assert(seen, "the marker write never reached the listener")
+    } finally spark.listenerManager.unregister(listener)
+    val epoch = "epoch=(\\d+)".r
+    outputs.toArray.toSeq.flatMap(p => epoch.findFirstMatchIn(p.toString))
+      .map(_.group(1).toLong).groupBy(identity).map { case (e, ws) => e -> ws.size }
+  }
+
+  test("one write job per epoch, declarative and lambdaFn paths alike") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft-one-write").toString
+    (0 until 3).foreach { f =>
+      (1 to 20).map(i => s"""{"recordId": "f$f-r$i", "line": "{\\"event_id\\": ${f * 100 + i}, \\"user_id\\": 1, \\"event_type\\": \\"view\\", \\"value\\": ${if (i % 5 == 0) 5 else 50}.0}"}""")
+        .toDF("value").coalesce(1).write.mode("append").text(s"$tmp/in")
+    }
+    Seq("declarative" -> None, "lambdaFn" -> Some(PipelineSpec.identityFn)).foreach {
+      case (path, fn) =>
+        val envelope = spark.readStream.schema(envelopeSchema)
+          .option("maxFilesPerTrigger", 1).json(s"$tmp/in")
+          .select(col("recordId"), lit(0L).as("approximateArrivalTimestamp"),
+            col("line").cast("binary").as("data"))
+        val sinks = Sinks(s"$tmp/out-$path")
+        var epochs = Set.empty[Long]
+        val writes = writesPerEpoch {
+          val pipe = DeliveryPipeline.start(envelope, payloadSchema, sinks, s"$tmp/ckpt-$path",
+            dropIf = p => p.getField("value") < 10,
+            backupFailIf = rid => rid.endsWith("-r7"), lambdaFn = fn)
+          assert(pipe.awaitTermination(120000))
+          epochs = pipe.delivery.recentProgress.filter(_.numInputRows > 0).map(_.batchId).toSet
+        }
+        assert(epochs.size == 3, s"$path: epochs $epochs")
+        assert(writes == epochs.map(_ -> 1).toMap, s"$path: write jobs per epoch")
+        // Every channel still carries its records.
+        val dropped = if (fn.isEmpty) 12 else 0
+        assert(DeliveryPipeline.countChannel(spark, sinks.backup) == 57, path)
+        assert(DeliveryPipeline.countChannel(spark, sinks.backupFailed) == 3, path)
+        assert(DeliveryPipeline.countChannel(spark, sinks.success) == 60 - dropped, path)
+        assert(DeliveryPipeline.countChannel(spark, sinks.failed) == 0, path)
+    }
+  }
+
+  test("unbuffered layout: every epoch places all four channels, bytes in " +
+      "source order; a replayed epoch's stale scratch reaches no channel") {
+    val tmp = Files.createTempDirectory("graft-layout").toString
+    def ev(id: Int, value: Double) =
+      s"""{"event_id": $id, "user_id": 7, "event_type": "view", "value": $value}"""
+    def out(id: Int, value: Double) =
+      s"""{"event_id":$id,"user_id":7,"event_type":"view","value":$value}"""
+    def quoted(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+    // Epoch 0: Ok, Dropped, malformed, backup-failed Ok, Ok.
+    // Epoch 1: Ok, Dropped (no backup-failed or failed records).
+    val epoch0 = Seq("r1" -> ev(1, 50.0), "r2" -> ev(2, 5.0), "r3" -> "not json {",
+      "r4" -> ev(4, 60.0), "r5" -> ev(5, 70.0))
+    val epoch1 = Seq("r6" -> ev(6, 80.0), "r7" -> ev(7, 1.0))
+    Files.createDirectories(java.nio.file.Paths.get(s"$tmp/in"))
+    Seq(epoch0, epoch1).zipWithIndex.foreach { case (recs, k) =>
+      val f = java.nio.file.Paths.get(s"$tmp/in/in-$k.json")
+      Files.write(f, recs.map { case (id, line) =>
+        s"""{"recordId": "$id", "line": ${quoted(line)}}""" }.mkString("\n").getBytes("UTF-8"))
+      f.toFile.setLastModified(System.currentTimeMillis() - 60000 + k * 10000)
+    }
+    val expected = Map(
+      BackupPrefix -> Seq(Seq(ev(1, 50.0), ev(2, 5.0), "not json {", ev(5, 70.0)),
+        Seq(ev(6, 80.0), ev(7, 1.0))),
+      BackupFailedPrefix -> Seq(Seq(ev(4, 60.0)), Seq()),
+      SuccessPrefix -> Seq(Seq(out(1, 50.0), out(4, 60.0), out(5, 70.0)), Seq(out(6, 80.0))),
+      FailedPrefix -> Seq(Seq("not json {"), Seq()))
+
+    def start(root: String) = DeliveryPipeline.start(
+      spark.readStream.schema(envelopeSchema).option("maxFilesPerTrigger", 1)
+        .json(s"$tmp/in")
+        .select(col("recordId"), lit(0L).as("approximateArrivalTimestamp"),
+          col("line").cast("binary").as("data")),
+      payloadSchema, Sinks(root, buffer = None), s"$root-ckpt",
+      dropIf = p => p.getField("value") < 10, backupFailIf = rid => rid === "r4")
+    def checkChannels(root: String): Unit = expected.foreach { case (ch, perEpoch) =>
+      perEpoch.zipWithIndex.foreach { case (lines, epoch) =>
+        val dir = new java.io.File(s"$root/$ch/epoch=$epoch")
+        assert(new java.io.File(dir, "_SUCCESS").isFile, s"$dir has no _SUCCESS")
+        val parts = dir.listFiles.toSeq.filter(_.getName.startsWith("part-")).sortBy(_.getName)
+        val bytes = parts.map(f => new String(Files.readAllBytes(f.toPath), "UTF-8")).mkString
+        assert(bytes == lines.map(_ + "\n").mkString, s"$ch/epoch=$epoch")
+      }
+      assert(new java.io.File(s"$root/$ch").list.filter(_.startsWith("epoch=")).sorted.toSeq ==
+        Seq("epoch=0", "epoch=1"), ch)
+    }
+
+    // A clean run.
+    val clean = s"$tmp/clean"
+    assert(start(clean).awaitTermination(120000))
+    checkChannels(clean)
+    assert(new java.io.File(clean).list.sorted.toSeq == expected.keys.toSeq.sorted,
+      "only the four channels under the sink root (no scratch dir left)")
+
+    // A failed first attempt at epoch 0 (its backup cannot be placed),
+    // then a stale part planted in that epoch's scratch dir, then the
+    // replay.
+    val replayed = s"$tmp/replayed"
+    val blocker = java.nio.file.Paths.get(s"$replayed/$BackupPrefix")
+    Files.createDirectories(blocker.getParent)
+    Files.write(blocker, "not a directory".getBytes("UTF-8"))
+    val p1 = start(replayed)
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](p1.awaitTermination(120000))
+    p1.stop()
+    Files.delete(blocker)
+    expected.keys.foreach { ch =>
+      val stale = java.nio.file.Paths.get(s"$replayed/.scratch-epoch=0/channel=$ch")
+      Files.createDirectories(stale)
+      Files.write(stale.resolve("part-00000-stale.txt"), "STALE\n".getBytes("UTF-8"))
+    }
+    assert(start(replayed).awaitTermination(120000))
+    checkChannels(replayed)
   }
 
   test("a replayed flushed epoch is not re-delivered (watermark skip)") {
