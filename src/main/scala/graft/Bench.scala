@@ -1,22 +1,35 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.streaming.DeliveryPipeline
 
-/** Per-round benchmark main (driver contract): one JSON line with total
-  * seconds + per-query seconds over SPARK_GRAFT_SF_DIR, plus the
-  * streaming-pipeline sustained throughput (records/s through decode →
-  * transform → 3-way route → dual sink — the BASELINE.md headline).
+/** Benchmark main (driver contract) and the one tool that times or
+  * explains registry keys. Both modes share one session setup
+  * ([[SparkEntry.localSession]]), one warmup and one timing loop
+  * ([[runQueries]] over [[timeOne]]).
   *
-  * Reporting hardening (round-4, stall-proofed round-7):
+  * `runMain graft.Bench` (no args): one JSON line with total seconds +
+  * per-query seconds over SPARK_GRAFT_SF_DIR, plus the streaming-pipeline
+  * sustained throughput (records/s through decode → transform → 3-way
+  * route → backup + delivery channels — the BASELINE.md headline).
+  *
+  * `runMain graft.Bench <key>... [-x]` (key mode): times only the named
+  * registry keys and prints one `PROBE <key> median=… all=…` line per
+  * key; `-x` first prints each key's formatted physical plan under a
+  * `PLAN <key>` header line, so a slow bench line can be read plan-first
+  * (`Bench k1 k2 -x > plans/<dir>/before.txt` captures before/after
+  * plans). Key mode runs no streaming stage and prints no JSON line.
+  *
+  * Reporting hardening:
   * - passes are interleaved REP-MAJOR across the whole suite (pass 1 of
   *   every query, then pass 2, ...): a host stall is a contiguous
   *   window of wall clock, and query-major ordering used to put all
-  *   `Reps` passes of one query inside it — BENCH_r06 reported a pure
-  *   narrow projection at 61.8 s that re-probed at 1.19 s. Interleaved,
+  *   `Reps` passes of one query inside it — a pure narrow projection
+  *   once reported 61.8 s that re-probed at 1.19 s. Interleaved,
   *   one stall window inflates at most one pass of MANY queries, which
   *   the median shrugs off and the min ignores entirely;
   * - per-query MIN rides alongside the median (`queries_min`): the min
@@ -31,35 +44,36 @@ import graft.streaming.DeliveryPipeline
   *   swallowed as a fast time;
   * - a secondary scale (the sf0.01 sibling of the primary dir, when it
   *   exists) is timed single-pass in the same run, so plan regressions
-  *   can be separated from throttle noise across rounds;
-  * - three plan-stable cheap queries are the WINDOW CANARY (round-11,
-  *   widened to a median-of-three round-12): the median of their mins
-  *   vs their own pins is emitted as `window_factor`, the regression
-  *   map is reported both raw and canary-normalized
+  *   can be separated from throttle noise across runs;
+  * - three plan-stable cheap queries are the WINDOW CANARY: the median
+  *   of their mins vs their own pins is emitted as `window_factor`, the
+  *   regression map is reported both raw and canary-normalized
   *   (`regressed_normalized`), and a factor ≥1.5× marks the run
   *   `window: "contended"` — so an ambient host swing adjudicates
   *   itself instead of needing a fresh-window re-run (see
   *   [[normalizedRegressions]]);
-  * - the pipeline + live-epoch stages get their OWN canary bracket
-  *   (round-15): one canary pass immediately before the pipeline stage
-  *   and one immediately after the live stage; the per-key min vs the
-  *   pins is `window_factor_stream`, and every pipeline/live series is
-  *   emitted raw AND normalized by it — the query-stage factor is
-  *   measured minutes earlier and two rounds of committed rows
-  *   under-read exactly the two unbaselined streaming series by 2–3×
-  *   in windows the query canaries never saw;
+  * - the pipeline + live-epoch stages get their OWN canary bracket:
+  *   one canary pass immediately before the pipeline stage and one
+  *   immediately after the live stage; the per-key min vs the pins is
+  *   `window_factor_stream`, and every pipeline/live series is emitted
+  *   raw AND normalized by it — the query-stage factor is measured
+  *   minutes earlier, and committed rows have under-read exactly the
+  *   two unbaselined streaming series by 2–3× in windows the query
+  *   canaries never saw;
   * - the pipeline number counts DELIVERED records (success + failed
   *   channels via countChannel + the dropped count), asserted conserved
   *   against the source count before printing, over the base64 wire form
   *   the reference uses (lbd/common.py:14).
+  *
+  * When each of these landed: `docs/NOTES_bench_history.md`.
   */
 object Bench {
-  private val Reps = 3
+  private[graft] val Reps = 3
 
   /** Passes disagreeing by more than this factor mean at least one pass
     * sat inside a host-stall window (plans are deterministic; genuine
-    * variance on this box is ≤3×, the round-4 measurement that set
-    * median-of-3 — 5× clears it with margin).
+    * variance on this box is ≤3×, the measurement that set median-of-3
+    * — 5× clears it with margin).
     */
   private val SpreadBar = 5.0
 
@@ -71,17 +85,16 @@ object Bench {
   private[graft] val RegressionRatio = 1.5
   private[graft] val RegressionFloorSec = 0.3
 
-  /** The window canaries: three cheap queries whose plans have not
-    * changed since round 1 (a pure parquet scan, a narrow projection,
-    * a small agg+limit), so the MEDIAN of their ratios vs their own
-    * pins measures the HOST window, not the code. Four rounds running,
-    * ambient 3–4× host swings produced regression flags that dissolved
-    * on a judge re-run (r10: 11 flagged keys, 2 real); the canary lets
-    * the bench adjudicate that itself. A median of three, not a single
-    * key (round-12 hardening): with one canary, a genuine regression
-    * in the scan layer itself would inflate the factor and normalize
-    * away a co-occurring fleet-wide regression — with three, one
-    * regressed canary moves the median nowhere and instead shows up
+  /** The window canaries: three cheap queries whose plans stay fixed
+    * (a pure parquet scan, a narrow projection, a small agg+limit), so
+    * the MEDIAN of their ratios vs their own pins measures the HOST
+    * window, not the code. Ambient 3–4× host swings used to produce
+    * regression flags that dissolved on a re-run (once 11 flagged keys,
+    * 2 real); the canary lets the bench adjudicate that itself. A
+    * median of three, not a single key: with one canary, a genuine
+    * regression in the scan layer itself would inflate the factor and
+    * normalize away a co-occurring fleet-wide regression — with three,
+    * one regressed canary moves the median nowhere and instead shows up
     * flagged like any other key.
     */
   private[graft] val CanaryKeys = Seq("q01_scan", "q02_project", "q58_limit_offset")
@@ -90,6 +103,34 @@ object Bench {
     * flags from it are suspect even after normalization.
     */
   private[graft] val ContendedBar = 1.5
+
+  /** MEDIAN over [[CanaryKeys]] of (measured / pin), lower middle on
+    * even counts, 1.0 when no canary is comparable — the shared window
+    * gauge for both the query flags and the streaming-series
+    * normalization.
+    */
+  private[graft] def canaryFactor(mins: Map[String, Double],
+      base: Map[String, Double]): Double = {
+    val ratios = CanaryKeys.flatMap(k =>
+      for { v <- mins.get(k); b <- base.get(k) if b > 0 } yield v / b).sorted
+    if (ratios.isEmpty) 1.0 else ratios((ratios.size - 1) / 2)
+  }
+
+  /** The keys of `measured` that regressed vs their `pins` once each
+    * measurement is divided by `excuse` (1.0 for a raw map): more than
+    * [[RegressionRatio]] × pin AND more than [[RegressionFloorSec]]
+    * slower. Each value is the excused ratio rounded to 2dp — it's a
+    * flag, not a measurement.
+    */
+  private[graft] def regressed(measured: Map[String, Double],
+      pins: Map[String, Double], excuse: Double): Map[String, Double] =
+    measured.flatMap { case (n, v) =>
+      pins.get(n).collect {
+        case b if b > 0 && v / excuse > RegressionRatio * b &&
+            v / excuse - b > RegressionFloorSec =>
+          n -> math.rint(v / excuse / b * 100) / 100
+      }
+    }
 
   /** Regression maps vs the pinned baseline, raw and canary-normalized:
     * (window_factor, raw flags, normalized flags).
@@ -104,37 +145,16 @@ object Bench {
     * because it slowed MORE than the canaries did. The excuse is
     * clamped at 1 — a faster-than-pin window must not amplify ratios
     * into false flags, and a fast canary must never excuse anything
-    * either. A single regressed canary key no longer moves the factor
+    * either. A single regressed canary key does not move the factor
     * (the other two hold the median down), so it surfaces in the
     * NORMALIZED map like any other regression instead of masking the
     * fleet.
     */
-  /** MEDIAN over [[CanaryKeys]] of (measured / pin), lower middle on
-    * even counts, 1.0 when no canary is comparable — the shared window
-    * gauge for both the query flags and the streaming-series
-    * normalization.
-    */
-  private[graft] def canaryFactor(mins: Map[String, Double],
-      base: Map[String, Double]): Double = {
-    val ratios = CanaryKeys.flatMap(k =>
-      for { v <- mins.get(k); b <- base.get(k) if b > 0 } yield v / b).sorted
-    if (ratios.isEmpty) 1.0 else ratios((ratios.size - 1) / 2)
-  }
-
   private[graft] def normalizedRegressions(mins: Map[String, Double],
       base: Map[String, Double])
       : (Double, Map[String, Double], Map[String, Double]) = {
     val wf = canaryFactor(mins, base)
-    val excuse = math.max(1.0, wf)
-    def flags(scale: Double) = mins.flatMap { case (n, v) =>
-      base.get(n).collect {
-        case b if b > 0 && v / scale > RegressionRatio * b &&
-            v / scale - b > RegressionFloorSec =>
-          // Ratio rounded to 2dp — it's a flag, not a measurement.
-          n -> math.rint(v / scale / b * 100) / 100
-      }
-    }.toMap
-    (wf, flags(1.0), flags(excuse))
+    (wf, regressed(mins, base, 1.0), regressed(mins, base, math.max(1.0, wf)))
   }
 
   /** Per-query baseline (BASELINE_QUERIES.json — a flat name→seconds
@@ -160,18 +180,61 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
+    val keys = args.filterNot(_.startsWith("-")).toSeq.distinct
+    requireKnown(keys)
+    val spark = SparkEntry.localSession()
     warmup(spark, sfDir)
+    if (keys.nonEmpty) probe(spark, sfDir, keys, explain = args.contains("-x"))
+    else report(spark, sfDir)
+    spark.stop()
+  }
+
+  /** Fails before any session starts when a key is not in the
+    * registry, listing the valid keys.
+    */
+  private[graft] def requireKnown(keys: Seq[String]): Unit = {
+    val valid = SparkEntry.queries.keySet
+    val unknown = keys.filterNot(valid)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}; " +
+      s"valid: ${valid.toSeq.sorted.mkString(", ")}")
+  }
+
+  /** Key mode (see the object scaladoc); a key that throws prints its
+    * error on its `PROBE` line.
+    */
+  private def probe(spark: SparkSession, sfDir: String, keys: Seq[String],
+      explain: Boolean): Unit = {
+    if (explain) {
+      val registry = SparkEntry.queries
+      keys.foreach { k =>
+        println(s"PLAN $k")
+        println(registry(k)(spark, sfDir).queryExecution
+          .explainString(ExplainMode.fromString("formatted")))
+      }
+    }
+    val (samples, errors) = runQueries(spark, sfDir, Reps, keys)
+    keys.foreach { k =>
+      samples.get(k) match {
+        case Some(ss) => println(f"PROBE $k%-28s median=${median(ss)}%.3f  " +
+          s"all=${ss.map(s => f"$s%.3f").mkString(",")}")
+        case None => println(s"PROBE $k error=${errors(k).take(160)}")
+      }
+    }
+  }
+
+  /** Upper-middle on even counts is INTENTIONAL, not an off-by-one: a
+    * 4-sample vector exists only after a re-probe, i.e. the original
+    * passes already disagreed; taking the pessimistic middle keeps a
+    * 2-of-3-stalled query visibly slow instead of averaging the stall
+    * away (suspect_stall flags it either way, and `mins` carries the
+    * optimistic reading).
+    */
+  private def median(ss: Seq[Double]): Double = ss.sorted.apply(ss.size / 2)
+
+  /** The full run: every key, both scales, the streaming stages, the
+    * re-probe and the one JSON line.
+    */
+  private def report(spark: SparkSession, sfDir: String): Unit = {
     val (rawSamples, errors) = runQueries(spark, sfDir, Reps)
 
     val errorsAll = scala.collection.mutable.Map.empty[String, String] ++ errors
@@ -206,18 +269,17 @@ object Bench {
       case (bSf, _, fb) if sfOfDir.contains(bSf) => fb
     }.getOrElse(Map.empty)
 
-    // STREAM canary bracket (round-15; VERDICT r14 #1): the query-stage
-    // window_factor is measured minutes before the pipeline/live stages
-    // run, and two rounds of committed round-end rows under-read
-    // exactly those two series by 2–3× in windows the query canaries
-    // never saw. One canary pass immediately BEFORE the pipeline stage
+    // STREAM canary bracket: the query-stage window_factor is measured
+    // minutes before the pipeline/live stages run, and committed rows
+    // have under-read exactly those two series by 2–3× in windows the
+    // query canaries never saw. One canary pass immediately BEFORE the pipeline stage
     // and one immediately AFTER the live stage bracket the streaming
     // stages; the per-key MIN of the two passes vs the pins gives the
     // factor that actually applied while the streams ran (min, not
     // median-of-two: a stall hitting only one bracket must not inflate
     // the excuse). Both raw and normalized series are emitted — the
     // raw numbers stay the measurement, the normalized ones are the
-    // cross-round comparable.
+    // cross-run comparable.
     def canaryPass(): Map[String, Double] = CanaryKeys.flatMap { k =>
       SparkEntry.queries.get(k)
         .flatMap(fn => timeOne(spark, sfDir, fn).toOption.map(k -> _))
@@ -234,13 +296,12 @@ object Bench {
         (0.0, -1L, "error: " + Option(e.getMessage).getOrElse(e.getClass.getName).take(160))
       }
 
-    // Live-store epoch delivery (VERDICT r10 #6): the most intricate
-    // machinery in the repo — epoch deltas into the text index, the
-    // span-dedup gram state, the percolator, and the near-dup
-    // signature store, inside the delivery commit — previously had no
-    // recorded number, so a regression there was invisible. Guarded
-    // like the pipeline. Round-12: a second, production-shaped epoch
-    // separates the per-epoch protocol overhead (intercept) from the
+    // Live-store epoch delivery: the most intricate machinery in the
+    // repo — epoch deltas into the text index, the span-dedup gram
+    // state, the percolator, and the near-dup signature store, inside
+    // the delivery commit — gets its own number, so a regression there
+    // is visible. Guarded like the pipeline. A second, production-shaped
+    // epoch separates the per-epoch protocol overhead (intercept) from the
     // marginal per-record cost — the 4×corpus shape alone reads as
     // "333 rec/s" when ~90% of that is fixed per-epoch cost that
     // amortizes ~30× at the reference's real epoch size.
@@ -274,13 +335,6 @@ object Bench {
         case Left(_) => ss
       })
     }
-    // Upper-middle on even counts is INTENTIONAL, not an off-by-one: a
-    // 4-sample vector exists only after a re-probe, i.e. the original
-    // passes already disagreed; taking the pessimistic middle keeps a
-    // 2-of-3-stalled query visibly slow instead of averaging the stall
-    // away (suspect_stall flags it either way, and `mins` carries the
-    // optimistic reading).
-    def median(ss: Seq[Double]): Double = ss.sorted.apply(ss.size / 2)
     val times = samples.map { case (n, ss) => n -> median(ss) }
     val mins = samples.map { case (n, ss) => n -> ss.min }
     // First-rep (coldest-available) time per query: for keys whose later
@@ -297,9 +351,9 @@ object Bench {
       case (n, ss) if median(ss) > SpreadBar * ss.min => n
     }.toSeq.sorted
 
-    // Mechanical regression check against the pinned per-query baseline
-    // (VERDICT r7 item 7): compare stall-robust min vs baseline min,
-    // only at the baseline's own scale factor.
+    // Mechanical regression check against the pinned per-query
+    // baseline: compare stall-robust min vs baseline min, only at the
+    // baseline's own scale factor.
     // A baseline:"ok" with silently-skipped queries would read as full
     // coverage; surface the gap so a grown registry forces a re-pin.
     val (baselineState, windowFactor, regressions, regressionsNorm, uncovered) =
@@ -317,25 +371,16 @@ object Bench {
       if (baselineState != "ok") "unknown"
       else if (windowFactor >= ContendedBar) "contended"
       else "ok"
-    // Cold-path regression map (round-16; VERDICT r15 #9): for memo/
-    // index-served keys the MIN measures serving, so a regression in
-    // the underlying build shows only in the first rep — compare each
-    // key's first-rep time against its pinned "_first:" cold reference
-    // (pinned only where first > 1.05×min), normalized by the same
-    // canary window factor. Single-sample, so advisory: read alongside
-    // regressed_normalized, not instead of it.
+    // Cold-path regression map: for memo/index-served keys the MIN
+    // measures serving, so a regression in the underlying build shows
+    // only in the first rep — compare each key's first-rep time against
+    // its pinned "_first:" cold reference (pinned only where first >
+    // 1.05×min), normalized by the same canary window factor and judged
+    // by the same [[regressed]] rule. Single-sample, so advisory: read
+    // alongside regressed_normalized, not instead of it.
     val regressedFirst: Map[String, Double] =
       if (baselineState != "ok") Map.empty
-      else {
-        val excuse = math.max(1.0, windowFactor)
-        firsts.flatMap { case (n, v) =>
-          firstBaseForSf.get(n).collect {
-            case b if b > 0 && v / excuse > RegressionRatio * b &&
-                v / excuse - b > RegressionFloorSec =>
-              n -> math.rint(v / excuse / b * 100) / 100
-          }
-        }.toMap
-      }
+      else regressed(firsts, firstBaseForSf, math.max(1.0, windowFactor))
 
     def jmap(m: Iterable[(String, Double)]): String =
       m.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
@@ -351,19 +396,17 @@ object Bench {
     // Normalized stream series: rates scale UP by the bracket factor
     // (a contended window stretched the wall clock), seconds scale
     // DOWN. Raw values stay in the row — the normalized ones are the
-    // cross-round comparables.
+    // cross-run comparables.
     val rpsNorm = rps * streamExcuse
     val liveRpsNorm = liveRps * streamExcuse
     val liveOverheadNorm = liveOverheadSec / streamExcuse
     val liveMarginalNorm = liveMarginalRps * streamExcuse
     val compactNorm = compactSecs / streamExcuse
-    // Field order (round-16; VERDICT r15 #2): the scalars + the
-    // per-key MIN map lead the line, so a downstream recorder that
-    // truncates the (now ~30 KB) row still keeps the cross-round
-    // comparable part; every pre-existing field is still emitted (JSON
+    // Field order: the scalars + the per-key MIN map lead the line, so
+    // a downstream recorder that truncates the (~30 KB) row still keeps
+    // the cross-run comparable part; every pre-existing field is still emitted (JSON
     // parsing is order-free — only truncation robustness changes).
     println(s"""{"metric":"total","value":$total,"unit":"sec","total_min":$totalMin,"sf":${jstr(sfDir)},"reps":$Reps,"window_factor":${math.rint(windowFactor * 100) / 100},"window":${jstr(windowState)},"window_factor_stream":${math.rint(streamWf * 100) / 100},"baseline":${jstr(baselineState)},"queries_min":$qmins,"queries":$qs,"queries_first":$qfirsts,"suspect_stall":${suspect.map(jstr).mkString("[", ",", "]")},"errors":$errs,"queries_sf001":${jmap(altTimes.toSeq.sortBy(_._1))},"regressed_vs_baseline":${jmap(regressions.toSeq.sortBy(_._1))},"regressed_normalized":${jmap(regressionsNorm.toSeq.sortBy(_._1))},"regressed_first":${jmap(regressedFirst.toSeq.sortBy(_._1))},"baseline_uncovered":${uncovered.map(jstr).mkString("[", ",", "]")},"pipeline_records":$pipeRecs,"pipeline_records_per_sec":$rps,"pipeline_records_per_sec_normalized":${math.rint(rpsNorm * 10) / 10},"pipeline_conservation":${jstr(conservation)},"live_epoch_records":$liveRecs,"live_epoch_records_per_sec":$liveRps,"live_epoch_records_per_sec_normalized":${math.rint(liveRpsNorm * 10) / 10},"live_epoch_overhead_sec":${math.rint(liveOverheadSec * 100) / 100},"live_epoch_overhead_sec_normalized":${math.rint(liveOverheadNorm * 100) / 100},"live_epoch_marginal_rps":${math.rint(liveMarginalRps * 10) / 10},"live_epoch_marginal_rps_normalized":${math.rint(liveMarginalNorm * 10) / 10},"compaction_sec":$compactSecs,"compaction_sec_normalized":${math.rint(compactNorm * 100) / 100},"live_state":${jstr(liveState)}}""")
-    spark.stop()
   }
 
   /** JSON string literal with full escaping — embedded values (error
@@ -406,21 +449,23 @@ object Bench {
     } finally spark.catalog.clearCache() // q32/q44 cache within their action
   }
 
-  /** `reps` timed passes per registry query, interleaved REP-MAJOR (see
-    * the object scaladoc for why). A query that throws is reported once
-    * in the errors map, dropped from the timings (partial samples from a
-    * pass-then-throw query would make the report ambiguous about whether
-    * it passed), and skipped in later reps.
+  /** `reps` timed passes per registry query in `keys` (default: every
+    * key, sorted), interleaved REP-MAJOR (see the object scaladoc for
+    * why). A query that throws is reported once in the errors map,
+    * dropped from the timings (partial samples from a pass-then-throw
+    * query would make the report ambiguous about whether it passed), and
+    * skipped in later reps.
     */
-  private def runQueries(spark: SparkSession, sfDir: String, reps: Int)
+  private[graft] def runQueries(spark: SparkSession, sfDir: String, reps: Int,
+      keys: Seq[String] = SparkEntry.queries.keys.toSeq.sorted)
       : (Map[String, Vector[Double]], Map[String, String]) = {
     val samples = scala.collection.mutable.Map.empty[String, Vector[Double]]
     val errors = scala.collection.mutable.Map.empty[String, String]
-    val registry = SparkEntry.queries.toSeq.sortBy(_._1)
+    val registry = SparkEntry.queries
     var rep = 0
     while (rep < reps) {
-      registry.foreach { case (name, fn) =>
-        if (!errors.contains(name)) timeOne(spark, sfDir, fn) match {
+      keys.foreach { name =>
+        if (!errors.contains(name)) timeOne(spark, sfDir, registry(name)) match {
           case Right(s) =>
             samples(name) = samples.getOrElse(name, Vector.empty) :+ s
           case Left(msg) =>
@@ -436,11 +481,8 @@ object Bench {
   /** Epoch-delivery throughput with every per-epoch maintenance hook
     * active — textIndex + spanState + percolator + nearDupState +
     * sketchState + rateState, all SIX maintained artifacts of
-    * [[graft.streaming.IndexSink.start]] (round-14: the pinned series
-    * used to drive only four, under-measuring what a production sink
-    * runs — expect this round's overhead/marginal to step up
-    * accordingly and treat it as a re-pin, not a regression) — plus
-    * the store compaction latency. Three fixture shapes:
+    * [[graft.streaming.IndexSink.start]], so the series measures what a
+    * production sink runs — plus the store compaction latency. Three fixture shapes:
     *
     *  1. `epochs` corpus-sized deliveries (sf0.1: 4 × 5k docs) — the
     *     pinned `live_epoch_records_per_sec` series;
@@ -456,9 +498,9 @@ object Bench {
     * `live_epoch_overhead_sec` (the intercept a) and
     * `live_epoch_marginal_rps` (1/m) are what transfer to other epoch
     * sizes, while the aggregate rate explains itself by its intercept.
-    * The fit is a median-of-pairwise-slopes (Theil–Sen on 3 points;
-    * round-14, after r13's two-point line zeroed the marginal on one
-    * reboot-window sample): one contaminated MIDDLE shape leaves the
+    * The fit is a median-of-pairwise-slopes (Theil–Sen on 3 points; a
+    * two-point line once zeroed the marginal on one reboot-window
+    * sample): one contaminated MIDDLE shape leaves the
     * clean endpoint slope as the median, and a contaminated endpoint
     * degrades the estimate boundedly instead of degenerately —
     * [[BenchWindowSpec]] pins both behaviors.
@@ -477,7 +519,7 @@ object Bench {
     * @return (records, records/s, compaction seconds,
     *         per-epoch overhead seconds, marginal records/s, state)
     */
-  private[graft] def liveStoreThroughput(spark: SparkSession, sfDir: String)
+  private def liveStoreThroughput(spark: SparkSession, sfDir: String)
       : (Long, Double, Double, Double, Double, String) = {
     import graft.streaming.{IndexSink, LiveNearDedup, LiveRates, LiveSketch,
       LiveSpanDedup, LiveTextIndex}
@@ -486,7 +528,7 @@ object Bench {
     val par = spark.sparkContext.defaultParallelism
 
     /** Deliver `copies` corpus replicas as `epochs` equal epoch files
-      * through all four hooks into fresh stores under `tmp`; returns
+      * through all six hooks into fresh stores under `tmp`; returns
       * (wall seconds, records) or a thrown-free error state.
       */
     def run(tmp: String, epochs: Int, copiesPerEpoch: Long)
@@ -599,7 +641,7 @@ object Bench {
     * shapes, a contaminated middle point leaves the endpoint slope as
     * the median (both its slopes move in opposite directions), and a
     * contaminated endpoint biases the estimate boundedly instead of
-    * zeroing it, which is what r13's two-point line did on one
+    * zeroing it, which is what a two-point line did on one
     * reboot-window sample. A noisy window can still measure bigger
     * epochs faster per record than smaller ones (median m ≤ 0) — then
     * there is no meaningful marginal rate (reported 0); both outputs
@@ -623,8 +665,9 @@ object Bench {
   }
 
   /** Replay the events table through the full streaming graph (NDJSON
-    * envelope files → readStream → backup + transform/route dual sink,
-    * base64 wire form) and report (wall seconds, DELIVERED records).
+    * envelope files → readStream → one delivery query that writes the
+    * backup and the transformed/routed channels each epoch, base64 wire
+    * form) and report (wall seconds, DELIVERED records).
     * Mirrors the reference benchmark's E2E path (README.rst:100-124) on
     * local storage. The returned record count is countChannel(success) +
     * countChannel(failed) + dropped — NOT the source count — and the run
@@ -644,7 +687,7 @@ object Bench {
     // Sustained-rate methodology (reference README.rst:95-111: 1.92M
     // records over 745 s): replicate the envelope to ~1M records so the
     // measured rate is dominated by steady-state processing, not by the
-    // fixed cost of starting two streaming queries — at sf0.1's native
+    // fixed cost of starting the streaming query — at sf0.1's native
     // 100k records that startup is most of the wall clock. Each copy
     // gets a UNIQUE recordId (copy-qualified), so this is 1M distinct
     // records through the pipeline, not one batch counted `factor`

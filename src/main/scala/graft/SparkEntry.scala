@@ -33,4 +33,25 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     registry.flatMap(q => q.oracle.map(q.name -> _)).toMap
+
+  /** The local session [[Bench]] and [[Verify]] run on:
+    * `local[SPARK_GRAFT_CPUS]` (default: the available cores, at most
+    * 32), AQE on, UTC session zone, UI off, WARN logging. Shuffle
+    * partitions default to the core count, so a timed plan matches the
+    * host it runs on.
+    */
+  private[graft] def localSession(
+      shufflePartitions: Option[String] = None): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", shufflePartitions.getOrElse(cpus))
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

@@ -1,25 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
     // SPARK_GRAFT_SHUFFLE decouples the shuffle-partition count from the
     // thread count for the parallelism-independence audit (e.g. local[3]
     // with 7 partitions vs local[5] with 11 — tools/compare_dumps.py).
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(sys.env.get("SPARK_GRAFT_SHUFFLE"))
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q137_x,q138_y restricts the dump to the named
     // keys (incremental re-verification at expensive tiers; the full

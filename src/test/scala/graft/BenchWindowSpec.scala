@@ -137,6 +137,22 @@ class BenchWindowSpec extends AnyFunSuite {
     }
   }
 
+  test("first-rep map through the shared rule: a canary-excused key is " +
+      "not flagged, a key slowed beyond the floor is") {
+    val mins = pins.map { case (k, v) => k -> v * 2.0 } // 2× host window
+    val firstPins = Map("q44_lsh_pairs" -> 3.0, "q86_hybrid_rrf" -> 1.0)
+    val firsts = Map(
+      "q44_lsh_pairs" -> 3.0 * 2.0,         // slowed by the window only
+      "q86_hybrid_rrf" -> 1.0 * 2.0 * 2.0)  // 2× more: +1 s once excused
+    val excuse = math.max(1.0, Bench.canaryFactor(mins, pins))
+    assert(math.abs(excuse - 2.0) < 1e-9)
+    val flagged = Bench.regressed(firsts, firstPins, excuse)
+    assert(flagged.keySet == Set("q86_hybrid_rrf"))
+    assert(math.abs(flagged("q86_hybrid_rrf") - 2.0) < 0.01)
+    // Unexcused, the window alone would flag both.
+    assert(Bench.regressed(firsts, firstPins, 1.0).keySet == firstPins.keySet)
+  }
+
   test("sub-floor and sub-ratio moves stay unflagged in both maps") {
     val mins = pins ++ Map(
       "q86_hybrid_rrf" -> 0.8 * 1.4, // under the 1.5× ratio

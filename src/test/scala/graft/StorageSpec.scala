@@ -40,6 +40,19 @@ class StorageSpec extends SparkSpec {
     assert(queries.Tables.footerMeta(spark, path) == ((1, 100L)))
   }
 
+  test("reading a micros-typed events table leaves nanosAsLong unset") {
+    // Every testdata tier writes events.ts as timestamp[us]; only a
+    // TIMESTAMP(NANOS) footer needs the legacy flag, so reading this one
+    // must not change the session for every later query.
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val old = Option.when(spark.sessionState.conf.contains(key))(spark.conf.get(key))
+    spark.conf.unset(key)
+    try {
+      assert(queries.Tables.events(spark, sfDir).count() > 0)
+      assert(!spark.sessionState.conf.contains(key))
+    } finally old.foreach(spark.conf.set(key, _))
+  }
+
   test("bucketed tables join WITHOUT a shuffle (co-located sort-merge)") {
     // (warehouse dir is a static conf; tables land in the default
     // ./spark-warehouse, which is gitignored and dropped below)
