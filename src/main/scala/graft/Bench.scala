@@ -521,7 +521,7 @@ object Bench {
     */
   private def liveStoreThroughput(spark: SparkSession, sfDir: String)
       : (Long, Double, Double, Double, Double, String) = {
-    import graft.streaming.{IndexSink, LiveNearDedup, LiveRates, LiveSketch,
+    import graft.streaming.{EpochStore, IndexSink, LiveNearDedup, LiveRates, LiveSketch,
       LiveSpanDedup, LiveTextIndex}
     val docs = queries.Tables.t(spark, sfDir, "documents")
     val docsN = docs.count()
@@ -592,7 +592,7 @@ object Bench {
       // Conservation over the RAW epoch history, BEFORE compaction —
       // the post-compaction view is latest-per-key, which counts
       // distinct keys, not delivered records.
-      val delivered = spark.read.parquet(s"$tmp/index/*").count()
+      val delivered = EpochStore.readEpochs(spark, s"$tmp/index").count()
       if (delivered == n) Right((secs, n))
       else Left(s"violated: delivered=$delivered source=$n")
     }

@@ -44,14 +44,15 @@ object SparkEntry {
       shufflePartitions: Option[String] = None): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
+    SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", shufflePartitions.getOrElse(cpus))
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // Set before the context starts, so its start-up INFO lines are
+      // suppressed too (a setLogLevel call can only follow them).
+      .config("spark.log.level", "WARN")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
   }
 }

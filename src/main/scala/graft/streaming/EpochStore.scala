@@ -126,6 +126,15 @@ object EpochStore {
     else spark.read.schema(schema).parquet(epochs.map(_.toString): _*)
   }
 
+  /** [[readAll]] with the schema inferred from the files (the delivery
+    * index: payload plus `enrich` columns). A glob read of the root
+    * would log a failed streaming-metadata probe at WARN on every read.
+    */
+  private[graft] def readEpochs(spark: SparkSession, root: String): DataFrame = {
+    val (fs, p) = fsOf(spark, root)
+    spark.read.parquet(listEpochs(fs, p).map(_.toString): _*)
+  }
+
   /** The store's epoch directory NAMES — a pure listing, no data read.
     * Used to tell "store never existed / empty" apart from "store
     * populated" when choosing a legacy fallback or backfill path.
@@ -272,34 +281,35 @@ object EpochStore {
     try body finally lease.close()
   }
 
-  /** DETERMINISTIC one-row-per-key pick, for collapsing duplicate keys
-    * WITHIN one delivery: the winner is the row with the greatest
-    * `order` value (ties are only between identical payloads when
-    * `order` IS the payload, which is how callers use it). The point is
-    * replay stability, not which version wins: `dropDuplicates` picks
-    * whichever row a partition happens to surface first, so an
-    * at-least-once replay re-running the pick could legitimately land
-    * DIFFERENT content for the same epoch — and once a compaction has
-    * folded the first attempt's rows into a snapshot, the replay's
-    * divergent rewrite would coexist with them under the same epoch id,
-    * where duplicate-tolerant resolution (which assumes coexisting rows
-    * are IDENTICAL) silently mixes the two versions. A deterministic
-    * pick makes every replay land byte-identical content, collapsing
-    * that whole family of windows.
+  /** DETERMINISTIC one-row-per-key pick: the row with the greatest
+    * `order` value. Replay stability is the point: `dropDuplicates`
+    * keeps whichever row a partition surfaces first, so a replayed
+    * epoch could land DIFFERENT content, which would then coexist with
+    * a compaction's folded copy of the first attempt. Its one caller is
+    * [[IndexSink]]'s version rule (`registerLatestView`, `liveVectors`,
+    * `compact`); the epoch body marks the same pick with
+    * [[flagOnePerKey]], so the live stores get key-unique input.
     */
   def onePerKey(df: DataFrame, key: String,
       order: org.apache.spark.sql.Column): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    val w = Window.partitionBy(key).orderBy(order.desc)
-    df.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .drop("_rn")
+    import org.apache.spark.sql.functions.col
+    flagOnePerKey(df, key, order, "_rn").filter(col("_rn")).drop("_rn")
   }
 
-  /** Latest-`_epoch` row per `key` — the shared last-write-wins
+  /** [[onePerKey]]'s pick as a boolean column `flag`; every row stays. */
+  private[streaming] def flagOnePerKey(df: DataFrame, key: String,
+      order: org.apache.spark.sql.Column, flag: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    df.withColumn(flag,
+      row_number().over(Window.partitionBy(key).orderBy(order.desc)) === 1)
+  }
+
+  /** Latest-`_epoch` row per `key` — the live stores' last-write-wins
     * resolution (row_number, so exact-duplicate rows from a crashed
     * compaction's snapshot+victim coexistence still yield ONE winner).
+    * Store rows are key-unique per epoch ([[IndexSink.start]]), so only
+    * such identical copies tie.
     */
   def latestPerKey(df: DataFrame, key: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window

@@ -130,22 +130,23 @@ object IndexSink {
     * Identity by default. Narrow transformations only: a shuffle here
     * would serialize inside the epoch commit.
     *
-    * `textIndex` adds the text half of the same continuously-queryable
-    * contract: each epoch's delta lands in the named [[LiveTextIndex]]
-    * AFTER the epoch's parquet commit (the index is the source of
-    * truth; a crash between the two leaves a delivered epoch whose
-    * postings delta arrives on replay — both writes are idempotent
-    * whole-directory overwrites keyed by the same epoch id).
-    * `spanState` is the third maintained artifact, same rules: each
-    * epoch's gram-state delta lands in the named [[LiveSpanDedup]]
-    * store, so cross-epoch duplicated spans are live-queryable.
-    * `percolator` is the outbound twin of those inbound artifacts:
-    * instead of maintaining state for future queries, it runs the
-    * REGISTERED queries against each epoch as it lands and logs the
-    * hits per epoch ([[PercolatorSpec]]). `nearDupState` is the fourth
-    * maintained artifact: each epoch's MinHash signature delta lands
-    * in the named [[LiveNearDedup]] store, so cross-epoch LSH
-    * near-dup pairs are live-queryable with no corpus re-shingle.
+    * Each hook spec (`textIndex` … `rateState`, see their scaladocs)
+    * maintains one artifact AFTER the epoch's parquet commit: the index
+    * is the source of truth, and a crash between the two leaves a
+    * delivered epoch whose delta arrives on replay (both writes are
+    * idempotent whole-directory overwrites keyed by the epoch id).
+    *
+    * ONE EPOCH FRAME, ONE RULE: the hooks read the epoch parquet JUST
+    * WRITTEN (so no artifact can disagree with the index content, e.g.
+    * under a non-deterministic enrich) through one persisted frame: one
+    * scan, one tokenize per distinct hook field, and a `_win` flag from
+    * [[versionOrder]], the version [[registerLatestView]] serves. The
+    * index epoch keeps every delivered row (the A13 `_count` of
+    * [[registerView]] counts deliveries), and so do the sketch and rate
+    * hooks, which count what flowed. The text index, span, near-dup and
+    * percolate hooks read only the `_win` rows: the stores take
+    * key-unique input, and an in-epoch duplicate resolves the same way
+    * everywhere. Every keyed spec must name the same `key`.
     */
   def start(
       envelope: DataFrame,
@@ -162,13 +163,24 @@ object IndexSink {
       percolator: Option[PercolatorSpec] = None,
       nearDupState: Option[LiveNearDupSpec] = None,
       sketchState: Option[LiveSketchSpec] = None,
-      rateState: Option[LiveRateSpec] = None): StreamingQuery =
+      rateState: Option[LiveRateSpec] = None): StreamingQuery = {
+    val keys = (textIndex.map(_.key) ++ spanState.map(_.key) ++
+      percolator.map(_.key) ++ nearDupState.map(_.key) ++
+      sketchState.map(_.key)).toSeq.distinct
+    require(keys.size <= 1,
+      s"every maintenance hook must resolve by the same key, got ${keys.mkString(", ")}")
+    val tokFields = (textIndex.map(_.field) ++ spanState.map(_.field) ++
+      percolator.map(_.field) ++ sketchState.map(_.field)).toSeq.distinct
+    def toksOf(field: String) = s"_toks${tokFields.indexOf(field)}"
+    val rawFields = (nearDupState.map(_.field) ++ rateState.map(_.field)).toSeq.distinct
     envelope.writeStream
       .queryName("graft-index-delivery")
       .trigger(trigger)
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
         val src = batch.persist()
+        val spark = src.sparkSession
+        val epochDir = s"$indexPath/epoch=$epochId"
         try {
           // Raw-backup fidelity: back up the PRE-transform source bytes
           // (the reference's backup is the source record, not the Lambda
@@ -184,105 +196,99 @@ object IndexSink {
               .select(col("recordId"), col("payload.*")))
             .withColumn("_epoch", lit(epochId))
             .repartition(shards)
-            .write.mode("overwrite").parquet(s"$indexPath/epoch=$epochId")
-          // Epoch ids from foreachBatch start at 0, so "every Nth
-          // delivery" is (epochId + 1) % N == 0 — the policy fires
-          // first on epoch N-1, after N deltas exist. ONE cadence
-          // helper for all the maintenance hooks.
-          def due(n: Int) = n > 0 && (epochId + 1) % n == 0
-          rateState.foreach { spec =>
-            // The rate delta reads the epoch parquet just written (the
-            // read-back-what-you-wrote rule below); one row per
-            // delivered record, no tokenization involved.
-            val keyed = src.sparkSession.read
-              .parquet(s"$indexPath/epoch=$epochId")
-              .select(col(spec.field).cast("string").as("k"))
-            LiveRates.writeDelta(keyed, spec.root, epochId)
-            if (due(spec.compactEvery))
-              LiveRates.compact(src.sparkSession, spec.root)
-          }
-          nearDupState.foreach { spec =>
-            // The near-dup delta reads the epoch parquet just written
-            // (the read-back-what-you-wrote rule below) but takes the
-            // raw FIELD, not the shared token frame — shingling
-            // tokenizes internally via the same analyzer.
-            val texts = src.sparkSession.read
-              .parquet(s"$indexPath/epoch=$epochId")
-              .select(col(spec.key).cast("string").as("doc_id"),
-                col(spec.field).cast("string").as("text"))
-            LiveNearDedup.writeDelta(texts, spec.root, epochId, spec.shards)
-            if (due(spec.compactEvery))
-              LiveNearDedup.compact(src.sparkSession, spec.root, spec.shards)
-          }
-          if (textIndex.nonEmpty || spanState.nonEmpty || percolator.nonEmpty ||
-              sketchState.nonEmpty) {
+            .write.mode("overwrite").parquet(epochDir)
+          if (tokFields.nonEmpty || rawFields.nonEmpty) {
             import graft.functions.TextFunctions.tokens
-            // Tokenize the epoch parquet JUST WRITTEN, not the lazy
-            // `ok` plan: one decode+transform+enrich evaluation per
-            // epoch instead of two, and the maintained artifacts can
-            // never disagree with the index content (e.g. under a
-            // non-deterministic enrich) — the LiveSpanDedup
-            // read-back-what-you-wrote rule. One (doc_id, toks) frame
-            // per DISTINCT (key, field) pair, persisted when several
-            // hooks share it, so a multi-hook configuration pays one
-            // scan + tokenize per epoch, not one per hook.
-            val pairs = textIndex.map(s => (s.key, s.field)).toSeq ++
-              spanState.map(s => (s.key, s.field)).toSeq ++
-              percolator.map(s => (s.key, s.field)).toSeq ++
-              sketchState.map(s => (s.key, s.field)).toSeq
-            val wanted = pairs.distinct
-            val toksFor = wanted.map { case kf @ (key, field) =>
-              val f = src.sparkSession.read
-                .parquet(s"$indexPath/epoch=$epochId")
-                .select(col(key).cast("string").as("doc_id"),
-                  tokens(col(field)).as("toks"))
-              kf -> (if (pairs.count(_ == kf) > 1) f.persist() else f)
-            }.toMap
+            val written = spark.read.parquet(epochDir)
+            val flagged = keys.headOption.fold(written)(k =>
+              EpochStore.flagOnePerKey(written, k, versionOrder(written), "_win"))
+            val frame = flagged.select(
+              keys.headOption.toSeq.flatMap(k =>
+                Seq(col("_win"), col(k).cast("string").as("_doc"))) ++
+                rawFields.map(col) ++
+                tokFields.map(f => tokens(col(f)).as(toksOf(f))): _*)
+              .persist()
+            // Epoch ids from foreachBatch start at 0, so "every Nth
+            // delivery" is (epochId + 1) % N == 0 — the policy fires
+            // first on epoch N-1, after N deltas exist. ONE cadence
+            // helper for all the maintenance hooks.
+            def due(n: Int) = n > 0 && (epochId + 1) % n == 0
+            def winners(cols: org.apache.spark.sql.Column*) =
+              frame.filter(col("_win")).select(col("_doc").as("doc_id") +: cols: _*)
             try {
+              rateState.foreach { spec =>
+                LiveRates.writeDelta(
+                  frame.select(col(spec.field).cast("string").as("k")),
+                  spec.root, epochId)
+                if (due(spec.compactEvery)) LiveRates.compact(spark, spec.root)
+              }
+              nearDupState.foreach { spec =>
+                // The raw FIELD, not the token column: shingling
+                // tokenizes internally via the same analyzer.
+                LiveNearDedup.writeDelta(
+                  winners(col(spec.field).cast("string").as("text")),
+                  spec.root, epochId, spec.shards)
+                if (due(spec.compactEvery))
+                  LiveNearDedup.compact(spark, spec.root, spec.shards)
+              }
               textIndex.foreach { spec =>
-                LiveTextIndex.writeDelta(toksFor((spec.key, spec.field)),
+                LiveTextIndex.writeDelta(
+                  winners(col(toksOf(spec.field)).as("toks")),
                   spec.root, epochId, spec.shards, spec.positions)
                 if (due(spec.compactEvery))
-                  LiveTextIndex.compact(src.sparkSession, spec.root,
-                    spec.shards)
+                  LiveTextIndex.compact(spark, spec.root, spec.shards)
               }
               spanState.foreach { spec =>
-                LiveSpanDedup.writeDelta(toksFor((spec.key, spec.field)),
+                LiveSpanDedup.writeDelta(
+                  winners(col(toksOf(spec.field)).as("toks")),
                   spec.root, epochId, spec.k, spec.shards)
                 if (due(spec.compactEvery))
-                  LiveSpanDedup.compact(src.sparkSession, spec.root,
-                    spec.shards)
+                  LiveSpanDedup.compact(spark, spec.root, spec.shards)
               }
               sketchState.foreach { spec =>
-                // Sketches count the DELIVERY LOG (stream-scoped —
-                // LiveSketch's contract), so no onePerKey resolution:
-                // every delivered occurrence is part of what flowed.
-                val words = toksFor((spec.key, spec.field))
-                  .select(explode(col("toks")).as("w"))
-                LiveSketch.writeDelta(words, spec.root, epochId,
-                  spec.depth, spec.width, spec.b)
-                if (due(spec.compactEvery))
-                  LiveSketch.compact(src.sparkSession, spec.root)
+                LiveSketch.writeDelta(
+                  frame.select(explode(col(toksOf(spec.field))).as("w")),
+                  spec.root, epochId, spec.depth, spec.width, spec.b)
+                if (due(spec.compactEvery)) LiveSketch.compact(spark, spec.root)
               }
               percolator.foreach { spec =>
-                // Resolve in-epoch duplicate doc_ids BEFORE percolating
-                // (the sibling stores' onePerKey invariant): two
-                // versions of one doc in a single epoch would otherwise
-                // evaluate the conjunctive match against the UNION of
-                // their terms — alerting on a doc no delivered version
-                // actually matches.
-                val one = EpochStore.onePerKey(
-                  toksFor((spec.key, spec.field)), "doc_id", col("toks"))
-                graft.operators.SearchDsl.percolate(one, spec.queries)
+                // The winning version only: two versions of one doc
+                // would otherwise match the conjunctive query against
+                // the UNION of their terms.
+                graft.operators.SearchDsl.percolate(
+                    winners(col(toksOf(spec.field)).as("toks")), spec.queries)
                   .withColumn("_epoch", lit(epochId))
                   .write.mode("overwrite")
                   .parquet(s"${spec.alertsPath}/epoch=$epochId")
               }
-            } finally toksFor.values.foreach(_.unpersist())
+            } finally frame.unpersist()
           }
         } finally src.unpersist()
       }
       .start()
+  }
+
+  /** THE version rule for a doc id delivered more than once — the
+    * reference's bulk upsert by document id, where the later action
+    * wins (iac/s2_app.py:841-858). Greatest first:
+    *  - latest `_epoch`;
+    *  - then the later `recordId` in delivery order: sequence numbers
+    *    compared by length, then lexically (Kinesis sequence numbers
+    *    grow within a shard, and one key always hashes to one shard);
+    *  - then the row's content as JSON, for envelopes whose `recordId`
+    *    repeats (a hand-built `recordId = key`) — total, independent
+    *    of row order, and defined for every column type.
+    * Only identical rows tie. [[registerLatestView]], [[liveVectors]],
+    * [[compact]] and [[start]]'s `_win` flag all order by it, so the
+    * read and write sides cannot pick different versions.
+    */
+  private def versionOrder(df: DataFrame): org.apache.spark.sql.Column =
+    struct(col("_epoch"), length(col("recordId")), col("recordId"),
+      to_json(struct(df.columns.map(c => col(s"`${c.replace("`", "``")}`")): _*)))
+
+  /** One row per `key` by [[versionOrder]], `_epoch` kept. */
+  private def latest(df: DataFrame, key: String): DataFrame =
+    EpochStore.onePerKey(df, key, versionOrder(df))
 
   /** Register the delivered index as a queryable view (A14/A16). Heals
     * any crashed compaction first: a crash between compact()'s snapshot
@@ -293,18 +299,20 @@ object IndexSink {
     */
   def registerView(spark: SparkSession, indexPath: String, name: String): Unit = {
     healCompaction(spark, indexPath)
-    spark.read.parquet(s"$indexPath/*").drop("_epoch").createOrReplaceTempView(name)
+    EpochStore.readEpochs(spark, indexPath).drop("_epoch").createOrReplaceTempView(name)
   }
 
   /** UPSERT semantics (the actual OpenSearch contract: indexing a doc id
     * again OVERWRITES it — reference iac/s2_app.py:841-858 delivers by
-    * document id): last write per key wins, resolved at query time over
-    * the epoch history. `compact` below materializes the same result.
+    * document id): last write per key wins by [[versionOrder]] —
+    * within one epoch, the later `recordId` — resolved at query time
+    * over the epoch history. `compact` below materializes the same
+    * result.
     */
   def registerLatestView(spark: SparkSession, indexPath: String,
       name: String, key: String): Unit = {
     healCompaction(spark, indexPath)
-    EpochStore.latestPerKey(spark.read.parquet(s"$indexPath/*"), key)
+    latest(EpochStore.readEpochs(spark, indexPath), key)
       .drop("_epoch")
       .createOrReplaceTempView(name)
   }
@@ -325,7 +333,8 @@ object IndexSink {
     * crash-safe rename-then-delete protocol, the in-flight manifest,
     * and the lease + JVM-lock serialization all live in
     * [[EpochStore.compact]]; this store plugs in only its resolution
-    * (last write per key) and its snapshot layout (`shards`-way).
+    * (last write per key by [[versionOrder]]) and its snapshot layout
+    * (`shards`-way).
     *
     * All file mechanics go through the Hadoop [[org.apache.hadoop.fs
     * .FileSystem]] API like every other component here, so compaction
@@ -337,7 +346,7 @@ object IndexSink {
       leaseTtlMs: Long = MaintenanceLease.DefaultTtlMs,
       leaseTimeoutMs: Long = MaintenanceLease.DefaultAcquireTimeoutMs): Long =
     EpochStore.compact(spark, indexPath,
-      resolve = EpochStore.latestPerKey(_, key),
+      resolve = latest(_, key),
       writeSnapshot = (df, tmp) =>
         df.repartition(shards).write.mode("overwrite").parquet(tmp),
       leaseTtlMs = leaseTtlMs, leaseTimeoutMs = leaseTimeoutMs)
@@ -352,7 +361,7 @@ object IndexSink {
   def liveVectors(spark: SparkSession, indexPath: String,
       key: String): DataFrame = {
     healCompaction(spark, indexPath)
-    EpochStore.latestPerKey(spark.read.parquet(s"$indexPath/*"), key).drop("_epoch")
+    latest(EpochStore.readEpochs(spark, indexPath), key).drop("_epoch")
   }
 
   /** A13: the `_count` + match_all surface over the index. */

@@ -74,11 +74,9 @@ object LiveNearDedup {
   /** Append one epoch's signature delta. `docs` is the epoch's
     * delivered documents as (doc_id, text) — EPOCH-sized; the shingle
     * + min-hash pass below is [[TrainingData.signaturesDf]]'s exact
-    * corpus pass applied to one delivery. Docs repeated WITHIN the
-    * epoch collapse to one version first via the DETERMINISTIC pick
-    * ([[EpochStore.onePerKey]] on the text — the single-bulk-request
-    * per-id overwrite; two versions' shingles folded into ONE
-    * signature would estimate a document that never existed).
+    * corpus pass applied to one delivery. PRECONDITION: `docs` is
+    * key-unique, as [[IndexSink.start]] resolves it (two versions in
+    * ONE signature would estimate a document that never existed).
     * Idempotent per (root, epoch): whole-directory overwrites of
     * content derived only from the epoch's own input.
     */
@@ -114,9 +112,7 @@ object LiveNearDedup {
     val spark = docs.sparkSession
     EpochStore.heal(spark, sigRoot(root))
     EpochStore.heal(spark, docsRoot(root))
-    val one = EpochStore.onePerKey(
-        docs.select(col("doc_id"), col("text")), "doc_id", col("text"))
-      .localCheckpoint() // epoch-sized; one materialization, two writes
+    val one = docs.select(col("doc_id"), col("text"))
     val sig = TrainingData.signaturesDf(one)
       .select(col("doc_id"),
         array((0 until NH).map(j => col(s"mh$j")): _*).as("sig"),

@@ -84,21 +84,20 @@ object LiveSketch {
     * overwrites land identical rows on a streaming replay. Epochs at
     * or below a store's fold watermark are skipped (their rows already
     * live in a snapshot; rewriting them would only create a zombie dir
-    * whose rows the reads collapse anyway — see the class note).
+    * whose rows the reads collapse anyway — see the class note). Both
+    * sketches read `words`, so pass a cheap frame (IndexSink.start
+    * passes its persisted epoch frame).
     */
   def writeDelta(words: DataFrame, root: String, epoch: Long,
       depth: Int, width: Int, b: Int): Unit = {
     val spark = words.sparkSession
-    // Two consumers (both sketch aggregations) of a possibly expensive
-    // upstream (decode + tokenize): one materialization.
-    val w = words.localCheckpoint()
     if (epoch > EpochStore.readWatermark(spark, cmRoot(root)))
-      Sketch.countMinCells(w, depth, width)
+      Sketch.countMinCells(words, depth, width)
         .withColumn("_epoch", lit(epoch))
         .coalesce(1)
         .write.mode("overwrite").parquet(s"${cmRoot(root)}/epoch=$epoch")
     if (epoch > EpochStore.readWatermark(spark, hllRoot(root)))
-      Sketch.hllRegisters(w, b)
+      Sketch.hllRegisters(words, b)
         .withColumn("_epoch", lit(epoch))
         .coalesce(1)
         .write.mode("overwrite").parquet(s"${hllRoot(root)}/epoch=$epoch")

@@ -132,15 +132,10 @@ object LiveSpanDedup {
 
   /** Append one epoch's gram state, retracting superseded versions.
     * `toks` is the epoch's delivered docs as (doc_id, toks:
-    * array&lt;string&gt;) — docs repeated WITHIN the epoch collapse to
-    * one version first via a DETERMINISTIC pick
-    * ([[EpochStore.onePerKey]] on the token array — a single bulk
-    * request's per-id overwrite, chosen so a replay re-running the
-    * pick lands byte-identical content even after a compaction folded
-    * the first attempt's counts into a snapshot; an arbitrary pick
-    * replayed differently would coexist with the folded rows as
-    * DIVERGENT duplicates under the same epoch id, which the
-    * duplicate-tolerant read resolution would silently mix). `k` is
+    * array&lt;string&gt;), key-unique and deterministic, as
+    * [[IndexSink.start]] resolves it: a replay must land byte-identical
+    * content even after a compaction folded the first attempt's counts.
+    * `k` is
     * the span gram length and MUST match across every delta of a root
     * (k-gram hashes never collide across k, so mixing silently marks
     * nothing). Idempotent per (root, epoch): whole-directory
@@ -195,9 +190,7 @@ object LiveSpanDedup {
     // heal cannot close.
     EpochStore.heal(spark, occRoot(root))
     EpochStore.heal(spark, docsRoot(root))
-    val one = EpochStore.onePerKey(toks, "doc_id", col("toks"))
-      .localCheckpoint() // epoch-sized; one materialization, three consumers
-    val occ = SpanDedup.gramOccurrences(one, k)
+    val occ = SpanDedup.gramOccurrences(toks, k)
       .withColumn("bk", bucketOf(col("doc_id")))
       .withColumn("_epoch", lit(epoch))
     // Occurrences first (inactive until the docs marker lands) —
@@ -229,7 +222,7 @@ object LiveSpanDedup {
     // scans.
     val prior = EpochStore.readAll(spark, docsRoot(root), docsSchema(idType))
       .filter(col("_epoch") < epoch)
-      .join(one.select("doc_id"), Seq("doc_id"))
+      .join(toks.select("doc_id"), Seq("doc_id"))
       .groupBy("doc_id").agg(max(col("_epoch")).as("_prev"))
       .localCheckpoint()
     val net =
@@ -262,7 +255,7 @@ object LiveSpanDedup {
     // Currency marker LAST (see class doc): activates the new rows and
     // the retraction together. Keyed like the doclen marker — one short
     // row per delivered doc, epoch-bounded but potentially large.
-    one.select(col("doc_id"), lit(epoch).as("_epoch"))
+    toks.select(col("doc_id"), lit(epoch).as("_epoch"))
       .repartition(math.max(1, shards / 2), col("doc_id"))
       .write.mode("overwrite").parquet(s"${docsRoot(root)}/epoch=$epoch")
   }

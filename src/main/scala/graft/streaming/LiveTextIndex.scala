@@ -123,13 +123,9 @@ object LiveTextIndex {
     *
     * All writes are whole-directory overwrites keyed by the epoch id,
     * so a replayed epoch (streaming restart) lands a CONSISTENT set.
-    * Docs repeated WITHIN one epoch collapse to one version via a
-    * DETERMINISTIC pick ([[EpochStore.onePerKey]] on the token array —
-    * a single bulk request's per-id overwrite, chosen so a replay
-    * re-running the pick lands byte-identical content even after a
-    * compaction folded the first attempt's rows); the pick is also
-    * LOCAL-CHECKPOINTED so the three store writes share one
-    * materialized input instead of three re-evaluations.
+    * PRECONDITION: `toks` is key-unique (two versions of one doc would
+    * double-count tf), deterministic and cheap to re-read, as
+    * [[IndexSink.start]]'s resolved epoch frame is.
     */
   def writeDelta(toks: DataFrame, root: String, epoch: Long,
       shards: Int = 4, positions: Boolean = false): Unit = {
@@ -199,12 +195,7 @@ object LiveTextIndex {
     // crashed doclen compaction's snapshot+victim coexistence is
     // masked at read by latestPerKey, which the lookup below uses too.
     EpochStore.heal(spark, doclenRoot(root))
-    // One in-epoch version per doc: postings from two versions of the
-    // same doc in one epoch would double-count tf.
-    val one = EpochStore.onePerKey(
-        toks.select(col("doc_id").cast("string").as("doc_id"), col("toks")),
-        "doc_id", col("toks"))
-      .localCheckpoint() // epoch-sized; one materialization, three writes
+    val one = toks.select(col("doc_id").cast("string").as("doc_id"), col("toks"))
     val posted = one
       .select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
         explode(col("toks")).as("term"))

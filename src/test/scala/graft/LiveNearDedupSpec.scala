@@ -199,12 +199,14 @@ class LiveNearDedupSpec extends SparkSpec {
     (0 until 6).foreach { epoch =>
       val nDocs = 1 + rnd.nextInt(4)
       val delta = (0 until nDocs).map(_ => rnd.nextInt(12).toLong -> draw())
-      LiveNearDedup.writeDelta(delta.toDF("doc_id", "text"), root,
+      // The store takes key-unique input (IndexSink.start resolves
+      // in-epoch duplicates before its hooks): resolve them here by a
+      // deterministic max-text pick.
+      val one = delta.groupBy(_._1).map { case (id, versions) =>
+        id -> versions.map(_._2).max }.toSeq
+      LiveNearDedup.writeDelta(one.toDF("doc_id", "text"), root,
         epoch.toLong, shards = 2)
-      // In-epoch duplicates resolve by the deterministic max-text pick.
-      delta.groupBy(_._1).foreach { case (id, versions) =>
-        resolved += id -> versions.map(_._2).max
-      }
+      resolved ++= one
       val live = LiveNearDedup.candidatePairs(spark, root, idType = LongType)
         .as[(Long, Long, Double)].collect().toSet
       val batch = batchPairs(resolved.toSeq)

@@ -531,26 +531,41 @@ class LiveStoreProtocolSpec extends SparkSpec {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft-det-pick")
     val k = 3
-    def toks(rows: Seq[(Long, String)]) = rows.toDF("doc_id", "body")
-      .repartition(4) // scramble row placement: the pick must not care
-      .select(col("doc_id"),
-        graft.functions.TextFunctions.tokens(col("body")).as("toks"))
+    val payloadSchema = StructType(Seq(
+      StructField("doc_id", LongType), StructField("body", StringType)))
     // Doc 1 arrives TWICE in the same epoch with different bodies (a
-    // single bulk request writing the same id twice): whichever version
-    // wins must be the same one every time the epoch is (re)written.
+    // single bulk request writing the same id twice). The envelopes'
+    // recordId is the doc id, so IndexSink.start's content tiebreak
+    // picks the version, and it must pick the same one every time the
+    // epoch is (re)written, whatever the input order.
     val versions = Seq(
-      1L -> "alpha beta gamma delta from version one",
-      1L -> "totally different text in version two",
+      1L -> "totally different text in version one",
+      1L -> "zeta alpha beta gamma delta from version two",
       2L -> "background doc with alpha beta gamma delta")
     val spans = Seq(Seq(0, 1, 2), Seq(2, 1, 0), Seq(1, 2, 0)).zipWithIndex
       .map { case (ord, i) =>
-        val root = base.toString + s"/state-$i"
-        LiveSpanDedup.writeDelta(toks(ord.map(versions)), root, 0L, k)
-        LiveSpanDedup.duplicatedSpans(spark, root, k, idType = LongType)
-          .as[(Long, Long, Long)].collect().toSet
+        val tmp = base.toString + s"/run-$i"
+        ord.map(versions).toDF("doc_id", "body")
+          .select(to_json(struct(col("doc_id"), col("body"))).as("value"))
+          .coalesce(1).write.text(s"$tmp/in")
+        val env = spark.readStream.schema(payloadSchema).json(s"$tmp/in")
+          .repartition(4) // scramble row placement: the pick must not care
+          .select(col("doc_id").cast("string").as("recordId"),
+            lit(0L).as("approximateArrivalTimestamp"),
+            to_json(struct(col("doc_id"), col("body"))).cast("binary").as("data"))
+        val q = IndexSink.start(env, payloadSchema, s"$tmp/index",
+          s"$tmp/backup", s"$tmp/ckpt", shards = 2, dropIf = _ => lit(false),
+          spanState = Some(IndexSink.LiveSpanSpec(s"$tmp/state", "body",
+            key = "doc_id", k = k, shards = 2)))
+        assert(q.awaitTermination(120000), s"run $i timed out")
+        LiveSpanDedup.duplicatedSpans(spark, s"$tmp/state", k)
+          .as[(String, Long, Long)].collect().toSet
       }
     assert(spans.distinct.size == 1,
       s"input order changed the in-epoch version pick: $spans")
+    // "zeta..." > "totally..." as content: version two wins, and only
+    // it shares a span with doc 2.
+    assert(spans.head.map(_._1) == Set("1", "2"), s"got ${spans.head}")
   }
 
   test("chaos property: N epochs through the delivery sink with ALL FOUR " +

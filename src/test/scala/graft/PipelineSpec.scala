@@ -338,32 +338,12 @@ class PipelineSpec extends SparkSpec {
     * (the `epoch=N` in each write's output path).
     */
   private def writesPerEpoch(body: => Unit): Map[Long, Int] = {
-    import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
-    import org.apache.spark.sql.util.QueryExecutionListener
     val outputs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new QueryExecutionListener {
-      private def record(qe: QueryExecution): Unit = qe.logical.foreach {
-        case c: InsertIntoHadoopFsRelationCommand => outputs.add(c.outputPath.toString)
-        case _ =>
-      }
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = record(qe)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = record(qe)
-    }
-    // Registered before the query starts: its session clones the
-    // listeners it sees then.
-    spark.listenerManager.register(listener)
-    try {
-      body
-      // Listener events arrive asynchronously, in order: once a marker
-      // write shows up, every earlier write has been seen.
-      val marker = Files.createTempDirectory("graft-marker").toString
-      spark.range(1).selectExpr("'m'").write.mode("overwrite").text(marker)
-      def seen = outputs.toArray.exists(_.toString.endsWith(marker))
-      val deadline = System.currentTimeMillis() + 30000
-      while (!seen && System.currentTimeMillis() < deadline) Thread.sleep(50)
-      assert(seen, "the marker write never reached the listener")
-    } finally spark.listenerManager.unregister(listener)
+    observingQueries(_.logical.foreach {
+      case c: InsertIntoHadoopFsRelationCommand => outputs.add(c.outputPath.toString)
+      case _ =>
+    })(body)
     val epoch = "epoch=(\\d+)".r
     outputs.toArray.toSeq.flatMap(p => epoch.findFirstMatchIn(p.toString))
       .map(_.group(1).toLong).groupBy(identity).map { case (e, ws) => e -> ws.size }

@@ -23,6 +23,42 @@ trait SparkSpec extends AnyFunSuite {
     }
   }
 
+  /** Runs `body` with a QueryExecutionListener that hands every query
+    * it executes (succeeded or failed) to `record`, and returns once the
+    * listener has seen them all: events arrive asynchronously but in
+    * order, so a marker write showing up proves every earlier one has.
+    * Registered before `body` runs, because a streaming query's session
+    * clones the listeners it sees when it starts.
+    */
+  protected def observingQueries(
+      record: org.apache.spark.sql.execution.QueryExecution => Unit)(body: => Unit): Unit = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val marker = java.nio.file.Files.createTempDirectory("graft-marker").toString
+    @volatile var seen = false
+    val listener = new QueryExecutionListener {
+      private def on(qe: QueryExecution): Unit = {
+        record(qe)
+        qe.logical.foreach {
+          case c: InsertIntoHadoopFsRelationCommand
+              if c.outputPath.toString.endsWith(marker) => seen = true
+          case _ =>
+        }
+      }
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = on(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = on(qe)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).selectExpr("'m'").write.mode("overwrite").text(marker)
+      val deadline = System.currentTimeMillis() + 30000
+      while (!seen && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      assert(seen, "the marker write never reached the listener")
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   /** Naive sequential-fold cosine reference (zero-norm pairs pin to
     * -1.0, matching Similarity.cosSafe) — shared by the semDedup specs
     * so the sentinel/fold semantics can't silently diverge between

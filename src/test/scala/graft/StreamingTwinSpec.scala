@@ -938,10 +938,11 @@ class StreamingTwinSpec extends SparkSpec {
     // while each epoch's alert set equals batch percolation of that
     // epoch alone (stateless per doc).
     // Epoch 2 also lands doc 4 TWICE with different bodies (an
-    // at-least-once duplicate inside one delivery): the hook resolves
-    // one version per doc before percolating (onePerKey, greatest
-    // token array — "quiet..." > "nothing..."), so the alert reflects
-    // a delivered version, never the UNION of both versions' terms.
+    // at-least-once duplicate inside one delivery): the hook percolates
+    // only the version IndexSink's rule keeps. Both rows carry
+    // recordId "4", so the content tiebreak decides ("quiet..." >
+    // "nothing..."), and the alert reflects a delivered version, never
+    // the UNION of both versions' terms.
     val epoch2 = Seq(
       1L -> "alpha beta rewritten",
       3L -> "closes quiet",
