@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Compiled BPE encode-length kernel — the round-14 fusion of
   * [[graft.operators.Bpe.encodedLenSum]]'s hot path. The Column

@@ -30,8 +30,6 @@ import org.apache.spark.sql.functions._
   */
 object Sketch {
 
-  import graft.functions.TextFunctions.h64
-
   /** Count-min cell table over a one-column (w) stream: (r, b, cnt)
     * for r < depth rows and b < width buckets, cnt = occurrences of
     * words hashing to b under row r's salted hash. Absent cells are

@@ -1,10 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-import graft.functions.TextFunctions.h64
 
 /** Exact substring deduplication — the span-level dedup of Lee et al.,
   * "Deduplicating Training Data Makes Language Models Better" (ACL

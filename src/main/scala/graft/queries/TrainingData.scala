@@ -663,7 +663,7 @@ object TrainingData {
       |  UNION ALL SELECT CAST(20 AS BIGINT), NULL, NULL, NULL, NULL, CAST(0 AS INT)
       |  UNION ALL SELECT CAST(21 AS BIGINT), NULL, NULL, NULL, NULL, CAST(0 AS INT)
       |) ORDER BY media_id""".stripMargin
-  ) { (s, dir) =>
+  ) { (s, _) =>
     // REAL image decode, correctness-gated (q47 covers the opaque-bytes
     // plumbing with a replayable stub; this key exercises the actual
     // javax.imageio path): Multimodal.syntheticImages ENCODES 20
@@ -3253,7 +3253,6 @@ object TrainingData {
     // postings, which equals the shared two-term chain's df, so the
     // oracle's per-(doc, term) rows ARE the two clauses' scores. One
     // union + one per-doc agg — no outer join however many clauses.
-    val toksDf = tokenized(s, dir)
     val clause = (term: String) =>
       graft.operators.Retrieval.bm25FromIndex(s, textIndexFor(s, dir), Seq(term))
         .select(col("doc_id"), col("score"))
@@ -4489,7 +4488,7 @@ object TrainingData {
       |        GROUP BY 1, 2)
       |SELECT id1, id2, CAST(hamming AS BIGINT) AS hamming
       |FROM ham WHERE hamming <= 7 ORDER BY id1, id2""".stripMargin
-  ) { (s, dir) =>
+  ) { (s, _) =>
     // Multimodal NEAR-dedup — the dedup ladder applied to the image
     // column (CCNet-class multimodal curation runs exactly this pass;
     // aHash/pHash over decoded rasters, then Hamming-banded pairing):

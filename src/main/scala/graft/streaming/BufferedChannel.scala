@@ -7,7 +7,6 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Size-OR-time delivery buffering — the Firehose flush contract the
   * reference declares (5 MB or 60 s, whichever first:

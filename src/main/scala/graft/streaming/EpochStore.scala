@@ -4,13 +4,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Generic per-epoch parquet store with crash-safe compaction — the
   * storage discipline behind every incrementally-maintained artifact
-  * here (the delivery index in [[IndexSink]], the live postings index
-  * in [[LiveTextIndex]], the cross-epoch gram counts in
-  * [[graft.operators.SpanDedup]]'s streaming form). One root directory
-  * holds `epoch=<id>` subdirectories, each written once by a delivery
-  * (or maintenance) pass; readers glob the root; compaction replaces
-  * the epoch history with one resolved snapshot under the same
-  * manifest + lease protocol [[IndexSink]] proved out:
+  * here: the delivery index in [[IndexSink]], the live monitors
+  * [[LiveSketch]] and [[LiveRates]], and the versioned stores
+  * [[LiveTextIndex]], [[LiveSpanDedup]] and [[LiveNearDedup]], whose
+  * sibling stores share one marker-activated protocol in
+  * [[StoreFamily]]. One root directory holds `epoch=<id>`
+  * subdirectories, each written once by a delivery (or maintenance)
+  * pass; readers list the root once ([[readAll]]) and read exactly the
+  * listed dirs; compaction replaces the epoch history with one resolved
+  * snapshot under the same manifest + lease protocol [[IndexSink]]
+  * proved out:
   *
   *  - the snapshot is written OUTSIDE the root (`<root>.compact.tmp`),
   *    then renamed in under a fresh `epoch=compact-<gen>` name BEFORE
@@ -210,6 +213,19 @@ object EpochStore {
     try out.write(epoch.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
   }
+
+  /** The replay-fence check every delta writer makes: `epoch` was not
+    * yet folded out of the store at `root`, so writing it is not a
+    * no-op.
+    */
+  def aboveFence(spark: SparkSession, root: String, epoch: Long): Boolean =
+    epoch > readWatermark(spark, root)
+
+  /** [[compact]]'s `onCommit` for a fenced store: advance the store's
+    * replay fence to the highest folded epoch.
+    */
+  def foldFence(spark: SparkSession, root: String): Seq[Long] => Unit =
+    folded => folded.reduceOption(_ max _).foreach(advanceWatermark(spark, root, _))
 
   /** Point-in-time operational snapshot of one store — pure metadata
     * (listings, file probes), no data read. What an operator checks
@@ -431,8 +447,8 @@ object EpochStore {
     * @param onCommit invoked with the NUMERIC victim epoch ids once
     *                 the renamed snapshot has made their folding
     *                 durable, still under the lease and BEFORE any
-    *                 victim deletion — the hook [[advanceWatermark]]
-    *                 callers use. The fence must cover an epoch before
+    *                 victim deletion — the hook [[foldFence]]
+    *                 fills. The fence must cover an epoch before
     *                 its directories can die; advancing after the
     *                 deletions would leave a crash window in which a
     *                 replay re-derives a destroyed epoch from

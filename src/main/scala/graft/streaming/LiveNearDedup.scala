@@ -29,7 +29,7 @@ import graft.queries.TrainingData
   *    marker. Currency cannot ride on signature presence: an upsert
   *    that shortens a doc below 3 tokens delivers NO signature row,
   *    yet must retire the previous version's signature (and every
-  *    pair it anchored) — the [[LiveTextIndex]] doclen rule.
+  *    pair it anchored).
   *
   * Band keys are NOT stored: they derive deterministically from a
   * signature row (a narrow 8× explode over O(docs) short rows —
@@ -44,30 +44,24 @@ import graft.queries.TrainingData
   * [[candidatePairs]]. This is why, unlike [[LiveSpanDedup]] /
   * [[LiveTextIndex]], writeDelta performs NO lookup against prior
   * epochs: the delta is a pure function of the epoch's own input and a
-  * replay rewrites byte-identical content by construction. Delivery
-  * still honors the compaction watermark fence (a folded epoch's
-  * history is gone; rewriting it would resurrect a dir the next
-  * compaction must re-judge — the replay's only correct action is
-  * nothing), and a marker-present replay takes the index lease for the
-  * overwrite-vs-snapshot-read race alone (see [[writeDelta]]).
+  * replay rewrites byte-identical content by construction.
   *
-  * Write order is sig → docs marker (the marker activates the epoch;
-  * a reader between the writes sees the previous consistent state).
-  * Epochs must land serially in increasing order — the `foreachBatch`
-  * contract every store here assumes.
+  * Write order (sig, then the docs marker), currency, the replay fence
+  * and compaction are the one versioned-store protocol of
+  * [[StoreFamily]].
   */
 object LiveNearDedup {
 
-  private def sigRoot(root: String) = root.stripSuffix("/") + "/sig"
-  private def docsRoot(root: String) = root.stripSuffix("/") + "/docs"
+  import StoreFamily.{Current, Marker, Sub}
 
-  private def sigSchema(idType: DataType) = StructType(Seq(
+  private val Sig = Sub("sig", idType => StructType(Seq(
     StructField("doc_id", idType),
     StructField("sig", ArrayType(LongType, containsNull = true)),
-    StructField("_epoch", LongType)))
-  private def docsSchema(idType: DataType) = StructType(Seq(
+    StructField("_epoch", LongType))), Current(Seq("doc_id")))
+  private val Docs = Sub("docs", idType => StructType(Seq(
     StructField("doc_id", idType),
-    StructField("_epoch", LongType)))
+    StructField("_epoch", LongType))), Marker)
+  private def family(root: String) = StoreFamily(root, Sig, Docs)
 
   private val NH = graft.functions.MinHashAggregator.NumHashes
 
@@ -84,70 +78,37 @@ object LiveNearDedup {
       shards: Int = 4): Unit = {
     require(shards > 0, s"shard count must be positive, got $shards")
     val spark = docs.sparkSession
-    // A replay whose first attempt's marker landed takes the index
-    // lease and re-checks the fence under it. Unlike the sibling
-    // stores there is no derived-state divergence to protect (the
-    // delta is a pure function of the epoch's input) — the lease here
-    // serializes the whole-directory OVERWRITE itself against a
-    // concurrent compaction's snapshot read of the same dir (the
-    // delete-then-write window would fail or mix that read). First
-    // deliveries stay lease-free: an unmarked epoch is not
-    // activation-eligible, so no compaction reads it. Marker probe
-    // BEFORE the fence read — the LiveTextIndex ordering argument.
-    val markerDirExists = {
-      val p = new org.apache.hadoop.fs.Path(s"${docsRoot(root)}/epoch=$epoch")
-      p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
+    val f = family(root)
+    // No derived state for the marker-present replay's lease to
+    // protect here (the delta is a pure function of the epoch's
+    // input): it serializes the whole-directory OVERWRITE itself
+    // against a concurrent compaction's snapshot read of the same dir.
+    f.writeEpoch(spark, epoch) {
+      EpochStore.heal(spark, f.rootOf(Sig))
+      EpochStore.heal(spark, f.rootOf(Docs))
+      val one = docs.select(col("doc_id"), col("text"))
+      TrainingData.signaturesDf(one)
+        .select(col("doc_id"),
+          array((0 until NH).map(j => col(s"mh$j")): _*).as("sig"),
+          lit(epoch).as("_epoch"))
+        .repartition(shards, col("doc_id")).sortWithinPartitions("doc_id")
+        .write.mode("overwrite").parquet(f.dir(Sig, epoch))
+      // Marker LAST: activates the epoch's signatures and the
+      // supersession of any re-delivered doc's prior version together.
+      f.writeMarker(one.select("doc_id"), epoch, shards)
     }
-    if (markerDirExists)
-      EpochStore.withIndexLease(spark, root) {
-        if (epoch > EpochStore.readWatermark(spark, docsRoot(root)))
-          writeDeltaBody(docs, root, epoch, shards)
-      }
-    else if (epoch > EpochStore.readWatermark(spark, docsRoot(root)))
-      writeDeltaBody(docs, root, epoch, shards)
-  }
-
-  private def writeDeltaBody(docs: DataFrame, root: String, epoch: Long,
-      shards: Int): Unit = {
-    val spark = docs.sparkSession
-    EpochStore.heal(spark, sigRoot(root))
-    EpochStore.heal(spark, docsRoot(root))
-    val one = docs.select(col("doc_id"), col("text"))
-    val sig = TrainingData.signaturesDf(one)
-      .select(col("doc_id"),
-        array((0 until NH).map(j => col(s"mh$j")): _*).as("sig"),
-        lit(epoch).as("_epoch"))
-    sig.repartition(shards, col("doc_id")).sortWithinPartitions("doc_id")
-      .write.mode("overwrite").parquet(s"${sigRoot(root)}/epoch=$epoch")
-    // Currency marker LAST: activates the epoch's signatures and the
-    // supersession of any re-delivered doc's prior version together.
-    one.select(col("doc_id"), lit(epoch).as("_epoch"))
-      .repartition(math.max(1, shards / 2), col("doc_id"))
-      .write.mode("overwrite").parquet(s"${docsRoot(root)}/epoch=$epoch")
   }
 
   /** The resolved corpus's signature table in the WIDE (mh0..mh15)
     * layout the batch kernels consume: latest delivered version per
     * doc, signature-less versions excluded (their doc is simply absent,
-    * like a short doc in the batch pass). heal-at-entry like every
-    * store read; duplicate rows from a crashed compaction's
-    * snapshot+victim window collapse via dropDuplicates (identical by
-    * the deterministic-pick rule).
+    * like a short doc in the batch pass).
     */
   def currentSignatures(spark: SparkSession, root: String,
-      idType: DataType = StringType): DataFrame = {
-    EpochStore.heal(spark, sigRoot(root))
-    EpochStore.heal(spark, docsRoot(root))
-    val cur = EpochStore.latestPerKey(
-        EpochStore.readAll(spark, docsRoot(root), docsSchema(idType)), "doc_id")
-      .select(col("doc_id"), col("_epoch").as("_cur"))
-    EpochStore.readAll(spark, sigRoot(root), sigSchema(idType))
-      .join(cur, Seq("doc_id"))
-      .filter(col("_epoch") === col("_cur"))
-      .dropDuplicates("doc_id")
+      idType: DataType = StringType): DataFrame =
+    family(root).current(spark, Sig, idType)
       .select(col("doc_id") +:
         (0 until NH).map(j => col("sig")(j).as(s"mh$j")): _*)
-  }
 
   /** LSH candidate pairs over the RESOLVED corpus delivered so far:
     * (id1, id2, est_sim), id1 &lt; id2 — equal to running
@@ -190,8 +151,7 @@ object LiveNearDedup {
     // and its blocks are released with the RDD by the context cleaner.
     val sg = currentSignatures(spark, root, idType).localCheckpoint()
     val bands = TrainingData.lshBands(sg)
-    val epochDocs = EpochStore.latestPerKey(
-        EpochStore.readAll(spark, docsRoot(root), docsSchema(idType)), "doc_id")
+    val epochDocs = family(root).latest(spark, idType)
       .filter(col("_epoch") === epoch)
       .select("doc_id")
     val eBands = bands.join(epochDocs, Seq("doc_id"))
@@ -209,53 +169,18 @@ object LiveNearDedup {
     * pure metadata ([[EpochStore.status]]).
     */
   def status(spark: SparkSession, root: String): Map[String, EpochStore.Status] =
-    Map(
-      "sig" -> EpochStore.status(spark, sigRoot(root)),
-      "docs" -> EpochStore.status(spark, docsRoot(root)))
+    family(root).status(spark)
 
-  /** Fold each store's epoch history into one snapshot (crash protocol
-    * in [[EpochStore.compact]]). Signatures resolve against the docs
-    * store's current epoch set — superseded versions drop; the
-    * ACTIVATION rule ([[LiveTextIndex.compact]]) protects an in-flight
-    * delivery's sig dir from being resolved-empty and deleted. Docs
-    * keep the latest row per doc and advance the replay fence under
-    * the lease. Both snapshots are keyed + row-count-sized
+  /** Fold each store's epoch history into one snapshot under one index
+    * lease ([[StoreFamily.compact]]): signatures resolve against the
+    * docs store's current epoch set over activated epochs; docs keep
+    * the latest row per doc and advance the replay fence. Both
+    * snapshots are keyed + row-count-sized
     * ([[EpochStore.writeKeyedSnapshot]]) — O(docs) stores, never a
     * single-task rewrite. Returns signature rows kept.
-    *
-    * One index-level lease spans the pass: the sig resolution reads
-    * the docs store's epoch dirs, which a concurrent docs compaction
-    * in another process could delete mid-read.
     */
   def compact(spark: SparkSession, root: String, shards: Int = 4,
       leaseTtlMs: Long = MaintenanceLease.DefaultTtlMs,
-      leaseTimeoutMs: Long = MaintenanceLease.DefaultAcquireTimeoutMs): Long = {
-    require(shards > 0, s"shard count must be positive, got $shards")
-    EpochStore.withIndexLease(spark, root, leaseTtlMs, leaseTimeoutMs) {
-      val activated = EpochStore.rowEpochs(spark, docsRoot(root)) ++
-        EpochStore.committedEpochs(spark, docsRoot(root))
-      val kept = EpochStore.compact(spark, sigRoot(root),
-        resolve = sig => {
-          val cur = EpochStore.latestPerKey(
-              EpochStore.readAll(spark, docsRoot(root),
-                docsSchema(sig.schema("doc_id").dataType)), "doc_id")
-            .select(col("doc_id"), col("_epoch").as("_cur"))
-          sig.join(cur, Seq("doc_id"))
-            .filter(col("_epoch") === col("_cur")).drop("_cur")
-            .dropDuplicates("doc_id")
-        },
-        writeSnapshot = (df, tmp) =>
-          EpochStore.writeKeyedSnapshot(df, tmp, "doc_id"),
-        leaseTtlMs = leaseTtlMs, leaseTimeoutMs = leaseTimeoutMs,
-        epochEligible = activated.contains)
-      EpochStore.compact(spark, docsRoot(root),
-        resolve = docs => EpochStore.latestPerKey(docs, "doc_id"),
-        writeSnapshot = (df, tmp) =>
-          EpochStore.writeKeyedSnapshot(df, tmp, "doc_id"),
-        leaseTtlMs = leaseTtlMs, leaseTimeoutMs = leaseTimeoutMs,
-        onCommit = folded => folded.reduceOption(_ max _)
-          .foreach(EpochStore.advanceWatermark(spark, docsRoot(root), _)))
-      kept
-    }
-  }
+      leaseTimeoutMs: Long = MaintenanceLease.DefaultAcquireTimeoutMs): Long =
+    family(root).compact(spark, shards, leaseTtlMs, leaseTimeoutMs)
 }

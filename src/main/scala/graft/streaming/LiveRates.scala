@@ -53,7 +53,7 @@ object LiveRates {
     */
   def writeDelta(keyed: DataFrame, root: String, epoch: Long): Unit = {
     val spark = keyed.sparkSession
-    if (epoch > EpochStore.readWatermark(spark, root))
+    if (EpochStore.aboveFence(spark, root, epoch))
       keyed.groupBy("k").agg(count(lit(1)).as("cnt"))
         .withColumn("_epoch", lit(epoch))
         .coalesce(1)
@@ -100,6 +100,5 @@ object LiveRates {
         .sortWithinPartitions("k", "_epoch")
         .write.mode("overwrite").parquet(tmp),
       leaseTtlMs = leaseTtlMs, leaseTimeoutMs = leaseTimeoutMs,
-      onCommit = folded => folded.reduceOption(_ max _)
-        .foreach(EpochStore.advanceWatermark(spark, root, _)))
+      onCommit = EpochStore.foldFence(spark, root))
 }

@@ -63,18 +63,27 @@ import graft.operators.Sketch
   */
 object LiveSketch {
 
-  private def cmRoot(root: String) = root.stripSuffix("/") + "/cm"
-  private def hllRoot(root: String) = root.stripSuffix("/") + "/hll"
+  import StoreFamily.{Sidecar, Sub, oneFile}
 
-  private val cmSchema = StructType(Seq(
+  /** A marker-less [[StoreFamily]]: each sketch folds under the family
+    * lease and advances its own replay fence.
+    */
+  private val Cm = Sub("cm", _ => StructType(Seq(
     StructField("r", IntegerType),
     StructField("b", LongType),
     StructField("cnt", LongType),
-    StructField("_epoch", LongType)))
-  private val hllSchema = StructType(Seq(
+    StructField("_epoch", LongType))),
+    Sidecar(_.dropDuplicates("r", "b", "_epoch"), fenced = true),
+    oneFile("r", "b", "_epoch"))
+  private val Hll = Sub("hll", _ => StructType(Seq(
     StructField("bucket", LongType),
     StructField("reg", LongType),
-    StructField("_epoch", LongType)))
+    StructField("_epoch", LongType))),
+    Sidecar(regs => regs.groupBy("bucket")
+      .agg(max("reg").as("reg"), max("_epoch").as("_epoch"))
+      .select("bucket", "reg", "_epoch"), fenced = true),
+    oneFile("bucket"))
+  private def family(root: String) = StoreFamily(root, Cm, Hll)
 
   /** Append one epoch's sketch deltas. `words` carries the epoch's
     * token stream as a one-column (w) frame — occurrences, not
@@ -91,16 +100,17 @@ object LiveSketch {
   def writeDelta(words: DataFrame, root: String, epoch: Long,
       depth: Int, width: Int, b: Int): Unit = {
     val spark = words.sparkSession
-    if (epoch > EpochStore.readWatermark(spark, cmRoot(root)))
+    val f = family(root)
+    if (EpochStore.aboveFence(spark, f.rootOf(Cm), epoch))
       Sketch.countMinCells(words, depth, width)
         .withColumn("_epoch", lit(epoch))
         .coalesce(1)
-        .write.mode("overwrite").parquet(s"${cmRoot(root)}/epoch=$epoch")
-    if (epoch > EpochStore.readWatermark(spark, hllRoot(root)))
+        .write.mode("overwrite").parquet(f.dir(Cm, epoch))
+    if (EpochStore.aboveFence(spark, f.rootOf(Hll), epoch))
       Sketch.hllRegisters(words, b)
         .withColumn("_epoch", lit(epoch))
         .coalesce(1)
-        .write.mode("overwrite").parquet(s"${hllRoot(root)}/epoch=$epoch")
+        .write.mode("overwrite").parquet(f.dir(Hll, epoch))
   }
 
   /** The merged count-min cell table (r, b, cnt) over every delivered
@@ -111,7 +121,7 @@ object LiveSketch {
     * the delta is deterministic).
     */
   def cells(spark: SparkSession, root: String): DataFrame =
-    EpochStore.readAll(spark, cmRoot(root), cmSchema)
+    family(root).readAll(spark, Cm)
       .dropDuplicates("r", "b", "_epoch")
       .groupBy("r", "b").agg(sum("cnt").as("cnt"))
 
@@ -120,7 +130,7 @@ object LiveSketch {
     * needed: max is idempotent under any duplication.
     */
   def registers(spark: SparkSession, root: String): DataFrame =
-    EpochStore.readAll(spark, hllRoot(root), hllSchema)
+    family(root).readAll(spark, Hll)
       .groupBy("bucket").agg(max("reg").as("reg"))
 
   /** Live heavy-hitter point estimates — [[Sketch.countMinEstimate]]
@@ -136,7 +146,7 @@ object LiveSketch {
   def distinctEstimate(spark: SparkSession, root: String, b: Int): DataFrame =
     Sketch.hllEstimate(registers(spark, root), b)
 
-  /** Fold epoch history under the store lease: count-min by row
+  /** Fold epoch history under the family lease: count-min by row
     * re-layout, HLL by true max-merge (see the class note for why they
     * differ). Each sub-store's watermark advances when its fold
     * commits, fencing late replays of folded epochs into no-ops.
@@ -144,24 +154,5 @@ object LiveSketch {
   def compact(spark: SparkSession, root: String,
       leaseTtlMs: Long = MaintenanceLease.DefaultTtlMs,
       leaseTimeoutMs: Long = MaintenanceLease.DefaultAcquireTimeoutMs): Unit =
-    EpochStore.withIndexLease(spark, root, leaseTtlMs, leaseTimeoutMs) {
-      EpochStore.compact(spark, cmRoot(root),
-        resolve = _.dropDuplicates("r", "b", "_epoch"),
-        writeSnapshot = (df, tmp) => df.coalesce(1)
-          .sortWithinPartitions("r", "b", "_epoch")
-          .write.mode("overwrite").parquet(tmp),
-        leaseTtlMs = leaseTtlMs, leaseTimeoutMs = leaseTimeoutMs,
-        onCommit = folded => folded.reduceOption(_ max _)
-          .foreach(EpochStore.advanceWatermark(spark, cmRoot(root), _)))
-      EpochStore.compact(spark, hllRoot(root),
-        resolve = regs => regs.groupBy("bucket")
-          .agg(max("reg").as("reg"), max("_epoch").as("_epoch"))
-          .select("bucket", "reg", "_epoch"),
-        writeSnapshot = (df, tmp) => df.coalesce(1)
-          .sortWithinPartitions("bucket")
-          .write.mode("overwrite").parquet(tmp),
-        leaseTtlMs = leaseTtlMs, leaseTimeoutMs = leaseTimeoutMs,
-        onCommit = folded => folded.reduceOption(_ max _)
-          .foreach(EpochStore.advanceWatermark(spark, hllRoot(root), _)))
-    }
+    family(root).compact(spark, shards = 1, leaseTtlMs, leaseTimeoutMs)
 }

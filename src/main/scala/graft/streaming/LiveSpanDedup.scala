@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -14,12 +13,12 @@ import graft.operators.SpanDedup
   * can only judge a CLOSED corpus, so a span duplicated ACROSS
   * deliveries (epoch-3 boilerplate matching epoch-1 text) needs gram
   * state that outlives the epoch. This store keeps that state as
-  * per-epoch deltas merged at read — the [[LiveTextIndex]] design
-  * applied to gram counts — WITH UPSERT RETRACTION: re-delivering a
-  * doc_id replaces its text (the OpenSearch per-id overwrite contract
-  * the rest of the delivery surface honors), its superseded version's
-  * grams stop counting, and spans its old text used to co-duplicate
-  * disappear retroactively.
+  * per-epoch deltas merged at read — the versioned-store protocol
+  * ([[StoreFamily]]) applied to gram counts — WITH UPSERT RETRACTION:
+  * re-delivering a doc_id replaces its text (the OpenSearch per-id
+  * overwrite contract the rest of the delivery surface honors), its
+  * superseded version's grams stop counting, and spans its old text
+  * used to co-duplicate disappear retroactively.
   *
   * Three [[EpochStore]] roots:
   *
@@ -79,16 +78,34 @@ import graft.operators.SpanDedup
   */
 object LiveSpanDedup {
 
-  private def occRoot(root: String) = root.stripSuffix("/") + "/occ"
-  private def countsRoot(root: String) = root.stripSuffix("/") + "/counts"
-  private def docsRoot(root: String) = root.stripSuffix("/") + "/docs"
+  import StoreFamily.{Current, Marker, Sidecar, Sub, clustered}
 
-  private def occSchema(idType: DataType) = StructType(Seq(
+  /** Occurrences fold like any currency-resolved data store,
+    * re-clustered by hash bucket (the retraction-lookup pruning key —
+    * see [[occForDocs]]). Counts KEEP their per-epoch NET rows — the
+    * additive merge happens at read, per-epoch identity is the
+    * crash-dedup key, and their sum already reflects every retraction —
+    * so their fold is file consolidation plus duplicate scrubbing, with
+    * no activation filter (moving count rows into a snapshot changes no
+    * read-side sum). Declaration order is fold order: occ, counts,
+    * docs.
+    */
+  private val Occ = Sub("occ", idType => StructType(Seq(
     StructField("doc_id", idType),
     StructField("pos", IntegerType),
     StructField("gh", LongType),
     StructField("bk", IntegerType),
-    StructField("_epoch", LongType)))
+    StructField("_epoch", LongType))), Current(Seq("doc_id", "pos")),
+    clustered(s => s, "bk", "doc_id", "pos"))
+  private val Counts = Sub("counts", _ => StructType(Seq(
+    StructField("gh", LongType),
+    StructField("cnt", LongType),
+    StructField("_epoch", LongType))), Sidecar(_.dropDuplicates("gh", "_epoch")),
+    clustered(s => math.max(1, s / 2), "gh"))
+  private val Docs = Sub("docs", idType => StructType(Seq(
+    StructField("doc_id", idType),
+    StructField("_epoch", LongType))), Marker)
+  private def family(root: String) = StoreFamily(root, Occ, Counts, Docs)
 
   /** Hash-bucket count for the occ store's retraction-pruning column —
     * an upper bound on the IN-list a retraction pushes into the scan,
@@ -114,7 +131,7 @@ object LiveSpanDedup {
       docs: DataFrame): DataFrame = {
     val bks = docs.select(bucketOf(col("doc_id")).as("bk"))
       .distinct().collect().map(_.getInt(0)).toSeq
-    val store = EpochStore.readAll(spark, occRoot(root), occSchema(idType))
+    val store = family(root).readAll(spark, Occ, idType)
     // The isNull arm keeps rows written before the bucket column
     // existed (legacy stores read them back as bk = null): they cannot
     // be pruned, but silently excluding them would skip their
@@ -122,13 +139,6 @@ object LiveSpanDedup {
     if (bks.isEmpty) store.filter(lit(false))
     else store.filter(col("bk").isNull || col("bk").isInCollection(bks))
   }
-  private def countsSchema = StructType(Seq(
-    StructField("gh", LongType),
-    StructField("cnt", LongType),
-    StructField("_epoch", LongType)))
-  private def docsSchema(idType: DataType) = StructType(Seq(
-    StructField("doc_id", idType),
-    StructField("_epoch", LongType)))
 
   /** Append one epoch's gram state, retracting superseded versions.
     * `toks` is the epoch's delivered docs as (doc_id, toks:
@@ -146,39 +156,16 @@ object LiveSpanDedup {
   def writeDelta(toks: DataFrame, root: String, epoch: Long, k: Int,
       shards: Int = 4): Unit = {
     require(shards > 0, s"shard count must be positive, got $shards")
-    val spark = toks.sparkSession
-    // A replay whose first attempt's marker landed takes the INDEX
-    // lease and re-checks the fence under it: the epoch is activation-
-    // eligible, so a concurrent compaction could otherwise fold it
-    // between the fence check and the retraction lookup, leaving the
-    // rewrite to re-derive gross-only counts from post-fold state (the
-    // LiveTextIndex rule — see its writeDelta, including why the
-    // marker probe must come BEFORE the fence read: the commit order
-    // advances the watermark before a folded epoch's dirs die, so a
-    // marker-absent probe guarantees the fence read after it sees the
-    // fold). First deliveries stay lease-free: an unmarked epoch
-    // cannot be folded under its writer.
-    val markerDirExists = {
-      val p = new org.apache.hadoop.fs.Path(s"${docsRoot(root)}/epoch=$epoch")
-      p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-    }
-    if (markerDirExists)
-      EpochStore.withIndexLease(spark, root) {
-        // REPLAY FENCE, re-read under the lease: an epoch at or below
-        // the watermark was already folded into snapshots, and its
-        // input history — the superseded doc versions the retraction
-        // would need — no longer exists. Re-writing it from
-        // post-compaction state would land gross-only counts that
-        // disagree with the folded net rows. The replay's only correct
-        // action is nothing.
-        if (epoch > EpochStore.readWatermark(spark, docsRoot(root)))
-          writeDeltaBody(toks, root, epoch, k, shards)
-      }
-    else if (epoch > EpochStore.readWatermark(spark, docsRoot(root)))
-      writeDeltaBody(toks, root, epoch, k, shards)
+    // REPLAY FENCE ([[StoreFamily.writeEpoch]]): a folded epoch's input
+    // history — the superseded doc versions the retraction would need —
+    // no longer exists; re-writing it from post-compaction state would
+    // land gross-only counts that disagree with the folded net rows.
+    // The replay's only correct action is nothing.
+    val f = family(root)
+    f.writeEpoch(toks.sparkSession, epoch)(writeDeltaBody(toks, f, epoch, k, shards))
   }
 
-  private def writeDeltaBody(toks: DataFrame, root: String, epoch: Long,
+  private def writeDeltaBody(toks: DataFrame, f: StoreFamily, epoch: Long,
       k: Int, shards: Int): Unit = {
     val spark = toks.sparkSession
     val idType = toks.schema("doc_id").dataType
@@ -188,8 +175,8 @@ object LiveSpanDedup {
     // persisted-wrong for a NET count). The dropDuplicates below is
     // the second line of defense for the unreadable-manifest window
     // heal cannot close.
-    EpochStore.heal(spark, occRoot(root))
-    EpochStore.heal(spark, docsRoot(root))
+    EpochStore.heal(spark, f.rootOf(Occ))
+    EpochStore.heal(spark, f.rootOf(Docs))
     val occ = SpanDedup.gramOccurrences(toks, k)
       .withColumn("bk", bucketOf(col("doc_id")))
       .withColumn("_epoch", lit(epoch))
@@ -198,12 +185,11 @@ object LiveSpanDedup {
     // retraction lookup prunes whole files and row groups with its
     // pushed bucket filter ([[occForDocs]]); docs stay contiguous
     // within a bucket.
-    occ.repartition(shards, col("bk")).sortWithinPartitions("bk", "doc_id", "pos")
-      .write.mode("overwrite").parquet(s"${occRoot(root)}/epoch=$epoch")
+    Occ.layout(occ, f.dir(Occ, epoch), shards)
     // Gross adds from the delta just written (one tokenize, two files
     // that can never disagree) ...
-    val gross = spark.read.schema(occSchema(idType))
-      .parquet(s"${occRoot(root)}/epoch=$epoch")
+    val gross = spark.read.schema(Occ.schema(idType))
+      .parquet(f.dir(Occ, epoch))
       .groupBy("gh").agg(count(lit(1)).as("cnt"))
     // ... minus the superseded versions' counts: each re-delivered
     // doc's CURRENT version (max docs-store epoch STRICTLY BEFORE this
@@ -220,7 +206,7 @@ object LiveSpanDedup {
     // three consumers (the isEmpty probe, the bucket collection, the
     // retraction join); one materialization beats three docs-store
     // scans.
-    val prior = EpochStore.readAll(spark, docsRoot(root), docsSchema(idType))
+    val prior = f.readAll(spark, Docs, idType)
       .filter(col("_epoch") < epoch)
       .join(toks.select("doc_id"), Seq("doc_id"))
       .groupBy("doc_id").agg(max(col("_epoch")).as("_prev"))
@@ -232,7 +218,7 @@ object LiveSpanDedup {
         // pushed IN filter prunes the bucket-clustered store's files
         // and row groups ([[occForDocs]]), so the lookup reads ~(re-
         // delivered buckets / 64) of the store, not all of it.
-        val occStore = occForDocs(spark, root, idType,
+        val occStore = occForDocs(spark, f.root, idType,
           prior.select("doc_id"))
         val retract = occStore
           .join(prior, occStore("doc_id") === prior("doc_id") &&
@@ -251,13 +237,10 @@ object LiveSpanDedup {
       }
     net.withColumn("_epoch", lit(epoch))
       .repartition(math.min(shards, 2))
-      .write.mode("overwrite").parquet(s"${countsRoot(root)}/epoch=$epoch")
+      .write.mode("overwrite").parquet(f.dir(Counts, epoch))
     // Currency marker LAST (see class doc): activates the new rows and
-    // the retraction together. Keyed like the doclen marker — one short
-    // row per delivered doc, epoch-bounded but potentially large.
-    toks.select(col("doc_id"), lit(epoch).as("_epoch"))
-      .repartition(math.max(1, shards / 2), col("doc_id"))
-      .write.mode("overwrite").parquet(s"${docsRoot(root)}/epoch=$epoch")
+    // the retraction together.
+    f.writeMarker(toks.select("doc_id"), epoch, shards)
   }
 
   /** Maximal duplicated token spans over the RESOLVED corpus delivered
@@ -269,33 +252,21 @@ object LiveSpanDedup {
     */
   def duplicatedSpans(spark: SparkSession, root: String, k: Int,
       idType: DataType = StringType): DataFrame = {
-    EpochStore.heal(spark, occRoot(root))
-    EpochStore.heal(spark, countsRoot(root))
-    EpochStore.heal(spark, docsRoot(root))
-    val dup = EpochStore.readAll(spark, countsRoot(root), countsSchema)
+    val f = family(root)
+    // The resolved corpus's occurrence table. No identity dedup:
+    // identical occurrence rows collapse in the interval merge.
+    val currentOcc = f.current(spark, Occ, idType, dedup = false)
+      .select("doc_id", "pos", "gh")
+    EpochStore.heal(spark, f.rootOf(Counts))
+    val dup = f.readAll(spark, Counts, idType)
       .dropDuplicates("gh", "_epoch") // crash-window guard (class doc)
       .groupBy("gh").agg(sum(col("cnt")).as("cnt"))
       .filter(col("cnt") > 1).select("gh")
     // Salt regime decided from the occ STORE SCAN, not the currency
     // join (whose Catalyst estimate is the product of its children —
     // a tiny store would read as huge and always pay the salt).
-    val salted = SpanDedup.saltRegime(
-      EpochStore.readAll(spark, occRoot(root), occSchema(idType)))
-    SpanDedup.markAndMerge(currentOcc(spark, root, idType), dup, k, salted)
-  }
-
-  /** The current-version occurrence rows: occ ⋈ (latest docs-store
-    * epoch per doc) — the resolved corpus's occurrence table.
-    */
-  private def currentOcc(spark: SparkSession, root: String,
-      idType: DataType): DataFrame = {
-    val cur = EpochStore.latestPerKey(
-        EpochStore.readAll(spark, docsRoot(root), docsSchema(idType)), "doc_id")
-      .select(col("doc_id"), col("_epoch").as("_cur"))
-    EpochStore.readAll(spark, occRoot(root), occSchema(idType))
-      .join(cur, Seq("doc_id"))
-      .filter(col("_epoch") === col("_cur"))
-      .select("doc_id", "pos", "gh")
+    val salted = SpanDedup.saltRegime(f.readAll(spark, Occ, idType))
+    SpanDedup.markAndMerge(currentOcc, dup, k, salted)
   }
 
   /** Operational snapshot of the state's three stores, keyed by store
@@ -303,78 +274,16 @@ object LiveSpanDedup {
     * store, replay fence, crashed-compaction and lease indicators.
     */
   def status(spark: SparkSession, root: String): Map[String, EpochStore.Status] =
-    Map(
-      "occ" -> EpochStore.status(spark, occRoot(root)),
-      "counts" -> EpochStore.status(spark, countsRoot(root)),
-      "docs" -> EpochStore.status(spark, docsRoot(root)))
+    family(root).status(spark)
 
-  /** Consolidate each store's epoch history into one snapshot (crash
-    * protocol in [[EpochStore.compact]]). Occurrences drop superseded
-    * versions and re-cluster by hash bucket (the retraction-lookup
-    * pruning key — see [[occForDocs]]) —
-    * restricted to ACTIVATED epochs (docs-marker rows present when
-    * this compaction starts), so an in-flight delivery's occ dir is
-    * neither resolved-empty nor deleted (the [[LiveTextIndex.compact]]
-    * rule). Counts KEEP their per-epoch NET rows — the additive merge
-    * happens at read, per-epoch identity is the crash-dedup key, and
-    * their sum already reflects every retraction — so count compaction
-    * is file consolidation plus duplicate scrubbing (and needs no
-    * activation filter: moving count rows into a snapshot changes no
-    * read-side sum); docs keep the latest row per doc. Returns
-    * occurrence rows kept.
-    *
-    * The whole three-store pass runs under ONE index-level lease
-    * ([[EpochStore.withIndexLease]]): the occ resolution reads the
-    * docs store's epoch dirs, so a concurrent docs compaction in
-    * another process could delete them mid-read — the per-store
-    * leases cannot see across stores.
+  /** Consolidate each store's epoch history into one snapshot under one
+    * index lease ([[StoreFamily.compact]]; per-store folds at the
+    * sub-store declarations): occurrences drop superseded versions over
+    * activated epochs, counts consolidate, docs keep the latest row per
+    * doc and advance the replay fence. Returns occurrence rows kept.
     */
   def compact(spark: SparkSession, root: String, shards: Int = 4,
       leaseTtlMs: Long = MaintenanceLease.DefaultTtlMs,
-      leaseTimeoutMs: Long = MaintenanceLease.DefaultAcquireTimeoutMs): Long = {
-    require(shards > 0, s"shard count must be positive, got $shards")
-    EpochStore.withIndexLease(spark, root, leaseTtlMs, leaseTimeoutMs) {
-      // Marker rows plus committed marker dirs: a zero-row delivery has
-      // no docs rows, but its committed marker dir still proves the
-      // epoch complete (the LiveTextIndex rule).
-      val activated = EpochStore.rowEpochs(spark, docsRoot(root)) ++
-        EpochStore.committedEpochs(spark, docsRoot(root))
-      val kept = EpochStore.compact(spark, occRoot(root),
-        resolve = occ => {
-          val cur = EpochStore.latestPerKey(
-              EpochStore.readAll(spark, docsRoot(root),
-                docsSchema(occ.schema("doc_id").dataType)), "doc_id")
-            .select(col("doc_id"), col("_epoch").as("_cur"))
-          occ.join(cur, Seq("doc_id"))
-            .filter(col("_epoch") === col("_cur")).drop("_cur")
-            .dropDuplicates("doc_id", "pos")
-        },
-        writeSnapshot = (df, tmp) => df
-          .repartition(shards, col("bk"))
-          .sortWithinPartitions("bk", "doc_id", "pos")
-          .write.mode("overwrite").parquet(tmp),
-        leaseTtlMs = leaseTtlMs, leaseTimeoutMs = leaseTimeoutMs,
-        epochEligible = activated.contains)
-      EpochStore.compact(spark, countsRoot(root),
-        resolve = _.dropDuplicates("gh", "_epoch"),
-        writeSnapshot = (df, tmp) => df
-          .repartition(math.max(1, shards / 2), col("gh"))
-          .sortWithinPartitions("gh")
-          .write.mode("overwrite").parquet(tmp),
-        leaseTtlMs = leaseTtlMs, leaseTimeoutMs = leaseTimeoutMs)
-      EpochStore.compact(spark, docsRoot(root),
-        resolve = docs => EpochStore.latestPerKey(docs, "doc_id"),
-        // O(resolved docs) rows — keyed + row-count-sized layout, never
-        // a single-task rewrite of the whole currency store.
-        writeSnapshot = (df, tmp) =>
-          EpochStore.writeKeyedSnapshot(df, tmp, "doc_id"),
-        leaseTtlMs = leaseTtlMs, leaseTimeoutMs = leaseTimeoutMs,
-        // Folding the activation store commits those epochs' history:
-        // advance the replay fence (still under the lease) so a late
-        // at-least-once replay of a folded epoch becomes a no-op.
-        onCommit = folded => folded.reduceOption(_ max _)
-          .foreach(EpochStore.advanceWatermark(spark, docsRoot(root), _)))
-      kept
-    }
-  }
+      leaseTimeoutMs: Long = MaintenanceLease.DefaultAcquireTimeoutMs): Long =
+    family(root).compact(spark, shards, leaseTtlMs, leaseTimeoutMs)
 }

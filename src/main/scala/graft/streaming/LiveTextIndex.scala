@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -79,39 +78,52 @@ import graft.operators.Retrieval
   * df aggregate to the delta scans) plus one O(docs) doclen pass for
   * currency; (n, avgdl) come from the O(epochs) stats sidecar.
   *
-  * [[compact]] folds the epoch history into one resolved snapshot per
-  * store under [[EpochStore]]'s crash-safe manifest + lease protocol,
+  * Marker-last writes, currency, the replay fence and compaction are
+  * the one versioned-store protocol of [[StoreFamily]]; [[compact]]
+  * folds the epoch history into one resolved snapshot per store,
   * bounding the per-query delta count between compactions.
   */
 object LiveTextIndex {
 
-  /** Where a live index keeps its stores (`positions` is optional —
-    * see [[writeDelta]]'s `positions` flag).
-    */
-  private def postingsRoot(root: String) = root.stripSuffix("/") + "/postings"
-  private def doclenRoot(root: String) = root.stripSuffix("/") + "/doclen"
-  private def statsRoot(root: String) = root.stripSuffix("/") + "/stats"
-  private def positionsRoot(root: String) = root.stripSuffix("/") + "/positions"
+  import StoreFamily.{Current, Marker, Sidecar, Sub, clustered}
 
-  private val postingsSchema = StructType(Seq(
+  /** The index's stores in fold order (`positions` is optional — see
+    * [[writeDelta]]'s `positions` flag). Postings and positions resolve
+    * by currency, term-clustered. Stats deltas are ADDITIVE with
+    * per-epoch identity (the LiveSpanDedup counts rule): folding moves
+    * rows without changing the read-side sum, and dedup-by-epoch is the
+    * crash guard, so resolution is consolidation only. Their
+    * eligibility mirrors the READ activation rule — folded below the
+    * fence (read after the doclen fold advanced it) or activated — so
+    * an in-flight delivery's stats dir rides, and the delta of an epoch
+    * whose every doc version was later superseded still folds. One row
+    * per folded epoch: a single-file snapshot.
+    */
+  private val Postings = Sub("postings", _ => StructType(Seq(
     StructField("term", StringType),
     StructField("doc_id", StringType),
     StructField("tf", LongType),
     StructField("dl", LongType),
-    StructField("_epoch", LongType)))
-  private val doclenSchema = StructType(Seq(
-    StructField("doc_id", StringType),
-    StructField("dl", LongType),
-    StructField("_epoch", LongType)))
-  private val statsSchema = StructType(Seq(
-    StructField("n_delta", LongType),
-    StructField("sumdl_delta", LongType),
-    StructField("_epoch", LongType)))
-  private val positionsSchema = StructType(Seq(
+    StructField("_epoch", LongType))), Current(Seq("term", "doc_id")),
+    clustered(s => s, "term"))
+  private val Positions = Sub("positions", _ => StructType(Seq(
     StructField("term", StringType),
     StructField("doc_id", StringType),
     StructField("pos", LongType),
-    StructField("_epoch", LongType)))
+    StructField("_epoch", LongType))), Current(Seq("term", "doc_id", "pos")),
+    clustered(s => s, "term"), optional = true)
+  private val Doclen = Sub("doclen", _ => StructType(Seq(
+    StructField("doc_id", StringType),
+    StructField("dl", LongType),
+    StructField("_epoch", LongType))), Marker)
+  private val Stats = Sub("stats", _ => StructType(Seq(
+    StructField("n_delta", LongType),
+    StructField("sumdl_delta", LongType),
+    StructField("_epoch", LongType))),
+    Sidecar(_.dropDuplicates("_epoch"), activeOnly = true),
+    (df, path, _) => df.repartition(1).write.mode("overwrite").parquet(path))
+  private def family(root: String) =
+    StoreFamily(root, Postings, Positions, Doclen, Stats)
 
   /** Append one epoch's postings + doclen deltas. `toks` is the
     * epoch's delivered docs as (doc_id, toks: array&lt;string&gt;) —
@@ -131,6 +143,7 @@ object LiveTextIndex {
       shards: Int = 4, positions: Boolean = false): Unit = {
     require(shards > 0, s"shard count must be positive, got $shards")
     val spark = toks.sparkSession
+    val f = family(root)
     // The positional store cannot be BACKFILLED (deltas keep tokenized
     // aggregates, not the text), so partial coverage would silently
     // drop older docs from every phrase query. Fail the misuse loudly
@@ -138,9 +151,9 @@ object LiveTextIndex {
     // epochs landed without them, and turning them off after epochs
     // maintained them. Both checks are dir listings ("other than this
     // epoch's own dir" keeps replays of the affected epoch valid).
-    val posDirs = EpochStore.epochDirNames(spark, positionsRoot(root))
+    val posDirs = EpochStore.epochDirNames(spark, f.rootOf(Positions))
       .exists(_ != s"epoch=$epoch")
-    val docDirs = EpochStore.epochDirNames(spark, doclenRoot(root))
+    val docDirs = EpochStore.epochDirNames(spark, f.rootOf(Doclen))
       .exists(_ != s"epoch=$epoch")
     if (positions)
       require(posDirs || !docDirs,
@@ -151,50 +164,22 @@ object LiveTextIndex {
       require(!posDirs,
         s"positions=false on $root, but the index maintains a positional " +
           "store — later epochs' docs would be invisible to phrase queries")
-    // A REPLAY whose first attempt's marker landed is the one delta
-    // write a CONCURRENT compaction can corrupt: the epoch is
-    // activation-eligible, so a compact running in another process may
-    // fold it between the fence check and the lookups below — the
-    // rewrite would then re-derive the superseded-version state from
-    // post-fold history (prior versions gone) and land a gross-only
-    // stats row diverging from the folded net row. Such replays take
-    // the INDEX lease (serializing against compaction only — a rare
-    // restart path, never the hot delivery path) and re-check the
-    // fence under it. First deliveries need no lease: an epoch with no
-    // marker cannot be folded out from under its writer.
-    //
-    // CHECK ORDER MATTERS: marker first, fence second. Compaction
-    // advances the watermark BEFORE deleting a folded epoch's dirs
-    // (EpochStore commit order), so "marker absent" at the time of
-    // this probe means either never-delivered (safe lease-free) or
-    // already-folded — and in the folded case the fence read BELOW the
-    // probe is guaranteed to see the advanced watermark. Probing after
-    // the fence would leave a window where the fold lands in between
-    // and the replay proceeds lease-free on a stale fence reading.
-    val markerDirExists = {
-      val p = new org.apache.hadoop.fs.Path(s"${doclenRoot(root)}/epoch=$epoch")
-      p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-    }
-    if (markerDirExists)
-      EpochStore.withIndexLease(spark, root) {
-        // REPLAY FENCE (the LiveSpanDedup rule), re-read under the
-        // lease: an epoch at or below the compaction watermark was
-        // already folded — its content lives in snapshots, and the
-        // replay's only correct action is nothing.
-        if (epoch > EpochStore.readWatermark(spark, doclenRoot(root)))
-          writeDeltaBody(toks, root, epoch, shards, positions)
-      }
-    else if (epoch > EpochStore.readWatermark(spark, doclenRoot(root)))
-      writeDeltaBody(toks, root, epoch, shards, positions)
+    // A marker-present REPLAY is the one delta write a concurrent
+    // compaction can corrupt here: folded between the fence check and
+    // the lookups below, the rewrite would re-derive the
+    // superseded-version state from post-fold history and land a
+    // gross-only stats row diverging from the folded net row — hence
+    // the lease [[StoreFamily.writeEpoch]] takes for it.
+    f.writeEpoch(spark, epoch)(writeDeltaBody(toks, f, epoch, shards, positions))
   }
 
-  private def writeDeltaBody(toks: DataFrame, root: String, epoch: Long,
+  private def writeDeltaBody(toks: DataFrame, f: StoreFamily, epoch: Long,
       shards: Int, positions: Boolean): Unit = {
     val spark = toks.sparkSession
     // Heal BEFORE the retraction lookup (the LiveSpanDedup rule): a
     // crashed doclen compaction's snapshot+victim coexistence is
     // masked at read by latestPerKey, which the lookup below uses too.
-    EpochStore.heal(spark, doclenRoot(root))
+    EpochStore.heal(spark, f.rootOf(Doclen))
     val one = toks.select(col("doc_id").cast("string").as("doc_id"), col("toks"))
     val posted = one
       .select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
@@ -202,10 +187,7 @@ object LiveTextIndex {
       .groupBy("term", "doc_id")
       .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
       .withColumn("_epoch", lit(epoch))
-    posted
-      .repartition(shards, col("term")).sortWithinPartitions("term")
-      .write.mode("overwrite")
-      .parquet(s"${postingsRoot(root)}/epoch=$epoch")
+    Postings.layout(posted, f.dir(Postings, epoch), shards)
     // Positional delta (optional — [[SearchDsl.phraseMatch]]'s input),
     // BEFORE the doclen marker like everything the marker activates:
     // a crash between this write and the marker leaves the epoch's
@@ -213,13 +195,11 @@ object LiveTextIndex {
     // Term-clustered like the postings so a phrase query's term filter
     // prunes row groups.
     if (positions)
-      one.select(col("doc_id"),
+      Positions.layout(one.select(col("doc_id"),
           posexplode(col("toks")).as(Seq("pos", "term")))
         .select(col("term"), col("doc_id"),
-          col("pos").cast("long").as("pos"), lit(epoch).as("_epoch"))
-        .repartition(shards, col("term")).sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .parquet(s"${positionsRoot(root)}/epoch=$epoch")
+          col("pos").cast("long").as("pos"), lit(epoch).as("_epoch")),
+        f.dir(Positions, epoch), shards)
     // NET stats delta: gross (docs, Σdl) of this epoch's versions minus
     // the contributions of the versions they supersede — each version's
     // dl enters the sum once at delivery and leaves once at
@@ -233,7 +213,7 @@ object LiveTextIndex {
     val g = one.agg(count(lit(1)).as("n"),
       coalesce(sum(size(col("toks")).cast("long")), lit(0L)).as("s")).head
     val p = EpochStore.latestPerKey(
-        EpochStore.readAll(spark, doclenRoot(root), doclenSchema)
+        f.readAll(spark, Doclen)
           .filter(col("_epoch") < epoch), "doc_id")
       .join(one.select("doc_id"), Seq("doc_id"))
       .agg(count(lit(1)).as("n"),
@@ -247,12 +227,12 @@ object LiveTextIndex {
     // attempt's stats dir must not flip the store to "populated" and
     // shrink the rewrite to an incremental row. Base and superseded
     // overlap is fine — base counts the old versions, p retracts them.
-    val virgin = !EpochStore.epochDirNames(spark, statsRoot(root))
+    val virgin = !EpochStore.epochDirNames(spark, f.rootOf(Stats))
       .exists(_ != s"epoch=$epoch")
     val (baseN, baseS) =
-      if (virgin && EpochStore.hasEpochDirs(spark, doclenRoot(root))) {
+      if (virgin && EpochStore.hasEpochDirs(spark, f.rootOf(Doclen))) {
         val b = EpochStore.latestPerKey(
-            EpochStore.readAll(spark, doclenRoot(root), doclenSchema)
+            f.readAll(spark, Doclen)
               .filter(col("_epoch") < epoch), "doc_id")
           .agg(count(lit(1)).as("n"),
             coalesce(sum(col("dl")), lit(0L)).as("s")).head
@@ -262,19 +242,13 @@ object LiveTextIndex {
         java.util.Arrays.asList(
           Row(baseN + g.getLong(0) - p.getLong(0),
             baseS + g.getLong(1) - p.getLong(1), epoch)),
-        statsSchema)
+        Stats.schema(StringType))
       .write.mode("overwrite")
-      .parquet(s"${statsRoot(root)}/epoch=$epoch")
+      .parquet(f.dir(Stats, epoch))
     // Currency marker LAST (see class doc): only after everything it
     // activates — the postings rows and the stats delta — is durable.
-    // Keyed so a corpus-scale delivery epoch's marker never funnels
-    // through one or two writer tasks (the delta is one short row per
-    // delivered doc — epoch-bounded, but an epoch can be large).
-    one.select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
-        lit(epoch).as("_epoch"))
-      .repartition(math.max(1, shards / 2), col("doc_id"))
-      .write.mode("overwrite")
-      .parquet(s"${doclenRoot(root)}/epoch=$epoch")
+    f.writeMarker(one.select(col("doc_id"),
+      size(col("toks")).cast("long").as("dl")), epoch, shards)
   }
 
   /** The live index as a point-in-time [[Retrieval.TextIndex]] view
@@ -287,17 +261,15 @@ object LiveTextIndex {
     * O(docs) aggregation pass the sidecar removes.
     */
   def read(spark: SparkSession, root: String): Retrieval.TextIndex = {
-    EpochStore.heal(spark, postingsRoot(root))
-    EpochStore.heal(spark, doclenRoot(root))
-    EpochStore.heal(spark, statsRoot(root))
-    val doclen = EpochStore.readAll(spark, doclenRoot(root), doclenSchema)
-    val postings = EpochStore.readAll(spark, postingsRoot(root), postingsSchema)
-    // Currency: latest doclen epoch per doc (row_number, so a crashed
-    // compaction's duplicated winner rows still yield ONE currency row).
-    val cur = EpochStore.latestPerKey(doclen, "doc_id")
-      .select(col("doc_id"), col("dl"), col("_epoch").as("_cur"))
+    val f = family(root)
+    // A posting counts iff its epoch IS the doc's current version; the
+    // identity dedup is keyed by the columns the query filters on, so
+    // its exchange runs over the terms' postings only, not the corpus.
+    val live = f.current(spark, Postings)
+      .select("term", "doc_id", "tf", "dl")
+    EpochStore.heal(spark, f.rootOf(Stats))
     // Stats from the sidecar: Σ net deltas over ACTIVATED epochs — one
-    // row per epoch, against cur's O(docs) window. A delta counts once
+    // row per epoch, against an O(docs) window. A delta counts once
     // its doclen marker proves the delivery complete: marker dir
     // committed, or the epoch already folded below the watermark (both
     // file-metadata checks). The telescoped long sums equal the doclen
@@ -306,9 +278,9 @@ object LiveTextIndex {
     // buildTextIndex's, so live scores match a batch rebuild's.
     // dropDuplicates(_epoch) guards the crashed-compaction window where
     // a snapshot and its victim dirs briefly carry identical rows.
-    val wm = EpochStore.readWatermark(spark, doclenRoot(root))
-    val committed = EpochStore.committedEpochs(spark, doclenRoot(root))
-    val activeStats = EpochStore.readAll(spark, statsRoot(root), statsSchema)
+    val wm = EpochStore.readWatermark(spark, f.rootOf(Doclen))
+    val committed = EpochStore.committedEpochs(spark, f.rootOf(Doclen))
+    val activeStats = f.readAll(spark, Stats)
       .dropDuplicates("_epoch")
       .filter(if (committed.isEmpty) col("_epoch") <= wm
         else col("_epoch") <= wm || col("_epoch").isInCollection(committed))
@@ -321,25 +293,15 @@ object LiveTextIndex {
     // legacy corpus into its row (see writeDeltaBody), so as soon as
     // any stats dir exists, the sidecar sum is complete.
     val stats =
-      if (!EpochStore.hasEpochDirs(spark, statsRoot(root)) &&
-          EpochStore.hasEpochDirs(spark, doclenRoot(root)))
-        cur.select(col("dl"))
+      if (!EpochStore.hasEpochDirs(spark, f.rootOf(Stats)) &&
+          EpochStore.hasEpochDirs(spark, f.rootOf(Doclen)))
+        f.latest(spark).select(col("dl"))
           .agg(count(lit(1)).cast("double").as("n"),
             (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))
       else activeStats
         .agg(coalesce(sum(col("n_delta")), lit(0L)).cast("double").as("n"),
           (sum(col("sumdl_delta")).cast("double") / sum(col("n_delta")))
             .as("avgdl"))
-    // A posting counts iff its epoch IS the doc's current version.
-    // dropDuplicates guards the crashed-compaction window (snapshot +
-    // victim epochs briefly coexist with identical rows) — keyed by
-    // the same columns the query filters on, so its exchange runs over
-    // the terms' postings only, not the corpus.
-    val live = postings
-      .join(cur.select("doc_id", "_cur"), Seq("doc_id"))
-      .filter(col("_epoch") === col("_cur"))
-      .select("term", "doc_id", "tf", "dl")
-      .dropDuplicates("term", "doc_id")
     val df = live.groupBy("term")
       .agg(count(lit(1)).cast("double").as("df"))
     Retrieval.TextIndex(live, df, stats)
@@ -358,21 +320,14 @@ object LiveTextIndex {
     * be backfilled — see [[writeDelta]]); empty store → empty frame.
     */
   def readPositional(spark: SparkSession, root: String): DataFrame = {
-    EpochStore.heal(spark, positionsRoot(root))
-    EpochStore.heal(spark, doclenRoot(root))
-    if (!EpochStore.hasEpochDirs(spark, positionsRoot(root)) &&
-        EpochStore.hasEpochDirs(spark, doclenRoot(root)))
+    val f = family(root)
+    val live = f.current(spark, Positions)
+    if (!EpochStore.hasEpochDirs(spark, f.rootOf(Positions)) &&
+        EpochStore.hasEpochDirs(spark, f.rootOf(Doclen)))
       throw new IllegalStateException(
         s"live index $root has no positional store — it was maintained with " +
           "positions=false; phrase queries over it would return nothing")
-    val doclen = EpochStore.readAll(spark, doclenRoot(root), doclenSchema)
-    val cur = EpochStore.latestPerKey(doclen, "doc_id")
-      .select(col("doc_id"), col("_epoch").as("_cur"))
-    EpochStore.readAll(spark, positionsRoot(root), positionsSchema)
-      .join(cur, Seq("doc_id"))
-      .filter(col("_epoch") === col("_cur"))
-      .select("term", "doc_id", "pos")
-      .dropDuplicates("term", "doc_id", "pos")
+    live.select("term", "doc_id", "pos")
   }
 
   /** Operational snapshot of the index's stores, keyed by store name
@@ -381,117 +336,19 @@ object LiveTextIndex {
     * crashed-compaction and lease indicators.
     */
   def status(spark: SparkSession, root: String): Map[String, EpochStore.Status] =
-    Map(
-      "postings" -> EpochStore.status(spark, postingsRoot(root)),
-      "doclen" -> EpochStore.status(spark, doclenRoot(root)),
-      "stats" -> EpochStore.status(spark, statsRoot(root))) ++
-      (if (EpochStore.hasEpochDirs(spark, positionsRoot(root)))
-        Map("positions" -> EpochStore.status(spark, positionsRoot(root)))
-      else Map.empty)
+    family(root).status(spark)
 
-  /** Fold each store's epoch history into one snapshot (crash protocol
-    * and serialization in [[EpochStore.compact]]). Postings resolve
-    * against the doclen store's CURRENT epoch set — rows of superseded
-    * doc versions are dropped. A delivery landing mid-compaction is
-    * protected by the ACTIVATION rule: only postings epochs whose
-    * doclen marker had landed when this compaction started are
-    * eligible victims (the marker is written last, so an in-flight
-    * epoch's data dir is listed but not yet activated — resolving it
-    * against a currency that does not know it would drop its rows
-    * from the snapshot and then delete the only copy). Ineligible
-    * dirs simply ride to the next compaction. Snapshot rows keep
-    * their original `_epoch` values so read-time resolution is
-    * unchanged over any mix of snapshot and later deltas. Returns
-    * postings rows kept.
-    *
-    * The whole two-store pass runs under ONE index-level lease
-    * ([[EpochStore.withIndexLease]]): the postings resolution reads
-    * the doclen store's epoch dirs, so a concurrent doclen compaction
-    * in another process could delete them mid-read — the per-store
-    * leases cannot see across stores.
+  /** Fold each store's epoch history into one snapshot under one index
+    * lease ([[StoreFamily.compact]]; per-store folds at the sub-store
+    * declarations): postings (and positions, when maintained) drop
+    * superseded doc versions over activated epochs, doclen keeps the
+    * latest row per doc and advances the replay fence, then stats
+    * consolidate. Snapshot rows keep their original `_epoch` values so
+    * read-time resolution is unchanged over any mix of snapshot and
+    * later deltas. Returns postings rows kept.
     */
   def compact(spark: SparkSession, root: String, shards: Int = 4,
       leaseTtlMs: Long = MaintenanceLease.DefaultTtlMs,
-      leaseTimeoutMs: Long = MaintenanceLease.DefaultAcquireTimeoutMs): Long = {
-    require(shards > 0, s"shard count must be positive, got $shards")
-    EpochStore.withIndexLease(spark, root, leaseTtlMs, leaseTimeoutMs) {
-      // Point-in-time activated set: epochs whose currency marker rows
-      // exist NOW, plus committed marker DIRS (a zero-row delivery has
-      // no marker rows but its committed marker dir still proves the
-      // epoch complete — without it the empty data dir would never
-      // become a victim and would ride forever). Markers landing later
-      // exclude their data epochs from this compaction — the safe
-      // direction.
-      val activated = EpochStore.rowEpochs(spark, doclenRoot(root)) ++
-        EpochStore.committedEpochs(spark, doclenRoot(root))
-      val kept = EpochStore.compact(spark, postingsRoot(root),
-        resolve = posted => {
-          val cur = EpochStore.latestPerKey(
-              EpochStore.readAll(spark, doclenRoot(root), doclenSchema), "doc_id")
-            .select(col("doc_id"), col("_epoch").as("_cur"))
-          posted.join(cur, Seq("doc_id"))
-            .filter(col("_epoch") === col("_cur"))
-            .drop("_cur")
-            .dropDuplicates("term", "doc_id")
-        },
-        writeSnapshot = (df, tmp) => df
-          .repartition(shards, col("term")).sortWithinPartitions("term")
-          .write.mode("overwrite").parquet(tmp),
-        leaseTtlMs = leaseTtlMs, leaseTimeoutMs = leaseTimeoutMs,
-        epochEligible = activated.contains)
-      // The optional positional store resolves exactly like the
-      // postings (currency filter + identity dedup), under the same
-      // activation rule, BEFORE the doclen fold below advances the
-      // fence — it reads the same un-folded doclen epoch set.
-      if (EpochStore.hasEpochDirs(spark, positionsRoot(root)))
-        EpochStore.compact(spark, positionsRoot(root),
-          resolve = pos => {
-            val cur = EpochStore.latestPerKey(
-                EpochStore.readAll(spark, doclenRoot(root), doclenSchema), "doc_id")
-              .select(col("doc_id"), col("_epoch").as("_cur"))
-            pos.join(cur, Seq("doc_id"))
-              .filter(col("_epoch") === col("_cur"))
-              .drop("_cur")
-              .dropDuplicates("term", "doc_id", "pos")
-          },
-          writeSnapshot = (df, tmp) => df
-            .repartition(shards, col("term")).sortWithinPartitions("term")
-            .write.mode("overwrite").parquet(tmp),
-          leaseTtlMs = leaseTtlMs, leaseTimeoutMs = leaseTimeoutMs,
-          epochEligible = activated.contains)
-      // The doclen store is self-contained (its rows ARE the markers):
-      // every listed epoch is eligible. Folding it commits those epochs'
-      // history — advance the replay fence under the lease.
-      EpochStore.compact(spark, doclenRoot(root),
-        resolve = dl => EpochStore.latestPerKey(dl, "doc_id"),
-        // O(resolved docs) rows — keyed + row-count-sized layout (a
-        // fixed tiny partition count would single-task the rewrite of
-        // a corpus-scale doclen store).
-        writeSnapshot = (df, tmp) =>
-          EpochStore.writeKeyedSnapshot(df, tmp, "doc_id"),
-        leaseTtlMs = leaseTtlMs, leaseTimeoutMs = leaseTimeoutMs,
-        onCommit = folded => folded.reduceOption(_ max _)
-          .foreach(EpochStore.advanceWatermark(spark, doclenRoot(root), _)))
-      // Stats deltas are ADDITIVE with per-epoch identity (the
-      // LiveSpanDedup counts rule): folding moves rows without changing
-      // the read-side sum, and dedup-by-epoch is the crash guard, so
-      // resolution is consolidation only. Eligibility mirrors the READ
-      // activation rule — folded below the watermark (re-read AFTER the
-      // doclen compact just advanced it) or marker-activated — so an
-      // in-flight delivery's stats dir rides, and the delta of an epoch
-      // whose every doc version was later superseded (absent from
-      // doclen's surviving rows, but part of the sum forever) still
-      // folds instead of riding indefinitely.
-      val wm = EpochStore.readWatermark(spark, doclenRoot(root))
-      EpochStore.compact(spark, statsRoot(root),
-        resolve = _.dropDuplicates("_epoch"),
-        // ONE row per folded epoch — bounded by delivery count, never
-        // corpus size, so a single-file snapshot is the right layout.
-        writeSnapshot = (df, tmp) => df.repartition(1)
-          .write.mode("overwrite").parquet(tmp),
-        leaseTtlMs = leaseTtlMs, leaseTimeoutMs = leaseTimeoutMs,
-        epochEligible = e => e <= wm || activated.contains(e))
-      kept
-    }
-  }
+      leaseTimeoutMs: Long = MaintenanceLease.DefaultAcquireTimeoutMs): Long =
+    family(root).compact(spark, shards, leaseTtlMs, leaseTimeoutMs)
 }

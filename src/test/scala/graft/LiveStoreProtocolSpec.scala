@@ -30,15 +30,6 @@ import graft.streaming.{IndexSink, LiveNearDedup, LiveSpanDedup, LiveTextIndex}
   */
 class LiveStoreProtocolSpec extends SparkSpec {
 
-  private def deleteDir(path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
-  }
-  private def dirExists(path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-  }
-
   test("LiveSpanDedup: replaying an epoch whose marker already landed " +
       "rewrites identical state (retraction reads strictly-earlier epochs)") {
     import spark.implicits._

@@ -59,6 +59,19 @@ trait SparkSpec extends AnyFunSuite {
     } finally spark.listenerManager.unregister(listener)
   }
 
+  /** Crash-point stand-ins for the store protocol specs: delete a
+    * store dir the way a crash between two writes leaves it missing,
+    * and probe whether a dir survived.
+    */
+  protected def deleteDir(path: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+  }
+  protected def dirExists(path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
+  }
+
   /** Naive sequential-fold cosine reference (zero-norm pairs pin to
     * -1.0, matching Similarity.cosSafe) — shared by the semDedup specs
     * so the sentinel/fold semantics can't silently diverge between
