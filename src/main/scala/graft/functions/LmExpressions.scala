@@ -27,8 +27,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * unbounded-vocabulary model here is the oracle-replayable stand-in,
   * so the DataFrame join spelling remains the general-vocabulary scale
   * path — [[graft.operators.NgramLm.localize]] size-gates the collect
-  * (`spark.graft.lm.localize.maxRows`) and callers fall back to the
-  * join spelling above the gate. LmLocalSpec pins both kernels against
+  * (`graft.operators.DriverLocal`) and callers fall back to the join
+  * spelling above the gate. LmLocalSpec pins both kernels against
   * their exchange spellings on the real corpus (emitted ROUNDED
   * scores — the oracle-parity contract: raw doubles differ only in
   * per-doc float-sum order, the same equivalence class the

@@ -54,19 +54,22 @@ object Bpe {
     */
   def train(spark: SparkSession, toks: DataFrame, k: Int): DataFrame = {
     import spark.implicits._
-    trainMerges(spark, toks, k).toDF()
+    trainMerges(toks, k).toDF()
       .select("round", "lhs", "rhs", "pair_count", "corpus_symbols")
       .orderBy("round")
   }
 
-  /** Dictionaries at or below this many distinct words train
-    * DRIVER-SIDE (collect the word-frequency dict, replay merges
-    * locally). At ~50 bytes/row that is ≲100 MB of driver state — the
-    * dictionary is vocabulary-sized by construction (Heaps-bounded),
-    * so most corpora fit; web-crawl vocabularies with unbounded
-    * garbage tokens exceed it and take the distributed path.
+  /** The learned rules as a driver-side list (each merge is one row of
+    * driver state by construction — the argmax `limit(1)` — so the
+    * whole result is O(k), session-independent, and safe to memoize
+    * across registry keys the way the ANN models are).
     *
-    * Why the fallback exists: the distributed round loop is
+    * Dictionaries within the driver-local bound ([[DriverLocal]])
+    * train DRIVER-SIDE: collect the word-frequency dict, replay merges
+    * locally. The dictionary is vocabulary-sized by construction
+    * (Heaps-bounded), so most corpora fit; web-crawl vocabularies with
+    * unbounded garbage tokens exceed it and take the distributed path.
+    * Why the local path exists: the distributed round loop is
     * driver-SEQUENTIAL — ~3 Spark jobs per round (argmax collect,
     * eager localCheckpoint, symbol-total agg). At the gate's k = 6
     * that is noise; at a real vocabulary run (k ≈ 30–50k merges,
@@ -77,18 +80,7 @@ object Bpe {
     * same closed-form state; BpeSpec proves both paths emit identical
     * merge tables.
     */
-  val LocalTrainBudgetWords: Long = 2000000L
-
-  /** The learned rules as a driver-side list (each merge is one row of
-    * driver state by construction — the argmax `limit(1)` — so the
-    * whole result is O(k), session-independent, and safe to memoize
-    * across registry keys the way the ANN models are).
-    *
-    * `localBudgetWords` gates the driver-side fast path (see
-    * [[LocalTrainBudgetWords]]); pass 0 to force the distributed loop.
-    */
-  def trainMerges(spark: SparkSession, toks: DataFrame, k: Int,
-      localBudgetWords: Long = LocalTrainBudgetWords): Seq[Merge] = {
+  def trainMerges(toks: DataFrame, k: Int): Seq[Merge] = {
     require(k >= 1, s"k must be >= 1, got $k")
     // The one corpus-sized pass: word-frequency dict, cached for the
     // vocabulary-sized work that follows (the local path reads it
@@ -97,7 +89,7 @@ object Bpe {
       .groupBy("w").agg(count(lit(1)).as("f"))
       .cache()
     try {
-      if (wf.count() <= localBudgetWords)
+      if (DriverLocal.fits(wf.count()))
         trainLocal(wf.collect().map(r => (r.getString(0), r.getLong(1))), k)
       else trainDistributed(wf, k)
     } finally wf.unpersist()
@@ -174,10 +166,11 @@ object Bpe {
     merges.toSeq
   }
 
-  /** The distributed round loop (dictionaries above the local budget):
+  /** The distributed round loop over the word-frequency dict `wf`
+    * (w, f), for dictionaries above the driver-local bound:
     * ~3 Spark jobs per round, each vocabulary-sized.
     */
-  private def trainDistributed(wf: DataFrame, k: Int): Seq[Merge] = {
+  private[graft] def trainDistributed(wf: DataFrame, k: Int): Seq[Merge] = {
     var seqs = wf.select(
       regexp_replace(col("w"), "(.)", "⟨$1⟩").as("seq"), col("f"))
     val merges = ArrayBuffer.empty[Merge]

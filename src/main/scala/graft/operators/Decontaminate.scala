@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Benchmark decontamination at corpus scale — the operator form of
@@ -54,7 +54,7 @@ object Decontaminate {
     * @return (doc_id) — distinct corpus docs sharing >= 1 gram with the
     *         benchmark; equals the plain join's result exactly
     */
-  def contaminatedIds(spark: SparkSession, corpusGrams: DataFrame,
+  def contaminatedIds(corpusGrams: DataFrame,
       benchGrams: DataFrame, fpp: Double = 0.01): DataFrame = {
     // The deduped benchmark subtree feeds THREE consumers: the count
     // sizing the filter, the fold building it, and the caller's
@@ -88,7 +88,7 @@ object Decontaminate {
     * the unfiltered digest join (DecontaminateSpec asserts both
     * equalities).
     */
-  def contaminatedIdsH64(spark: SparkSession, corpusGrams: DataFrame,
+  def contaminatedIdsH64(corpusGrams: DataFrame,
       benchGrams: DataFrame, fpp: Double = 0.01): DataFrame = {
     val bench = benchGrams.select(col("gh")).distinct().localCheckpoint()
     val n = bench.count()

@@ -13,8 +13,9 @@ import org.apache.spark.sql.functions._
   * near-dup pair graph: each node repeatedly adopts the smallest label
   * among itself and its neighbors until fixpoint. Duplicate clusters are
   * short-diameter (near-copies of one source), so this converges in a
-  * handful of iterations; each iteration is one join + one aggregate —
-  * no driver-side graph ever materializes.
+  * handful of iterations; each iteration is one join + one aggregate.
+  * A pair graph within the driver-local bound ([[DriverLocal]])
+  * resolves on the driver instead, with the identical result.
   */
 object Dedup {
 
@@ -57,30 +58,22 @@ object Dedup {
     */
   def components(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
     val base = pairs.select(col("id1"), col("id2")).localCheckpoint()
-    // Size-gated local path (the r15 localize discipline, LM-kernel
-    // precedent): the near-dup pair graph is orders of magnitude below
-    // corpus scale by construction (it exists to be resolved and joined
-    // back), and the distributed fixpoint pays ~3 jobs of fixed
-    // overhead PER ITERATION on it. Under
-    // `spark.graft.components.localizeMaxEdges` (default 2M — a bounded
-    // driver footprint) a driver union-find with min representatives
-    // produces the identical (id, min-label) table in one pass; above
-    // the gate, and for non-long id types, the iterative min-label
-    // propagation below remains the scale path. DedupSpec pins local ==
-    // loop on fixture graphs and across the gate.
-    val longIds = base.schema.fields.forall(
-      _.dataType == org.apache.spark.sql.types.LongType)
-    val maxLocal = pairs.sparkSession.conf
-      .get("spark.graft.components.localizeMaxEdges", "2000000").toLong
-    if (longIds && base.count() <= maxLocal) componentsLocal(base) match {
-      // None = a null id surfaced (ADVICE r15): the distributed join
-      // spelling gives null-endpoint edges asymmetric semantics (a null
-      // node RECEIVES a label row but never matches as a join key), so
-      // the local path declines rather than approximate it — the
-      // fixpoint below is the definitionally-agreeing path.
-      case Some(local) => return local
-      case None => ()
+    // Driver-local twin (DriverLocal): the near-dup pair graph is
+    // orders of magnitude below corpus scale by construction (it
+    // exists to be resolved and joined back), and the fixpoint below
+    // pays ~3 jobs of fixed overhead PER ITERATION on it. A driver
+    // union-find with min representatives produces the identical
+    // (id, min-label) table in one pass; above the bound, and for
+    // non-long or null ids, the min-label propagation is the scale
+    // path. DedupSpec pins local == loop on fixture graphs.
+    DriverLocal.longPairs(base) match {
+      case Some(edges) => componentsLocal(base.sparkSession, edges)
+      case None => componentsLoop(base, maxIters)
     }
+  }
+
+  /** [[components]]' distributed min-label propagation over (id1, id2). */
+  private[graft] def componentsLoop(base: DataFrame, maxIters: Int): DataFrame = {
     val nodes = base.select(col("id1").as("id"))
       .unionByName(base.select(col("id2").as("id"))).distinct()
     val edges = base
@@ -130,16 +123,15 @@ object Dedup {
     } finally edges.unpersist()
   }
 
-  /** [[components]] under the localize gate: collect the (long, long)
-    * pair list and union-find with MIN-id representatives + path
-    * compression — each node's root IS the smallest id in its connected
-    * component, exactly the distributed fixpoint's answer. One driver
-    * pass over the edges, one local-relation result (consumers join or
-    * aggregate it; every registry output re-sorts totally, so row order
-    * is immaterial).
+  /** [[components]]' driver-local twin: union-find over the collected
+    * pair list with MIN-id representatives + path compression — each
+    * node's root IS the smallest id in its connected component, exactly
+    * the distributed fixpoint's answer. One driver pass over the edges,
+    * one local-relation result (consumers join or aggregate it; every
+    * registry output re-sorts totally, so row order is immaterial).
     */
-  private def componentsLocal(base: DataFrame): Option[DataFrame] = {
-    val spark = base.sparkSession
+  private[graft] def componentsLocal(spark: SparkSession,
+      edges: Array[(Long, Long)]): DataFrame = {
     val parent = new java.util.HashMap[java.lang.Long, java.lang.Long]()
     def find(x0: java.lang.Long): java.lang.Long = {
       var r = x0
@@ -148,14 +140,9 @@ object Dedup {
       while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
       r
     }
-    val rowsIn = base.collect()
-    // Null ids decline the local path (see the gate's note): the
-    // distributed spelling's null semantics are join-key semantics,
-    // not graph semantics, and only the fixpoint itself replays them.
-    if (rowsIn.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
-    rowsIn.foreach { row =>
-      val a = java.lang.Long.valueOf(row.getLong(0))
-      val b = java.lang.Long.valueOf(row.getLong(1))
+    edges.foreach { case (a0, b0) =>
+      val a = java.lang.Long.valueOf(a0)
+      val b = java.lang.Long.valueOf(b0)
       if (parent.get(a) == null) parent.put(a, a)
       if (parent.get(b) == null) parent.put(b, b)
       val ra = find(a)
@@ -167,17 +154,8 @@ object Dedup {
       }
     }
     import scala.jdk.CollectionConverters._
-    val rows = parent.keySet().asScala.toSeq.map(id =>
-      org.apache.spark.sql.Row(id.longValue(), find(id).longValue()))
-    Some(spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toList,
-        math.max(1, math.min(spark.sparkContext.defaultParallelism,
-          1 + rows.size / 50000))),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("component",
-          org.apache.spark.sql.types.LongType, nullable = false)))))
+    DriverLocal.longFrame(spark, parent.keySet().asScala.toSeq.map(id =>
+      org.apache.spark.sql.Row(id.longValue(), find(id).longValue())), "id", "component")
   }
 
   /** SEMANTIC dedup over an embedding corpus (the SemDeDup recipe,
@@ -266,7 +244,7 @@ object Dedup {
     * cluster with estimated similarity >= `minEstSim`; unique docs
     * survive untouched. Returns the deduplicated corpus.
     */
-  def nearDedup(spark: SparkSession, df: DataFrame, idCol: String,
+  def nearDedup(df: DataFrame, idCol: String,
       textCol: String, minEstSim: Double): DataFrame = {
     // components() eagerly materializes the pair plan (localCheckpoint),
     // so the LSH signature cache behind it can be released right after —

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Importance-weighted data selection — the DSIR recipe (Xie et al.,
@@ -88,7 +88,7 @@ object Dsir {
     * materialization each scoring pass re-tokenizes the corpus three
     * times and the target sample twice (the q66 double-compute class).
     */
-  def train(spark: SparkSession, rawFeats: DataFrame,
+  def train(rawFeats: DataFrame,
       targetFeats: DataFrame, buckets: Int): Model = {
     val t = targetFeats.groupBy("bucket").agg(count(lit(1)).as("ct"))
       .localCheckpoint(true)
@@ -111,7 +111,7 @@ object Dsir {
     * (smoothed to 1/(nt+B)): rare-in-target features PENALIZE, which
     * is the ratio doing its job.
     */
-  def logWeights(spark: SparkSession, feats: DataFrame, model: Model): DataFrame = {
+  def logWeights(feats: DataFrame, model: Model): DataFrame = {
     val b = lit(model.buckets.toDouble)
     feats
       .join(broadcast(model.targetCounts), Seq("bucket"), "left")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Graph centrality over the near-duplicate pair graph — PageRank (Page
@@ -48,29 +48,23 @@ object Graph {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(scale >= 1000000L, s"scale must be >= 1e6 rank units, got $scale")
     val base = pairs.select(col("id1"), col("id2")).localCheckpoint()
-    // Size-gated local path (the r15 localize discipline; the
-    // Dedup.components precedent): the pair graph is far below corpus
-    // scale by construction, and the distributed loop pays fixed job
-    // overhead per iteration. The integer-rank design makes the local
-    // replay BIT-EXACT by construction (scaled longs, order-free sums,
-    // the same div chain), so under
-    // `spark.graft.graph.localizeMaxEdges` (default 2M) one driver pass
-    // produces the identical table; above the gate, and for non-long
-    // ids, the Pregel-shaped loop below remains the scale path.
-    // GraphSpec pins local == loop across the gate.
-    val longIds = base.schema.fields.forall(
-      _.dataType == org.apache.spark.sql.types.LongType)
-    val maxLocal = pairs.sparkSession.conf
-      .get("spark.graft.graph.localizeMaxEdges", "2000000").toLong
-    if (longIds && base.count() <= maxLocal) pageRankLocal(base, iters, scale) match {
-      // None = a null id surfaced (ADVICE r15): the distributed
-      // spelling gives null endpoints join-key semantics (a null node
-      // receives mass but never sends, and drops from the final deg
-      // join) — the local replay declines rather than mimic that, and
-      // the loop below is the definitionally-agreeing path.
-      case Some(local) => return local
-      case None => ()
+    // Driver-local twin (DriverLocal; the Dedup.components precedent):
+    // the pair graph is far below corpus scale by construction, and
+    // the distributed loop pays fixed job overhead per iteration. The
+    // integer-rank design makes the local replay BIT-EXACT by
+    // construction (scaled longs, order-free sums, the same div
+    // chain); above the bound, and for non-long or null ids, the
+    // Pregel-shaped loop is the scale path. GraphSpec pins
+    // local == loop.
+    DriverLocal.longPairs(base) match {
+      case Some(pairList) => pageRankLocal(base.sparkSession, pairList, iters, scale)
+      case None => pageRankLoop(base, iters, scale)
     }
+  }
+
+  /** [[pageRank]]'s distributed loop over (id1, id2). */
+  private[graft] def pageRankLoop(base: DataFrame, iters: Int,
+      scale: Long): DataFrame = {
     val edges = base
       .unionByName(base.select(col("id2").as("id1"), col("id1").as("id2")))
       .select(col("id1").as("src"), col("id2").as("dst"))
@@ -94,22 +88,16 @@ object Graph {
     rank.join(deg, "id")
   }
 
-  /** [[pageRank]] under the localize gate: the same scaled-integer
+  /** [[pageRank]]'s driver-local twin: the same scaled-integer
     * iteration over driver-side adjacency — `((r·17) div 20) div deg`
     * per directed edge, long sums (order-free), `+ baseRank` — so
     * every iterate is bit-identical to the distributed loop's. Output
     * (id, r, deg), the join's column order.
     */
-  private def pageRankLocal(base: DataFrame, iters: Int,
-      scale: Long): Option[DataFrame] = {
-    val spark = base.sparkSession
+  private[graft] def pageRankLocal(spark: SparkSession, pairList: Array[(Long, Long)],
+      iters: Int, scale: Long): DataFrame = {
     val edges = scala.collection.mutable.LinkedHashSet.empty[(Long, Long)]
-    val rowsIn = base.collect()
-    // Null ids decline the local path (see the gate's note).
-    if (rowsIn.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
-    rowsIn.foreach { row =>
-      val a = row.getLong(0)
-      val b = row.getLong(1)
+    pairList.foreach { case (a, b) =>
       edges += ((a, b))
       edges += ((b, a))
     }
@@ -129,18 +117,7 @@ object Graph {
       next.keySet.toArray.foreach(id => next(id) = next(id) + baseRank)
       rank = next
     }
-    val rows = rank.keys.toSeq.sorted.map(id =>
-      org.apache.spark.sql.Row(id, rank(id), deg(id)))
-    Some(spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toList,
-        math.max(1, math.min(spark.sparkContext.defaultParallelism,
-          1 + rows.size / 50000))),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("r",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("deg",
-          org.apache.spark.sql.types.LongType, nullable = false)))))
+    DriverLocal.longFrame(spark, rank.keys.toSeq.sorted.map(id =>
+      org.apache.spark.sql.Row(id, rank(id), deg(id))), "id", "r", "deg")
   }
 }

@@ -113,7 +113,7 @@ object Ivf {
     * hazard [[nearest]]'s sentinel comment names). The streaming
     * [[withCell]] keeps the documented null-pass-through instead.
     */
-  def index(spark: SparkSession, embeddings: DataFrame, model: Model): DataFrame = {
+  def index(embeddings: DataFrame, model: Model): DataFrame = {
     val enc = graft.functions.AnnFunctions.ivf_cell(col("embedding"), model.centroids)
     embeddings.select(col("vec_id"), col("embedding"),
       when(enc.isNotNull, enc).otherwise(raise_error(lit(
@@ -141,7 +141,7 @@ object Ivf {
     * Null embeddings get a null cell: absent from every probe's
     * equi-join, present in the table.
     */
-  def withCell(spark: SparkSession, df: DataFrame, model: Model,
+  def withCell(df: DataFrame, model: Model,
       embCol: String = "embedding"): DataFrame =
     df.withColumn("cell",
       graft.functions.AnnFunctions.ivf_cell(col(embCol), model.centroids))

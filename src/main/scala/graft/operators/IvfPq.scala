@@ -84,7 +84,7 @@ object IvfPq {
     * vec_id — a corpus-wide shuffle for data this pass derives
     * row-locally.
     */
-  def encode(spark: SparkSession, embeddings: DataFrame, model: Model): DataFrame = {
+  def encode(embeddings: DataFrame, model: Model): DataFrame = {
     val enc = graft.functions.AnnFunctions.ivfpq_encode(col("embedding"),
       model.coarse.centroids, model.pq.subModels.map(_.centroids),
       model.pq.subDim)
@@ -106,7 +106,7 @@ object IvfPq {
     * nearest), so epoch-appended codes are bit-identical to a batch
     * rebuild's. Null embeddings get null cell/codes.
     */
-  def withCellCodes(spark: SparkSession, df: DataFrame, model: Model,
+  def withCellCodes(df: DataFrame, model: Model,
       embCol: String = "embedding"): DataFrame = {
     // Codegen'd one-expression encode (graft.functions.IvfPqEncodeExpr,
     // the DotProductF pattern): no per-row Catalyst→Scala conversion on

@@ -147,7 +147,7 @@ object Maintenance {
   }
 
   /** A16: register a sharded table in the session catalog. */
-  def createIndex(spark: SparkSession, name: String,
+  def createIndex(name: String,
       source: org.apache.spark.sql.DataFrame, shards: Int): Unit =
     source.repartition(shards).write.mode("overwrite").saveAsTable(name)
 

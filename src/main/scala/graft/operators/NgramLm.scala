@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Statistical n-gram language-model scoring for corpus curation — the
@@ -60,7 +60,7 @@ object NgramLm {
     * consumer re-runs the corpus tokenize-explode-aggregate lineage.
     * The vocab count then reads O(V) materialized blocks.
     */
-  def train(spark: SparkSession, toks: DataFrame): Model = {
+  def train(toks: DataFrame): Model = {
     val uni = toks.select(explode(col("toks")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("c1"))
       .localCheckpoint(true)
@@ -79,7 +79,7 @@ object NgramLm {
     * left-join coalesce; scoring the training corpus itself makes both
     * joins effectively inner.
     */
-  def score(spark: SparkSession, toks: DataFrame, model: Model): DataFrame = {
+  def score(toks: DataFrame, model: Model): DataFrame = {
     // Per-doc bigram term frequency first: the count-table joins then
     // touch one row per DISTINCT (doc, bigram), not one per position.
     val tf = toks.filter(size(col("toks")) >= 2)
@@ -101,38 +101,31 @@ object NgramLm {
     * by the compiled scan-side scorer
     * ([[graft.functions.LmFunctions.lmScoreBigram]] — zero exchanges;
     * see LmExpressions.scala for the fusion argument), size-gated:
-    * None when the count tables exceed
-    * `spark.graft.lm.localize.maxRows` (default 2M rows — a bounded
-    * driver/broadcast footprint; above it callers stay on the
-    * key-partitioned join spelling, the general-vocabulary scale
-    * path). The gate reads O(1) counts off the localCheckpointed
-    * tables; the collect is the SAME driver materialization a
-    * broadcast-join plan would ship per scoring pass, done once and
-    * memoized beside the model. At 100 TB this is the production
-    * CCNet shape: the quality LM is a fixed-size pretrained artifact
-    * broadcast once; an unbounded corpus-trained vocabulary falls
-    * back to the joins.
+    * None when the count tables exceed the driver-local bound
+    * ([[DriverLocal]]; above it callers stay on the key-partitioned
+    * join spelling, the general-vocabulary scale path). The gate
+    * reads O(1) counts off the localCheckpointed tables; the collect
+    * is the SAME driver materialization a broadcast-join plan would
+    * ship per scoring pass, done once and memoized beside the model.
+    * At 100 TB this is the production CCNet shape: the quality LM is
+    * a fixed-size pretrained artifact broadcast once; an unbounded
+    * corpus-trained vocabulary falls back to the joins.
     */
-  def localize(spark: SparkSession, model: Model):
-      Option[graft.functions.LmScoreKernel.LocalBigramModel] = {
-    val maxRows = spark.conf.get("spark.graft.lm.localize.maxRows", "2000000").toLong
-    val rows = model.vocab + model.bigrams.count()
-    if (rows > maxRows) None
+  def localize(model: Model): Option[graft.functions.LmScoreKernel.LocalBigramModel] =
+    if (!DriverLocal.fits(model.vocab + model.bigrams.count())) None
     else Some(graft.functions.LmScoreKernel.LocalBigramModel(
       collectUnigrams(model.unigrams, "w", "c1"),
       collectBigrams(model.bigrams), model.vocab))
-  }
 
   /** [[localize]]'s backoff sibling for
     * [[graft.functions.LmFunctions.lmScoreBackoff]]; same gate over
     * uni + bi + tri rows.
     */
-  def localizeBackoff(spark: SparkSession, model: BackoffModel):
+  def localizeBackoff(model: BackoffModel):
       Option[graft.functions.LmScoreKernel.LocalBackoffModel] = {
     import org.apache.spark.unsafe.types.UTF8String
-    val maxRows = spark.conf.get("spark.graft.lm.localize.maxRows", "2000000").toLong
-    val rows = model.vocab + model.bigrams.count() + model.trigrams.count()
-    if (rows > maxRows) return None
+    if (!DriverLocal.fits(model.vocab + model.bigrams.count() + model.trigrams.count()))
+      return None
     val tri = new java.util.HashMap[UTF8String,
       java.util.HashMap[UTF8String, java.util.HashMap[UTF8String, java.lang.Long]]]()
     model.trigrams.select(col("w1"), col("w2"), col("w3"), col("c3")).collect()
@@ -208,7 +201,7 @@ object NgramLm {
     * hash-aggs, each localCheckpointed eagerly (the [[train]]
     * pattern: every table is consumed by several score joins).
     */
-  def trainBackoff(spark: SparkSession, toks: DataFrame): BackoffModel = {
+  def trainBackoff(toks: DataFrame): BackoffModel = {
     val uni = toks.select(explode(col("toks")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("c1"))
       .localCheckpoint(true)
@@ -246,7 +239,7 @@ object NgramLm {
     * one reduce per doc. Callers round the emitted nll
     * ([[graft.queries.Par.r2]], the q79 contract).
     */
-  def scoreBackoff(spark: SparkSession, toks: DataFrame,
+  def scoreBackoff(toks: DataFrame,
       model: BackoffModel): DataFrame = {
     val tf = toks.filter(size(col("toks")) >= 3)
       .select(col("doc_id"), explode(trigramExpr).as("t"))
@@ -295,7 +288,7 @@ object NgramLm {
     * source. Per-source totals and the corpus scalars ride along as
     * broadcast-joined aggregates.
     */
-  def sourceDivergence(spark: SparkSession, docs: DataFrame): DataFrame = {
+  def sourceDivergence(docs: DataFrame): DataFrame = {
     val toksrc = docs.select(col("source"), explode(col("toks")).as("w"))
     // ONE corpus pass: the (source, w) counts are the finest grain, and
     // both marginals are exact integer sums over them — c(w) = Σ_s

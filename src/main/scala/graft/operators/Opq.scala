@@ -67,7 +67,7 @@ object Opq {
     * leaving tail dimensions unmixed would corrupt the PQ slices
     * downstream.
     */
-  def rotate(spark: SparkSession, embeddings: DataFrame,
+  def rotate(embeddings: DataFrame,
       rot: Rotation): DataFrame =
     // Codegen'd kernel (graft.functions.HouseholderRotateExpr) — this
     // narrow pass runs over the WHOLE corpus every time a rotated
@@ -113,7 +113,7 @@ object Opq {
     * by dimension index). One corpus-sized posexplode + two-phase
     * hash-agg; the collected statistics are `dim` rows of driver data.
     */
-  def allocate(spark: SparkSession, embeddings: DataFrame, dim: Int,
+  def allocate(embeddings: DataFrame, dim: Int,
       nSub: Int, round: Int = 4): Allocation = {
     require(dim > 0 && nSub > 0 && dim % nSub == 0,
       s"allocate: dim $dim must split into nSub $nSub even subspaces")
@@ -150,7 +150,7 @@ object Opq {
     * permutation of a shorter vector has no meaning); nulls pass
     * through null like [[rotate]].
     */
-  def permute(spark: SparkSession, embeddings: DataFrame,
+  def permute(embeddings: DataFrame,
       alloc: Allocation): DataFrame =
     embeddings.select(col("vec_id"),
       graft.functions.RotateFunctions.opq_permute(col("embedding"), alloc.perm)
@@ -177,7 +177,7 @@ object Opq {
   /** Apply a dense rotation: one narrow O(d²) map per vector (still no
     * shuffle, no state; R broadcasts). Float32 output like [[rotate]].
     */
-  def rotateDense(spark: SparkSession, embeddings: DataFrame,
+  def rotateDense(embeddings: DataFrame,
       rot: DenseRotation): DataFrame =
     embeddings.select(col("vec_id"),
       graft.functions.RotateFunctions.opq_rotate_dense(col("embedding"), rot.m)
@@ -227,7 +227,7 @@ object Opq {
       var model: Pq.Model = null
       val errs = Array.newBuilder[Double]
       (0 until opqIters).foreach { _ =>
-        val rotated = rotateDense(spark, vecs.toDF("vec_id", "embedding"),
+        val rotated = rotateDense(vecs.toDF("vec_id", "embedding"),
           DenseRotation(r))
         model = Pq.train(spark, rotated, nSub, subDim, k, pqIters, meanRound)
         val bcR = spark.sparkContext.broadcast(r)
@@ -282,7 +282,7 @@ object Opq {
       // the final rotated space so rotation and model agree.
       val finalRot = DenseRotation(r)
       model = Pq.train(spark,
-        rotateDense(spark, vecs.toDF("vec_id", "embedding"), finalRot),
+        rotateDense(vecs.toDF("vec_id", "embedding"), finalRot),
         nSub, subDim, k, pqIters, meanRound)
       Learned(finalRot, model, errs.result())
     } finally vecs.unpersist(blocking = false)

@@ -82,7 +82,7 @@ object Pq {
     * kernel, because a stray short vector would otherwise encode
     * against truncated slices and score as a cosine of nothing.
     */
-  def encode(spark: SparkSession, embeddings: DataFrame, model: Model): DataFrame = {
+  def encode(embeddings: DataFrame, model: Model): DataFrame = {
     val enc = graft.functions.AnnFunctions.pq_codes(col("embedding"),
       model.subModels.map(_.centroids), model.subDim)
     // Loud on null embeddings/elements, like the typed map this

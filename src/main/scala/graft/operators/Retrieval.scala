@@ -52,7 +52,7 @@ object Retrieval {
     * doubles; only the final per-doc sum is order-sensitive (callers
     * round the emitted score, q35 precedent).
     */
-  def bm25(spark: SparkSession, toks: DataFrame, terms: Seq[String],
+  def bm25(toks: DataFrame, terms: Seq[String],
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "bm25 needs at least one query term")
     val stats = toks
@@ -100,7 +100,7 @@ object Retrieval {
     * the matching buckets — the scan-pruned analogue of reading a
     * postings list, with no server to keep alive.
     */
-  def buildTextIndex(spark: SparkSession, toks: DataFrame): TextIndex = {
+  def buildTextIndex(toks: DataFrame): TextIndex = {
     // Materialize the tokenized input ONCE: the stats agg and the
     // postings groupBy are separate eager jobs, and callers always
     // pass a computed projection (a regex tokenize of the corpus) —
@@ -135,7 +135,7 @@ object Retrieval {
     * the per-query cost is proportional to the result's postings, the
     * property that makes a search endpoint cheap to hit repeatedly.
     */
-  def bm25FromIndex(spark: SparkSession, index: TextIndex, terms: Seq[String],
+  def bm25FromIndex(index: TextIndex, terms: Seq[String],
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "bm25 needs at least one query term")
     index.postings.filter(col("term").isin(terms: _*))

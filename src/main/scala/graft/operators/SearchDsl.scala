@@ -434,14 +434,13 @@ object SearchDsl {
       index: Option[Retrieval.TextIndex] = None): SearchResponse = {
     require(req.must.nonEmpty, "a search request needs at least one must term")
     require(req.size > 0, s"size must be positive, got ${req.size}")
-    val spark = toks.sparkSession
     // Round-half-up-to-2-decimals in explicit IEEE ops (graft.queries.Par
     // spells out why this beats round(x, 2) for engine parity): the
     // cursor contract needs scores a CLIENT holds to compare exactly.
     def r2(c: Column): Column = floor(c * 100 + lit(0.5)) / 100
     var hits = index match {
-      case Some(ix) => Retrieval.bm25FromIndex(spark, ix, req.must)
-      case None => Retrieval.bm25(spark, toks, req.must)
+      case Some(ix) => Retrieval.bm25FromIndex(ix, req.must)
+      case None => Retrieval.bm25(toks, req.must)
     }
     if (req.matchAll) hits = hits.filter(col("n_terms") === req.must.distinct.size)
     if (req.phrase.nonEmpty)
@@ -549,14 +548,13 @@ object SearchDsl {
     * with two fields the combiner add is order-exact, at three-plus
     * callers emit through an r2 guard (the q125 float note).
     */
-  def multiMatch(spark: org.apache.spark.sql.SparkSession,
-      fields: Seq[(DataFrame, Double)], terms: Seq[String],
+  def multiMatch(fields: Seq[(DataFrame, Double)], terms: Seq[String],
       matchType: String = "best_fields",
       tieBreaker: Double = 0.0): DataFrame = {
     require(fields.nonEmpty, "multi_match needs at least one field")
     require(terms.nonEmpty, "multi_match needs at least one term")
     val clauses = fields.map { case (toks, boost) =>
-      Retrieval.bm25(spark, toks, terms)
+      Retrieval.bm25(toks, terms)
         .select(col("doc_id"), (col("score") * lit(boost)).as("score"))
     }
     combineFieldClauses(clauses, matchType, tieBreaker)
@@ -573,14 +571,14 @@ object SearchDsl {
     * a search endpoint can serve this repeatedly against stores the
     * delivery sink maintains incrementally.
     */
-  def multiMatchFromIndexes(spark: org.apache.spark.sql.SparkSession,
-      fields: Seq[(Retrieval.TextIndex, Double)], terms: Seq[String],
+  def multiMatchFromIndexes(fields: Seq[(Retrieval.TextIndex, Double)],
+      terms: Seq[String],
       matchType: String = "best_fields",
       tieBreaker: Double = 0.0): DataFrame = {
     require(fields.nonEmpty, "multi_match needs at least one field")
     require(terms.nonEmpty, "multi_match needs at least one term")
     val clauses = fields.map { case (index, boost) =>
-      Retrieval.bm25FromIndex(spark, index, terms)
+      Retrieval.bm25FromIndex(index, terms)
         .select(col("doc_id"), (col("score") * lit(boost)).as("score"))
     }
     combineFieldClauses(clauses, matchType, tieBreaker)
@@ -846,7 +844,7 @@ object SearchDsl {
     * tokenized docs ([[Retrieval.buildTextIndex]]).
     */
   def mltTerms(toks: DataFrame, probeId: Any, maxQueryTerms: Int): Seq[String] =
-    mltTerms(Retrieval.buildTextIndex(toks.sparkSession, toks), probeId, maxQueryTerms)
+    mltTerms(Retrieval.buildTextIndex(toks), probeId, maxQueryTerms)
 
   /** `highlight`: for every document containing `term`, the snippet
     * around its FIRST occurrence — (doc_id, pos, snippet) with `pos`

@@ -281,7 +281,7 @@ object Similarity {
     *                 [[hyperplaneLsh]] (the eager width probe only ever
     *                 runs over this small frame)
     */
-  def lshSearch(spark: org.apache.spark.sql.SparkSession, bucketed: DataFrame,
+  def lshSearch(bucketed: DataFrame,
       probes: DataFrame, nPlanes: Int, k: Int, dim: Int = 0): DataFrame = {
     require(k > 0, s"top-k must be positive, got $k")
     val corpus = bucketed.select(col("vec_id"), col("embedding"), col("bucket"))
@@ -315,13 +315,12 @@ object Similarity {
     * pairs BEFORE scoring (a pair found by 3 tables scores once); the
     * scoring join is candidate-bounded, never corpus-sized.
     */
-  def lshSearchMulti(spark: org.apache.spark.sql.SparkSession,
-      embeddings: DataFrame, probes: DataFrame, nPlanes: Int, tables: Int,
-      k: Int, dim: Int = 0): DataFrame = {
+  def lshSearchMulti(embeddings: DataFrame, probes: DataFrame, nPlanes: Int,
+      tables: Int, k: Int, dim: Int = 0): DataFrame = {
     val width = if (dim > 0) dim
       else Option(embeddings.agg(max(size(col("embedding")))).head().get(0))
         .map(_.asInstanceOf[Int]).getOrElse(0)
-    lshSearchMultiBucketed(spark,
+    lshSearchMultiBucketed(
       multiBuckets(embeddings.select(col("vec_id"), col("embedding")),
         nPlanes, tables, width),
       probes, nPlanes, tables, k, width)
@@ -353,9 +352,8 @@ object Similarity {
     * here with the same plane family; `dim` must match the corpus's
     * bucketing width when vectors are ragged.
     */
-  def lshSearchMultiBucketed(spark: org.apache.spark.sql.SparkSession,
-      bucketed: DataFrame, probes: DataFrame, nPlanes: Int, tables: Int,
-      k: Int, dim: Int = 0): DataFrame = {
+  def lshSearchMultiBucketed(bucketed: DataFrame, probes: DataFrame,
+      nPlanes: Int, tables: Int, k: Int, dim: Int = 0): DataFrame = {
     require(tables > 0, s"tables must be positive, got $tables")
     require(k > 0, s"top-k must be positive, got $k")
     val corpus = bucketed.select(col("vec_id"), col("embedding"), col("buckets"))

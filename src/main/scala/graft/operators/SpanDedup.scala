@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * marks recovers exactly the maximal duplicated runs (paper §4.1's
   * windowed variant).
   *
-  * Scale shape (big regime — inputs past [[SaltThresholdConf]]): the
+  * Scale shape (big regime — inputs past [[SaltThresholdBytes]]): the
   * occurrence table (8-byte hashed keys — never gram text — on every
   * shuffle) materializes once, the corpus-wide gram count is a
   * two-phase hash aggregate, marking is a SALTED join back (no single
@@ -40,48 +40,30 @@ import org.apache.spark.sql.functions._
   */
 object SpanDedup {
 
-  /** Regime switch for the skew-proof machinery (conf key, bytes).
-    * Inputs whose Catalyst size estimate is BELOW the threshold take the
-    * small-regime plan — single scan, plain gh exchange, no checkpoint,
-    * no salt replication; at or above it, the salted two-phase form
-    * runs. Rationale: the salt fan-out and the occurrence checkpoint
-    * exist to stop a mega-gram (one k-gram in millions of documents)
-    * from funnelling a corpus-scale partition through one task — but
-    * below ~[[DefaultSaltThresholdBytes]] of input even the worst case
-    * (every token one gram) is a single bounded fold, and the salted
-    * form's extra exchange + 16× key replication + eager checkpoint
-    * job triple the cost of the common case (the r9→r10 lesson: the
-    * always-salted rewrite cost 3–8× at small scale). `0` forces the
-    * salted regime everywhere (tests, known-skewed inputs);
-    * `Long.MaxValue` forces the small regime.
+  /** Regime switch for the skew-proof machinery, in bytes. Inputs
+    * whose Catalyst size estimate is BELOW it take the small-regime
+    * plan — single scan, plain gh exchange, no checkpoint, no salt
+    * replication; at or above it, the salted two-phase form runs.
+    * Rationale: the salt fan-out and the occurrence checkpoint exist to
+    * stop a mega-gram (one k-gram in millions of documents) from
+    * funnelling a corpus-scale partition through one task — but below
+    * 256 MB of input even the worst case (every token one gram) costs
+    * one reducer a fold over ≤256 MB of 20-byte occurrence keys —
+    * seconds, not a scale-killer — while the salted form's extra
+    * exchange + 16× key replication + eager checkpoint job triple the
+    * cost of the common case (the r9→r10 lesson: the always-salted
+    * rewrite cost 3–8× at small scale). Real corpora past it start
+    * meeting boilerplate grams hot enough to own a partition.
     */
-  private[graft] val SaltThresholdConf = "spark.graft.spanDedup.saltThresholdBytes"
-
-  /** 256 MB: a worst-case all-one-gram corpus below this bound costs one
-    * reducer a fold over ≤256 MB of 20-byte occurrence keys — seconds,
-    * not a scale-killer — while real corpora past it start meeting
-    * boilerplate grams hot enough to own a partition.
-    */
-  private[graft] val DefaultSaltThresholdBytes: Long = 256L << 20
+  private[graft] val SaltThresholdBytes: Long = 256L << 20
 
   /** True when `df`'s optimizer size estimate crosses the salt
-    * threshold. Checkpointed/materialized frames (LogicalRDD) have no
-    * file-backed estimate and default to the session's huge
-    * defaultSizeInBytes — conservatively salted, which is correct: the
-    * big regime is the only one that checkpoints.
+    * threshold. Decided once per call from the operator's input: the
+    * big regime's own occurrence checkpoint is not re-estimated, so
+    * its mark join is salted with it.
     */
-  private[graft] def saltRegime(df: DataFrame): Boolean = {
-    val thr = df.sparkSession.conf
-      .getOption(SaltThresholdConf).map { s =>
-        try s.toLong
-        catch { case _: NumberFormatException =>
-          throw new IllegalArgumentException(
-            s"$SaltThresholdConf must be a long byte count, got '$s'")
-        }
-      }
-      .getOrElse(DefaultSaltThresholdBytes)
-    df.queryExecution.optimizedPlan.stats.sizeInBytes >= BigInt(thr)
-  }
+  private[graft] def saltRegime(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes >= BigInt(SaltThresholdBytes)
 
   /** One row per k-gram occurrence of (doc_id, toks): (doc_id, pos,
     * gh) with pos the 0-based token index of the gram's first token
@@ -122,14 +104,19 @@ object SpanDedup {
     * executor loss becomes a re-read, at the price of one remote
     * write/read cycle.
     */
-  def duplicatedSpans(toks: DataFrame, k: Int): DataFrame = {
+  def duplicatedSpans(toks: DataFrame, k: Int): DataFrame =
+    duplicatedSpans(toks, k, saltRegime(toks))
+
+  /** [[duplicatedSpans]] in the regime the caller names. */
+  private[graft] def duplicatedSpans(toks: DataFrame, k: Int,
+      salted: Boolean): DataFrame = {
     // SMALL REGIME (input below the salt threshold): the one-scan,
     // one-gh-exchange window count. A window partition cannot be split,
     // but below the threshold even a gram owning EVERY occurrence is a
     // bounded single-task fold — and this plan skips the eager
     // checkpoint job, the second exchange, and the 16× key replication
     // the skew-proof form pays.
-    if (!saltRegime(toks)) {
+    if (!salted) {
       val marked = gramOccurrences(toks, k)
         .withColumn("cnt", count(lit(1)).over(Window.partitionBy("gh")))
         .filter(col("cnt") > 1)
@@ -181,29 +168,22 @@ object SpanDedup {
       else grams.localCheckpoint()
     val dup = occ.groupBy("gh").agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") > 1).select("gh")
-    markAndMerge(occ, dup, k)
+    markAndMerge(occ, dup, k, salted = true)
   }
 
   /** Shared mark-and-merge tail: join of gram occurrences against the
     * duplicated-gram keys (see [[duplicatedSpans]] step 3), then the
     * one-exchange interval merge. The join is SALTED only in the big
-    * regime ([[saltRegime]] of the occurrence side): a plain equi-join
-    * below the threshold lets AQE broadcast a benchmark-sized key set
-    * over one scan with zero replication, while past it a corpus-hot
-    * gram's occurrences spread over [[MarkSaltFactor]] reducers instead
-    * of hashing into one sort-merge partition. Identical output either
-    * way. Package-visible so the cross-epoch streaming form
-    * ([[graft.streaming.LiveSpanDedup]]) shares the exact marking
-    * semantics with the batch operators.
-    */
-  private[graft] def markAndMerge(occ: DataFrame, dupKeys: DataFrame,
-      k: Int): DataFrame = markAndMerge(occ, dupKeys, k, saltRegime(occ))
-
-  /** [[markAndMerge]] with the regime decided by the CALLER — for
-    * occurrence frames whose own Catalyst estimate is useless (the
-    * live store's currency JOIN estimates as the product of its
-    * children, so tiny stores would read as huge and always pay the
-    * salt; the caller decides from the underlying store scan instead).
+    * regime, which the caller decides ([[saltRegime]] of its input): a
+    * plain equi-join below the threshold lets AQE broadcast a
+    * benchmark-sized key set over one scan with zero replication, while
+    * past it a corpus-hot gram's occurrences spread over
+    * [[MarkSaltFactor]] reducers instead of hashing into one sort-merge
+    * partition. Identical output either way. Package-visible so the
+    * cross-epoch streaming form ([[graft.streaming.LiveSpanDedup]])
+    * shares the exact marking semantics with the batch operators; its
+    * currency JOIN estimates as the product of its children, so it
+    * decides from the underlying store scan instead.
     */
   private[graft] def markAndMerge(occ: DataFrame, dupKeys: DataFrame,
       k: Int, salted: Boolean): DataFrame = {
@@ -238,7 +218,8 @@ object SpanDedup {
     // threshold a plain equi-join AQE-broadcasts the benchmark-sized
     // gram set; past it, a corpus-hot gram matching a ref gram would
     // pile into one sort-merge partition, so the salted form takes over.
-    markAndMerge(gramOccurrences(toks, k), refGrams, k)
+    val occ = gramOccurrences(toks, k)
+    markAndMerge(occ, refGrams, k, saltRegime(occ))
   }
 
   /** Classic streaming interval merge as two windows over ONE doc_id

@@ -183,10 +183,10 @@ object Relational {
       explode(array(expr("unix_timestamp(ts) div 300"),
         expr("unix_timestamp(ts) div 300 + 1"))).as("jb"))
     val e2 = ev.select(
-      col("user_id"), col("ts").as("ts2"), col("event_id").as("id2"),
+      col("user_id").as("u2"), col("ts").as("ts2"), col("event_id").as("id2"),
       expr("unix_timestamp(ts) div 300").as("b2"))
     e1.join(e2,
-        e1("user_id") === e2("user_id") && col("jb") === col("b2") &&
+        col("user_id") === col("u2") && col("jb") === col("b2") &&
           col("ts2") > col("ts1") &&
           col("ts2") <= col("ts1") + expr("INTERVAL 5 MINUTES"))
       .select("id1", "id2")

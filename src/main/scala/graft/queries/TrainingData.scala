@@ -33,7 +33,7 @@ object TrainingData {
     * localCheckpoint materializes values and drops the scan lineage.
     * The cold build cost stays visible in the bench's queries_first.
     */
-  private def tokenized(s: SparkSession, dir: String): DataFrame =
+  private[graft] def tokenized(s: SparkSession, dir: String): DataFrame =
     artifact(s, dir, "tokenized") {
       tokenizedDf(t(s, dir, "documents")).localCheckpoint(true)
     }
@@ -116,7 +116,7 @@ object TrainingData {
     */
   private def textIndexFor(s: SparkSession, dir: String): graft.operators.Retrieval.TextIndex =
     artifact(s, dir, "textindex|tokens") {
-      graft.operators.Retrieval.buildTextIndex(s, tokenized(s, dir))
+      graft.operators.Retrieval.buildTextIndex(tokenized(s, dir))
     }
 
   /** The passage-level index (q90's 32/24 chunk grid as the retrieval
@@ -128,7 +128,7 @@ object TrainingData {
     */
   private def chunkIndexFor(s: SparkSession, dir: String): graft.operators.Retrieval.TextIndex =
     artifact(s, dir, "chunkindex|tokens|s32x24") {
-      graft.operators.Retrieval.buildTextIndex(s,
+      graft.operators.Retrieval.buildTextIndex(
         graft.operators.Chunker.chunkTokens(tokenized(s, dir), size = 32, stride = 24)
           .select(concat_ws(":", col("doc_id"), col("chunk_id")).as("doc_id"),
             col("ctoks").as("toks")))
@@ -142,7 +142,7 @@ object TrainingData {
     */
   private def titleIndexFor(s: SparkSession, dir: String): graft.operators.Retrieval.TextIndex =
     artifact(s, dir, "textindex-title8|tokens") {
-      graft.operators.Retrieval.buildTextIndex(s,
+      graft.operators.Retrieval.buildTextIndex(
         tokenized(s, dir).select(col("doc_id"),
           slice(col("toks"), 1, 8).as("toks")))
     }
@@ -938,7 +938,7 @@ object TrainingData {
       .join(docs.filter(col("source") === "src0").select("doc_id"), "doc_id")
       .select("gh")
     val contaminated =
-      graft.operators.Decontaminate.contaminatedIdsH64(s, g8, benchGrams)
+      graft.operators.Decontaminate.contaminatedIdsH64(g8, benchGrams)
     docs.filter(col("source") =!= "src0")
       .join(contaminated, Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("source"))
@@ -1020,7 +1020,7 @@ object TrainingData {
     */
   private def lshTop5(s: SparkSession, dir: String): DataFrame = {
     val emb = vectors(s, dir)
-    graft.operators.Similarity.lshSearch(s,
+    graft.operators.Similarity.lshSearch(
       graft.operators.Similarity.hyperplaneLsh(emb, 8), emb.filter(col("vec_id") < 5),
       nPlanes = 8, k = 5)
   }
@@ -1228,7 +1228,7 @@ object TrainingData {
   private def ivfTop5(s: SparkSession, dir: String): DataFrame = {
     val emb = vectors(s, dir)
     val model = ivfModel(s, dir)
-    val indexed = graft.operators.Ivf.index(s, emb, model)
+    val indexed = graft.operators.Ivf.index(emb, model)
     graft.operators.Ivf.search(s, indexed, model, emb.filter(col("vec_id") < 5),
       k = 5, nprobe = 2)
   }
@@ -1344,7 +1344,7 @@ object TrainingData {
     // sequential double fold (dot_f), so the threshold comparison is
     // engine-exact; the output carries only integer columns — no float
     // rendering in the hash at all.
-    val indexed = graft.operators.Ivf.index(s, vectors(s, dir), ivfModel(s, dir))
+    val indexed = graft.operators.Ivf.index(vectors(s, dir), ivfModel(s, dir))
     graft.operators.Dedup.semDedup(indexed, minCos = 0.4)
       .orderBy("vec_id")
   }
@@ -1406,7 +1406,7 @@ object TrainingData {
     val model = artifact(s, dir, s"pq|$space|sub=4x16|k=4|it=2|r=4")(
       graft.operators.Pq.train(s, vecs, nSub = 4, subDim = 16, k = 4, iters = 2,
         meanRound = 4))
-    val encoded = graft.operators.Pq.encode(s, vecs, model)
+    val encoded = graft.operators.Pq.encode(vecs, model)
     graft.operators.Pq.search(s, encoded, model, vecs.filter(col("vec_id") < 5), k = 5)
   }
 
@@ -1506,7 +1506,7 @@ object TrainingData {
     val model = artifact(s, dir, "ivfpq|c=4x2|sub=4x16|k=4|it=2|r=4")(
       graft.operators.IvfPq.train(s, emb, kCoarse = 4, coarseIters = 2, nSub = 4,
         subDim = 16, kSub = 4, pqIters = 2, meanRound = 4))
-    val encoded = graft.operators.IvfPq.encode(s, emb, model)
+    val encoded = graft.operators.IvfPq.encode(emb, model)
     graft.operators.IvfPq.search(s, encoded, model, emb.filter(col("vec_id") < 5),
       k = 5, nprobe = 2)
   }
@@ -1600,7 +1600,7 @@ object TrainingData {
     * rungs quantize.
     */
   private def rotated(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Opq.rotate(s, vectors(s, dir), graft.operators.Opq.rotation(64))
+    graft.operators.Opq.rotate(vectors(s, dir), graft.operators.Opq.rotation(64))
 
   /** q78's search over the rotated corpus, shared with q98. */
   private def pqRotatedTop5(s: SparkSession, dir: String): DataFrame =
@@ -1661,10 +1661,10 @@ object TrainingData {
     */
   private def lmScored(s: SparkSession, dir: String): DataFrame = {
     val toks = tokenized(s, dir)
-    val model = artifact(s, dir, "ngramlm")(graft.operators.NgramLm.train(s, toks))
-    artifact(s, dir, "ngramlm-local")(graft.operators.NgramLm.localize(s, model))
+    val model = artifact(s, dir, "ngramlm")(graft.operators.NgramLm.train(toks))
+    artifact(s, dir, "ngramlm-local")(graft.operators.NgramLm.localize(model))
       .map(m => graft.operators.NgramLm.scoreLocal(toks, m))
-      .getOrElse(graft.operators.NgramLm.score(s, toks, model))
+      .getOrElse(graft.operators.NgramLm.score(toks, model))
   }
 
   val q79_lm_score: QueryDef = q(
@@ -1715,7 +1715,7 @@ object TrainingData {
     // r4 because KL between near-identical mixtures lives below 0.01.
     val docs = t(s, dir, "documents")
       .select(col("source"), tokens(col("text")).as("toks"))
-    graft.operators.NgramLm.sourceDivergence(s, docs)
+    graft.operators.NgramLm.sourceDivergence(docs)
       .select(col("source"), Par.r4(col("kl")).as("kl"))
       .orderBy("source")
   }
@@ -2025,8 +2025,8 @@ object TrainingData {
   private def opqTop5(s: SparkSession, dir: String): DataFrame = {
     val mixed = rotated(s, dir)
     val alloc = artifact(s, dir, "opqalloc|hh64|d=64|sub=4")(
-      graft.operators.Opq.allocate(s, mixed, dim = 64, nSub = 4))
-    pqTop5(s, dir, "hh64+alloc", graft.operators.Opq.permute(s, mixed, alloc))
+      graft.operators.Opq.allocate(mixed, dim = 64, nSub = 4))
+    pqTop5(s, dir, "hh64+alloc", graft.operators.Opq.permute(mixed, alloc))
   }
 
   val q99_opq_learned: QueryDef = q(
@@ -2110,8 +2110,8 @@ object TrainingData {
     // Model-memo like q79's LM: the ≤1024-row count tables are the
     // train-once artifact; queries_first keeps the cold path visible.
     val model = artifact(s, dir, "dsir|b=1024")(
-      graft.operators.Dsir.train(s, feats, targetFeats, buckets = 1024))
-    graft.operators.Dsir.logWeights(s, feats, model)
+      graft.operators.Dsir.train(feats, targetFeats, buckets = 1024))
+    graft.operators.Dsir.logWeights(feats, model)
       .select(col("doc_id"), col("n_feat").cast("bigint").as("n_feat"),
         Par.r2(col("logw")).as("logw"))
       .orderBy("doc_id")
@@ -2173,7 +2173,7 @@ object TrainingData {
     // (per-doc sum order is engine-internal) with the rank window over
     // just the 10 survivors. Scale shape: one corpus shuffle (the tf
     // agg, document length riding along), stats and df broadcast.
-    val scored = graft.operators.Retrieval.bm25FromIndex(s, textIndexFor(s, dir), bm25Terms)
+    val scored = graft.operators.Retrieval.bm25FromIndex(textIndexFor(s, dir), bm25Terms)
     rankedTopByScore(scored, 10, Seq("doc_id"))
       .select(col("doc_id"), Par.r2(col("score")).as("score"),
         col("rnk").cast("bigint").as("rank"))
@@ -2224,7 +2224,7 @@ object TrainingData {
     // touches corpus-sized data; the probes broadcast against one
     // corpus scan on the vector side and the tf agg is the only
     // corpus shuffle on the text side.
-    val scored = graft.operators.Retrieval.bm25FromIndex(s, textIndexFor(s, dir), bm25Terms)
+    val scored = graft.operators.Retrieval.bm25FromIndex(textIndexFor(s, dir), bm25Terms)
     val brank = rankedTopByScore(scored, 20, Seq("doc_id"))
       .select(col("doc_id"), col("rnk"))
     val nrm = normed(s, dir)
@@ -2389,7 +2389,7 @@ object TrainingData {
     val embT = t(s, dir, "embeddings")
     val emb = embT.select(col("vec_id"), col("embedding"))
     val model = ivfModel(s, dir)
-    val indexed = graft.operators.Ivf.index(s, emb, model)
+    val indexed = graft.operators.Ivf.index(emb, model)
     val filtered = indexed
       .join(embT.filter(col("label") < 3).select("vec_id"), "vec_id")
     val probes = emb.filter(col("vec_id") < 5)
@@ -2557,7 +2557,7 @@ object TrainingData {
     // to the corpus pass (RetrievalSpec), per-chunk sum-order absorbed
     // by the emitted rounding.
     val scored = graft.operators.Retrieval
-      .bm25FromIndex(s, chunkIndexFor(s, dir), bm25Terms)
+      .bm25FromIndex(chunkIndexFor(s, dir), bm25Terms)
     val parts = split(col("doc_id"), ":")
     val unpacked = scored.select(
       parts.getItem(0).cast("long").as("doc_id"),
@@ -2588,7 +2588,7 @@ object TrainingData {
     // — the OpenSearch-analogue a query-heavy workload needs, with the
     // index as a reusable artifact instead of a server.
     val index = textIndexFor(s, dir)
-    val scored = graft.operators.Retrieval.bm25FromIndex(s, index, bm25Terms)
+    val scored = graft.operators.Retrieval.bm25FromIndex(index, bm25Terms)
     rankedTopByScore(scored, 10, Seq("doc_id"))
       .select(col("doc_id"), Par.r2(col("score")).as("score"),
         col("rnk").cast("bigint").as("rank"))
@@ -2716,7 +2716,7 @@ object TrainingData {
     // must_not check evaluates on the already-tokenized array —
     // no extra corpus pass, no new exchange beyond the doc-key join.
     val toksDf = tokenized(s, dir)
-    val scored = graft.operators.Retrieval.bm25FromIndex(s, textIndexFor(s, dir), Seq("data", "spark"))
+    val scored = graft.operators.Retrieval.bm25FromIndex(textIndexFor(s, dir), Seq("data", "spark"))
       .filter(col("n_terms") === 2)
     val meta = t(s, dir, "documents")
       .filter(col("lang") === "en" && col("n_chars").between(100, 400))
@@ -2769,7 +2769,7 @@ object TrainingData {
     // terms' postings, never a corpus re-scan.
     val idx = textIndexFor(s, dir)
     val terms = graft.operators.SearchDsl.mltTerms(idx, probeId = 0L, maxQueryTerms = 3)
-    val scored = graft.operators.Retrieval.bm25FromIndex(s, idx, terms)
+    val scored = graft.operators.Retrieval.bm25FromIndex(idx, terms)
       .filter(col("doc_id") =!= 0L)
     rankedTopByScore(scored, 10, Seq("doc_id"))
       .select(col("doc_id"), Par.r2(col("score")).as("score"),
@@ -2897,7 +2897,7 @@ object TrainingData {
     // bm25's one shuffle bounds the hits, the doc-keyed metadata join
     // is the standard hydration join, and the facet groupBy partially
     // aggregates before its |sources|-group exchange.
-    val hits = graft.operators.Retrieval.bm25FromIndex(s, textIndexFor(s, dir), bm25Terms)
+    val hits = graft.operators.Retrieval.bm25FromIndex(textIndexFor(s, dir), bm25Terms)
       .select(col("doc_id"))
     graft.operators.SearchDsl.termsFacet(hits, t(s, dir, "documents"), "source",
         Seq(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"),
@@ -2926,7 +2926,7 @@ object TrainingData {
     // predicate filters scan-side and limit(k) is
     // TakeOrderedAndProject — per-partition top-k + a k-row driver
     // merge; no OFFSET materialization, page cost flat in depth.
-    val scored = graft.operators.Retrieval.bm25FromIndex(s, textIndexFor(s, dir), bm25Terms)
+    val scored = graft.operators.Retrieval.bm25FromIndex(textIndexFor(s, dir), bm25Terms)
       .select(col("doc_id"), Par.r2(col("score")).as("score"))
     val page1 = scored.orderBy(col("score").desc, col("doc_id")).limit(10).collect()
     page1.lastOption match {
@@ -3140,7 +3140,7 @@ object TrainingData {
     */
   private def lshMultiTop5(s: SparkSession, dir: String): DataFrame = {
     val emb = vectors(s, dir)
-    graft.operators.Similarity.lshSearchMulti(s, emb, emb.filter(col("vec_id") < 5),
+    graft.operators.Similarity.lshSearchMulti(emb, emb.filter(col("vec_id") < 5),
       nPlanes = 4, tables = 4, k = 5, dim = embDim(s, dir))
   }
 
@@ -3254,7 +3254,7 @@ object TrainingData {
     // oracle's per-(doc, term) rows ARE the two clauses' scores. One
     // union + one per-doc agg — no outer join however many clauses.
     val clause = (term: String) =>
-      graft.operators.Retrieval.bm25FromIndex(s, textIndexFor(s, dir), Seq(term))
+      graft.operators.Retrieval.bm25FromIndex(textIndexFor(s, dir), Seq(term))
         .select(col("doc_id"), col("score"))
     val dm = graft.operators.SearchDsl
       .disMax(Seq(clause("data"), clause("spark")), tieBreaker = 0.3)
@@ -3715,7 +3715,7 @@ object TrainingData {
     val model = ivfModel(s, dir)
     val planted = emb.filter(col("vec_id") < 5)
       .select((col("vec_id") + 100000L).as("vec_id"), col("embedding"))
-    val indexed = graft.operators.Ivf.index(s, emb.unionByName(planted), model)
+    val indexed = graft.operators.Ivf.index(emb.unionByName(planted), model)
     val probes = emb.filter(col("vec_id") < 5)
     graft.operators.HardNegatives
       .mine(s, indexed, model, probes, kRetrieve = 15, dupCos = 0.95,
@@ -4080,7 +4080,7 @@ object TrainingData {
   /** Memoized 6-rule BPE model per (session, dir) — a driver-side
     * O(k) list. */
   private def bpeMerges(s: SparkSession, dir: String): Seq[graft.operators.Bpe.Merge] =
-    artifact(s, dir, "bpe|k=6")(graft.operators.Bpe.trainMerges(s, tokenized(s, dir), k = 6))
+    artifact(s, dir, "bpe|k=6")(graft.operators.Bpe.trainMerges(tokenized(s, dir), k = 6))
 
   /** The q146 oracle's per-word encode: bracketize then the 6 learned
     * replaces in training order, rule literals joined in from the
@@ -4755,16 +4755,16 @@ object TrainingData {
     val toks = t(s, dir, "documents")
       .select(col("doc_id"), tokens(col("text")).as("toks"))
     val model = artifact(s, dir, "backofflm")(
-      graft.operators.NgramLm.trainBackoff(s,
+      graft.operators.NgramLm.trainBackoff(
         toks.filter(pmod(col("doc_id"), lit(2L)) === 0)))
     // Size-gated compiled scorer (the q79/NB-kernel shape): all five
     // count-table joins plus the per-doc reduce were doc_id-keyed, so
     // under the gate scoring is one scan-side pass; above it the
     // key-partitioned join spelling runs unchanged.
     val local = artifact(s, dir, "backofflm-local")(
-      graft.operators.NgramLm.localizeBackoff(s, model))
+      graft.operators.NgramLm.localizeBackoff(model))
     local.map(m => graft.operators.NgramLm.scoreBackoffLocal(toks, m))
-      .getOrElse(graft.operators.NgramLm.scoreBackoff(s, toks, model))
+      .getOrElse(graft.operators.NgramLm.scoreBackoff(toks, model))
       .select(col("doc_id"),
         col("n_trigrams").cast("bigint").as("n_trigrams"),
         Par.r2(col("nll")).as("nll"))
@@ -5049,7 +5049,7 @@ object TrainingData {
     // embeddings scan as an IN predicate (the feature-store id lookup
     // — row-group pruning, no corpus-shaped join); the cosine
     // evaluates above that filter, priced at 20 rows.
-    val scored = graft.operators.Retrieval.bm25FromIndex(s, textIndexFor(s, dir), bm25Terms)
+    val scored = graft.operators.Retrieval.bm25FromIndex(textIndexFor(s, dir), bm25Terms)
       .select(col("doc_id"), Par.r2(col("score")).as("score"))
     val emb = t(s, dir, "embeddings")
     val probe = emb.filter(col("vec_id") === 0).select(col("embedding").as("pe"))
@@ -5096,7 +5096,7 @@ object TrainingData {
     // collapse field is the one shuffle beside bm25's tf agg. Scale
     // shape: output is |sources| rows; nothing after the join exceeds
     // the aggregate's partial-merge width.
-    val hits = graft.operators.Retrieval.bm25FromIndex(s, textIndexFor(s, dir), bm25Terms)
+    val hits = graft.operators.Retrieval.bm25FromIndex(textIndexFor(s, dir), bm25Terms)
       .select(col("doc_id"), Par.r2(col("score")).as("score"))
     val docs = t(s, dir, "documents")
     graft.operators.SearchDsl.collapseTop(hits, docs, "source", col("score"))
@@ -5171,7 +5171,7 @@ object TrainingData {
     // broadcast, then ONE mergeable min(struct(dist, vec_id))
     // hash-agg — k output rows, no window over the corpus.
     val model = ivfModel(s, dir)
-    val indexed = graft.operators.Ivf.index(s, vectors(s, dir), model)
+    val indexed = graft.operators.Ivf.index(vectors(s, dir), model)
     graft.operators.Ivf.prototypes(s, indexed, model)
       .select(col("cell").cast("int").as("cell"), col("vec_id"),
         Par.r4(col("sqdist")).as("sqdist"))
@@ -5463,7 +5463,7 @@ object TrainingData {
     // cross-engine ln agreement), r2/r4 emission-only. Shape: the
     // hydration join every page pays + a narrow projection; page cut
     // is TakeOrderedAndProject.
-    val hits = graft.operators.Retrieval.bm25FromIndex(s, textIndexFor(s, dir), bm25Terms)
+    val hits = graft.operators.Retrieval.bm25FromIndex(textIndexFor(s, dir), bm25Terms)
       .select(col("doc_id"), Par.r2(col("score")).as("score"))
     val docs = t(s, dir, "documents")
       .select(col("doc_id"), log(lit(1.0) + col("n_chars").cast("double")).as("f"))
@@ -5610,7 +5610,7 @@ object TrainingData {
         when(array_contains(col("toks"), "spark"), 1).otherwise(0) +
         when(array_contains(col("toks"), "query"), 1).otherwise(0)).as("rel"))
     val top = rankedTopByScore(
-      graft.operators.Retrieval.bm25FromIndex(s, textIndexFor(s, dir), bm25Terms), 10, Seq("doc_id"))
+      graft.operators.Retrieval.bm25FromIndex(textIndexFor(s, dir), bm25Terms), 10, Seq("doc_id"))
     graft.operators.RankEval.rankEval(top, relDf, k = 10, relThreshold = 2)
       .select(col("k"), col("hits"), col("total_relevant"),
         Par.r4(col("dcg")).as("dcg"), Par.r4(col("idcg")).as("idcg"),
@@ -5938,7 +5938,7 @@ object TrainingData {
     // CoveringQuery scores the same way), top-10 by rounded score.
     // Scale shape: exactly q85's — one corpus shuffle, stats/df
     // broadcast, TakeOrderedAndProject page cut.
-    val scored = graft.operators.Retrieval.bm25FromIndex(s, textIndexFor(s, dir), bm25Terms)
+    val scored = graft.operators.Retrieval.bm25FromIndex(textIndexFor(s, dir), bm25Terms)
       .filter(col("n_terms") >= 2)
     rankedTopByScore(scored, 10, Seq("doc_id"))
       .select(col("doc_id"), col("n_terms").cast("long").as("n_terms"),
@@ -5982,7 +5982,7 @@ object TrainingData {
     // inertia sums are ORDER-FREE long sums (the q175 integer-sum
     // rule). One broadcast + one k-row mergeable agg.
     val model = ivfModel(s, dir)
-    val indexed = graft.operators.Ivf.index(s, vectors(s, dir), model)
+    val indexed = graft.operators.Ivf.index(vectors(s, dir), model)
     graft.operators.Ivf.cellQuality(s, indexed, model)
       .select(col("cell").cast("int").as("cell"), col("n"),
         col("sum_qdist"), col("max_qdist"),
@@ -6130,7 +6130,7 @@ object TrainingData {
     // oracle replays both per-field chains verbatim. Scale shape: two
     // postings-bounded scoring aggs + one per-doc combine agg — the
     // title projection is scan-side slice(), never a second corpus.
-    val mm = graft.operators.SearchDsl.multiMatchFromIndexes(s,
+    val mm = graft.operators.SearchDsl.multiMatchFromIndexes(
         Seq((textIndexFor(s, dir), 1.0), (titleIndexFor(s, dir), 2.0)),
         Seq("data", "spark"),
         matchType = "best_fields", tieBreaker = 0.3)
@@ -6166,7 +6166,7 @@ object TrainingData {
     // one IEEE multiply, so the rounded emission composes exactly.
     val idx = textIndexFor(s, dir)
     val positive = graft.operators.Retrieval
-      .bm25FromIndex(s, idx, Seq("data", "spark"))
+      .bm25FromIndex(idx, Seq("data", "spark"))
       .select(col("doc_id"), col("score"))
     // The negative id set from the index: postings are unique per
     // (term, doc), so this IS `array_contains(toks, 'model')` resolved
@@ -6203,7 +6203,7 @@ object TrainingData {
     // (the artifact a suggester service loads — vocab-sized, never
     // postings, never corpus text), prefix filter scan-side, cut by
     // TakeOrderedAndProject.
-    val index = graft.operators.Retrieval.buildTextIndex(s, tokenized(s, dir))
+    val index = graft.operators.Retrieval.buildTextIndex(tokenized(s, dir))
     val top = graft.operators.SearchDsl
       .completionSuggest(index.df, prefix = "s", size = 10)
       .withColumn("rnk", row_number().over(

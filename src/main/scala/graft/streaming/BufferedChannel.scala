@@ -65,8 +65,11 @@ final class BufferedChannel(root: String, maxBytes: Long, maxAgeMillis: Long,
   private val provisional = scala.collection.mutable.Set.empty[Long]
   // Highest epoch id already promoted to a delivery object; replays of
   // flushed epochs are skipped (they were delivered — re-staging them
-  // would double-deliver on the next flush).
-  @volatile private var flushedEpochWatermark: Long = readWatermark()
+  // would double-deliver on the next flush). Everything unreadable
+  // degrades to "no watermark": at-least-once instead of an
+  // unconstructible channel.
+  @volatile private var flushedEpochWatermark: Long =
+    BufferedChannel.readWatermarkFile(fs, watermarkFile)(None)
 
   fs.mkdirs(staging)
   // Resume the object counter past any objects a previous incarnation
@@ -269,7 +272,7 @@ final class BufferedChannel(root: String, maxBytes: Long, maxAgeMillis: Long,
       val wmEligible = epochs.filterNot(provisionalAtFlush)
       if (wmEligible.nonEmpty && wmEligible.max > flushedEpochWatermark) {
         flushedEpochWatermark = wmEligible.max
-        writeWatermark(wmEligible.max)
+        BufferedChannel.writeWatermarkFile(fs, watermarkFile, wmEligible.max)
       }
     }
   }
@@ -312,44 +315,6 @@ final class BufferedChannel(root: String, maxBytes: Long, maxAgeMillis: Long,
     listStatus(p).filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
 
   private def listDirs(p: Path) = listStatus(p).filter(_.isDirectory)
-
-  private def watermarkTmp = new Path(rootPath, "_flushed_watermark.tmp")
-
-  /** Reads max(main, valid tmp): the swap in [[writeWatermark]] is
-    * delete-old + rename-tmp (HDFS rename won't overwrite), so a crash
-    * between the two leaves ONLY the tmp — ignoring it would drop the
-    * watermark entirely and re-open duplicate delivery for every epoch
-    * it covered. The tmp is trusted only when terminator-complete
-    * (crash mid-tmp-write leaves "12" of "123\n", which parses to a
-    * WRONG value — the newline proves the write finished); max() keeps
-    * monotonicity when a stale tmp from an older crash coexists with a
-    * newer main. Everything unreadable degrades to "no watermark" —
-    * at-least-once instead of an unconstructible channel.
-    */
-  private def readWatermark(): Long = {
-    def parse(p: Path, requireTerminator: Boolean): Option[Long] =
-      BufferedChannel.readFullyUtf8(fs, p).flatMap { s =>
-        if (requireTerminator && !s.endsWith("\n")) None
-        else scala.util.Try(s.trim.toLong).toOption // torn write → None
-      }
-    (parse(watermarkFile, requireTerminator = false).toSeq ++
-      parse(watermarkTmp, requireTerminator = true).toSeq)
-      .foldLeft(-1L)(math.max)
-  }
-
-  /** Temp-file (newline-terminated) + delete-old + rename: the main file
-    * is only ever rename-complete, and the crash window between delete
-    * and rename is covered by [[readWatermark]]'s tmp fallback.
-    */
-  private def writeWatermark(wm: Long): Unit = {
-    val out = fs.create(watermarkTmp, true)
-    try out.write(s"$wm\n".getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    if (fs.exists(watermarkFile)) fs.delete(watermarkFile, false)
-    if (!fs.rename(watermarkTmp, watermarkFile))
-      throw new java.io.IOException(
-        s"watermark persist failed: rename $watermarkTmp -> $watermarkFile")
-  }
 }
 
 object BufferedChannel {
@@ -374,6 +339,47 @@ object BufferedChannel {
       t.setDaemon(true)
       t
     })
+  }
+
+  private def tmpOf(p: Path) = new Path(p.getParent, p.getName + ".tmp")
+
+  /** Crash-safe replace of the one-number state file `p` (this
+    * channel's flush watermark, [[EpochStore]]'s replay fence): write
+    * the value newline-terminated to a sibling tmp, delete `p`, rename
+    * the tmp into place. `p` is only ever rename-complete, and the
+    * crash window between delete and rename is covered by
+    * [[readWatermarkFile]]'s tmp fallback.
+    */
+  private[streaming] def writeWatermarkFile(fs: FileSystem, p: Path, wm: Long): Unit = {
+    val tmp = tmpOf(p)
+    val out = fs.create(tmp, true)
+    try out.write(s"$wm\n".getBytes(StandardCharsets.UTF_8))
+    finally out.close()
+    if (fs.exists(p)) fs.delete(p, false)
+    if (!fs.rename(tmp, p))
+      throw new java.io.IOException(s"watermark persist failed: rename $tmp -> $p")
+  }
+
+  /** Reads max(main, valid tmp) of a [[writeWatermarkFile]] file, -1
+    * when neither holds a value: the swap is delete-old + rename-tmp
+    * (HDFS rename won't overwrite), so a crash between the two leaves
+    * ONLY the tmp — ignoring it would drop the watermark entirely. The
+    * tmp is trusted only when terminator-complete (crash mid-tmp-write
+    * leaves "12" of "123\n", which parses to a WRONG value — the
+    * newline proves the write finished); max() keeps monotonicity when
+    * a stale tmp from an older crash coexists with a newer main.
+    * `unreadableMain` is what a missing or unparsable main counts as.
+    */
+  private[streaming] def readWatermarkFile(fs: FileSystem, p: Path)(
+      unreadableMain: => Option[Long]): Long = {
+    def parse(f: Path, requireTerminator: Boolean): Option[Long] =
+      readFullyUtf8(fs, f).flatMap { s =>
+        if (requireTerminator && !s.endsWith("\n")) None
+        else scala.util.Try(s.trim.toLong).toOption // torn write → None
+      }
+    (parse(p, requireTerminator = false).orElse(unreadableMain).toSeq ++
+      parse(tmpOf(p), requireTerminator = true).toSeq)
+      .foldLeft(-1L)(math.max)
   }
 
   /** Whole-file UTF-8 read that degrades to None on ANY failure —

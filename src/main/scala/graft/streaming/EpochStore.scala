@@ -62,14 +62,11 @@ object EpochStore {
   private val maintenanceLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  /** Target rows per snapshot output partition for [[writeKeyedSnapshot]]
-    * (conf key + default). 8M short key rows ≈ 100–200 MB of parquet —
-    * comfortable task-size at write AND read. Overridable per session so
-    * tests can pin a tiny value and observe the partition count grow.
+  /** Target rows per snapshot output partition for [[writeKeyedSnapshot]].
+    * 8M short key rows ≈ 100–200 MB of parquet — comfortable task-size
+    * at write AND read.
     */
-  private[streaming] val SnapshotRowsPerPartConf =
-    "spark.graft.store.snapshotRowsPerPartition"
-  private[streaming] val DefaultSnapshotRowsPerPartition: Long = 8L * 1000 * 1000
+  private[graft] val SnapshotRowsPerPartition: Long = 8L * 1000 * 1000
 
   /** Snapshot writer for stores whose resolved size is O(keys) — e.g. a
     * doc-version store with one row per live document. A fixed
@@ -79,19 +76,17 @@ object EpochStore {
     * small stores. Instead: hash-partition by `key` with a count derived
     * from the ACTUAL resolved row count (one cached count — the frame is
     * about to be written anyway, so the cache is not wasted work),
-    * targeting [[SnapshotRowsPerPartConf]] rows per file. Hash-keyed so
-    * a later per-key lookup can prune files once sorted within
-    * partitions by the same key.
+    * targeting `rowsPerPart` rows per file. Hash-keyed so a later
+    * per-key lookup can prune files once sorted within partitions by
+    * the same key.
     */
-  def writeKeyedSnapshot(df: DataFrame, tmp: String, key: String): Unit = {
+  private[graft] def writeKeyedSnapshot(df: DataFrame, tmp: String, key: String,
+      rowsPerPart: Long = SnapshotRowsPerPartition): Unit = {
     import org.apache.spark.sql.functions.col
-    val rowsPer = df.sparkSession.conf.getOption(SnapshotRowsPerPartConf)
-      .map(_.toLong).getOrElse(DefaultSnapshotRowsPerPartition)
-    require(rowsPer > 0, s"$SnapshotRowsPerPartConf must be positive, got $rowsPer")
     val cached = df.persist()
     try {
       val n = cached.count()
-      val parts = math.max(1L, (n + rowsPer - 1) / rowsPer)
+      val parts = math.max(1L, (n + rowsPerPart - 1) / rowsPerPart)
         .min(1L << 20).toInt
       cached.repartition(parts, col(key)).sortWithinPartitions(key)
         .write.mode("overwrite").parquet(tmp)
@@ -194,24 +189,24 @@ object EpochStore {
   def readWatermark(spark: SparkSession, root: String): Long = {
     val (fs, _) = fsOf(spark, root)
     val p = watermarkPath(root)
-    if (!fs.exists(p)) -1L
-    else BufferedChannel.readFullyUtf8(fs, p)
-      .flatMap(s => scala.util.Try(s.trim.toLong).toOption)
-      .getOrElse(throw new java.io.IOException(
+    BufferedChannel.readWatermarkFile(fs, p) {
+      if (fs.exists(p)) throw new java.io.IOException(
         s"unreadable compaction watermark $p — refusing to guess: a " +
-          "stale fence would silently mis-resolve folded epochs"))
+          "stale fence would silently mis-resolve folded epochs")
+      None
+    }
   }
 
   /** Monotonic advance of the replay fence — call only while holding
     * the store's maintenance lease (compact's `onCommit` does), so
-    * concurrent read-modify-writes cannot regress it.
+    * concurrent read-modify-writes cannot regress it. Written through
+    * the flush watermark's tmp + rename protocol, so a crash mid-write
+    * never leaves a torn fence.
     */
   def advanceWatermark(spark: SparkSession, root: String, epoch: Long): Unit = {
     val (fs, _) = fsOf(spark, root)
     if (epoch <= readWatermark(spark, root)) return
-    val out = fs.create(watermarkPath(root), true)
-    try out.write(epoch.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    BufferedChannel.writeWatermarkFile(fs, watermarkPath(root), epoch)
   }
 
   /** The replay-fence check every delta writer makes: `epoch` was not

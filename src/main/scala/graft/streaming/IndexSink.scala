@@ -298,7 +298,7 @@ object IndexSink {
     * would report inflated.
     */
   def registerView(spark: SparkSession, indexPath: String, name: String): Unit = {
-    healCompaction(spark, indexPath)
+    EpochStore.heal(spark, indexPath)
     EpochStore.readEpochs(spark, indexPath).drop("_epoch").createOrReplaceTempView(name)
   }
 
@@ -311,20 +311,11 @@ object IndexSink {
     */
   def registerLatestView(spark: SparkSession, indexPath: String,
       name: String, key: String): Unit = {
-    healCompaction(spark, indexPath)
+    EpochStore.heal(spark, indexPath)
     latest(EpochStore.readEpochs(spark, indexPath), key)
       .drop("_epoch")
       .createOrReplaceTempView(name)
   }
-
-  /** Finish a crashed compaction (see [[EpochStore.heal]]) — for this
-    * store, surviving victim epochs duplicate every latest-per-key row
-    * (snapshot + original epoch), which `registerLatestView` masks but
-    * the raw view — and the A13 `_count` contract over it — would
-    * report inflated; the heal closes that window at every read entry.
-    */
-  private def healCompaction(spark: SparkSession, indexPath: String): Unit =
-    EpochStore.heal(spark, indexPath)
 
   /** Materialize upsert resolution like an index segment merge: the
     * epoch history is REPLACED by one snapshot of the latest-per-`key`
@@ -360,7 +351,7 @@ object IndexSink {
     */
   def liveVectors(spark: SparkSession, indexPath: String,
       key: String): DataFrame = {
-    healCompaction(spark, indexPath)
+    EpochStore.heal(spark, indexPath)
     latest(EpochStore.readEpochs(spark, indexPath), key).drop("_epoch")
   }
 
@@ -420,7 +411,7 @@ object IndexSink {
     val terms = analyzeQuery(query)
     val toks = spark.table(name)
       .select(col(key).as("doc_id"), tokens(col(field)).as("toks"))
-    finishRanked(graft.operators.Retrieval.bm25(spark, toks, terms),
+    finishRanked(graft.operators.Retrieval.bm25(toks, terms),
       key, terms.size, operator, k)
   }
 
@@ -432,11 +423,15 @@ object IndexSink {
     * postings instead of re-scanning the view — the shape for a
     * query-heavy endpoint.
     */
-  def rankedMatch(spark: SparkSession, index: graft.operators.Retrieval.TextIndex,
+  def rankedMatch(
+      // Kept for source compatibility (perfbench's live-index scenario
+      // passes one); an index-backed query needs no session.
+      @scala.annotation.unused spark: SparkSession,
+      index: graft.operators.Retrieval.TextIndex,
       key: String, query: String, operator: String, k: Int): DataFrame = {
     require(k > 0, s"top-k must be positive, got $k")
     val terms = analyzeQuery(query)
-    finishRanked(graft.operators.Retrieval.bm25FromIndex(spark, index, terms),
+    finishRanked(graft.operators.Retrieval.bm25FromIndex(index, terms),
       key, terms.size, operator, k)
   }
 
@@ -446,7 +441,7 @@ object IndexSink {
   def textIndex(spark: SparkSession, name: String, field: String,
       key: String): graft.operators.Retrieval.TextIndex = {
     import graft.functions.TextFunctions.tokens
-    graft.operators.Retrieval.buildTextIndex(spark,
+    graft.operators.Retrieval.buildTextIndex(
       spark.table(name).select(col(key).as("doc_id"), tokens(col(field)).as("toks")))
   }
 

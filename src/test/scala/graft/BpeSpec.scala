@@ -77,8 +77,13 @@ class BpeSpec extends SparkSpec {
     val docs = words.zipWithIndex.flatMap { case ((w, f), i) =>
       (1 to f).map(j => (i * 1000L + j, Seq(w)))
     }.toDF("doc_id", "toks")
-    val local = Bpe.trainMerges(spark, docs, 8)
-    val dist = Bpe.trainMerges(spark, docs, 8, localBudgetWords = 0L)
+    import org.apache.spark.sql.functions.{col, count, explode, lit}
+    // At test size the gated call takes the local replay; the
+    // distributed loop runs on the same word-frequency dict.
+    val local = Bpe.trainMerges(docs, 8)
+    val wf = docs.select(explode(col("toks")).as("w"))
+      .groupBy("w").agg(count(lit(1)).as("f"))
+    val dist = Bpe.trainDistributed(wf, 8)
     assert(local == dist)
     assert(local.size == 8)
   }
@@ -93,7 +98,7 @@ class BpeSpec extends SparkSpec {
     val train = (1L to 40L)
       .map(i => (i, Seq("aaaa", "aab", "banana", "ananas", "aaa")))
       .toDF("doc_id", "toks")
-    val merges = Bpe.trainMerges(spark, train, 6)
+    val merges = Bpe.trainMerges(train, 6)
     assert(merges.nonEmpty)
     val probe = Seq(
       (1L, Seq("aaaa", "aaaaa", "a")), (2L, Seq("banana", "bananas")),

@@ -20,7 +20,7 @@ class DecontaminateSpec extends SparkSpec {
       .select("gram").distinct()
     val exact = g8.join(benchGrams, "gram")
       .select("doc_id").distinct().as[Long].collect().toSet
-    val bloomed = Decontaminate.contaminatedIds(spark, g8, benchGrams)
+    val bloomed = Decontaminate.contaminatedIds(g8, benchGrams)
       .as[Long].collect().toSet
     assert(exact.nonEmpty, "fixture has no contamination — test is vacuous")
     assert(bloomed == exact)
@@ -94,19 +94,19 @@ class DecontaminateSpec extends SparkSpec {
       .select("gh").distinct()
     val exactH = g8h.join(benchH, "gh")
       .select("doc_id").distinct().as[Long].collect().toSet
-    val bloomedH = Decontaminate.contaminatedIdsH64(spark, g8h, benchH)
+    val bloomedH = Decontaminate.contaminatedIdsH64(g8h, benchH)
       .as[Long].collect().toSet
     assert(exactH.nonEmpty, "fixture has no contamination — test is vacuous")
     assert(bloomedH == exactH)
     val g8 = TrainingData.gram8Df(docs)
-    val viaStrings = Decontaminate.contaminatedIds(spark, g8,
+    val viaStrings = Decontaminate.contaminatedIds(g8,
         g8.join(docs.filter(col("source") === "src0").select("doc_id"), "doc_id")
           .select("gram"))
       .as[Long].collect().toSet
     assert(bloomedH == viaStrings,
       "digest pipeline diverged from the string pipeline")
     // Empty benchmark short-circuits on the digest path too.
-    assert(Decontaminate.contaminatedIdsH64(spark, g8h,
+    assert(Decontaminate.contaminatedIdsH64(g8h,
       Seq.empty[Long].toDF("gh")).count() == 0)
   }
 
@@ -121,7 +121,7 @@ class DecontaminateSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     val bench = Seq((1L, "prefix one two three four five six seven eight"))
       .toDF("doc_id", "text")
-    val out = Decontaminate.contaminatedIds(spark,
+    val out = Decontaminate.contaminatedIds(
       TrainingData.gram8Df(corpus), TrainingData.gram8Df(bench).select("gram"))
       .as[Long].collect().toSet
     assert(out == Set(10L))
@@ -132,7 +132,7 @@ class DecontaminateSpec extends SparkSpec {
     val corpus = Seq((10L, "one two three four five six seven eight"))
       .toDF("doc_id", "text")
     val empty = Seq.empty[String].toDF("gram")
-    assert(Decontaminate.contaminatedIds(spark,
+    assert(Decontaminate.contaminatedIds(
       TrainingData.gram8Df(corpus), empty).count() == 0)
   }
 }

@@ -31,21 +31,10 @@ class DedupSpec extends SparkSpec {
     val pairs = Seq((5L, 3L), (3L, 9L), (10L, 11L), (2L, 2L), (7L, 8L),
       (8L, 2L), (9L, 1L)).toDF("id1", "id2")
     val local = Dedup.components(pairs).as[(Long, Long)].collect().toMap
-    val old = spark.conf.getOption("spark.graft.components.localizeMaxEdges")
-    try {
-      spark.conf.set("spark.graft.components.localizeMaxEdges", "0")
-      val loop = Dedup.components(pairs).as[(Long, Long)].collect().toMap
-      assert(local == loop)
-      // -1, not 0 (ADVICE r15): with the gate at 0 an EMPTY graph still
-      // satisfies count() <= 0 and takes the local path — the
-      // distributed empty-graph branch needs a gate no count can meet.
-      spark.conf.set("spark.graft.components.localizeMaxEdges", "-1")
-      assert(Dedup.components(Seq.empty[(Long, Long)].toDF("id1", "id2"))
-        .count() == 0) // loop path empty graph
-    } finally old match {
-      case Some(v) => spark.conf.set("spark.graft.components.localizeMaxEdges", v)
-      case None => spark.conf.unset("spark.graft.components.localizeMaxEdges")
-    }
+    val loop = Dedup.componentsLoop(pairs, 20).as[(Long, Long)].collect().toMap
+    assert(local == loop)
+    assert(Dedup.componentsLoop(Seq.empty[(Long, Long)].toDF("id1", "id2"), 20)
+      .count() == 0) // loop path empty graph
     assert(local == Map(5L -> 1L, 3L -> 1L, 9L -> 1L, 1L -> 1L,
       10L -> 10L, 11L -> 10L, 2L -> 2L, 7L -> 2L, 8L -> 2L))
   }
@@ -55,22 +44,15 @@ class DedupSpec extends SparkSpec {
     import spark.implicits._
     // A null endpoint has JOIN-key semantics in the fixpoint (it
     // receives a label row but never matches as a key); the local
-    // union-find declines such inputs (ADVICE r15), so under the
-    // default gate the result must be identical to the forced loop.
+    // union-find declines such inputs (ADVICE r15), so the gated call
+    // must return exactly the distributed loop's result.
     val pairs = Seq((Some(1L), Some(2L)), (Some(3L), None), (Some(2L), Some(4L)))
       .toDF("id1", "id2")
     val gated = Dedup.components(pairs)
       .collect().map(r => (Option(r.get(0)), Option(r.get(1)))).toSet
-    val old = spark.conf.getOption("spark.graft.components.localizeMaxEdges")
-    try {
-      spark.conf.set("spark.graft.components.localizeMaxEdges", "-1")
-      val loop = Dedup.components(pairs)
-        .collect().map(r => (Option(r.get(0)), Option(r.get(1)))).toSet
-      assert(gated == loop)
-    } finally old match {
-      case Some(v) => spark.conf.set("spark.graft.components.localizeMaxEdges", v)
-      case None => spark.conf.unset("spark.graft.components.localizeMaxEdges")
-    }
+    val loop = Dedup.componentsLoop(pairs, 20)
+      .collect().map(r => (Option(r.get(0)), Option(r.get(1)))).toSet
+    assert(gated == loop)
   }
 
   test("components on an empty pair list returns empty and terminates") {
@@ -153,7 +135,7 @@ class DedupSpec extends SparkSpec {
   test("nearDedup drops every planted near-duplicate, keeps one per cluster") {
     import spark.implicits._
     val docs = queries.Tables.t(spark, "/root/testdata/sf0.01", "documents")
-    val deduped = Dedup.nearDedup(spark, docs, "doc_id", "text", minEstSim = 0.5)
+    val deduped = Dedup.nearDedup(docs, "doc_id", "text", minEstSim = 0.5)
     val pairs = SparkEntry.queries("q44_lsh_pairs")(spark, "/root/testdata/sf0.01")
       .filter(col("est_sim") >= 0.5)
       .select("id1", "id2").as[(Long, Long)].collect()

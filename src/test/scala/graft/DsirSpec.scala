@@ -54,8 +54,8 @@ class DsirSpec extends SparkSpec {
       3L -> Seq("x", "z"))
     val target = Seq(10L -> Seq("x", "y"), 11L -> Seq("y", "x", "y"))
     val feats = Dsir.features(toksDf(raw), B)
-    val model = Dsir.train(spark, feats, Dsir.features(toksDf(target), B), B)
-    val got = Dsir.logWeights(spark, feats, model)
+    val model = Dsir.train(feats, Dsir.features(toksDf(target), B), B)
+    val got = Dsir.logWeights(feats, model)
       .as[(Long, Long, Double)].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
 
@@ -87,8 +87,8 @@ class DsirSpec extends SparkSpec {
         (100L + i) -> Seq.fill(1 + rnd.nextInt(6))(vocab(rnd.nextInt(vocab.size)))
       }
       val feats = Dsir.features(toksDf(raw), B)
-      val model = Dsir.train(spark, feats, Dsir.features(toksDf(target), B), B)
-      val got = Dsir.logWeights(spark, feats, model)
+      val model = Dsir.train(feats, Dsir.features(toksDf(target), B), B)
+      val got = Dsir.logWeights(feats, model)
         .as[(Long, Long, Double)].collect()
         .map(r => r._1 -> ((r._2, r._3))).toMap
 
@@ -118,8 +118,8 @@ class DsirSpec extends SparkSpec {
       2L -> Seq("gamma", "delta")) // never seen in the target
     val target = Seq.tabulate(5)(i => (100L + i) -> Seq("alpha", "beta"))
     val feats = Dsir.features(toksDf(raw), B)
-    val model = Dsir.train(spark, feats, Dsir.features(toksDf(target), B), B)
-    val got = Dsir.logWeights(spark, feats, model)
+    val model = Dsir.train(feats, Dsir.features(toksDf(target), B), B)
+    val got = Dsir.logWeights(feats, model)
       .as[(Long, Long, Double)].collect().map(r => r._1 -> r._3).toMap
     assert(got(1L) > got(2L))
     assert(got(1L) > 0.0) // more likely under target than raw
@@ -133,10 +133,10 @@ class DsirSpec extends SparkSpec {
     // totals sum is over an empty table. nt must coalesce to 0 (the
     // smoothed ratio is finite at zero counts), not propagate NULL
     // into every weight.
-    val model = Dsir.train(spark,
+    val model = Dsir.train(
       Dsir.features(toksDf(Seq(1L -> Seq("a", "b"))), B),
       Dsir.features(toksDf(Seq(2L -> Seq.empty[String])), B), B)
-    val got = Dsir.logWeights(spark,
+    val got = Dsir.logWeights(
       Dsir.features(toksDf(Seq(1L -> Seq("a", "b"))), B), model)
       .as[(Long, Long, Double)].collect()
     assert(got.length == 1)
@@ -164,10 +164,10 @@ class DsirSpec extends SparkSpec {
     val B = 64
     // Score a doc whose grams the TARGET never saw and the RAW corpus
     // never saw either (held-out text against a fixed model).
-    val model = Dsir.train(spark,
+    val model = Dsir.train(
       Dsir.features(toksDf(Seq(1L -> Seq("a", "b"))), B),
       Dsir.features(toksDf(Seq(2L -> Seq("a"))), B), B)
-    val got = Dsir.logWeights(spark,
+    val got = Dsir.logWeights(
       Dsir.features(toksDf(Seq(9L -> Seq("qqq"))), B), model)
       .as[(Long, Long, Double)].collect()
     assert(got.length == 1)

@@ -9,8 +9,9 @@ import java.io.{ByteArrayOutputStream, PrintStream}
   */
 class ExplainSpec extends SparkSpec {
 
-  private def plan(name: String): String = {
-    val df = SparkEntry.queries(name)(spark, sfDir)
+  private def plan(name: String): String = explained(SparkEntry.queries(name)(spark, sfDir))
+
+  private def explained(df: org.apache.spark.sql.DataFrame): String = {
     val out = new ByteArrayOutputStream()
     Console.withOut(new PrintStream(out, true, "UTF-8")) { df.explain("formatted") }
     out.toString("UTF-8")
@@ -317,8 +318,8 @@ class ExplainSpec extends SparkSpec {
     // count-table joins and the per-doc reduce were all doc_id-keyed,
     // so under the localize gate scoring is a narrow projection — the
     // only exchanges are the loader rebalance and the output sort.
-    // (Above spark.graft.lm.localize.maxRows the join spelling runs;
-    // this pin covers the default test-tier path.)
+    // (Above the driver-local bound the join spelling runs; this pin
+    // covers the test-tier path.)
     assert(p.contains("lm_score_bigram"), p)
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("Generate") && !p.contains("HashAggregate") &&
@@ -362,9 +363,9 @@ class ExplainSpec extends SparkSpec {
   }
 
   test("q87 big regime: span dedup is a salted two-phase count — no per-gram fold") {
-    // Threshold 0 forces the salted plan the 100 TB path takes; the
-    // sf0.001 input would otherwise (correctly) pick the small regime.
-    val p = inSpanRegime(0L)(plan("q87_span_dedup"))
+    // Forces the salted plan the 100 TB path takes; the sf0.001 input
+    // would otherwise (correctly) pick the small regime.
+    val p = q87Plan(salted = true)
     assert(!p.contains("CartesianProduct") && !p.contains("NestedLoop"), p)
     // The corpus scans ONCE, at checkpoint-build time: the final plan's
     // count side and mark side both read the materialized occurrence
@@ -395,17 +396,20 @@ class ExplainSpec extends SparkSpec {
     // regression came from paying the skew machinery on inputs that
     // can't skew. (The big-regime discriminator is the salt key + the
     // two-phase partial_count, pinned in the big-regime test.)
-    val p = inSpanRegime(Long.MaxValue)(plan("q87_span_dedup"))
+    val p = q87Plan(salted = false)
     assert(!p.contains("Scan parquet"), p)
     assert(p.contains("windowspecdefinition(gh"), p)
     assert(!p.contains("_graft_salt"), p)
     assert(p.contains("windowspecdefinition(doc_id"), p)
   }
 
-  /** Pin helper: run `f` with the SpanDedup salt threshold fixed. */
-  private def inSpanRegime[T](thresholdBytes: Long)(f: => T): T =
-    withSparkConf(graft.operators.SpanDedup.SaltThresholdConf,
-      thresholdBytes.toString)(f)
+  /** q87_span_dedup's plan with the salt regime pinned: the registry's
+    * token artifact through the regime-taking operator form.
+    */
+  private def q87Plan(salted: Boolean): String =
+    explained(graft.operators.SpanDedup.duplicatedSpans(
+      graft.queries.TrainingData.tokenized(spark, sfDir), k = 8, salted)
+      .orderBy("doc_id", "span_start"))
 
   test("q39: watermark running max is the two-phase scan — no window operator at all") {
     val p = plan("q39_watermark_late")
@@ -640,20 +644,20 @@ class ExplainSpec extends SparkSpec {
     // single round-robin repartition — never a hash exchange.
     val p0 = plan("q02_project")
     assert(!p0.toLowerCase.contains("roundrobin"), p0)
-    withSparkConf("spark.graft.rebalance.minBytes", "1") {
-      withSparkConf("spark.graft.rebalance.minBytesPerRow", "1") {
-        val p = plan("q02_project")
-        assert(p.toLowerCase.contains("roundrobin"), p)
-        assert(!p.contains("hashpartitioning"), p)
-      }
-      // Narrow rows alone (customer ~21 compressed B/row) stay put even
-      // under the forced byte floor: the rebalance buys scan-side
-      // COMPUTE parallelism, which narrow relational rows never repay
-      // (round-16 bytes-per-row gate; one-window A/B evidence in
-      // OPTIMIZATION_r16.md).
-      val pNarrow = plan("q02_project")
-      assert(!pNarrow.toLowerCase.contains("roundrobin"), pNarrow)
-    }
+    // q02's loader and projection with the floors forced to 1.
+    val path = s"$sfDir/customer.parquet"
+    val p = explained(graft.queries.Tables.rebalanced(spark, spark.read.parquet(path),
+      path, minBytes = 1, minBytesPerRow = 1).select("c_custkey", "c_name"))
+    assert(p.toLowerCase.contains("roundrobin"), p)
+    assert(!p.contains("hashpartitioning"), p)
+    // Narrow rows alone (customer ~21 compressed B/row) stay put even
+    // under the forced byte floor: the rebalance buys scan-side
+    // COMPUTE parallelism, which narrow relational rows never repay
+    // (round-16 bytes-per-row gate; one-window A/B evidence in
+    // OPTIMIZATION_r16.md).
+    val pNarrow = explained(graft.queries.Tables.rebalanced(spark,
+      spark.read.parquet(path), path, minBytes = 1).select("c_custkey", "c_name"))
+    assert(!pNarrow.toLowerCase.contains("roundrobin"), pNarrow)
   }
 
   test("q66: the Bloom prefilter probes LONGS scan-side and the " +

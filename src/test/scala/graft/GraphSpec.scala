@@ -29,12 +29,18 @@ class GraphSpec extends SparkSpec {
     r
   }
 
-  private def run(pairs: Seq[(Long, Long)], iters: Int,
-      parts: Int): Map[Long, (Long, Long)] =
-    Graph.pageRank(pairs.toDF("id1", "id2").repartition(parts), iters)
+  /** [[Graph.pageRank]] (the driver-local twin at test size), or its
+    * distributed loop when `distributed`.
+    */
+  private def run(pairs: Seq[(Long, Long)], iters: Int, parts: Int,
+      distributed: Boolean = false): Map[Long, (Long, Long)] = {
+    val df = pairs.toDF("id1", "id2").repartition(parts)
+    (if (distributed) Graph.pageRankLoop(df, iters, 1000000000000L)
+     else Graph.pageRank(df, iters))
       .select("id", "r", "deg")
       .as[(Long, Long, Long)].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
+  }
 
   test("pageRank matches the integer replay on a triangle + chain + pair") {
     // components: triangle {1,2,3}, chain 4-5-6, isolated pair {7,8}
@@ -64,15 +70,8 @@ class GraphSpec extends SparkSpec {
         .filter(p => p._1 != p._2)
         .map(p => (math.min(p._1, p._2), math.max(p._1, p._2)))).distinct
     val local = run(pairs, 5, parts = 3)
-    val old = spark.conf.getOption("spark.graft.graph.localizeMaxEdges")
-    try {
-      spark.conf.set("spark.graft.graph.localizeMaxEdges", "0")
-      val loop = run(pairs, 5, parts = 3)
-      assert(local == loop)
-    } finally old match {
-      case Some(v) => spark.conf.set("spark.graft.graph.localizeMaxEdges", v)
-      case None => spark.conf.unset("spark.graft.graph.localizeMaxEdges")
-    }
+    val loop = run(pairs, 5, parts = 3, distributed = true)
+    assert(local == loop)
   }
 
   test("pageRank: null-id edges decline the local path, so the gated " +
@@ -83,15 +82,8 @@ class GraphSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .collect().map(r => (Option(r.get(0)), Option(r.get(1)), Option(r.get(2)))).toSet
     val gated = rows(graft.operators.Graph.pageRank(pairs, iters = 3))
-    val old = spark.conf.getOption("spark.graft.graph.localizeMaxEdges")
-    try {
-      spark.conf.set("spark.graft.graph.localizeMaxEdges", "-1")
-      val loop = rows(graft.operators.Graph.pageRank(pairs, iters = 3))
-      assert(gated == loop)
-    } finally old match {
-      case Some(v) => spark.conf.set("spark.graft.graph.localizeMaxEdges", v)
-      case None => spark.conf.unset("spark.graft.graph.localizeMaxEdges")
-    }
+    val loop = rows(Graph.pageRankLoop(pairs, 3, 1000000000000L))
+    assert(gated == loop)
   }
 
   test("pageRank is partitioning-invariant (exact integer state)") {

@@ -38,7 +38,7 @@ class HardNegativesSpec extends SparkSpec {
     val emb = corpus()
     val model = Ivf.train(spark, emb.filter(col("vec_id") <= 20),
       k = 2, iters = 2, meanRound = 4)
-    val indexed = Ivf.index(spark, emb, model)
+    val indexed = Ivf.index(emb, model)
     val probes = emb.filter(col("vec_id") === 1)
 
     // Sanity: with the band disabled the dup IS the top "negative" —
@@ -65,7 +65,7 @@ class HardNegativesSpec extends SparkSpec {
     val emb = corpus()
     val model = Ivf.train(spark, emb, k = 2, iters = 1, meanRound = 4)
     intercept[IllegalArgumentException] {
-      HardNegatives.mine(spark, Ivf.index(spark, emb, model), model,
+      HardNegatives.mine(spark, Ivf.index(emb, model), model,
         emb.limit(1), kRetrieve = 3, dupCos = 0.95, n = 5, nprobe = 1)
     }
   }

@@ -14,7 +14,7 @@ class IvfPqSpec extends SparkSpec {
 
   test("encoded rows carry a valid coarse cell and per-subspace codes") {
     import spark.implicits._
-    val enc = IvfPq.encode(spark, emb, model)
+    val enc = IvfPq.encode(emb, model)
       .select("cell", "codes").as[(Int, Seq[Int])].collect()
     assert(enc.length == emb.count())
     enc.foreach { case (cell, codes) =>
@@ -43,37 +43,37 @@ class IvfPqSpec extends SparkSpec {
     // The streaming-epoch expression path and the batch path must
     // assign EXACTLY the same (cell, codes) per vector — epoch-
     // appended rows land where a batch rebuild would put them.
-    val batch = IvfPq.encode(spark, emb, model)
+    val batch = IvfPq.encode(emb, model)
       .select("vec_id", "cell", "codes").as[(Long, Int, Seq[Int])]
       .collect().sortBy(_._1)
     assert(batch.toSeq == local.toSeq)
-    val expr = IvfPq.withCellCodes(spark,
+    val expr = IvfPq.withCellCodes(
         emb.withColumn("payload", lit("kept")), model)
       .select("vec_id", "cell", "codes").as[(Long, Int, Seq[Int])]
       .collect().sortBy(_._1)
     assert(expr.toSeq == batch.toSeq)
     // Extra payload columns ride through untouched (the dynamic-schema
     // contract the UDF this replaced existed for).
-    assert(IvfPq.withCellCodes(spark,
+    assert(IvfPq.withCellCodes(
       emb.withColumn("payload", lit("kept")), model)
       .columns.toSeq == Seq("vec_id", "embedding", "payload", "cell", "codes"))
     // Null embeddings: the STREAMING path passes them through with
     // null cell/codes (rows ride, absent from probes' joins) ...
     val nullEmb = emb.limit(1).select(col("vec_id"),
       lit(null).cast("array<float>").as("embedding"))
-    val withNull = IvfPq.withCellCodes(spark, nullEmb, model)
+    val withNull = IvfPq.withCellCodes(nullEmb, model)
     assert(withNull.filter(col("cell").isNull && col("codes").isNull).count() == 1)
     // ... while the BATCH build fails loud, like the typed map it
     // replaced (silent null codes would vanish from every ADC join).
     val loud = intercept[Exception] {
-      IvfPq.encode(spark, nullEmb, model).collect()
+      IvfPq.encode(nullEmb, model).collect()
     }
     assert(loud.toString.contains("refuses silent row loss")
         || Option(loud.getCause).exists(_.toString.contains("refuses silent row loss")),
       loud.toString)
     // Wrong-width vectors fail loud, never truncated-encode.
     val thrown = intercept[org.apache.spark.SparkException] {
-      IvfPq.withCellCodes(spark,
+      IvfPq.withCellCodes(
         emb.limit(1).select(col("vec_id"),
           expr_slice1.as("embedding")), model).collect()
     }
@@ -86,9 +86,9 @@ class IvfPqSpec extends SparkSpec {
   test("codegen'd Ivf.withCell matches the batch index assignment") {
     import spark.implicits._
     val m = model.coarse
-    val batch = Ivf.index(spark, emb, m)
+    val batch = Ivf.index(emb, m)
       .select("vec_id", "cell").as[(Long, Int)].collect().sortBy(_._1)
-    val viaExpr = Ivf.withCell(spark, emb, m)
+    val viaExpr = Ivf.withCell(emb, m)
       .select("vec_id", "cell").as[(Long, Int)].collect().sortBy(_._1)
     assert(viaExpr.toSeq == batch.toSeq)
   }
@@ -100,14 +100,14 @@ class IvfPqSpec extends SparkSpec {
     // Recompute both from the models with plain driver-side loops in
     // the same fold order and require exact agreement.
     val probesDf = emb.filter(col("vec_id") < 5)
-    val got = IvfPq.search(spark, IvfPq.encode(spark, emb, model), model,
+    val got = IvfPq.search(spark, IvfPq.encode(emb, model), model,
         probesDf, k = 5, nprobe = 2)
       .select("probe_id", "neighbor_id", "pq_cos", "rnk")
       .as[(Long, Long, Double, Int)].collect()
     assert(got.length == 25, s"expected 5 probes x top-5, got ${got.length}")
 
     val vecs = emb.as[(Long, Array[Float])].collect().toMap
-    val enc = IvfPq.encode(spark, emb, model)
+    val enc = IvfPq.encode(emb, model)
       .select("vec_id", "cell", "codes").as[(Long, Int, Seq[Int])]
       .collect().map(r => r._1 -> ((r._2, r._3))).toMap
     def seqDot(a: Array[Float], b: Array[Float]): Double = {
@@ -141,7 +141,7 @@ class IvfPqSpec extends SparkSpec {
   }
 
   test("empty probe frame yields the empty result, not a dim failure") {
-    val enc = IvfPq.encode(spark, emb, model)
+    val enc = IvfPq.encode(emb, model)
     val none = IvfPq.search(spark, enc, model,
       emb.filter(col("vec_id") < 0), k = 3, nprobe = 2)
     assert(none.count() == 0)
@@ -151,7 +151,7 @@ class IvfPqSpec extends SparkSpec {
   test("candidates come only from probed cells") {
     import spark.implicits._
     val probesDf = emb.filter(col("vec_id") < 5)
-    val cells = IvfPq.encode(spark, emb, model)
+    val cells = IvfPq.encode(emb, model)
       .select("vec_id", "cell").as[(Long, Int)].collect().toMap
     // Recompute each probe's nprobe cells the way Ivf.search does.
     val probes = probesDf.as[(Long, Array[Float])].collect()
@@ -163,7 +163,7 @@ class IvfPqSpec extends SparkSpec {
         (c, d)
       }.sortBy(x => (x._2, x._1)).take(2).map(_._1).toSet
     }.toMap
-    IvfPq.search(spark, IvfPq.encode(spark, emb, model), model, probesDf,
+    IvfPq.search(spark, IvfPq.encode(emb, model), model, probesDf,
         k = 5, nprobe = 2)
       .select("probe_id", "neighbor_id").as[(Long, Long)].collect()
       .foreach { case (pid, nid) =>

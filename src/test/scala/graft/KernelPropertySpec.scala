@@ -173,7 +173,7 @@ class KernelPropertySpec extends SparkSpec {
       val benchG = queries.TrainingData.gram8Df(bench).select("gram")
       val exact = corpusG.join(benchG.distinct(), "gram")
         .select("doc_id").distinct().as[Long].collect().toSet
-      val bloomed = Decontaminate.contaminatedIds(spark, corpusG, benchG)
+      val bloomed = Decontaminate.contaminatedIds(corpusG, benchG)
         .as[Long].collect().toSet
       assert(bloomed == exact, s"bloom path diverged: $bloomed vs $exact")
     }

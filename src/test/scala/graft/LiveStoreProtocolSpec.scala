@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.streaming.{IndexSink, LiveNearDedup, LiveSpanDedup, LiveTextIndex}
+import graft.streaming.{EpochStore, IndexSink, LiveNearDedup, LiveSpanDedup, LiveTextIndex}
 
 /** Crash/replay protocol tests for the incrementally-maintained stores:
   * the windows a live delivery + maintenance interleaving actually
@@ -67,28 +67,30 @@ class LiveStoreProtocolSpec extends SparkSpec {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("graft-span-snap")
       .toString + "/state"
-    val confKey = "spark.graft.store.snapshotRowsPerPartition"
     def toks(ids: Range) = ids.map(i =>
         (i.toLong, Seq(s"t$i", s"u$i", s"v$i", s"w$i"))).toDF("doc_id", "toks")
+    def partFiles(dir: java.io.File): Array[java.io.File] =
+      dir.listFiles().filter(f =>
+        f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
     def snapshotFiles(): Array[java.io.File] = {
       val snap = new java.io.File(s"$root/docs").listFiles()
         .filter(_.getName.startsWith("epoch=compact-"))
       assert(snap.length == 1, snap.mkString(","))
-      snap.head.listFiles().filter(f =>
-        f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+      partFiles(snap.head)
     }
+    // 120 docs at 25 rows/partition → ceil(120/25) = 5 hash
+    // partitions; the old repartition(1) layout wrote exactly one.
+    val sized = s"$root-sized"
+    EpochStore.writeKeyedSnapshot(toks(0 until 120), sized, "doc_id", rowsPerPart = 25)
+    val spread = partFiles(new java.io.File(sized)).length
+    assert(spread >= 4, s"keyed snapshot should spread over ~5 files: $spread")
+    // Default sizing keeps the compaction snapshot of a (tiny) store at
+    // one file — the small-store layout — across generations, and the
+    // read-side truth is unchanged.
     LiveSpanDedup.writeDelta(toks(0 until 60), root, 0L, k = 3)
     LiveSpanDedup.writeDelta(toks(60 until 120), root, 1L, k = 3)
-    // 120 resolved docs at 25 rows/partition → ceil(120/25) = 5 hash
-    // partitions; the old repartition(1) layout wrote exactly one.
-    spark.conf.set(confKey, "25")
-    try {
-      LiveSpanDedup.compact(spark, root)
-      assert(snapshotFiles().length >= 4,
-        s"keyed snapshot should spread over ~5 files: ${snapshotFiles().length}")
-    } finally spark.conf.unset(confKey)
-    // Default sizing collapses the same (tiny) store back to one file —
-    // the small-store layout — and the read-side truth is unchanged.
+    LiveSpanDedup.compact(spark, root)
+    assert(snapshotFiles().length == 1)
     LiveSpanDedup.writeDelta(toks(120 until 130), root, 2L, k = 3)
     LiveSpanDedup.compact(spark, root)
     assert(snapshotFiles().length == 1)
@@ -514,6 +516,33 @@ class LiveStoreProtocolSpec extends SparkSpec {
       root, 1L, k)
     assert(LiveSpanDedup.duplicatedSpans(spark, root, k, idType = LongType)
       .as[(Long, Long, Long)].collect().map(_._1).toSet == Set(1L, 2L, 3L))
+  }
+
+  test("EpochStore: the replay fence survives a crash between delete-old " +
+      "and rename-tmp, and a torn tmp beside a good fence is ignored") {
+    val root = java.nio.file.Files.createTempDirectory("graft-wm-tmp")
+      .toString + "/state"
+    val wm = new org.apache.hadoop.fs.Path(s"$root.compacted.watermark")
+    val tmp = new org.apache.hadoop.fs.Path(s"$root.compacted.watermark.tmp")
+    val fs = wm.getFileSystem(spark.sessionState.newHadoopConf())
+    def write(p: org.apache.hadoop.fs.Path, body: String): Unit = {
+      val out = fs.create(p, true)
+      try out.write(body.getBytes("UTF-8")) finally out.close()
+    }
+    EpochStore.advanceWatermark(spark, root, 4L)
+    assert(EpochStore.readWatermark(spark, root) == 4L)
+    assert(!fs.exists(tmp), "the fence's tmp must not linger after a write")
+    // Crash between delete-old and rename-tmp: only a complete tmp.
+    fs.delete(wm, false)
+    write(tmp, "7\n")
+    assert(EpochStore.readWatermark(spark, root) == 7L)
+    assert(!EpochStore.aboveFence(spark, root, 7L))
+    EpochStore.advanceWatermark(spark, root, 8L)
+    assert(EpochStore.readWatermark(spark, root) == 8L)
+    assert(!fs.exists(tmp))
+    // Crash mid-tmp-write ("12" of "123\n") beside a good fence.
+    write(tmp, "12")
+    assert(EpochStore.readWatermark(spark, root) == 8L)
   }
 
   test("EpochStore.onePerKey: in-epoch duplicate doc_ids collapse via an " +

@@ -27,11 +27,11 @@ class LmLocalSpec extends SparkSpec {
       "on the real corpus model, absent-doc sets identical") {
     import spark.implicits._
     val toks = toksDf
-    val model = NgramLm.train(spark, toks)
-    val local = NgramLm.localize(spark, model)
+    val model = NgramLm.train(toks)
+    val local = NgramLm.localize(model)
     assert(local.nonEmpty, "sf0.001 model must sit under the localize gate")
 
-    val join = NgramLm.score(spark, toks, model)
+    val join = NgramLm.score(toks, model)
       .select(col("doc_id"), col("n_bigrams"), Par.r2(col("nll")).as("r"))
       .as[(Long, Long, Double)].collect()
       .map { case (d, n, r) => d -> ((n, r)) }.toMap
@@ -52,12 +52,12 @@ class LmLocalSpec extends SparkSpec {
     val toks = toksDf
     // The q155 shape: train on the even half, score everything — the
     // held-out half exercises all three backoff branches.
-    val model = NgramLm.trainBackoff(spark,
+    val model = NgramLm.trainBackoff(
       toks.filter(pmod(col("doc_id"), lit(2L)) === 0))
-    val local = NgramLm.localizeBackoff(spark, model)
+    val local = NgramLm.localizeBackoff(model)
     assert(local.nonEmpty)
 
-    val join = NgramLm.scoreBackoff(spark, toks, model)
+    val join = NgramLm.scoreBackoff(toks, model)
       .select(col("doc_id"), col("n_trigrams"), Par.r2(col("nll")).as("r"))
       .as[(Long, Long, Double)].collect()
       .map { case (d, n, r) => d -> ((n, r)) }.toMap
@@ -108,19 +108,20 @@ class LmLocalSpec extends SparkSpec {
     assert(got(5L)._1 == 3L && math.abs(got(5L)._2 - d5) < 1e-12)
   }
 
-  test("localize gate: a model above spark.graft.lm.localize.maxRows " +
-      "stays on the join spelling (None)") {
+  test("localize gate: a model at the driver-local bound localizes, " +
+      "one row past it stays on the join spelling (None)") {
+    import graft.operators.DriverLocal.MaxRows
     val toks = toksDf
-    val model = NgramLm.train(spark, toks)
-    val old = spark.conf.getOption("spark.graft.lm.localize.maxRows")
-    try {
-      spark.conf.set("spark.graft.lm.localize.maxRows", "1")
-      assert(NgramLm.localize(spark, model).isEmpty)
-      assert(NgramLm.localizeBackoff(spark,
-        NgramLm.trainBackoff(spark, toks)).isEmpty)
-    } finally old match {
-      case Some(v) => spark.conf.set("spark.graft.lm.localize.maxRows", v)
-      case None => spark.conf.unset("spark.graft.lm.localize.maxRows")
-    }
+    // The gate counts vocab + bigram (+ trigram) rows; a model whose
+    // vocab field puts that sum at the bound, then one past it, crosses
+    // the real bound without a corpus that size.
+    val model = NgramLm.train(toks)
+    val bi = model.bigrams.count()
+    assert(NgramLm.localize(model.copy(vocab = MaxRows - bi)).isDefined)
+    assert(NgramLm.localize(model.copy(vocab = MaxRows - bi + 1)).isEmpty)
+    val backoff = NgramLm.trainBackoff(toks)
+    val biTri = backoff.bigrams.count() + backoff.trigrams.count()
+    assert(NgramLm.localizeBackoff(backoff.copy(vocab = MaxRows - biTri)).isDefined)
+    assert(NgramLm.localizeBackoff(backoff.copy(vocab = MaxRows - biTri + 1)).isEmpty)
   }
 }

@@ -13,7 +13,7 @@ class NgramLmSpec extends SparkSpec {
 
   test("train counts unigrams, bigrams, and vocab") {
     import spark.implicits._
-    val m = NgramLm.train(spark, toksDf(Seq(
+    val m = NgramLm.train(toksDf(Seq(
       1L -> Seq("a", "b", "a"),
       2L -> Seq("b", "a"),
       3L -> Seq("c"))))
@@ -32,8 +32,8 @@ class NgramLmSpec extends SparkSpec {
       1L -> Seq("a", "b", "a"),
       2L -> Seq("b", "a"),
       3L -> Seq("c")))
-    val m = NgramLm.train(spark, toks)
-    val got = NgramLm.score(spark, toks, m)
+    val m = NgramLm.train(toks)
+    val got = NgramLm.score(toks, m)
       .as[(Long, Long, Double)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
     // V=3; P(b|a) = (1+1)/(3+3) = 1/3; P(a|b) = (2+1)/(2+3) = 3/5.
     val pBA = math.log(2.0 / 6.0); val pAB = math.log(3.0 / 5.0)
@@ -46,9 +46,9 @@ class NgramLmSpec extends SparkSpec {
 
   test("unseen grams smooth instead of dropping or exploding") {
     import spark.implicits._
-    val m = NgramLm.train(spark, toksDf(Seq(1L -> Seq("a", "b"))))
+    val m = NgramLm.train(toksDf(Seq(1L -> Seq("a", "b"))))
     // "z" never seen: c1 = 0, c2 = 0 → P = 1 / V = 1/2 per position.
-    val got = NgramLm.score(spark, toksDf(Seq(9L -> Seq("z", "z"))), m)
+    val got = NgramLm.score(toksDf(Seq(9L -> Seq("z", "z"))), m)
       .as[(Long, Long, Double)].collect()
     assert(got.length == 1)
     assert(math.abs(got(0)._3 - (-math.log(1.0 / 2.0))) < 1e-12)
@@ -59,8 +59,8 @@ class NgramLmSpec extends SparkSpec {
     val typical = Seq.fill(20)("the" :: "quick" :: "fox" :: Nil).zipWithIndex
       .map { case (ws, i) => i.toLong -> ws.toSeq }
     val corpus = toksDf(typical :+ (99L -> Seq("zx", "qq", "vv")))
-    val m = NgramLm.train(spark, corpus)
-    val nll = NgramLm.score(spark, corpus, m)
+    val m = NgramLm.train(corpus)
+    val nll = NgramLm.score(corpus, m)
       .as[(Long, Long, Double)].collect().map(r => r._1 -> r._3).toMap
     assert(nll(0L) < nll(99L),
       s"typical doc should be more predictable: ${nll(0L)} vs ${nll(99L)}")
@@ -72,7 +72,7 @@ class NgramLmSpec extends SparkSpec {
       ("s1", Seq("a", "b", "a", "b")),
       ("s2", Seq("a", "b", "b", "a")),
       ("s3", Seq("z", "z", "z", "z"))).toDF("source", "toks")
-    val kl = NgramLm.sourceDivergence(spark, docs)
+    val kl = NgramLm.sourceDivergence(docs)
       .as[(String, Double)].collect().toMap
     assert(kl.keySet == Set("s1", "s2", "s3"))
     assert(kl("s3") > kl("s1") && kl("s3") > kl("s2"),
@@ -89,7 +89,7 @@ class NgramLmSpec extends SparkSpec {
     val docs = Seq(
       ("s1", Seq("a", "a")),
       ("s2", Seq("b", "b"))).toDF("source", "toks")
-    val kl = NgramLm.sourceDivergence(spark, docs)
+    val kl = NgramLm.sourceDivergence(docs)
       .as[(String, Double)].collect().toMap
     // N=4, V=2; q(a) = (2+1)/(4+2) = 1/2 = q(b).
     // s1: N_s=2; p(a) = (2+1)/(2+2) = 3/4, p(b) = (0+1)/(2+2) = 1/4.
@@ -137,12 +137,12 @@ class NgramLmSpec extends SparkSpec {
       5L -> Seq("a", "b", "c", "e"),  // two seen trigrams, S = 1 and 1/2
       6L -> Seq("a", "b"),            // < 3 tokens: no row
       7L -> Seq("x", "c", "d")))      // unseen trigram, seen (c,d) bigram
-    val m = NgramLm.trainBackoff(spark,
+    val m = NgramLm.trainBackoff(
       all.filter(col("doc_id") % 2 === 0))
     // Train half = docs 2, 4, 6: c1 = {a2 b3 c2 d1 e1} (N=9, V=5);
     // c2 = {ab2 bc2 cd1 ce1}; c3 = {abc1 bcd1 bce1}.
     assert(m.total == 9L && m.vocab == 5L)
-    val got = NgramLm.scoreBackoff(spark, all, m)
+    val got = NgramLm.scoreBackoff(all, m)
       .as[(Long, Long, Double)].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
     assert(got.keySet == Set(1L, 2L, 3L, 4L, 5L, 7L))

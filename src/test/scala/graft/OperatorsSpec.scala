@@ -231,15 +231,15 @@ class OperatorsSpec extends SparkSpec {
       df.select("probe_id", "neighbor_id", "cos", "rnk")
         .as[(Long, Long, Double, Int)].collect().toSet
     // Table 0 of the multi family IS the single-table plane family.
-    val single = rows(Similarity.lshSearch(spark,
+    val single = rows(Similarity.lshSearch(
       Similarity.hyperplaneLsh(vecs, 8), probes, nPlanes = 8, k = 5))
-    val multi1 = rows(Similarity.lshSearchMulti(spark, vecs, probes,
+    val multi1 = rows(Similarity.lshSearchMulti(vecs, probes,
       nPlanes = 8, tables = 1, k = 5))
     assert(multi1 == single)
     // Extra tables can only ADD candidates: every exhaustive-true
     // neighbor found by 1 table is still found by 4 (per-probe hit
     // count is monotone in tables).
-    val multi4 = Similarity.lshSearchMulti(spark, vecs, probes,
+    val multi4 = Similarity.lshSearchMulti(vecs, probes,
       nPlanes = 8, tables = 4, k = 5)
     val bf = rows(Similarity.topKPerProbe(
       vecs.withColumnRenamed("vec_id", "id"),

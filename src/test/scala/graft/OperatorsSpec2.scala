@@ -563,7 +563,7 @@ class OperatorsSpec2 extends SparkSpec {
       (4L, Array(9.0f, 10.0f)), (5L, Array(10.0f, 9.0f)),
       (6L, Array(11.0f, 11.0f))).toDF("vec_id", "embedding")
     val model = Ivf.train(spark, emb, k = 2, iters = 3)
-    val indexed = Ivf.index(spark, emb, model)
+    val indexed = Ivf.index(emb, model)
     val got = Ivf.prototypes(spark, indexed, model)
       .as[(Int, Long, Double)].collect().sortBy(_._1)
     assert(got.length == 2, s"one prototype per non-empty cell: ${got.toSeq}")

@@ -13,7 +13,7 @@ class OpqSpec extends SparkSpec {
   test("rotation is orthogonal: norms and pairwise dots are preserved") {
     import spark.implicits._
     val orig = emb.as[(Long, Array[Float])].collect().toMap
-    val rotd = Opq.rotate(spark, emb, rot).as[(Long, Array[Float])].collect().toMap
+    val rotd = Opq.rotate(emb, rot).as[(Long, Array[Float])].collect().toMap
     assert(rotd.keySet == orig.keySet)
     def dot(a: Array[Float], b: Array[Float]): Double = {
       var s = 0.0; var i = 0
@@ -39,7 +39,7 @@ class OpqSpec extends SparkSpec {
   test("Householder reflection is an involution: rotate twice = identity") {
     import spark.implicits._
     val orig = emb.as[(Long, Array[Float])].collect().toMap
-    val twice = Opq.rotate(spark, Opq.rotate(spark, emb, rot), rot)
+    val twice = Opq.rotate(Opq.rotate(emb, rot), rot)
       .as[(Long, Array[Float])].collect().toMap
     orig.foreach { case (id, v) =>
       v.zip(twice(id)).zipWithIndex.foreach { case ((x, y), d) =>
@@ -53,7 +53,7 @@ class OpqSpec extends SparkSpec {
     import spark.implicits._
     // The portability contract behind q78's oracle: same fold order,
     // same double ops, same float32 cast — EXACT equality, no tolerance.
-    val got = Opq.rotate(spark, emb, rot).as[(Long, Array[Float])].collect().toMap
+    val got = Opq.rotate(emb, rot).as[(Long, Array[Float])].collect().toMap
     emb.as[(Long, Array[Float])].collect().foreach { case (id, v) =>
       var s = 0.0; var i = 0
       while (i < v.length) { s += rot.u(i) * v(i).toDouble; i += 1 }
@@ -72,7 +72,7 @@ class OpqSpec extends SparkSpec {
     // the driver (LocalRelation input), SparkException-wrapped when it
     // runs in a task — loud either way.
     val ex = intercept[Exception] {
-      Opq.rotate(spark, wide, rot).collect()
+      Opq.rotate(wide, rot).collect()
     }
     assert(ex.isInstanceOf[org.apache.spark.SparkException] ||
       ex.isInstanceOf[IllegalArgumentException], ex.toString)
@@ -82,14 +82,14 @@ class OpqSpec extends SparkSpec {
   test("allocate learns a variance-balancing PERMUTATION (orthogonal, " +
       "deterministic, subspace variances provably rebalanced)") {
     import spark.implicits._
-    val mixed = Opq.rotate(spark, emb, rot)
-    val alloc = Opq.allocate(spark, mixed, dim = 64, nSub = 4)
+    val mixed = Opq.rotate(emb, rot)
+    val alloc = Opq.allocate(mixed, dim = 64, nSub = 4)
     // A permutation of 0..63, exactly once each — orthogonality by
     // construction.
     assert(alloc.perm.sorted.sameElements(0 until 64), alloc.perm.toSeq)
     // Deterministic across recomputation (the oracle-parity property:
     // snapped variances + closed-form snake leave nothing to ordering).
-    assert(Opq.allocate(spark, mixed, 64, 4).perm.sameElements(alloc.perm))
+    assert(Opq.allocate(mixed, 64, 4).perm.sameElements(alloc.perm))
     // It actually balances: per-subspace total variance spread (max/min)
     // must shrink vs the unpermuted layout. Compute both from one
     // driver-side pass over the collected corpus (500 x 64 — test data).
@@ -110,7 +110,7 @@ class OpqSpec extends SparkSpec {
     assert(after <= before,
       s"allocation worsened subspace variance spread: $before -> $after")
     // Permute round-trips the multiset of components per vector.
-    val permuted = Opq.permute(spark, mixed, alloc)
+    val permuted = Opq.permute(mixed, alloc)
       .as[(Long, Array[Float])].collect().toMap
     mixed.as[(Long, Array[Float])].collect().foreach { case (id, v) =>
       assert(permuted(id).sorted.sameElements(v.sorted), s"vec $id lost mass")
@@ -135,8 +135,8 @@ class OpqSpec extends SparkSpec {
       s"objective rose: ${learned.errors.toSeq}")
     // The rotated corpus still searches: top-k from the learned space
     // is well-formed (5 probes x 5 ranked neighbors).
-    val rotated = Opq.rotateDense(spark, full, learned.rotation)
-    val encoded = graft.operators.Pq.encode(spark, rotated, learned.model)
+    val rotated = Opq.rotateDense(full, learned.rotation)
+    val encoded = graft.operators.Pq.encode(rotated, learned.model)
     val probes = rotated.filter(col("vec_id") < 5)
     val top = graft.operators.Pq.search(spark, encoded, learned.model,
       probes, k = 5)

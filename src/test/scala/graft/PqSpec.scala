@@ -13,7 +13,7 @@ class PqSpec extends SparkSpec {
 
   test("codes are per-subspace cell ids in [0, k)") {
     import spark.implicits._
-    val codes = Pq.encode(spark, emb, model)
+    val codes = Pq.encode(emb, model)
       .select("codes").as[Seq[Int]].collect()
     assert(codes.nonEmpty)
     codes.foreach { cs =>
@@ -31,13 +31,13 @@ class PqSpec extends SparkSpec {
     // cosine in one pass — and require bit-level agreement with the
     // distributed table-join path (same sequential double arithmetic).
     val probesDf = emb.filter(col("vec_id") < 5)
-    val got = Pq.search(spark, Pq.encode(spark, emb, model), model, probesDf, k = 5)
+    val got = Pq.search(spark, Pq.encode(emb, model), model, probesDf, k = 5)
       .select("probe_id", "neighbor_id", "pq_cos", "rnk")
       .as[(Long, Long, Double, Int)].collect()
     assert(got.length == 25, s"expected 5 probes x top-5, got ${got.length}")
 
     val vecs = emb.as[(Long, Array[Float])].collect().toMap
-    val codes = Pq.encode(spark, emb, model).as[(Long, Seq[Int])].collect().toMap
+    val codes = Pq.encode(emb, model).as[(Long, Seq[Int])].collect().toMap
     def recon(cs: Seq[Int]): Array[Float] =
       cs.zipWithIndex.flatMap { case (c, j) =>
         model.subModels(j).centroids.find(_._1 == c).get._2
@@ -81,7 +81,7 @@ class PqSpec extends SparkSpec {
     // nSub*subDim would silently score truncated numerators against a
     // full-width norm — search must refuse it like train() refuses a
     // non-tiling corpus.
-    val enc = Pq.encode(spark, emb, model)
+    val enc = Pq.encode(emb, model)
     val bad = emb.select(col("vec_id"),
       slice(col("embedding"), 1, 17).as("embedding"))
     val ex = intercept[IllegalArgumentException] {
@@ -112,7 +112,7 @@ class PqSpec extends SparkSpec {
     def avgErr(k: Int): Double = {
       val m = Pq.train(spark, emb, nSub = 4, subDim = 16, k = k,
         iters = 2, meanRound = 4)
-      val codes = Pq.encode(spark, emb, m).as[(Long, Seq[Int])].collect().toMap
+      val codes = Pq.encode(emb, m).as[(Long, Seq[Int])].collect().toMap
       val vecs = emb.as[(Long, Array[Float])].collect()
       val errs = vecs.map { case (id, v) =>
         val r = codes(id).zipWithIndex.flatMap { case (c, j) =>

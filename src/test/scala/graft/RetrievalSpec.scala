@@ -33,7 +33,7 @@ class RetrievalSpec extends SparkSpec {
 
   private def run(corpus: Seq[(Long, Seq[String])], terms: Seq[String]): Map[Long, Double] = {
     import spark.implicits._
-    Retrieval.bm25(spark, toksDf(corpus), terms)
+    Retrieval.bm25(toksDf(corpus), terms)
       .select("doc_id", "score").as[(Long, Double)].collect().toMap
   }
 
@@ -50,7 +50,7 @@ class RetrievalSpec extends SparkSpec {
     // n_terms counts DISTINCT matched query terms (the AND-semantics
     // signal): doc1 has x and y, doc2 only x.
     import spark.implicits._
-    val nTerms = Retrieval.bm25(spark, toksDf(corpus), Seq("x", "y"))
+    val nTerms = Retrieval.bm25(toksDf(corpus), Seq("x", "y"))
       .select("doc_id", "n_terms").as[(Long, Long)].collect().toMap
     assert(nTerms == Map(1L -> 2L, 2L -> 1L, 4L -> 2L))
     want.foreach { case (id, s) =>
@@ -167,10 +167,10 @@ class RetrievalSpec extends SparkSpec {
         i.toLong -> Seq.fill(1 + rnd.nextInt(12))(vocab(rnd.nextInt(vocab.size)))
       }
       val terms = Seq("x", "y", "z")
-      val index = Retrieval.buildTextIndex(spark, toksDf(corpus))
-      val viaIndex = Retrieval.bm25FromIndex(spark, index, terms)
+      val index = Retrieval.buildTextIndex(toksDf(corpus))
+      val viaIndex = Retrieval.bm25FromIndex(index, terms)
         .as[(Long, Long, Double)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
-      val direct = Retrieval.bm25(spark, toksDf(corpus), terms)
+      val direct = Retrieval.bm25(toksDf(corpus), terms)
         .as[(Long, Long, Double)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
       assert(viaIndex.keySet == direct.keySet, s"trial $trial")
       direct.foreach { case (id, (n, sc)) =>
@@ -187,10 +187,10 @@ class RetrievalSpec extends SparkSpec {
     // A second query against the SAME index reuses the materialized
     // postings — df covers the full vocabulary up front.
     val corpus = Seq(1L -> Seq("a", "b", "a"), 2L -> Seq("b", "c"))
-    val index = Retrieval.buildTextIndex(spark, toksDf(corpus))
-    val q1 = Retrieval.bm25FromIndex(spark, index, Seq("a"))
+    val index = Retrieval.buildTextIndex(toksDf(corpus))
+    val q1 = Retrieval.bm25FromIndex(index, Seq("a"))
       .select("doc_id").as[Long].collect().toSet
-    val q2 = Retrieval.bm25FromIndex(spark, index, Seq("c"))
+    val q2 = Retrieval.bm25FromIndex(index, Seq("c"))
       .select("doc_id").as[Long].collect().toSet
     assert(q1 == Set(1L) && q2 == Set(2L))
     // Postings carry exact tf/dl: doc1 has tf(a)=2, dl=3.
@@ -203,13 +203,13 @@ class RetrievalSpec extends SparkSpec {
     import java.io.{ByteArrayOutputStream, PrintStream}
     val corpus = Seq(
       1L -> Seq("a", "b", "a"), 2L -> Seq("b", "c"), 3L -> Seq("c", "d"))
-    val index = Retrieval.buildTextIndex(spark, toksDf(corpus))
+    val index = Retrieval.buildTextIndex(toksDf(corpus))
     Retrieval.writeTextIndex(index, "rsp_tidx", buckets = 8)
     try {
       val reopened = Retrieval.readTextIndex(spark, "rsp_tidx")
       // Values survive the round-trip.
       import spark.implicits._
-      val got = Retrieval.bm25FromIndex(spark, reopened, Seq("a"))
+      val got = Retrieval.bm25FromIndex(reopened, Seq("a"))
         .select("doc_id").as[Long].collect().toSet
       assert(got == Set(1L))
       // THE scale property: a term lookup reads only its bucket — the
@@ -217,7 +217,7 @@ class RetrievalSpec extends SparkSpec {
       // bucketing (or the pushdown) silently broke.
       val out = new ByteArrayOutputStream()
       Console.withOut(new PrintStream(out, true, "UTF-8")) {
-        Retrieval.bm25FromIndex(spark, reopened, Seq("a")).explain("formatted")
+        Retrieval.bm25FromIndex(reopened, Seq("a")).explain("formatted")
       }
       val p = out.toString("UTF-8")
       assert(p.contains("SelectedBucketsCount: 1 out of 8"), p)
@@ -268,7 +268,7 @@ class RetrievalSpec extends SparkSpec {
 
   test("bm25 rejects an empty term list; rrf rejects bad inputs") {
     intercept[IllegalArgumentException] {
-      Retrieval.bm25(spark, toksDf(Seq(1L -> Seq("a"))), Seq.empty)
+      Retrieval.bm25(toksDf(Seq(1L -> Seq("a"))), Seq.empty)
     }
     intercept[IllegalArgumentException] {
       Retrieval.rrf(Seq.empty, Seq("doc_id"))

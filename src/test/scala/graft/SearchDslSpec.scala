@@ -135,7 +135,7 @@ class SearchDslSpec extends SparkSpec {
       2L -> Seq("mid", "common"),
       3L -> Seq("common", "other"),
       4L -> Seq("common", "other"))
-    val idx = Retrieval.buildTextIndex(spark, toksDf(corpus))
+    val idx = Retrieval.buildTextIndex(toksDf(corpus))
     val n = 4.0
     def tfidf(tf: Long, df: Long) = tf * math.log((n + 1) / (df + 1.0))
     val expectOrder = Seq(
@@ -145,7 +145,7 @@ class SearchDslSpec extends SparkSpec {
     assert(SearchDsl.mltTerms(idx, 1L, maxQueryTerms = 10) == expectOrder)
     // Ties break on term: two terms with identical tf and df.
     val tied = Seq(1L -> Seq("zz", "aa"), 2L -> Seq("x"))
-    val idx2 = Retrieval.buildTextIndex(spark, toksDf(tied))
+    val idx2 = Retrieval.buildTextIndex(toksDf(tied))
     assert(SearchDsl.mltTerms(idx2, 1L, maxQueryTerms = 2) == Seq("aa", "zz"))
     intercept[IllegalArgumentException] { SearchDsl.mltTerms(idx, 1L, 0) }
   }
@@ -421,7 +421,7 @@ class SearchDslSpec extends SparkSpec {
       .as[(Long, Double, Long)].collect().toSeq
     // Manual composition of the same clauses (each independently
     // oracle-gated; here we pin the WIRING).
-    val manual = Retrieval.bm25(spark, toks, Seq("data", "spark"))
+    val manual = Retrieval.bm25(toks, Seq("data", "spark"))
       .join(toks.filter(!array_contains(col("toks"), "bad")).select("doc_id"), "doc_id")
       .join(meta.filter(col("lang") === "en").select("doc_id"), "doc_id")
       .select(col("doc_id"), (floor(col("score") * 100 + 0.5) / 100).as("score"))
@@ -472,7 +472,7 @@ class SearchDslSpec extends SparkSpec {
       must = Seq("data", "spark"), mustNot = Seq("bad"),
       filter = Some(col("lang") === "en"), size = 3,
       highlight = Some("spark"), facet = Some("source"))
-    val index = Retrieval.buildTextIndex(spark, toks)
+    val index = Retrieval.buildTextIndex(toks)
     def page(r: SearchDsl.SearchResponse) = r.hits
       .select("doc_id", "score", "rank").as[(Long, Double, Long)].collect().toSeq
     val direct = SearchDsl.search(toks, meta, req)
@@ -830,7 +830,7 @@ class SearchDslSpec extends SparkSpec {
       3L -> Seq("y", "z")))
     val fb = toksDf(Seq(1L -> Seq("q"), 2L -> Seq("data"), 3L -> Seq("r")))
     def scores(tpe: String): Map[Long, Double] =
-      SearchDsl.multiMatch(spark, Seq((fa, 1.0), (fb, 2.0)), Seq("data"),
+      SearchDsl.multiMatch(Seq((fa, 1.0), (fb, 2.0)), Seq("data"),
           matchType = tpe, tieBreaker = 0.5)
         .as[(Long, Double)].collect().toMap
     val best = scores("best_fields")
@@ -859,10 +859,10 @@ class SearchDslSpec extends SparkSpec {
     assert(most(2L) == sm)
     assert(!best.contains(3L), "non-matching doc must not appear")
     intercept[IllegalArgumentException] {
-      SearchDsl.multiMatch(spark, Seq((fa, 1.0)), Seq("data"), "cross_fields")
+      SearchDsl.multiMatch(Seq((fa, 1.0)), Seq("data"), "cross_fields")
     }
     intercept[IllegalArgumentException] {
-      SearchDsl.multiMatch(spark, Seq.empty, Seq("data"))
+      SearchDsl.multiMatch(Seq.empty, Seq("data"))
     }
   }
 

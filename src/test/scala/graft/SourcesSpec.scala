@@ -165,7 +165,7 @@ class SourcesSpec extends SparkSpec {
     assert(remaining.filter(col("shard") === 1).count() == 0)
     assert(remaining.count() == 100 - deleted)
     // A16/A13: sharded catalog table round-trip.
-    Maintenance.createIndex(spark, "graft_test_index", remaining, shards = 4)
+    Maintenance.createIndex("graft_test_index", remaining, shards = 4)
     assert(Maintenance.countIndex(spark, "graft_test_index") == 100 - deleted)
     assert(spark.table("graft_test_index").rdd.getNumPartitions == 4)
     Maintenance.dropIndex(spark, "graft_test_index")

@@ -13,17 +13,20 @@ class SpanDedupSpec extends SparkSpec {
     rows.toDF("doc_id", "toks")
   }
 
-  private def spans(rows: Seq[(Long, Seq[String])], k: Int): Seq[(Long, Long, Long)] = {
+  private def sorted(df: DataFrame): Seq[(Long, Long, Long)] = {
     import spark.implicits._
-    SpanDedup.duplicatedSpans(toksDf(rows), k)
-      .as[(Long, Long, Long)].collect().toSeq.sorted
+    df.as[(Long, Long, Long)].collect().toSeq.sorted
   }
 
-  /** Salt-regime pin: 0 forces the salted big-regime plan on tiny
-    * inputs, Long.MaxValue forces the small-regime window plan.
+  private def spans(rows: Seq[(Long, Seq[String])], k: Int): Seq[(Long, Long, Long)] =
+    sorted(SpanDedup.duplicatedSpans(toksDf(rows), k))
+
+  /** Salt-regime pin: `salted` forces the big-regime plan on tiny
+    * inputs, which would otherwise take the small-regime window plan.
     */
-  private def inRegime[T](thresholdBytes: Long)(f: => T): T =
-    withSparkConf(SpanDedup.SaltThresholdConf, thresholdBytes.toString)(f)
+  private def spansIn(salted: Boolean)(rows: Seq[(Long, Seq[String])],
+      k: Int): Seq[(Long, Long, Long)] =
+    sorted(SpanDedup.duplicatedSpans(toksDf(rows), k, salted))
 
   /** Naive local replay: mark k-gram occurrences whose gram text occurs
     * more than once corpus-wide, merge marks that overlap or touch.
@@ -117,10 +120,10 @@ class SpanDedupSpec extends SparkSpec {
     }
     (0 until 4).foreach { trial =>
       val rows = corpusGen.apply(Gen.Parameters.default, Seed(9090L + trial)).get
-      // threshold 0 forces the salted big-regime plan the test exists
-      // for — tiny adversarial corpora would otherwise take the small
-      // regime and never touch the salt machinery.
-      assert(inRegime(0L)(spans(rows, 3)) == spansLocal(rows, 3), s"trial $trial")
+      // Forced salted big-regime plan, the one the test exists for —
+      // tiny adversarial corpora would otherwise take the small regime
+      // and never touch the salt machinery.
+      assert(spansIn(salted = true)(rows, 3) == spansLocal(rows, 3), s"trial $trial")
     }
   }
 
@@ -131,15 +134,17 @@ class SpanDedupSpec extends SparkSpec {
       i.toLong -> Seq.fill(rnd.nextInt(15))(vocab(rnd.nextInt(vocab.size)))
     }
     val ref = Seq(200L -> Seq("a", "b", "c", "d", "e"))
-    import spark.implicits._
-    val small = inRegime(Long.MaxValue)(spans(rows, 3))
-    val salted = inRegime(0L)(spans(rows, 3))
+    val small = spansIn(salted = false)(rows, 3)
+    val salted = spansIn(salted = true)(rows, 3)
     assert(small == salted)
     assert(small == spansLocal(rows, 3))
-    def matched(): Seq[(Long, Long, Long)] =
-      SpanDedup.matchedSpans(toksDf(rows), toksDf(ref), 3)
-        .as[(Long, Long, Long)].collect().toSeq.sorted
-    assert(inRegime(Long.MaxValue)(matched()) == inRegime(0L)(matched()))
+    // matchedSpans' mark join in each regime, and the gated call.
+    def matched(salted: Boolean): Seq[(Long, Long, Long)] =
+      sorted(SpanDedup.markAndMerge(SpanDedup.gramOccurrences(toksDf(rows), 3),
+        SpanDedup.gramOccurrences(toksDf(ref), 3).select("gh").distinct(), 3, salted))
+    assert(matched(salted = false) == matched(salted = true))
+    assert(sorted(SpanDedup.matchedSpans(toksDf(rows), toksDf(ref), 3)) ==
+      matched(salted = false))
   }
 
   test("removeSpans cuts exactly the span tokens and passes novel docs through") {

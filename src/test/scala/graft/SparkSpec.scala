@@ -10,19 +10,6 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
 
-  /** Run `f` with a session conf pinned, restoring (or unsetting) the
-    * prior value after — shared by the regime-pinning specs so the
-    * set/restore semantics live once.
-    */
-  protected def withSparkConf[T](key: String, value: String)(f: => T): T = {
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try f finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   /** Runs `body` with a QueryExecutionListener that hands every query
     * it executes (succeeded or failed) to `record`, and returns once the
     * listener has seen them all: events arrive asynchronously but in

@@ -247,7 +247,7 @@ class StreamingTwinSpec extends SparkSpec {
 
     def bucketRows(df: org.apache.spark.sql.DataFrame) = {
       val toks = df.select(col("doc_id"), tokens(col("text")).as("toks"))
-      val scored = NgramLm.score(spark, toks, NgramLm.train(spark, toks))
+      val scored = NgramLm.score(toks, NgramLm.train(toks))
         .select(col("doc_id"),
           (floor(col("nll") * 100 + lit(0.5)) / 100).as("nll"))
         .join(df.select("doc_id", "source"), "doc_id")
@@ -282,7 +282,7 @@ class StreamingTwinSpec extends SparkSpec {
       deliverEnvelopes(tmp,
         rows.select(to_json(struct(col("vec_id"), col("embedding"))).as("line"),
           col("vec_id").cast("string").as("recordId")),
-        payloadSchema, enrich = df => Ivf.withCell(spark, df, model),
+        payloadSchema, enrich = df => Ivf.withCell(df, model),
         tag = batchTag)
     def liveSearch(probes: org.apache.spark.sql.DataFrame) =
       Ivf.search(spark,
@@ -293,7 +293,7 @@ class StreamingTwinSpec extends SparkSpec {
         .as[(Long, Long, Double, Int)].collect().toSet
     def batchSearch(corpus: org.apache.spark.sql.DataFrame,
         probes: org.apache.spark.sql.DataFrame) =
-      Ivf.search(spark, Ivf.index(spark, corpus, model), model, probes,
+      Ivf.search(spark, Ivf.index(corpus, model), model, probes,
           k = 10, nprobe = 3)
         .select("probe_id", "neighbor_id", "cos", "rnk")
         .as[(Long, Long, Double, Int)].collect().toSet
@@ -338,7 +338,7 @@ class StreamingTwinSpec extends SparkSpec {
     deliverEnvelopes(tmp,
       rows.select(to_json(struct(col("vec_id"), col("embedding"))).as("line"),
         col("vec_id").cast("string").as("recordId")),
-      payloadSchema, enrich = df => IvfPq.withCellCodes(spark, df, model))
+      payloadSchema, enrich = df => IvfPq.withCellCodes(df, model))
     val probes = rows.filter(col("vec_id") < 5)
     val live = IvfPq.search(spark,
         IndexSink.liveVectors(spark, s"$tmp/index", "recordId")
@@ -346,7 +346,7 @@ class StreamingTwinSpec extends SparkSpec {
         model, probes, k = 5, nprobe = 2)
       .select("probe_id", "neighbor_id", "pq_cos", "rnk")
       .as[(Long, Long, Double, Int)].collect().toSet
-    val batch = IvfPq.search(spark, IvfPq.encode(spark, rows, model), model,
+    val batch = IvfPq.search(spark, IvfPq.encode(rows, model), model,
         probes, k = 5, nprobe = 2)
       .select("probe_id", "neighbor_id", "pq_cos", "rnk")
       .as[(Long, Long, Double, Int)].collect().toSet
@@ -376,13 +376,13 @@ class StreamingTwinSpec extends SparkSpec {
       payloadSchema,
       enrich = df => Similarity.hyperplaneLsh(df, nPlanes = 8, dim = dim))
     val probes = emb.filter(col("vec_id") < 5)
-    val live = Similarity.lshSearch(spark,
+    val live = Similarity.lshSearch(
         IndexSink.liveVectors(spark, s"$tmp/index", "recordId")
           .select("vec_id", "embedding", "bucket"),
         probes, nPlanes = 8, k = 5, dim = dim)
       .select("probe_id", "neighbor_id", "cos", "rnk")
       .as[(Long, Long, Double, Int)].collect().toSet
-    val batch = Similarity.lshSearch(spark,
+    val batch = Similarity.lshSearch(
         Similarity.hyperplaneLsh(emb, nPlanes = 8, dim = dim),
         probes, nPlanes = 8, k = 5, dim = dim)
       .select("probe_id", "neighbor_id", "cos", "rnk")
@@ -410,13 +410,13 @@ class StreamingTwinSpec extends SparkSpec {
       payloadSchema,
       enrich = df => Similarity.multiBuckets(df, nPlanes = 4, tables = 4, dim = dim))
     val probes = emb.filter(col("vec_id") < 5)
-    val live = Similarity.lshSearchMultiBucketed(spark,
+    val live = Similarity.lshSearchMultiBucketed(
         IndexSink.liveVectors(spark, s"$tmp/index", "recordId")
           .select("vec_id", "embedding", "buckets"),
         probes, nPlanes = 4, tables = 4, k = 5, dim = dim)
       .select("probe_id", "neighbor_id", "cos", "rnk")
       .as[(Long, Long, Double, Int)].collect().toSet
-    val batch = Similarity.lshSearchMulti(spark, emb, probes,
+    val batch = Similarity.lshSearchMulti(emb, probes,
         nPlanes = 4, tables = 4, k = 5, dim = dim)
       .select("probe_id", "neighbor_id", "cos", "rnk")
       .as[(Long, Long, Double, Int)].collect().toSet
@@ -584,7 +584,7 @@ class StreamingTwinSpec extends SparkSpec {
     // per-query cost is the terms' postings, never the corpus.
     val out = new java.io.ByteArrayOutputStream()
     Console.withOut(new java.io.PrintStream(out, true, "UTF-8")) {
-      graft.operators.Retrieval.bm25FromIndex(spark,
+      graft.operators.Retrieval.bm25FromIndex(
         LiveTextIndex.read(spark, spec.root), Seq("deposit", "mortgage"))
         .explain("formatted")
     }
@@ -966,7 +966,7 @@ class StreamingTwinSpec extends SparkSpec {
     import spark.implicits._
     val emb = queries.Tables.t(spark, sfDir, "embeddings")
     val model = Ivf.train(spark, emb, k = 8, iters = 3)
-    val indexed = Ivf.index(spark, emb, model)
+    val indexed = Ivf.index(emb, model)
     assert(indexed.select(countDistinct(col("cell"))).head().getLong(0) > 1)
     val probes = emb.filter(col("vec_id") < 5)
     val ivfTop = Ivf.search(spark, indexed, model, probes, k = 10, nprobe = 4)
@@ -1071,12 +1071,12 @@ class StreamingTwinSpec extends SparkSpec {
     val rBody = bodyToks(resolved)
     val rTitle = titleToks(resolved)
     for (mt <- Seq("best_fields", "most_fields")) {
-      val live = SearchDsl.multiMatchFromIndexes(spark,
+      val live = SearchDsl.multiMatchFromIndexes(
           Seq((LiveTextIndex.read(spark, bodyRoot), 1.0),
             (LiveTextIndex.read(spark, titleRoot), 2.0)),
           Seq("data", "spark"), mt, tieBreaker = 0.3)
         .as[(String, Double)].collect().toMap
-      val batch = SearchDsl.multiMatch(spark,
+      val batch = SearchDsl.multiMatch(
           Seq((rBody, 1.0), (rTitle, 2.0)),
           Seq("data", "spark"), mt, tieBreaker = 0.3)
         .as[(String, Double)].collect().toMap

@@ -27,7 +27,7 @@ class TriplesSpec extends SparkSpec {
     .select(col("doc_id"), graft.functions.TextFunctions.tokens(col("text")).as("toks"))
 
   test("mine: positive from the pair, negative excludes self/gold/linked") {
-    val index = Retrieval.buildTextIndex(spark, toksDf)
+    val index = Retrieval.buildTextIndex(toksDf)
     // hand-declared pair graph: (1,2) strongest, (1,5) also linked
     val pairs = Seq((1L, 2L, 0.9), (1L, 5L, 0.85)).toDF("id1", "id2", "jaccard")
     val got = Triples.mine(pairs, index, nAnchors = 1)
@@ -43,7 +43,7 @@ class TriplesSpec extends SparkSpec {
 
   test("mine: two anchors rank independently; anchors with no eligible " +
       "candidate drop out") {
-    val index = Retrieval.buildTextIndex(spark, toksDf)
+    val index = Retrieval.buildTextIndex(toksDf)
     val pairs = Seq((1L, 2L, 0.9), (3L, 4L, 0.88)).toDF("id1", "id2", "jaccard")
     val got = Triples.mine(pairs, index, nAnchors = 2)
       .select("anchor", "positive", "negative", "neg_score")
@@ -58,7 +58,7 @@ class TriplesSpec extends SparkSpec {
     // a tiny corpus where every candidate is excluded -> anchor drops
     val toksTiny = docs.take(2).toDF("doc_id", "text")
       .select(col("doc_id"), graft.functions.TextFunctions.tokens(col("text")).as("toks"))
-    val idxTiny = Retrieval.buildTextIndex(spark, toksTiny)
+    val idxTiny = Retrieval.buildTextIndex(toksTiny)
     val lone = Triples.mine(Seq((1L, 2L, 0.9)).toDF("id1", "id2", "jaccard"),
       idxTiny, nAnchors = 1)
     assert(lone.count() == 0)
