@@ -69,6 +69,15 @@ object Retrieval {
       .groupBy("doc_id", "term")
       .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
     val df = tf.groupBy("term").agg(count(lit(1)).cast("double").as("df"))
+    score(tf, df, stats, k1, b)
+  }
+
+  /** The BM25 chain both entry points share: (doc_id, n_terms, score)
+    * from the query terms' tf rows (term, doc_id, tf, dl), their df rows
+    * (term, df) and the one-row (n, avgdl) stats.
+    */
+  private def score(tf: DataFrame, df: DataFrame, stats: DataFrame,
+      k1: Double, b: Double): DataFrame =
     tf.join(broadcast(df), "term")
       .crossJoin(broadcast(stats))
       .select(col("doc_id"),
@@ -79,7 +88,6 @@ object Retrieval {
           .as("term_score"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_terms"), sum(col("term_score")).as("score"))
-  }
 
   /** A materialized text index: the postings list plus its corpus
     * statistics — what OpenSearch maintains incrementally and
@@ -138,17 +146,8 @@ object Retrieval {
   def bm25FromIndex(index: TextIndex, terms: Seq[String],
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "bm25 needs at least one query term")
-    index.postings.filter(col("term").isin(terms: _*))
-      .join(broadcast(index.df.filter(col("term").isin(terms: _*))), "term")
-      .crossJoin(broadcast(index.stats))
-      .select(col("doc_id"),
-        (log(lit(1.0) + (col("n") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
-          * col("tf") * lit(k1 + 1.0)
-          / (col("tf") + lit(k1)
-            * (lit(1.0) - lit(b) + lit(b) * col("dl") / col("avgdl"))))
-          .as("term_score"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_terms"), sum(col("term_score")).as("score"))
+    score(index.postings.filter(col("term").isin(terms: _*)),
+      index.df.filter(col("term").isin(terms: _*)), index.stats, k1, b)
   }
 
   /** Persist `index` as warehouse tables, the postings BUCKETED BY

@@ -125,75 +125,31 @@ object Tables {
       p.getFileSystem(spark.sessionState.newHadoopConf()).getFileStatus(p).getLen
     }.getOrElse(0L)
 
-  /** `f` over the parquet footer at `path`; throws when it cannot be
-    * read (callers go through [[cachedRead]]).
-    */
-  private def readFooter[V](spark: SparkSession, path: String)(
-      f: org.apache.parquet.hadoop.ParquetFileReader => V): V = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(path),
-      spark.sessionState.newHadoopConf())
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try f(r) finally r.close()
-  }
-
   // An unreadable footer (e.g. a DIRECTORY-shaped table a caller fed
   // through the single-file loader) safely declines the rebalance
   // instead of failing the read.
   private[graft] def footerMeta(spark: SparkSession, path: String): (Int, Long) =
     cachedRead(footerCache, path) {
-      readFooter(spark, path) { r =>
-        import scala.jdk.CollectionConverters._
-        (r.getRowGroups.size,
-          r.getRowGroups.asScala.map(_.getRowCount).sum)
-      }
+      import scala.jdk.CollectionConverters._
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(path), spark.sessionState.newHadoopConf()))
+      try (r.getRowGroups.size, r.getRowGroups.asScala.map(_.getRowCount).sum)
+      finally r.close()
     }.getOrElse((Int.MaxValue, 0L))
 
-  private val tsNanosCache =
-    scala.collection.concurrent.TrieMap.empty[String, Boolean]
-
-  /** Whether the footer declares column `ts` as TIMESTAMP(NANOS). An
-    * unreadable footer answers true, so such a file keeps the legacy
-    * read that a NANOS column needs.
-    */
-  private def tsIsNanos(spark: SparkSession, path: String): Boolean =
-    cachedRead(tsNanosCache, path)(readFooter(spark, path) { r =>
-      import org.apache.parquet.schema.LogicalTypeAnnotation._
-      val schema = r.getFileMetaData.getSchema
-      schema.containsField("ts") &&
-        (schema.getType(schema.getFieldIndex("ts")).getLogicalTypeAnnotation match {
-          case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
-          case _ => false
-        })
-    }).getOrElse(true)
-
-  /** `events.ts` has shipped as two different parquet types across
-    * testdata generations, so the reader adapts to the file's schema
-    * instead of assuming one:
-    *
-    *  - TIMESTAMP(NANOS): Spark's vectorized reader rejects it
-    *    outright; legacy long mode reads raw nanos, truncated here to
-    *    micros — exactly what DuckDB does when it loads the same file
-    *    into its micro-precision TIMESTAMP. Only when the footer
-    *    declares this type (or cannot be read) does the read set
-    *    `spark.sql.legacy.parquet.nanosAsLong` — and that still sets
-    *    it on the SESSION, so every later query runs under the legacy
-    *    flag;
-    *  - timestamp[us] with isAdjustedToUTC=false: arrives as
-    *    TIMESTAMP_NTZ; cast to the session-zone type every downstream
-    *    query expects. All graft sessions pin the session zone to UTC,
-    *    so the cast preserves the wall-clock value DuckDB sees in its
-    *    naive TIMESTAMP read of the same file. This read leaves the
-    *    session conf untouched.
+  /** `events.ts` is `timestamp[us]` with isAdjustedToUTC=false at
+    * every tier: it arrives as TIMESTAMP_NTZ and is cast to the
+    * session-zone type every downstream query expects. All graft
+    * sessions pin the session zone to UTC, so the cast preserves the
+    * wall-clock value DuckDB sees in its naive TIMESTAMP read of the
+    * same file. A TIMESTAMP(NANOS) file fails at read with Spark's own
+    * error; this read never changes the session conf.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
     val path = s"$dir/events.parquet"
-    if (tsIsNanos(spark, path))
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(path)
     val adapted = raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       case org.apache.spark.sql.types.TimestampNTZType =>
         raw.withColumn("ts", col("ts").cast("timestamp"))
       case _ => raw // already the session-zone timestamp type

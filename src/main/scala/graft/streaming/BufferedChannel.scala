@@ -32,7 +32,12 @@ import org.apache.spark.sql.DataFrame
   * - a persisted flushed-epoch watermark (`_flushed_watermark`) makes a
   *   replayed epoch that was ALREADY promoted a no-op instead of a
   *   duplicate delivery. One sink root belongs to one checkpoint lineage
-  *   (epoch ids must be monotone — Structured Streaming's contract).
+  *   (epoch ids must be monotone — Structured Streaming's contract);
+  * - a staged epoch dir counts once it is committed (`_SUCCESS`, the
+  *   [[EpochStore.committed]] rule): a restart re-registers committed
+  *   leftovers as complete epochs and deletes unmarked ones, whose
+  *   batch never finished and is replayed. This holds on S3A too, where
+  *   the staging rename is a copy and is not atomic.
   *
   * Driver state is only (per-epoch byte map, firstArrival, object
   * counter, watermark) — O(staged epochs); the data itself never
@@ -56,13 +61,6 @@ final class BufferedChannel(root: String, maxBytes: Long, maxAgeMillis: Long,
   // Per-epoch payload bytes: a replayed epoch overwrites its dir, so its
   // previous contribution must be retracted, not double-counted.
   private val epochBytes = scala.collection.mutable.Map.empty[Long, Long]
-  // Epochs recovered from a crashed incarnation's staging area. Their
-  // part-set may be PARTIAL (the crash could have hit mid-write), so a
-  // size-triggered flush skips them — the imminent restart replay will
-  // overwrite them with the authoritative part-set. Only an AGE flush
-  // (or close()) delivers them as-is: if the replay hasn't arrived
-  // within maxAgeMillis, delivering recovered data beats orphaning it.
-  private val provisional = scala.collection.mutable.Set.empty[Long]
   // Highest epoch id already promoted to a delivery object; replays of
   // flushed epochs are skipped (they were delivered — re-staging them
   // would double-deliver on the next flush). Everything unreadable
@@ -79,16 +77,19 @@ final class BufferedChannel(root: String, maxBytes: Long, maxAgeMillis: Long,
   // scaladoc), so staged dirs a crashed incarnation left behind must be
   // re-registered here or they would be orphaned forever. Construction
   // is single-threaded — the append/flush race the registration rule
-  // guards against cannot occur yet. Epochs at/below the persisted
-  // watermark were already delivered: their leftovers (a crash mid-
-  // flush) are dropped, not double-delivered.
+  // guards against cannot occur yet. Only a COMMITTED dir counts
+  // ([[EpochStore.committed]]; both staging paths write `_SUCCESS`
+  // last): an unmarked one is an epoch whose batch never finished,
+  // which Structured Streaming replays, so it is deleted. Epochs
+  // at/below the persisted watermark were already delivered: their
+  // leftovers (a crash mid-flush) are dropped, not double-delivered.
   listDirs(staging).map(_.getPath).foreach { d =>
     val id = scala.util.Try(d.getName.stripPrefix("epoch=").toLong).getOrElse(-1L)
-    val recovered = if (id < 0 || id <= flushedEpochWatermark) 0L
+    val recovered =
+      if (id < 0 || id <= flushedEpochWatermark || !EpochStore.committed(fs, d)) 0L
       else partFiles(d).map(_.getLen).sum
     if (recovered > 0) {
       epochBytes(id) = recovered
-      provisional += id // possibly partial — see the field's scaladoc
       if (firstArrivalMs < 0) firstArrivalMs = System.currentTimeMillis()
     } else fs.delete(d, true)
   }
@@ -146,7 +147,6 @@ final class BufferedChannel(root: String, maxBytes: Long, maxAgeMillis: Long,
       val flushed = epochId <= flushedEpochWatermark && !epochBytes.contains(epochId)
       if (!flushed) {
         epochBytes.remove(epochId)
-        provisional -= epochId // the replay supersedes recovered bytes
         if (epochBytes.isEmpty) firstArrivalMs = -1L
         refreshStagedBytes()
       }
@@ -180,26 +180,17 @@ final class BufferedChannel(root: String, maxBytes: Long, maxAgeMillis: Long,
     maybeFlush(nowMs())
   }
 
-  /** Flush when size OR age threshold is met (Firehose: whichever first).
-    * A size-only trip excludes provisional (recovered, possibly partial)
-    * epochs — only the age path delivers those (see `provisional`).
-    */
+  /** Flush when size OR age threshold is met (Firehose: whichever first). */
   def maybeFlush(nowMs: Long): Boolean = synchronized {
     val aged = firstArrivalMs >= 0 && nowMs - firstArrivalMs >= maxAgeMillis
-    // The size trip counts only bytes a size flush would actually
-    // promote — the contiguous non-provisional PREFIX in epoch order
-    // (see flush()'s scaladoc): while a provisional epoch heads the
-    // staging order, total bytes may sit >= maxBytes with nothing
-    // promotable, and a trip that reports true while promoting nothing
-    // would spin every tick until the age path fires.
-    lazy val eligibleBytes = epochBytes.toSeq.sortBy(_._1).iterator
-      .takeWhile { case (e, _) => !provisional.contains(e) }.map(_._2).sum
-    if (aged && epochBytes.nonEmpty) { flush(includeProvisional = true); true }
-    else if (eligibleBytes >= maxBytes) { flush(includeProvisional = false); true }
-    else false
+    if ((aged && epochBytes.nonEmpty) || epochBytes.values.sum >= maxBytes) {
+      flush()
+      true
+    } else false
   }
 
-  /** Promote staged parts into one numbered delivery object.
+  /** Promote every staged epoch into one numbered delivery object and
+    * advance the watermark to the highest promoted epoch.
     *
     * Only epochs REGISTERED via `append()` (keys of `epochBytes`) are
     * promoted — never whatever happens to be under the staging dir. An
@@ -208,48 +199,18 @@ final class BufferedChannel(root: String, maxBytes: Long, maxAgeMillis: Long,
     * unregistered itself first (replay overwrite); listing the directory
     * would promote that half-committed epoch, advance the watermark past
     * it, and make its replay a no-op — permanent record loss. The unre-
-    * gistered dir simply stays staged and rides the next flush.
-    *
-    * `includeProvisional = false` (size-triggered) promotes only the
-    * longest PREFIX (in epoch order) of non-provisional epochs — not
-    * every non-provisional epoch. Skipping a provisional epoch but
-    * promoting later ones would advance the watermark PAST the skipped
-    * epoch (the watermark is one number: max promoted), and the next
-    * restart would then treat that never-delivered epoch as delivered
-    * and discard its staging dir — permanent loss. The prefix rule
-    * keeps the invariant every other path relies on: staged epochs are
-    * always strictly above the watermark. Since recovered (provisional)
-    * epochs precede any fresh append, in practice this means size trips
-    * deliver nothing until the recovered head is resolved by its replay
-    * or by an age flush — at most maxAgeMillis of deferral, which is
-    * Firehose's own delivery bound.
+    * gistered dir simply stays staged and rides the next flush. Every
+    * registered epoch is complete: it was staged by this incarnation,
+    * or recovered only because its dir was committed.
     *
     * The object dir is created lazily on the first promoted part file —
     * a flush whose epochs hold zero parts publishes NO empty object (and
     * consumes no object number): Firehose never emits zero-record
     * objects.
     */
-  def flush(includeProvisional: Boolean = true): Unit = synchronized {
-    val sorted = epochBytes.keys.toSeq.sorted
-    val epochs =
-      if (includeProvisional) sorted
-      else sorted.takeWhile(e => !provisional.contains(e))
+  def flush(): Unit = synchronized {
+    val epochs = epochBytes.keys.toSeq.sorted
     if (epochs.nonEmpty) {
-      // The watermark may only advance over epochs that were NON-
-      // provisional at promote time. A provisional epoch's part-set may
-      // be the partial leftover of a crashed write whose authoritative
-      // replay is still pending (e.g. the restarted query died before
-      // its first micro-batch and close()'s flush promoted the
-      // recovery); covering it with the watermark would make that
-      // replay a silent no-op — permanent loss of the unwritten parts.
-      // Left below the watermark, the replay re-stages and re-delivers
-      // the epoch: duplicates of the promoted parts (at-least-once, the
-      // reference's own retry model) instead of loss. Advancing over a
-      // HIGHER non-provisional epoch is safe even while a lower
-      // provisional one exists: appends arrive in epoch order, so a
-      // registered fresh epoch proves every lower epoch's replay
-      // already happened or never will.
-      val provisionalAtFlush = provisional.toSet
       var objDir: Path = null
       epochs.foreach { epochId =>
         val dir = new Path(staging, s"epoch=$epochId")
@@ -265,14 +226,12 @@ final class BufferedChannel(root: String, maxBytes: Long, maxAgeMillis: Long,
         }
         fs.delete(dir, true)
         epochBytes.remove(epochId)
-        provisional -= epochId
       }
-      if (epochBytes.isEmpty) firstArrivalMs = -1L
+      firstArrivalMs = -1L
       refreshStagedBytes()
-      val wmEligible = epochs.filterNot(provisionalAtFlush)
-      if (wmEligible.nonEmpty && wmEligible.max > flushedEpochWatermark) {
-        flushedEpochWatermark = wmEligible.max
-        BufferedChannel.writeWatermarkFile(fs, watermarkFile, wmEligible.max)
+      if (epochs.max > flushedEpochWatermark) {
+        flushedEpochWatermark = epochs.max
+        BufferedChannel.writeWatermarkFile(fs, watermarkFile, epochs.max)
       }
     }
   }
@@ -282,7 +241,7 @@ final class BufferedChannel(root: String, maxBytes: Long, maxAgeMillis: Long,
     * dead channel ticking in the shared scheduler forever.
     */
   def close(): Unit =
-    try flush(includeProvisional = true)
+    try flush()
     finally ageTick.foreach(_.cancel(false))
 
   def stagedBytes: Long = stagedBytesCache
@@ -385,7 +344,8 @@ object BufferedChannel {
   /** Whole-file UTF-8 read that degrades to None on ANY failure —
     * missing file, checksum error, concurrent deletion between the
     * exists check and the open (the small-state-file protocol shared by
-    * the flush watermark and [[IndexSink]]'s compaction manifest).
+    * the flush watermark, [[EpochStore]]'s compaction manifest and the
+    * [[MaintenanceLease]] body).
     */
   private[streaming] def readFullyUtf8(fs: FileSystem, p: Path): Option[String] =
     scala.util.Try {

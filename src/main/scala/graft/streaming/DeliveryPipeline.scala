@@ -325,15 +325,17 @@ object DeliveryPipeline {
   private def place(sinks: Sinks, scratch: Path, epochId: Long): Unit = {
     val fs = sinks.fs
     def part(dir: String) = new Path(scratch, s"channel=${new Path(dir).getName}")
-    def asObject(dir: String): Unit = {
-      val dst = new Path(dir, s"epoch=$epochId")
+    // Move, then mark committed: the `_SUCCESS` a reader and a restarted
+    // buffer take as proof that the directory is complete.
+    def moveAndMark(dir: String)(dst: Path): Unit = {
       move(fs, part(dir), dst)
       fs.create(new Path(dst, "_SUCCESS"), true).close()
     }
+    def asObject(dir: String): Unit = moveAndMark(dir)(new Path(dir, s"epoch=$epochId"))
     asObject(sinks.backup)
     asObject(sinks.backupFailed)
     Seq(sinks.success -> sinks.successBuf, sinks.failed -> sinks.failedBuf).foreach {
-      case (dir, Some(buf)) => buf.stage(epochId)(move(fs, part(dir), _))
+      case (dir, Some(buf)) => buf.stage(epochId)(moveAndMark(dir))
       case (dir, None)      => asObject(dir)
     }
     fs.delete(scratch, true)

@@ -10,10 +10,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * sibling stores share one marker-activated protocol in
   * [[StoreFamily]]. One root directory holds `epoch=<id>`
   * subdirectories, each written once by a delivery (or maintenance)
-  * pass; readers list the root once ([[readAll]]) and read exactly the
-  * listed dirs; compaction replaces the epoch history with one resolved
-  * snapshot under the same manifest + lease protocol [[IndexSink]]
-  * proved out:
+  * pass. ONE completeness rule: an `epoch=<id>` dir counts once its
+  * `_SUCCESS` marker is present ([[committed]] — Spark writes it last,
+  * at job commit). Readers list the root once ([[readAll]]) and read
+  * exactly the listed dirs; compaction folds exactly those, so a write
+  * in flight is neither read nor folded, fenced or deleted. Compaction
+  * replaces the epoch history with one resolved snapshot under the
+  * same manifest + lease protocol [[IndexSink]] proved out:
   *
   *  - the snapshot is written OUTSIDE the root (`<root>.compact.tmp`),
   *    then renamed in under a fresh `epoch=compact-<gen>` name BEFORE
@@ -100,13 +103,33 @@ object EpochStore {
     (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
   }
 
-  /** The store's current epoch directories (committed or in flight —
-    * listing is point-in-time; see [[compact]] for why that is safe).
-    */
-  private[streaming] def listEpochs(fs: FileSystem, root: Path): Seq[Path] =
+  /** Every `epoch=` directory of the store, committed or not. */
+  private def listRaw(fs: FileSystem, root: Path): Seq[Path] =
     if (!fs.exists(root)) Seq.empty
     else fs.listStatus(root).toSeq.map(_.getPath)
       .filter(_.getName.startsWith("epoch="))
+
+  private def epochId(dir: Path): Option[Long] =
+    scala.util.Try(dir.getName.stripPrefix("epoch=").toLong).toOption
+
+  /** THE completeness rule for an epoch directory: it counts once its
+    * `_SUCCESS` marker is present. Spark creates a write's output
+    * directory at job setup and writes `_SUCCESS` last, at job commit;
+    * [[DeliveryPipeline]]'s placement writes it after the move. A probe
+    * fault reads as "not yet committed", the safe direction.
+    */
+  private[streaming] def committed(fs: FileSystem, dir: Path): Boolean =
+    try fs.exists(new Path(dir, "_SUCCESS"))
+    catch { case _: java.io.IOException => false }
+
+  /** The store's epoch directories that count: every snapshot
+    * (`epoch=compact-<gen>`, renamed in whole) and every numeric
+    * directory that is [[committed]]. Reads, compactions and activation
+    * all see this one set, so a write in flight is invisible to each of
+    * them until it commits.
+    */
+  private[streaming] def listEpochs(fs: FileSystem, root: Path): Seq[Path] =
+    listRaw(fs, root).filter(d => epochId(d).isEmpty || committed(fs, d))
 
   /** All of a store's epoch dirs as one frame — explicit paths from a
     * point-in-time listing (a bare root glob could not distinguish "no
@@ -143,20 +166,6 @@ object EpochStore {
   }
   private[streaming] def hasEpochDirs(spark: SparkSession, root: String): Boolean =
     epochDirNames(spark, root).nonEmpty
-
-  /** The distinct `_epoch` values present in a store's ROWS (a partial-
-    * schema read — only the epoch column is projected, whatever the
-    * store's full schema). This is the ACTIVATION set for stores whose
-    * data is validated by a marker sibling: a marker row for epoch e
-    * exists only after e's data write completed (the last-write rule
-    * every store here follows), so an epoch listed in the data store
-    * but absent from this set is an in-flight delivery.
-    */
-  def rowEpochs(spark: SparkSession, root: String): Set[Long] = {
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    readAll(spark, root, StructType(Seq(StructField("_epoch", LongType))))
-      .distinct().collect().map(_.getLong(0)).toSet
-  }
 
   private def watermarkPath(root: String) =
     new Path(root.stripSuffix("/") + ".compacted.watermark")
@@ -225,11 +234,12 @@ object EpochStore {
   /** Point-in-time operational snapshot of one store — pure metadata
     * (listings, file probes), no data read. What an operator checks
     * before trusting or maintaining a store: how much un-folded
-    * history queries are paying for (`deltaEpochs` vs
-    * `snapshotGenerations`), whether an epoch write died mid-job
-    * (`uncommittedEpochs` — numeric dirs whose own `_SUCCESS` never
-    * landed; an in-flight DELIVERY instead shows as a data store
-    * leading its marker store's epoch count), whether a crashed
+    * history queries are paying for (`deltaEpochs`, the committed
+    * numeric dirs, vs `snapshotGenerations`), whether an epoch write is
+    * in flight or died mid-job (`uncommittedEpochs` — numeric dirs
+    * without `_SUCCESS`, which no read or compaction sees; an in-flight
+    * DELIVERY instead shows as a data store leading its marker store's
+    * epoch count), whether a crashed
     * compaction awaits healing (`inflightManifest`), where the replay
     * fence stands, and whether a maintainer currently holds the lease.
     */
@@ -248,16 +258,13 @@ object EpochStore {
     */
   def status(spark: SparkSession, root: String): Status = {
     val (fs, p) = fsOf(spark, root)
-    val dirs = listEpochs(fs, p)
-    val numeric = dirs.filter(d =>
-      scala.util.Try(d.getName.stripPrefix("epoch=").toLong).isSuccess)
-    val committed = committedEpochs(spark, root)
+    val (numeric, snapshots) = listRaw(fs, p).partition(epochId(_).nonEmpty)
+    val deltas = numeric.count(committed(fs, _))
     Status(
       root = root,
-      deltaEpochs = numeric.size,
-      snapshotGenerations = dirs.size - numeric.size,
-      uncommittedEpochs = numeric.count(d =>
-        !committed.contains(d.getName.stripPrefix("epoch=").toLong)),
+      deltaEpochs = deltas,
+      snapshotGenerations = snapshots.size,
+      uncommittedEpochs = numeric.size - deltas,
       watermark = readWatermark(spark, root),
       inflightManifest = fs.exists(manifestPath(root)),
       leaseHeld = fs.exists(leasePath(root)))
@@ -296,10 +303,13 @@ object EpochStore {
     * `order` value. Replay stability is the point: `dropDuplicates`
     * keeps whichever row a partition surfaces first, so a replayed
     * epoch could land DIFFERENT content, which would then coexist with
-    * a compaction's folded copy of the first attempt. Its one caller is
-    * [[IndexSink]]'s version rule (`registerLatestView`, `liveVectors`,
-    * `compact`); the epoch body marks the same pick with
-    * [[flagOnePerKey]], so the live stores get key-unique input.
+    * a compaction's folded copy of the first attempt. [[IndexSink]]'s
+    * version rule (`registerLatestView`, `liveVectors`, `compact`)
+    * orders by that rule; the live stores order by `_epoch` alone
+    * (their rows are key-unique per epoch, so only the identical copies
+    * of a crashed compaction's snapshot+victim window tie, and
+    * row_number still keeps ONE). The epoch body marks the same pick
+    * with [[flagOnePerKey]], so the live stores get key-unique input.
     */
   def onePerKey(df: DataFrame, key: String,
       order: org.apache.spark.sql.Column): DataFrame = {
@@ -314,21 +324,6 @@ object EpochStore {
     import org.apache.spark.sql.functions._
     df.withColumn(flag,
       row_number().over(Window.partitionBy(key).orderBy(order.desc)) === 1)
-  }
-
-  /** Latest-`_epoch` row per `key` — the live stores' last-write-wins
-    * resolution (row_number, so exact-duplicate rows from a crashed
-    * compaction's snapshot+victim coexistence still yield ONE winner).
-    * Store rows are key-unique per epoch ([[IndexSink.start]]), so only
-    * such identical copies tie.
-    */
-  def latestPerKey(df: DataFrame, key: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    val w = Window.partitionBy(key).orderBy(col("_epoch").desc)
-    df.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .drop("_rn")
   }
 
   /** Finish a compaction that crashed between its snapshot rename and
@@ -403,13 +398,13 @@ object EpochStore {
     * entry) finish the deletions. Stale `.compact.tmp` from a crashed
     * attempt is dropped at entry.
     *
-    * Concurrency-safe vs a live delivery query: the epoch set is
-    * listed ONCE, up front, and both the snapshot read and the
-    * deletion use exactly that set — an epoch delivered while the
-    * snapshot is being written is neither read nor deleted; it simply
-    * rides until the next compaction. Listing after the write would
-    * delete it — permanent loss of everything delivered during
-    * compaction.
+    * Concurrency-safe vs a live delivery query: the victims are the
+    * COMMITTED epoch dirs ([[listEpochs]]), listed ONCE, up front, and
+    * both the snapshot read and the deletion use exactly that set. A
+    * write still in flight at the listing has no `_SUCCESS` yet, so it
+    * is neither read, fenced nor deleted; an epoch delivered while the
+    * snapshot is being written is not listed at all. Both simply ride
+    * until the next compaction.
     *
     * Cross-process exclusivity for the WHOLE maintenance window (heal
     * through deletions): a compaction WAITS for the lease — and throws
@@ -426,19 +421,14 @@ object EpochStore {
     *                      id (prior `epoch=compact-*` snapshots are
     *                      always eligible — their content was already
     *                      judged). Stores whose rows are ACTIVATED by a
-    *                      marker in a SIBLING store pass the set of
-    *                      activated epochs here: a data dir whose
-    *                      marker has not landed yet (an in-flight
-    *                      delivery) would otherwise be resolved as
-    *                      content-less — dropped from the snapshot AND
-    *                      deleted, permanent loss. Ineligible dirs are
-    *                      neither read nor deleted; they ride.
-    *                      Activation-store callers build the set from
-    *                      marker ROWS plus [[committedEpochs]] of the
-    *                      marker store, so a zero-row delivery (no
-    *                      marker rows, but a committed marker dir)
-    *                      still becomes eligible instead of riding
-    *                      forever.
+    *                      marker in a SIBLING store pass their family's
+    *                      activation here ([[StoreFamily]]): a committed
+    *                      data dir whose marker has not committed yet
+    *                      (an in-flight delivery) would otherwise be
+    *                      resolved as content-less — dropped from the
+    *                      snapshot AND deleted, permanent loss.
+    *                      Ineligible dirs are neither read nor deleted;
+    *                      they ride.
     * @param onCommit invoked with the NUMERIC victim epoch ids once
     *                 the renamed snapshot has made their folding
     *                 durable, still under the lease and BEFORE any
@@ -468,24 +458,14 @@ object EpochStore {
     finally lease.close()
   }
 
-  /** The NUMERIC epochs whose dir in this store carries a COMMITTED
-    * write (_SUCCESS present — lands only at job commit, so an
-    * in-flight write never qualifies). For an activation store this is
-    * the proof-of-delivery set even when the delivery had ZERO rows:
-    * the marker is written last, so a committed marker dir means every
-    * sibling data dir of that epoch is complete. [[rowEpochs]] misses
-    * such epochs (no rows to carry the id); the union of both is the
-    * full activation set.
+  /** The NUMERIC epochs of the store's [[committed]] dirs. For a
+    * marker store this is the proof-of-delivery set even when the
+    * delivery had ZERO rows: the marker is written last, so a committed
+    * marker dir means every sibling data dir of that epoch is complete.
     */
   def committedEpochs(spark: SparkSession, root: String): Set[Long] = {
     val (fs, p) = fsOf(spark, root)
-    listEpochs(fs, p).flatMap { dir =>
-      scala.util.Try(dir.getName.stripPrefix("epoch=").toLong).toOption
-        .filter { _ =>
-          try fs.exists(new Path(dir, "_SUCCESS"))
-          catch { case _: java.io.IOException => false }
-        }
-    }.toSet
+    listEpochs(fs, p).flatMap(epochId).toSet
   }
 
   /** The compaction body — caller holds the JVM lock AND the lease. */
@@ -497,11 +477,7 @@ object EpochStore {
     healLocked(fs, root, rootStr) // finish a crashed predecessor first
     val tmp = new Path(rootStr.stripSuffix("/") + ".compact.tmp")
     fs.delete(tmp, true)
-    val old = listEpochs(fs, root).filter { p =>
-      val name = p.getName.stripPrefix("epoch=")
-      name.startsWith("compact-") ||
-        scala.util.Try(name.toLong).toOption.exists(epochEligible)
-    }
+    val old = listEpochs(fs, root).filter(d => epochId(d).forall(epochEligible))
     if (old.isEmpty) return 0L
     writeSnapshot(resolve(spark.read.parquet(old.map(_.toString): _*)),
       tmp.toString)
@@ -528,8 +504,7 @@ object EpochStore {
     // victims coexisting and nothing to trigger cleanup — safe
     // (duplicate-tolerant resolution masks the rows) and self-limiting
     // (the next compaction lists both, re-resolves, and retires them).
-    onCommit(old.map(_.getName.stripPrefix("epoch="))
-      .flatMap(n => scala.util.Try(n.toLong).toOption))
+    onCommit(old.flatMap(epochId))
     val mf = manifestPath(rootStr)
     val out = fs.create(mf, true)
     try out.write((snapshot.getName +: old.map(_.getName) :+ "END")

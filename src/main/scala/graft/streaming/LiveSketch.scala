@@ -73,7 +73,7 @@ object LiveSketch {
     StructField("b", LongType),
     StructField("cnt", LongType),
     StructField("_epoch", LongType))),
-    Sidecar(_.dropDuplicates("r", "b", "_epoch"), fenced = true),
+    Sidecar(_.dropDuplicates("r", "b", "_epoch")),
     oneFile("r", "b", "_epoch"))
   private val Hll = Sub("hll", _ => StructType(Seq(
     StructField("bucket", LongType),
@@ -81,7 +81,7 @@ object LiveSketch {
     StructField("_epoch", LongType))),
     Sidecar(regs => regs.groupBy("bucket")
       .agg(max("reg").as("reg"), max("_epoch").as("_epoch"))
-      .select("bucket", "reg", "_epoch"), fenced = true),
+      .select("bucket", "reg", "_epoch")),
     oneFile("bucket"))
   private def family(root: String) = StoreFamily(root, Cm, Hll)
 

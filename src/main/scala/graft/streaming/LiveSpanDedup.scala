@@ -85,10 +85,9 @@ object LiveSpanDedup {
     * see [[occForDocs]]). Counts KEEP their per-epoch NET rows — the
     * additive merge happens at read, per-epoch identity is the
     * crash-dedup key, and their sum already reflects every retraction —
-    * so their fold is file consolidation plus duplicate scrubbing, with
-    * no activation filter (moving count rows into a snapshot changes no
-    * read-side sum). Declaration order is fold order: occ, counts,
-    * docs.
+    * so their fold is file consolidation plus duplicate scrubbing over
+    * activated epochs, like every sub-store's. Declaration order is
+    * fold order: occ, counts, docs.
     */
   private val Occ = Sub("occ", idType => StructType(Seq(
     StructField("doc_id", idType),

@@ -59,16 +59,10 @@ import graft.operators.Retrieval
   * sees the previous consistent state, never a doc with its old
   * postings deactivated and its new ones missing. The stats sidecar
   * keeps that no-transient property: a stats delta only COUNTS once
-  * its epoch's doclen marker proves the delivery complete (marker dir
-  * committed, or the epoch already folded below the compaction
-  * watermark — both file-metadata checks, no data pass), so a crash
-  * between the stats and doclen writes leaves the delta invisible
-  * until the streaming replay completes the delivery. The
-  * below-the-watermark arm of that test infers activation from epoch
-  * ORDER, so epochs must be written serially in increasing order —
-  * the contract `foreachBatch` provides (a crashed epoch replays
-  * before the next begins), and the one [[LiveSpanDedup]] already
-  * requires for its retraction lookups.
+  * its epoch is activated ([[StoreFamily.activated]] — file metadata,
+  * no data pass), so a crash between the stats and doclen writes
+  * leaves the delta invisible until the streaming replay completes the
+  * delivery.
   *
   * [[read]] returns a plain [[Retrieval.TextIndex]], so the whole
   * existing query surface ([[Retrieval.bm25FromIndex]],
@@ -92,12 +86,10 @@ object LiveTextIndex {
     * by currency, term-clustered. Stats deltas are ADDITIVE with
     * per-epoch identity (the LiveSpanDedup counts rule): folding moves
     * rows without changing the read-side sum, and dedup-by-epoch is the
-    * crash guard, so resolution is consolidation only. Their
-    * eligibility mirrors the READ activation rule — folded below the
-    * fence (read after the doclen fold advanced it) or activated — so
-    * an in-flight delivery's stats dir rides, and the delta of an epoch
-    * whose every doc version was later superseded still folds. One row
-    * per folded epoch: a single-file snapshot.
+    * crash guard, so resolution is consolidation only. Like every
+    * sub-store they fold activated epochs only, the rule [[read]]
+    * counts them by, so an in-flight delivery's stats dir rides. One
+    * row per folded epoch: a single-file snapshot.
     */
   private val Postings = Sub("postings", _ => StructType(Seq(
     StructField("term", StringType),
@@ -120,7 +112,7 @@ object LiveTextIndex {
     StructField("n_delta", LongType),
     StructField("sumdl_delta", LongType),
     StructField("_epoch", LongType))),
-    Sidecar(_.dropDuplicates("_epoch"), activeOnly = true),
+    Sidecar(_.dropDuplicates("_epoch")),
     (df, path, _) => df.repartition(1).write.mode("overwrite").parquet(path))
   private def family(root: String) =
     StoreFamily(root, Postings, Positions, Doclen, Stats)
@@ -178,7 +170,7 @@ object LiveTextIndex {
     val spark = toks.sparkSession
     // Heal BEFORE the retraction lookup (the LiveSpanDedup rule): a
     // crashed doclen compaction's snapshot+victim coexistence is
-    // masked at read by latestPerKey, which the lookup below uses too.
+    // masked at read by the latest-per-doc pick the lookup below uses.
     EpochStore.heal(spark, f.rootOf(Doclen))
     val one = toks.select(col("doc_id").cast("string").as("doc_id"), col("toks"))
     val posted = one
@@ -212,9 +204,9 @@ object LiveTextIndex {
     // driver: bounded metadata, not data.
     val g = one.agg(count(lit(1)).as("n"),
       coalesce(sum(size(col("toks")).cast("long")), lit(0L)).as("s")).head
-    val p = EpochStore.latestPerKey(
+    val p = EpochStore.onePerKey(
         f.readAll(spark, Doclen)
-          .filter(col("_epoch") < epoch), "doc_id")
+          .filter(col("_epoch") < epoch), "doc_id", col("_epoch"))
       .join(one.select("doc_id"), Seq("doc_id"))
       .agg(count(lit(1)).as("n"),
         coalesce(sum(col("dl")), lit(0L)).as("s")).head
@@ -231,9 +223,9 @@ object LiveTextIndex {
       .exists(_ != s"epoch=$epoch")
     val (baseN, baseS) =
       if (virgin && EpochStore.hasEpochDirs(spark, f.rootOf(Doclen))) {
-        val b = EpochStore.latestPerKey(
+        val b = EpochStore.onePerKey(
             f.readAll(spark, Doclen)
-              .filter(col("_epoch") < epoch), "doc_id")
+              .filter(col("_epoch") < epoch), "doc_id", col("_epoch"))
           .agg(count(lit(1)).as("n"),
             coalesce(sum(col("dl")), lit(0L)).as("s")).head
         (b.getLong(0), b.getLong(1))
@@ -255,10 +247,10 @@ object LiveTextIndex {
     * over the current epoch set (lazy frames — each query re-reads the
     * deltas it needs; heal-at-entry like every store read). Empty
     * store → empty index (queries return no rows). The stats
-    * activation test costs one watermark read, one doclen dir listing,
-    * and one `_SUCCESS` probe per live doclen epoch dir — metadata
-    * RPCs bounded by the compaction cadence, the accepted price of the
-    * O(docs) aggregation pass the sidecar removes.
+    * activation test costs one doclen dir listing with its `_SUCCESS`
+    * probes and one watermark read — metadata RPCs bounded by the
+    * compaction cadence, the accepted price of the O(docs) aggregation
+    * pass the sidecar removes.
     */
   def read(spark: SparkSession, root: String): Retrieval.TextIndex = {
     val f = family(root)
@@ -268,22 +260,17 @@ object LiveTextIndex {
     val live = f.current(spark, Postings)
       .select("term", "doc_id", "tf", "dl")
     EpochStore.heal(spark, f.rootOf(Stats))
-    // Stats from the sidecar: Σ net deltas over ACTIVATED epochs — one
-    // row per epoch, against an O(docs) window. A delta counts once
-    // its doclen marker proves the delivery complete: marker dir
-    // committed, or the epoch already folded below the watermark (both
-    // file-metadata checks). The telescoped long sums equal the doclen
+    // Stats from the sidecar: Σ net deltas over ACTIVATED epochs
+    // ([[StoreFamily.activated]]) — one row per epoch, against an
+    // O(docs) window. The telescoped long sums equal the doclen
     // aggregate exactly, and the same (sum.cast(double) / count-as-long)
     // shape keeps the resulting doubles bit-identical to
     // buildTextIndex's, so live scores match a batch rebuild's.
     // dropDuplicates(_epoch) guards the crashed-compaction window where
     // a snapshot and its victim dirs briefly carry identical rows.
-    val wm = EpochStore.readWatermark(spark, f.rootOf(Doclen))
-    val committed = EpochStore.committedEpochs(spark, f.rootOf(Doclen))
     val activeStats = f.readAll(spark, Stats)
       .dropDuplicates("_epoch")
-      .filter(if (committed.isEmpty) col("_epoch") <= wm
-        else col("_epoch") <= wm || col("_epoch").isInCollection(committed))
+      .filter(f.activated(spark)(col("_epoch")))
     // LEGACY FALLBACK: an index written before the sidecar existed has
     // doclen epochs but no stats store at all — computing n=0 from the
     // absent sidecar while still serving every posting would silently

@@ -6,6 +6,8 @@ import java.util.concurrent.{Executors, ScheduledFuture, TimeUnit}
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
+import BufferedChannel.readFullyUtf8
+
 /** Cross-PROCESS serialization for index maintenance (compaction and
   * manifest heal): a lease FILE next to the index root, where
   * [[IndexSink]]'s JVM-local lock cannot reach — the reference's search
@@ -76,7 +78,7 @@ final class MaintenanceLease private (fs: FileSystem, val path: Path,
       // liveness signal forever (mtime must only ever be advanced by
       // the file's actual holder). Token gone -> stop beating for good.
       try if (!released) {
-        MaintenanceLease.readBody(fs, path) match {
+        readFullyUtf8(fs, path) match {
           case Some(b) if b.contains(s"token=$token") =>
             fs.setTimes(path, System.currentTimeMillis(), -1)
           case Some(_) => released = true // confirmed foreign: stand down for good
@@ -95,7 +97,7 @@ final class MaintenanceLease private (fs: FileSystem, val path: Path,
     released = true
     beat.cancel(false)
     try {
-      if (MaintenanceLease.readBody(fs, path).exists(_.contains(s"token=$token")))
+      if (readFullyUtf8(fs, path).exists(_.contains(s"token=$token")))
         fs.delete(path, false)
     } catch { case _: Exception => () }
   }
@@ -181,7 +183,7 @@ object MaintenanceLease {
     // full default TTL).
     def cleanup(): Unit =
       try {
-        val b = readBody(fs, path)
+        val b = readFullyUtf8(fs, path)
         if (b.forall(c => c.isEmpty || bodyStr.startsWith(c)))
           fs.delete(path, false)
       } catch { case _: Exception => () }
@@ -214,18 +216,6 @@ object MaintenanceLease {
       catch { case _: IOException => cleanup(); None }
     }
   }
-
-  private[streaming] def readBody(fs: FileSystem, path: Path): Option[String] =
-    try {
-      val in = fs.open(path)
-      try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](4096)
-        var n = in.read(buf)
-        while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-        Some(new String(bytes.toByteArray, StandardCharsets.UTF_8))
-      } finally in.close()
-    } catch { case _: Exception => None }
 
   /** Best-effort removal of a local path's ChecksumFileSystem sidecar
     * (".&lt;name&gt;.crc" in the same directory) — for cleanup after raw
@@ -271,7 +261,7 @@ object MaintenanceLease {
         case _: IOException => None
       }
     mtime.foreach { m =>
-      if (System.currentTimeMillis() - m > staleBarMs(readBody(fs, path), ttlMs)) {
+      if (System.currentTimeMillis() - m > staleBarMs(readFullyUtf8(fs, path), ttlMs)) {
         val tomb = new Path(path.getParent,
           path.getName + ".broken-" + java.util.UUID.randomUUID())
         val won = try fs.rename(path, tomb) catch { case _: IOException => false }
@@ -282,7 +272,7 @@ object MaintenanceLease {
             try Some(fs.getFileStatus(tomb).getModificationTime)
             catch { case _: Exception => None }
           val staleForSure = tm.exists(t =>
-            System.currentTimeMillis() - t > staleBarMs(readBody(fs, tomb), ttlMs))
+            System.currentTimeMillis() - t > staleBarMs(readFullyUtf8(fs, tomb), ttlMs))
           if (staleForSure) {
             try fs.delete(tomb, false) catch { case _: Exception => () }
           } else {

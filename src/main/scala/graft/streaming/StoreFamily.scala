@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{DataType, StringType, StructType}
 
@@ -10,7 +10,8 @@ import org.apache.spark.sql.types.{DataType, StringType, StructType}
   * `doclen`), [[LiveSpanDedup]] and [[LiveNearDedup]] (marker `docs`)
   * declare only their sub-stores and derive their epochs' rows; the
   * crash protocol below is theirs by construction. [[LiveSketch]] is a
-  * marker-less family: it uses only the family lease and the fence.
+  * marker-less family: it uses only the family lease and per-store
+  * fences.
   *
   *  - MARKER LAST ([[writeMarker]]): an epoch's data sub-stores are
   *    written first, its marker last, so the marker ACTIVATES the
@@ -21,13 +22,19 @@ import org.apache.spark.sql.types.{DataType, StringType, StructType}
   *    doc's latest marker epoch. The marker, not data presence, is the
   *    authority: a re-delivered doc may emit no data rows at all and
   *    must still retire its previous version's rows.
+  *  - ACTIVATION ([[activated]]): an epoch counts once it is at or
+  *    below the marker's fence, or the marker's `epoch=e` dir is
+  *    committed ([[EpochStore.committed]]). The marker is written last,
+  *    so a committed marker means the epoch's data is complete; epochs
+  *    are written serially, so an epoch at or below the fence had its
+  *    marker land.
   *  - REPLAY FENCE ([[writeEpoch]]): an epoch at or below the marker
   *    store's compaction watermark was folded; its replay is a no-op.
-  *    A replay whose marker already landed is activation-eligible, so
-  *    it takes the family lease and re-reads the fence under it.
+  *    A replay whose marker already landed may be activated, so it
+  *    takes the family lease and re-reads the fence under it.
   *  - COMPACTION ([[compact]]): one family lease for the whole pass;
-  *    the activation set is built once; sub-stores fold in declaration
-  *    order, currency-resolved data stores over activated epochs only.
+  *    the activation is read once; sub-stores fold in declaration
+  *    order, each over activated epochs only.
   *
   * Epochs must be written serially in increasing order — the
   * `foreachBatch` contract every store here assumes.
@@ -83,7 +90,16 @@ private[streaming] final case class StoreFamily(root: String,
 
   /** Latest marker row per doc — the currency authority. */
   def latest(spark: SparkSession, idType: DataType = StringType): DataFrame =
-    EpochStore.latestPerKey(readAll(spark, marker, idType), "doc_id")
+    EpochStore.onePerKey(readAll(spark, marker, idType), "doc_id", col("_epoch"))
+
+  /** The family's [[Activation]] now. The marker dirs are listed BEFORE
+    * the fence is read: a compaction advances the fence before it
+    * deletes a folded marker dir, so an epoch is never missed by both.
+    */
+  def activated(spark: SparkSession): Activation = {
+    val committed = EpochStore.committedEpochs(spark, rootOf(marker))
+    Activation(EpochStore.readWatermark(spark, rootOf(marker)), committed)
+  }
 
   /** The current rows of data sub-store `sub`: heal-at-entry, then the
     * currency join. The marker is listed BEFORE the data: an epoch
@@ -126,26 +142,23 @@ private[streaming] final case class StoreFamily(root: String,
     * marker compaction in another process could delete mid-read — the
     * per-store leases cannot see across stores.
     *
-    * The ACTIVATION set is built once, up front: epochs with marker
-    * rows plus committed marker dirs (a zero-row delivery has no marker
-    * rows, but its committed marker dir still proves the epoch
-    * complete; without it the empty data dir would ride forever).
-    * Markers landing later exclude their data epochs from this pass —
-    * the safe direction. Per fold kind:
+    * In a family with a marker, the [[activated]] epochs are read once,
+    * up front, and every sub-store folds only those: an in-flight
+    * epoch's data dir (marker not yet committed) resolved against a
+    * currency that does not know it would drop every row from the
+    * snapshot and then delete the only copy. Markers committing later
+    * exclude their epochs from this pass — the safe direction;
+    * ineligible dirs ride to the next compaction, and snapshot rows
+    * keep their `_epoch`, so reads resolve any mix of snapshot and
+    * deltas. Per fold kind:
     *
-    *  - [[Current]]: resolved by currency, and only ACTIVATED epochs are
-    *    eligible victims — an in-flight epoch's data dir (marker not yet
-    *    landed) resolved against a currency that does not know it would
-    *    drop every row from the snapshot and then delete the only copy.
-    *    Ineligible dirs ride to the next compaction; snapshot rows keep
-    *    their `_epoch`, so reads resolve any mix of snapshot and deltas.
-    *  - [[Marker]]: latest row per doc, keyed snapshot; every listed
-    *    epoch is eligible (its rows ARE the markers). Folding it commits
-    *    those epochs' history, so the replay fence advances under the
-    *    lease.
-    *  - [[Sidecar]]: the store's own resolution; eligible are all epochs,
-    *    or with `activeOnly` those folded below the marker fence (read
-    *    at the sidecar's turn, after the marker fold) or activated.
+    *  - [[Current]]: resolved by currency;
+    *  - [[Marker]]: latest row per doc, keyed snapshot. Folding it
+    *    commits those epochs' history, so the replay fence advances
+    *    under the lease;
+    *  - [[Sidecar]]: the store's own resolution. In a marker-less
+    *    family (no activation) it folds every committed epoch and
+    *    advances its own fence.
     *
     * @return rows kept by the first [[Current]] sub-store, 0 if none
     */
@@ -153,29 +166,18 @@ private[streaming] final case class StoreFamily(root: String,
       leaseTimeoutMs: Long): Long = {
     require(shards > 0, s"shard count must be positive, got $shards")
     EpochStore.withIndexLease(spark, root, leaseTtlMs, leaseTimeoutMs) {
-      val markerRoot = subs.find(_.fold == Marker).map(rootOf)
-      val activated = markerRoot.fold(Set.empty[Long])(m =>
-        EpochStore.rowEpochs(spark, m) ++ EpochStore.committedEpochs(spark, m))
+      val act = if (subs.exists(_.fold == Marker)) Some(activated(spark)) else None
+      val eligible: Long => Boolean = act.fold((_: Long) => true)(a => a(_))
       val kept = subs.flatMap { s =>
         if (s.optional && !EpochStore.hasEpochDirs(spark, rootOf(s))) None
         else {
-          val (resolveFn, eligible, fenced) = s.fold match {
-            case Current(_) => (
-              (data: DataFrame) => resolve(data,
-                latest(spark, data.schema("doc_id").dataType), s, dedup = true),
-              (e: Long) => activated.contains(e), false)
-            case Marker => (
-              (dl: DataFrame) => EpochStore.latestPerKey(dl, "doc_id"),
-              (_: Long) => true, true)
-            case Sidecar(r, activeOnly, fenced) =>
-              val eligible: Long => Boolean =
-                if (!activeOnly) _ => true
-                else {
-                  val wm = EpochStore.readWatermark(spark, markerRoot.get)
-                  e => e <= wm || activated.contains(e)
-                }
-              (r, eligible, fenced)
+          val resolveFn: DataFrame => DataFrame = s.fold match {
+            case Current(_) => data =>
+              resolve(data, latest(spark, data.schema("doc_id").dataType), s, dedup = true)
+            case Marker => EpochStore.onePerKey(_, "doc_id", col("_epoch"))
+            case Sidecar(r) => r
           }
+          val fenced = s.fold == Marker || act.isEmpty
           val n = EpochStore.compact(spark, rootOf(s), resolveFn,
             (df, tmp) => s.layout(df, tmp, shards), leaseTtlMs, leaseTimeoutMs,
             eligible,
@@ -207,12 +209,19 @@ private[streaming] object StoreFamily {
   final case class Current(identity: Seq[String]) extends Fold
   /** The family's one marker store. */
   case object Marker extends Fold
-  /** Additive or merge-only rows folded by `resolve`; see
-    * [[StoreFamily.compact]] for `activeOnly`. `fenced` advances this
-    * sub-store's own replay fence (a marker-less family's stores).
+  /** Additive or merge-only rows folded by `resolve`. */
+  final case class Sidecar(resolve: DataFrame => DataFrame) extends Fold
+
+  /** Which epochs a family's marker has activated: those at or below
+    * the marker's `fence`, and those whose marker dir is `committed`.
     */
-  final case class Sidecar(resolve: DataFrame => DataFrame,
-      activeOnly: Boolean = false, fenced: Boolean = false) extends Fold
+  final case class Activation(fence: Long, committed: Set[Long]) {
+    def apply(epoch: Long): Boolean = epoch <= fence || committed(epoch)
+    /** The same test over an `_epoch` column. */
+    def apply(epoch: Column): Column =
+      if (committed.isEmpty) epoch <= fence
+      else epoch <= fence || epoch.isInCollection(committed)
+  }
 
   /** One sibling store `<root>/<name>`: its schema for a doc_id type,
     * its fold, and its layout. An `optional` store is folded and

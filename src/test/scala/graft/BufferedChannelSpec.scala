@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.streaming.BufferedChannel
@@ -10,6 +11,22 @@ class BufferedChannelSpec extends SparkSpec {
     import spark.implicits._
     (1 to n).map(i => s"""{"i": $i, "tag": "$tag"}""").toDF("value").coalesce(1)
   }
+
+  /** The staging dir a crashed incarnation left for `epoch`: one part
+    * file of `n` records tagged `tag`, with or without its `_SUCCESS`.
+    */
+  private def leftover(root: String, epoch: Long, n: Int, tag: String,
+      committed: Boolean): java.io.File = {
+    val d = new java.io.File(s"$root/.staging/epoch=$epoch")
+    d.mkdirs()
+    val pw = new java.io.PrintWriter(new java.io.File(d, "part-00000"))
+    try (1 to n).foreach(i => pw.println(s"""{"i": $i, "tag": "$tag"}""")) finally pw.close()
+    if (committed) assert(new java.io.File(d, "_SUCCESS").createNewFile())
+    d
+  }
+
+  private def delivered(ch: BufferedChannel): DataFrame =
+    spark.read.text(ch.deliveredObjects.map(_.toString): _*)
 
   test("size threshold flushes immediately; small batches stage until full") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-buf").toString
@@ -149,38 +166,56 @@ class BufferedChannelSpec extends SparkSpec {
     assert(bytes == "abc\n\n", s"bytes mangled: ${bytes.replace("\n", "\\n")}")
   }
 
-  test("recovered epochs: size flush skips them, replay or age delivers") {
-    // A crashed incarnation's staged epoch may be PARTIAL — a size trip
-    // must not promote it ahead of its imminent replay (the replay's
-    // skip-guard would then drop the missing records forever).
+  test("recovered epochs: committed ones size-flush, unmarked ones are dropped") {
+    // A committed leftover is complete (`_SUCCESS` lands last), so a
+    // size trip may promote it, and the watermark then makes its replay
+    // a no-op.
     val tmp = java.nio.file.Files.createTempDirectory("graft-buf11").toString
-    val leftover = new java.io.File(s"$tmp/.staging/epoch=5")
-    leftover.mkdirs()
-    val pw = new java.io.PrintWriter(new java.io.File(leftover, "part-00000"))
-    try (1 to 100).foreach(i => pw.println(s"""{"i": $i}""")) finally pw.close()
+    leftover(tmp, 5, 100, "staged", committed = true)
     val ch = new BufferedChannel(tmp, maxBytes = 100, maxAgeMillis = 60000)
-    assert(ch.stagedBytes > 100, "recovery must register the staged bytes")
-    // Size threshold exceeded — but only by provisional bytes: the trip
-    // must report FALSE (a true-but-promoted-nothing answer would spin
-    // every tick through a no-op flush until the age path fires).
-    assert(!ch.maybeFlush(System.currentTimeMillis()),
-      "size trip must not report true when only provisional bytes exceed the budget")
-    assert(ch.deliveredObjects.isEmpty,
-      "size flush must not deliver a possibly-partial recovered epoch")
-    // The replay overwrites the recovery; NOW the size path delivers it.
-    ch.append(lines(5, "replay"), epochId = 5)
-    assert(ch.deliveredObjects.nonEmpty, "replayed epoch must deliver on size trip")
-    assert(spark.read.text(ch.deliveredObjects.head.toString).count() == 5,
-      "delivery must carry the authoritative replay, not the partial recovery")
-    // And with NO replay, an age flush still rescues a recovered epoch.
+    assert(ch.stagedBytes > 100, "recovery must register the committed bytes")
+    assert(ch.maybeFlush(System.currentTimeMillis()), "size trip must fire")
+    ch.append(lines(100, "staged"), epochId = 5) // the replay
+    ch.flush()
+    assert(delivered(ch).count() == 100, "committed recovery delivered once")
+    // An unmarked leftover may be partial: it is dropped, never promoted,
+    // and every record of the authoritative replay is delivered.
     val tmp2 = java.nio.file.Files.createTempDirectory("graft-buf12").toString
-    val left2 = new java.io.File(s"$tmp2/.staging/epoch=7")
-    left2.mkdirs()
-    val pw2 = new java.io.PrintWriter(new java.io.File(left2, "part-00000"))
-    try pw2.println("""{"i": 1}""") finally pw2.close()
+    leftover(tmp2, 7, 1, "partial", committed = false)
     val ch2 = new BufferedChannel(tmp2, maxBytes = 100, maxAgeMillis = 60000)
-    assert(ch2.maybeFlush(System.currentTimeMillis() + 61000))
-    assert(ch2.deliveredObjects.size == 1, "age flush must rescue recovered epochs")
+    assert(!ch2.maybeFlush(System.currentTimeMillis() + 61000))
+    assert(ch2.deliveredObjects.isEmpty, "an unmarked recovery must not be promoted")
+    ch2.append(lines(5, "replay"), epochId = 7)
+    assert(ch2.deliveredObjects.nonEmpty, "replayed epoch must deliver on size trip")
+    val out = delivered(ch2)
+    assert(out.count() == 5 && out.filter(col("value").contains("replay")).count() == 5,
+      "delivery must carry the authoritative replay, not the partial recovery")
+  }
+
+  test("a committed recovered dir promoted by an age flush is not re-delivered") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-buf18").toString
+    leftover(tmp, 5, 5, "staged", committed = true)
+    val ch = new BufferedChannel(tmp, maxBytes = Long.MaxValue / 2, maxAgeMillis = 60000)
+    assert(ch.maybeFlush(System.currentTimeMillis() + 61000))
+    assert(ch.deliveredObjects.size == 1, "age flush must deliver the recovery")
+    ch.append(lines(5, "staged"), epochId = 5) // the replay of the same epoch
+    ch.close()
+    assert(delivered(ch).count() == 5,
+      s"recovered epoch delivered ${delivered(ch).count() / 5.0}x (expected exactly once)")
+  }
+
+  test("an unmarked recovered dir is deleted at construction; replay delivers once") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-buf19").toString
+    val left = leftover(tmp, 5, 1, "partial", committed = false)
+    val ch = new BufferedChannel(tmp, maxBytes = Long.MaxValue / 2,
+      maxAgeMillis = Long.MaxValue / 2)
+    assert(!left.exists(), "an unmarked staging dir must be deleted at construction")
+    assert(ch.stagedBytes == 0)
+    ch.append(lines(5, "full"), epochId = 5)
+    ch.close()
+    val out = delivered(ch)
+    assert(out.count() == 5 && out.filter(col("value").contains("full")).count() == 5,
+      s"replay must be delivered exactly once, without the partial: ${out.count()}")
   }
 
   test("watermark survives a crash between delete-old and rename-tmp") {
@@ -229,60 +264,50 @@ class BufferedChannelSpec extends SparkSpec {
     assert(total == 20, s"epoch 42 delivered ${total / 20.0}x (expected exactly once)")
   }
 
-  test("size flush never advances the watermark past a stranded provisional epoch") {
-    // Loss scenario if the size path promoted non-provisional epochs
-    // PAST a provisional one: incarnation A stages 41 (committed in the
-    // streaming checkpoint, so never replayed) and 42, then crashes
-    // unflushed. B recovers both as provisional; the replay resolves
-    // only 42 (the uncommitted tail), a fresh 43 arrives, and a size
-    // trip fires. Promoting {42,43} would set the watermark to 43 while
-    // 41 is still staged — the next restart would then discard 41 as
-    // "already delivered" and its records would be gone. The prefix
-    // rule defers the size flush instead; every record survives.
+  test("committed recovered epochs flush with fresh ones, none lost or repeated") {
+    // Incarnation A stages 41 (committed in the streaming checkpoint, so
+    // never replayed) and 42, then crashes unflushed. B recovers both
+    // committed dirs as complete epochs; the replay rewrites 42, a fresh
+    // 43 arrives, and the size trip promotes 41, 42 and 43 together,
+    // advancing the watermark to 43 with nothing below it left staged.
     val tmp = java.nio.file.Files.createTempDirectory("graft-buf17").toString
     val a = new BufferedChannel(tmp, maxBytes = Long.MaxValue / 2, maxAgeMillis = Long.MaxValue / 2)
     a.append(lines(10, "e41"), epochId = 41)
     a.append(lines(10, "e42"), epochId = 42)
-    // crash A (nothing flushed). B recovers 41+42 as provisional.
+    // crash A (nothing flushed).
     val b = new BufferedChannel(tmp, maxBytes = 300, maxAgeMillis = Long.MaxValue / 2)
     b.append(lines(10, "e42"), epochId = 42) // replay of the uncommitted tail
     b.append(lines(10, "e43"), epochId = 43) // size threshold now exceeded
-    assert(b.deliveredObjects.isEmpty,
-      "size flush must defer while a provisional epoch heads the staging order")
-    // crash B. C recovers everything — nothing was dropped at construction —
-    // and the shutdown (age-path) flush delivers all three epochs.
+    assert(b.deliveredObjects.size == 1, "size flush must promote every staged epoch")
+    // crash B. C recovers nothing more and re-delivers nothing.
     val c = new BufferedChannel(tmp, maxBytes = Long.MaxValue / 2, maxAgeMillis = Long.MaxValue / 2)
     c.close()
-    val total = c.deliveredObjects.map(o => spark.read.text(o.toString).count()).sum
-    assert(total == 30, s"records lost across the stranded-provisional restart: $total of 30")
+    val out = delivered(c)
+    assert(out.count() == 30, s"records lost or repeated across the restarts: ${out.count()} of 30")
+    Seq("e41", "e42", "e43").foreach(t =>
+      assert(out.filter(col("value").contains(t)).count() == 10, s"$t not delivered exactly once"))
   }
 
-  test("a provisional epoch promoted by close() stays below no watermark — its replay still delivers") {
-    // Incarnation 1 crashes mid-write of epoch 5 (1 of its part files
-    // staged). Incarnation 2's query dies before replaying 5; close()'s
-    // shutdown flush promotes the partial recovery. The watermark must
-    // NOT cover 5: incarnation 3's authoritative replay would otherwise
-    // be discarded as already-delivered — permanent loss of the records
-    // missing from the partial part-set. Duplicates of the promoted
-    // partial are the accepted cost (at-least-once, the reference's own
-    // retry model).
+  test("an epoch promoted by close() is under the watermark: replay is a no-op") {
+    // Incarnation 1 stages epoch 5 and crashes. Incarnation 2's query
+    // dies before replaying 5; close()'s shutdown flush promotes the
+    // committed recovery and advances the watermark over it, so
+    // incarnation 3's replay of 5 is skipped and every record of it is
+    // delivered exactly once.
     val tmp = java.nio.file.Files.createTempDirectory("graft-buf16").toString
-    val leftover = new java.io.File(s"$tmp/.staging/epoch=5")
-    leftover.mkdirs()
-    val pw = new java.io.PrintWriter(new java.io.File(leftover, "part-00000"))
-    try pw.println("""{"i": 1, "tag": "partial"}""") finally pw.close()
+    val first = new BufferedChannel(tmp, maxBytes = Long.MaxValue / 2,
+      maxAgeMillis = Long.MaxValue / 2)
+    first.append(lines(5, "full"), epochId = 5)
     val second = new BufferedChannel(tmp, maxBytes = Long.MaxValue / 2,
       maxAgeMillis = Long.MaxValue / 2)
-    second.close() // promotes the provisional recovery
+    second.close() // promotes the committed recovery
     assert(second.deliveredObjects.size == 1, "shutdown flush must deliver the recovery")
     val third = new BufferedChannel(tmp, maxBytes = Long.MaxValue / 2,
       maxAgeMillis = Long.MaxValue / 2)
     third.append(lines(5, "full"), epochId = 5)
     third.flush()
-    assert(third.deliveredObjects.size == 2,
-      "authoritative replay of a provisionally-promoted epoch was dropped — permanent loss")
-    val all = spark.read.text(third.deliveredObjects.map(_.toString): _*)
-    assert(all.filter(col("value").contains("full")).count() == 5,
+    assert(third.deliveredObjects.size == 1, "a promoted epoch's replay was delivered again")
+    assert(delivered(third).filter(col("value").contains("full")).count() == 5,
       "replayed records missing from delivery")
   }
 

@@ -10,9 +10,9 @@ class IntervalJoinRuleSpec extends SparkSpec {
   private def naive = {
     val ev = queries.Tables.events(spark, sfDir)
     val e1 = ev.select(col("user_id"), col("ts").as("ts1"), col("event_id").as("id1"))
-    val e2 = ev.select(col("user_id"), col("ts").as("ts2"), col("event_id").as("id2"))
+    val e2 = ev.select(col("user_id").as("u2"), col("ts").as("ts2"), col("event_id").as("id2"))
     e1.join(e2,
-      e1("user_id") === e2("user_id") &&
+      col("user_id") === col("u2") &&
         col("ts2") > col("ts1") &&
         col("ts2") <= col("ts1") + expr("INTERVAL 5 MINUTES"))
       .select("id1", "id2")
