@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
 /** Table maintenance surface — the reference's index-management ops
   * (SURVEY §2A A13–A16) over parquet tables:
   *
-  * - A13 count / A14 full scan: `spark.table(name)` once registered.
+  * - A13 count / A14 full scan: `spark.table(name)` once registered
+  *   (`_count` is [[graft.streaming.IndexSink.count]]).
   * - A15 delete-by-predicate (`delete_all_documents`,
   *   reference oss_utils.py:50-51): rewrite-excluding over the table
   *   path. Plain parquet has no deletion vectors, so a delete is a
@@ -153,10 +154,6 @@ object Maintenance {
 
   def dropIndex(spark: SparkSession, name: String): Unit =
     spark.sql(s"DROP TABLE IF EXISTS $name")
-
-  /** A13: `_count` with match_all ≡ count(*). */
-  def countIndex(spark: SparkSession, name: String): Long =
-    spark.table(name).count()
 
   private[graft] def deleteRecursively(p: Path): Unit = {
     if (Files.isDirectory(p)) {

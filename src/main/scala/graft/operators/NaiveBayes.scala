@@ -78,19 +78,21 @@ object NaiveBayes {
     * (classes = ["pos"], prior slot = the bias — added LAST per the
     * kernel contract, the same float op order as `sum(tf·w) + bias`),
     * so [[score]]'s whole plan collapses to the compiled scan-side
-    * pass. Valid when the vocabulary is broadcast-sized — the deployed
-    * shape of a fastText-style quality classifier; the join spelling
-    * in [[score]] remains the unbounded-vocabulary path.
+    * pass. None when the weight table does not fit the driver
+    * ([[DriverLocal.fits]]): the join spelling in [[score]] is the
+    * unbounded-vocabulary path.
     */
-  def localizeBinary(model: NbModel): graft.functions.NbScoreKernel.LocalMultiModel = {
-    import org.apache.spark.unsafe.types.UTF8String
-    val weights = new java.util.HashMap[UTF8String, Array[Double]]()
-    model.weights.select(col("term"), col("w")).collect().foreach { r =>
-      weights.put(UTF8String.fromString(r.getString(0)), Array(r.getDouble(1)))
+  def localizeBinary(model: NbModel): Option[graft.functions.NbScoreKernel.LocalMultiModel] =
+    if (!DriverLocal.fits(model.weights.count())) None
+    else {
+      import org.apache.spark.unsafe.types.UTF8String
+      val weights = new java.util.HashMap[UTF8String, Array[Double]]()
+      model.weights.select(col("term"), col("w")).collect().foreach { r =>
+        weights.put(UTF8String.fromString(r.getString(0)), Array(r.getDouble(1)))
+      }
+      Some(graft.functions.NbScoreKernel.LocalMultiModel(
+        Array("pos"), Array(model.bias), weights))
     }
-    graft.functions.NbScoreKernel.LocalMultiModel(
-      Array("pos"), Array(model.bias), weights)
-  }
 
   /** A trained K-class model: `weights` = (cls, term, w) DENSE over
     * class × vocabulary — w(t,c) = ln((c_c(t)+1)/(T_c+V)) with the
@@ -179,28 +181,30 @@ object NaiveBayes {
     * .nbScoreMulti]] — zero exchanges; see NbExpressions.scala for the
     * fusion argument). The collect is V×K rows — the SAME driver
     * materialization `scoreMulti`'s `broadcast(model.weights)` already
-    * performs per scoring plan, done once and reused; only valid for
-    * feature spaces whose V×K is broadcast-sized by construction
-    * (char-n-gram langid features). Classes sort ascending — the pivot
-    * column order every caller uses.
+    * performs per scoring plan, done once and reused. None when the
+    * V×K rows do not fit the driver ([[DriverLocal.fits]]): then
+    * [[scoreMulti]] scores. Classes sort ascending — the pivot column
+    * order every caller uses.
     */
-  def localize(model: NbMultiModel): graft.functions.NbScoreKernel.LocalMultiModel = {
-    import org.apache.spark.unsafe.types.UTF8String
-    val pr = model.priors.collect()
-    val classes = pr.map(_.getString(0)).sorted
-    val idx = classes.zipWithIndex.toMap
-    val priors = new Array[Double](classes.length)
-    pr.foreach(r => priors(idx(r.getString(0))) = r.getDouble(1))
-    val weights = new java.util.HashMap[UTF8String, Array[Double]]()
-    model.weights.select(col("term"), col("cls"), col("w")).collect()
-      .foreach { r =>
-        val t = UTF8String.fromString(r.getString(0))
-        var vec = weights.get(t)
-        if (vec == null) { vec = new Array[Double](classes.length); weights.put(t, vec) }
-        vec(idx(r.getString(1))) = r.getDouble(2)
-      }
-    graft.functions.NbScoreKernel.LocalMultiModel(classes, priors, weights)
-  }
+  def localize(model: NbMultiModel): Option[graft.functions.NbScoreKernel.LocalMultiModel] =
+    if (!DriverLocal.fits(model.weights.count())) None
+    else {
+      import org.apache.spark.unsafe.types.UTF8String
+      val pr = model.priors.collect()
+      val classes = pr.map(_.getString(0)).sorted
+      val idx = classes.zipWithIndex.toMap
+      val priors = new Array[Double](classes.length)
+      pr.foreach(r => priors(idx(r.getString(0))) = r.getDouble(1))
+      val weights = new java.util.HashMap[UTF8String, Array[Double]]()
+      model.weights.select(col("term"), col("cls"), col("w")).collect()
+        .foreach { r =>
+          val t = UTF8String.fromString(r.getString(0))
+          var vec = weights.get(t)
+          if (vec == null) { vec = new Array[Double](classes.length); weights.put(t, vec) }
+          vec(idx(r.getString(1))) = r.getDouble(2)
+        }
+      Some(graft.functions.NbScoreKernel.LocalMultiModel(classes, priors, weights))
+    }
 
   /** Score (doc_id, toks) against a trained model:
     * (doc_id, log_odds) with log_odds = bias + Σ_t tf(t)·w(t) over

@@ -807,31 +807,51 @@ object TrainingData {
       .select(col("doc_id"), col("lang"), charNgrams(col("lo"), 3).as("toks"))
     // Model-memo (the q79/ANN precedent): the train-once artifact is
     // the LOCALIZED model (the V×K map the broadcast join would ship
-    // anyway) — localize collects the dense weight table, so the
-    // trained tables themselves need no entry. Scoring is then one
-    // compiled scan-side pass (functions/NbExpressions.scala) — the
-    // tf agg, the (doc, cls) evidence agg, and the class pivot were all
-    // doc_id-keyed, so the kernel replaces BOTH corpus shuffles and
-    // the pivot with per-document state; the only exchange left is
-    // the output orderBy. NbLocalSpec pins the kernel against the
-    // exchange spelling on the emitted rounded scores.
-    val local = artifact(s, dir, "nbmulti-local")(graft.operators.NaiveBayes.localize(
-      graft.operators.NaiveBayes.trainMulti(docs, col("lang"))))
+    // anyway) when it fits the driver, else the trained tables.
+    val model = artifact(s, dir, "nbmulti") {
+      val m = graft.operators.NaiveBayes.trainMulti(docs, col("lang"))
+      graft.operators.NaiveBayes.localize(m).toRight(m)
+    }
+    langidScored(docs, model)
+  }
+
+  /** q51b's per-class rounded scores and argmax over (doc_id, lang,
+    * toks). A localized model (Right) scores in one compiled scan-side
+    * pass (functions/NbExpressions.scala): the tf agg, the (doc, cls)
+    * evidence agg and the class pivot were all doc_id-keyed, so the
+    * kernel replaces both corpus shuffles and the pivot with
+    * per-document state. A model past the driver gate (Left) scores
+    * through the join spelling and the class pivot. NbLocalSpec pins
+    * the two spellings' rows equal.
+    */
+  private[graft] def langidScored(docs: DataFrame, model: Either[
+      graft.operators.NaiveBayes.NbMultiModel,
+      graft.functions.NbScoreKernel.LocalMultiModel]): DataFrame = {
     val classes = Seq("de", "en", "es", "fr", "zh")
-    val ci = local.classes.zipWithIndex.toMap
-    // Explicit-class projection (pivot(classes) semantics): a class
-    // absent from the trained model yields a null column.
-    val scoreCols = classes.map { c =>
-      ci.get(c) match {
-        case Some(i) => Par.r2(col("sc")(i)).as(s"s_$c")
-        case None => lit(null).cast("double").as(s"s_$c")
-      }
+    val wide = model match {
+      case Right(local) =>
+        val ci = local.classes.zipWithIndex.toMap
+        // Explicit-class projection (pivot(classes) semantics): a class
+        // absent from the trained model yields a null column.
+        val scoreCols = classes.map { c =>
+          ci.get(c) match {
+            case Some(i) => Par.r2(col("sc")(i)).as(s"s_$c")
+            case None => lit(null).cast("double").as(s"s_$c")
+          }
+        }
+        docs.select(col("doc_id"), col("lang"),
+            graft.functions.NbFunctions.nbScoreMulti(col("toks"), local).as("sc"))
+          .filter(col("sc").isNotNull) // the join spelling's inner-join drop
+          .select(col("doc_id") +: col("lang") +: scoreCols: _*)
+      case Left(m) =>
+        val pivoted = graft.operators.NaiveBayes.scoreMulti(docs, m)
+          .select(col("doc_id"), col("cls"), Par.r2(col("score")).as("score"))
+          .groupBy("doc_id").pivot("cls", classes).agg(first("score"))
+        docs.select("doc_id", "lang").join(pivoted, Seq("doc_id"))
+          .select(col("doc_id") +: col("lang") +: classes.map(c => col(c).as(s"s_$c")): _*)
     }
     val Seq(sDe, sEn, sEs, sFr, sZh) = classes.map(c => col(s"s_$c"))
-    docs.select(col("doc_id"), col("lang"),
-        graft.functions.NbFunctions.nbScoreMulti(col("toks"), local).as("sc"))
-      .filter(col("sc").isNotNull) // the exchange spelling's inner-join drop
-      .select(col("doc_id") +: col("lang") +: scoreCols: _*)
+    wide
       .withColumn("lang_pred",
         when(sDe >= sEn && sDe >= sEs && sDe >= sFr && sDe >= sZh, "de")
           .when(sEn >= sEs && sEn >= sFr && sEn >= sZh, "en")
@@ -2813,20 +2833,34 @@ object TrainingData {
     // Model-memo + compiled scoring (the q51b shape): train once per
     // (session, dir) — exact integer counts, deterministic — and score
     // scan-side through the one-class kernel (log_odds = sc(0); the
-    // no-vocab-term NULL reproduces score()'s inner-join drop).
-    // NbLocalSpec pins the binary kernel against the join spelling.
+    // no-vocab-term NULL reproduces score()'s inner-join drop). A
+    // model past the driver gate scores through score()'s join.
+    // NbLocalSpec pins the two spellings' rows equal.
     val lab = t(s, dir, "documents")
       .select(col("doc_id"), tokens(col("text")).as("toks"), col("lang"))
-    val local = artifact(s, dir, "nbbin-local|en")(
-      graft.operators.NaiveBayes.localizeBinary(
-        graft.operators.NaiveBayes.train(lab, col("lang") === "en")))
-    lab.select(col("doc_id"),
-        graft.functions.NbFunctions.nbScoreMulti(col("toks"), local).as("sc"))
-      .filter(col("sc").isNotNull)
-      .select(col("doc_id"), Par.r2(col("sc")(0)).as("log_odds"),
-        (Par.r2(col("sc")(0)) > 0).cast("int").as("pred"))
-      .orderBy("doc_id")
+    val model = artifact(s, dir, "nbbin|en") {
+      val m = graft.operators.NaiveBayes.train(lab, col("lang") === "en")
+      graft.operators.NaiveBayes.localizeBinary(m).toRight(m)
+    }
+    nbQualityScored(lab, model)
   }
+
+  /** q106's rounded log-odds and decision over (doc_id, toks): the
+    * one-class kernel for a localized model (Right), score()'s join
+    * spelling for one past the driver gate (Left).
+    */
+  private[graft] def nbQualityScored(lab: DataFrame, model: Either[
+      graft.operators.NaiveBayes.NbModel,
+      graft.functions.NbScoreKernel.LocalMultiModel]): DataFrame =
+    model.fold(
+      m => graft.operators.NaiveBayes.score(lab, m),
+      local => lab.select(col("doc_id"),
+          graft.functions.NbFunctions.nbScoreMulti(col("toks"), local).as("sc"))
+        .filter(col("sc").isNotNull)
+        .select(col("doc_id"), col("sc")(0).as("log_odds")))
+      .select(col("doc_id"), Par.r2(col("log_odds")).as("log_odds"),
+        (Par.r2(col("log_odds")) > 0).cast("int").as("pred"))
+      .orderBy("doc_id")
 
   // ------------------------------------------ q107: highlight
 

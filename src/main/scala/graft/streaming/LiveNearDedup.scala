@@ -84,8 +84,6 @@ object LiveNearDedup {
     // input): it serializes the whole-directory OVERWRITE itself
     // against a concurrent compaction's snapshot read of the same dir.
     f.writeEpoch(spark, epoch) {
-      EpochStore.heal(spark, f.rootOf(Sig))
-      EpochStore.heal(spark, f.rootOf(Docs))
       val one = docs.select(col("doc_id"), col("text"))
       TrainingData.signaturesDf(one)
         .select(col("doc_id"),

@@ -124,19 +124,14 @@ object LiveSpanDedup {
     * rule) so it pushes into the parquet scan as a static IN filter:
     * footer min/max prunes the bucket-clustered files and row groups,
     * where the plain broadcast join this replaces scanned every row of
-    * the store per upsert epoch.
+    * the store per upsert epoch. Every stored row carries its bucket
+    * (`docs/MIGRATION.md` covers stores written before the column).
     */
   def occForDocs(spark: SparkSession, root: String, idType: DataType,
       docs: DataFrame): DataFrame = {
     val bks = docs.select(bucketOf(col("doc_id")).as("bk"))
       .distinct().collect().map(_.getInt(0)).toSeq
-    val store = family(root).readAll(spark, Occ, idType)
-    // The isNull arm keeps rows written before the bucket column
-    // existed (legacy stores read them back as bk = null): they cannot
-    // be pruned, but silently excluding them would skip their
-    // retraction forever — graceful degradation, not silent loss.
-    if (bks.isEmpty) store.filter(lit(false))
-    else store.filter(col("bk").isNull || col("bk").isInCollection(bks))
+    family(root).readAll(spark, Occ, idType).filter(col("bk").isInCollection(bks))
   }
 
   /** Append one epoch's gram state, retracting superseded versions.
@@ -168,14 +163,6 @@ object LiveSpanDedup {
       k: Int, shards: Int): Unit = {
     val spark = toks.sparkSession
     val idType = toks.schema("doc_id").dataType
-    // Heal BEFORE the retraction lookup: a crashed occ compaction
-    // leaves snapshot + victim dirs whose identical rows would
-    // double-count the superseded version (harmless for marking,
-    // persisted-wrong for a NET count). The dropDuplicates below is
-    // the second line of defense for the unreadable-manifest window
-    // heal cannot close.
-    EpochStore.heal(spark, f.rootOf(Occ))
-    EpochStore.heal(spark, f.rootOf(Docs))
     val occ = SpanDedup.gramOccurrences(toks, k)
       .withColumn("bk", bucketOf(col("doc_id")))
       .withColumn("_epoch", lit(epoch))
@@ -191,24 +178,14 @@ object LiveSpanDedup {
       .parquet(f.dir(Occ, epoch))
       .groupBy("gh").agg(count(lit(1)).as("cnt"))
     // ... minus the superseded versions' counts: each re-delivered
-    // doc's CURRENT version (max docs-store epoch STRICTLY BEFORE this
-    // one) contributes the negation of its stored occurrence counts.
-    // The strict filter is what makes a streaming REPLAY idempotent: a
-    // crash after this epoch's docs marker but before the offset
-    // commit re-runs writeDelta with the marker already present —
-    // unfiltered, `prior` would resolve to the epoch's OWN version and
-    // retract the grams it just added (net 0) while skipping the real
-    // prior-version retraction, permanently corrupting the counts.
-    // Restricted to epochs < this one, the replay reads exactly the
-    // state the first attempt read and rewrites identical rows.
+    // doc's version before this epoch ([[StoreFamily.superseded]])
+    // contributes the negation of its stored occurrence counts.
     // localCheckpoint: `prior` (the re-delivered docs — tiny) feeds
     // three consumers (the isEmpty probe, the bucket collection, the
     // retraction join); one materialization beats three docs-store
     // scans.
-    val prior = f.readAll(spark, Docs, idType)
-      .filter(col("_epoch") < epoch)
-      .join(toks.select("doc_id"), Seq("doc_id"))
-      .groupBy("doc_id").agg(max(col("_epoch")).as("_prev"))
+    val prior = f.superseded(spark, toks, epoch, idType)
+      .select(col("doc_id"), col("_epoch").as("_prev"))
       .localCheckpoint()
     val net =
       if (prior.isEmpty) gross

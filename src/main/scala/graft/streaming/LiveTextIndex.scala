@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -127,6 +127,9 @@ object LiveTextIndex {
     *
     * All writes are whole-directory overwrites keyed by the epoch id,
     * so a replayed epoch (streaming restart) lands a CONSISTENT set.
+    * The delta is one query per store written — postings, positions
+    * (when maintained), the stats row, the doclen marker — and
+    * collects nothing to the driver.
     * PRECONDITION: `toks` is key-unique (two versions of one doc would
     * double-count tf), deterministic and cheap to re-read, as
     * [[IndexSink.start]]'s resolved epoch frame is.
@@ -168,10 +171,6 @@ object LiveTextIndex {
   private def writeDeltaBody(toks: DataFrame, f: StoreFamily, epoch: Long,
       shards: Int, positions: Boolean): Unit = {
     val spark = toks.sparkSession
-    // Heal BEFORE the retraction lookup (the LiveSpanDedup rule): a
-    // crashed doclen compaction's snapshot+victim coexistence is
-    // masked at read by the latest-per-doc pick the lookup below uses.
-    EpochStore.heal(spark, f.rootOf(Doclen))
     val one = toks.select(col("doc_id").cast("string").as("doc_id"), col("toks"))
     val posted = one
       .select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
@@ -196,45 +195,15 @@ object LiveTextIndex {
     // the contributions of the versions they supersede — each version's
     // dl enters the sum once at delivery and leaves once at
     // supersession, so Σ deltas telescopes to the CURRENT corpus's
-    // exact (n, Σdl). The superseded lookup reads only doclen epochs
-    // STRICTLY EARLIER than this one (the replay-idempotence rule: the
-    // epoch's own already-landed marker must not retract itself), and
-    // costs one O(docs) doclen pass PER DELIVERY — the pass the sidecar
-    // removes from every query. Two one-row aggregates collected to the
-    // driver: bounded metadata, not data.
-    val g = one.agg(count(lit(1)).as("n"),
-      coalesce(sum(size(col("toks")).cast("long")), lit(0L)).as("s")).head
-    val p = EpochStore.onePerKey(
-        f.readAll(spark, Doclen)
-          .filter(col("_epoch") < epoch), "doc_id", col("_epoch"))
-      .join(one.select("doc_id"), Seq("doc_id"))
-      .agg(count(lit(1)).as("n"),
-        coalesce(sum(col("dl")), lit(0L)).as("s")).head
-    // LEGACY BACKFILL: the first delta on an index whose stats store
-    // has no dirs besides (possibly) this epoch's own — a pre-sidecar
-    // index being upgraded, or a replay of that first delta — folds
-    // the whole legacy corpus's (n, Σdl) into its delta row, so the
-    // read-side sum covers the pre-sidecar history. The own-dir
-    // exclusion is what keeps the REPLAY deterministic: the first
-    // attempt's stats dir must not flip the store to "populated" and
-    // shrink the rewrite to an incremental row. Base and superseded
-    // overlap is fine — base counts the old versions, p retracts them.
-    val virgin = !EpochStore.epochDirNames(spark, f.rootOf(Stats))
-      .exists(_ != s"epoch=$epoch")
-    val (baseN, baseS) =
-      if (virgin && EpochStore.hasEpochDirs(spark, f.rootOf(Doclen))) {
-        val b = EpochStore.onePerKey(
-            f.readAll(spark, Doclen)
-              .filter(col("_epoch") < epoch), "doc_id", col("_epoch"))
-          .agg(count(lit(1)).as("n"),
-            coalesce(sum(col("dl")), lit(0L)).as("s")).head
-        (b.getLong(0), b.getLong(1))
-      } else (0L, 0L)
-    spark.createDataFrame(
-        java.util.Arrays.asList(
-          Row(baseN + g.getLong(0) - p.getLong(0),
-            baseS + g.getLong(1) - p.getLong(1), epoch)),
-        Stats.schema(StringType))
+    // exact (n, Σdl). Two one-row aggregates cross-joined into the
+    // row written: one query, nothing collected to the driver.
+    val gross = one.agg(count(lit(1)).as("gn"),
+      coalesce(sum(size(col("toks")).cast("long")), lit(0L)).as("gs"))
+    val retired = f.superseded(spark, one, epoch)
+      .agg(count(lit(1)).as("pn"), coalesce(sum(col("dl")), lit(0L)).as("ps"))
+    gross.crossJoin(retired)
+      .select((col("gn") - col("pn")).as("n_delta"),
+        (col("gs") - col("ps")).as("sumdl_delta"), lit(epoch).as("_epoch"))
       .write.mode("overwrite")
       .parquet(f.dir(Stats, epoch))
     // Currency marker LAST (see class doc): only after everything it
@@ -250,7 +219,9 @@ object LiveTextIndex {
     * activation test costs one doclen dir listing with its `_SUCCESS`
     * probes and one watermark read — metadata RPCs bounded by the
     * compaction cadence, the accepted price of the O(docs) aggregation
-    * pass the sidecar removes.
+    * pass the sidecar removes. (n, avgdl) come from the stats store
+    * alone: every index keeps one from its first delivery
+    * (`docs/MIGRATION.md` covers indexes written before it existed).
     */
   def read(spark: SparkSession, root: String): Retrieval.TextIndex = {
     val f = family(root)
@@ -268,27 +239,12 @@ object LiveTextIndex {
     // buildTextIndex's, so live scores match a batch rebuild's.
     // dropDuplicates(_epoch) guards the crashed-compaction window where
     // a snapshot and its victim dirs briefly carry identical rows.
-    val activeStats = f.readAll(spark, Stats)
+    val stats = f.readAll(spark, Stats)
       .dropDuplicates("_epoch")
       .filter(f.activated(spark)(col("_epoch")))
-    // LEGACY FALLBACK: an index written before the sidecar existed has
-    // doclen epochs but no stats store at all — computing n=0 from the
-    // absent sidecar while still serving every posting would silently
-    // zero the BM25 statistics. Detection is a pure dir listing; the
-    // fallback is the pre-sidecar O(docs) aggregate. Mixed mode is
-    // safe: the FIRST delta written to such a store backfills the
-    // legacy corpus into its row (see writeDeltaBody), so as soon as
-    // any stats dir exists, the sidecar sum is complete.
-    val stats =
-      if (!EpochStore.hasEpochDirs(spark, f.rootOf(Stats)) &&
-          EpochStore.hasEpochDirs(spark, f.rootOf(Doclen)))
-        f.latest(spark).select(col("dl"))
-          .agg(count(lit(1)).cast("double").as("n"),
-            (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))
-      else activeStats
-        .agg(coalesce(sum(col("n_delta")), lit(0L)).cast("double").as("n"),
-          (sum(col("sumdl_delta")).cast("double") / sum(col("n_delta")))
-            .as("avgdl"))
+      .agg(coalesce(sum(col("n_delta")), lit(0L)).cast("double").as("n"),
+        (sum(col("sumdl_delta")).cast("double") / sum(col("n_delta")))
+          .as("avgdl"))
     val df = live.groupBy("term")
       .agg(count(lit(1)).cast("double").as("df"))
     Retrieval.TextIndex(live, df, stats)

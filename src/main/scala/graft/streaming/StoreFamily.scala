@@ -32,6 +32,13 @@ import org.apache.spark.sql.types.{DataType, StringType, StructType}
   *    store's compaction watermark was folded; its replay is a no-op.
   *    A replay whose marker already landed may be activated, so it
   *    takes the family lease and re-reads the fence under it.
+  *  - HEAL AT ENTRY ([[writeEpoch]]): every sub-store finishes a
+  *    crashed compaction's deletions before the epoch's body reads
+  *    anything, so a snapshot and its victim dirs never both count.
+  *  - SUPERSEDED VERSIONS ([[superseded]]): each re-delivered doc's
+  *    latest marker row strictly before the epoch — what the epoch
+  *    retires. Strictly before keeps a replay idempotent: the epoch's
+  *    own landed marker never supersedes itself.
   *  - COMPACTION ([[compact]]): one family lease for the whole pass;
   *    the activation is read once; sub-stores fold in declaration
   *    order, each over activated epochs only.
@@ -53,11 +60,12 @@ private[streaming] final case class StoreFamily(root: String,
     throw new IllegalStateException(s"store family $root has no marker"))
 
   /** Run one epoch's delta `body` unless the fence says the epoch was
-    * folded. A replay whose marker already landed takes the family
-    * lease (serializing against compaction only — a rare restart path,
-    * never the hot delivery path) and re-checks the fence under it: the
-    * epoch is activation-eligible, so a concurrent compaction could
-    * otherwise fold it between the fence check and the body's reads or
+    * folded, healing every sub-store first. A replay whose marker
+    * already landed takes the family lease (serializing against
+    * compaction only — a rare restart path, never the hot delivery
+    * path) and re-checks the fence under it: the epoch is
+    * activation-eligible, so a concurrent compaction could otherwise
+    * fold it between the fence check and the body's reads or
     * overwrites. First deliveries need no lease: an unmarked epoch is
     * never folded out from under its writer.
     *
@@ -68,15 +76,18 @@ private[streaming] final case class StoreFamily(root: String,
     * folded — and then the fence read after the probe sees the fold.
     * Probing after the fence would leave a window where the fold lands
     * in between and the replay proceeds lease-free on a stale fence.
+    * The heals run inside the family lease, so the lease order is the
+    * compaction's: family first, then each sub-store's.
     */
   def writeEpoch(spark: SparkSession, epoch: Long)(body: => Unit): Unit = {
     val probe = new org.apache.hadoop.fs.Path(dir(marker, epoch))
-    val fenced = rootOf(marker)
+    def fencedBody(): Unit = if (EpochStore.aboveFence(spark, rootOf(marker), epoch)) {
+      subs.foreach(s => EpochStore.heal(spark, rootOf(s)))
+      body
+    }
     if (probe.getFileSystem(spark.sessionState.newHadoopConf()).exists(probe))
-      EpochStore.withIndexLease(spark, root) {
-        if (EpochStore.aboveFence(spark, fenced, epoch)) body
-      }
-    else if (EpochStore.aboveFence(spark, fenced, epoch)) body
+      EpochStore.withIndexLease(spark, root)(fencedBody())
+    else fencedBody()
   }
 
   /** The epoch's marker rows (`doc_id` plus any marker payload), written
@@ -91,6 +102,18 @@ private[streaming] final case class StoreFamily(root: String,
   /** Latest marker row per doc — the currency authority. */
   def latest(spark: SparkSession, idType: DataType = StringType): DataFrame =
     EpochStore.onePerKey(readAll(spark, marker, idType), "doc_id", col("_epoch"))
+
+  /** The versions `epoch` supersedes: for each doc of `docs` (a
+    * `doc_id` column) delivered before, its latest marker row strictly
+    * below `epoch`, payload included. The join runs first, so the
+    * window covers the epoch's re-delivered docs only.
+    */
+  def superseded(spark: SparkSession, docs: DataFrame, epoch: Long,
+      idType: DataType = StringType): DataFrame =
+    EpochStore.onePerKey(readAll(spark, marker, idType)
+        .filter(col("_epoch") < epoch)
+        .join(docs.select("doc_id"), Seq("doc_id")),
+      "doc_id", col("_epoch"))
 
   /** The family's [[Activation]] now. The marker dirs are listed BEFORE
     * the fence is read: a compaction advances the fence before it

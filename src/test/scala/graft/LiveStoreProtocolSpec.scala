@@ -379,37 +379,31 @@ class LiveStoreProtocolSpec extends SparkSpec {
       s"sidecar-backed stats must not scan the doclen store:\n$plan")
   }
 
-  test("LiveTextIndex: a pre-sidecar index (no stats store) serves exact " +
-      "stats via the read fallback, and the first new delta backfills " +
-      "the legacy corpus into its row") {
+  test("LiveTextIndex: an upsert delta writes each store in one query " +
+      "and collects nothing to the driver") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-text-legacy")
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    val root = java.nio.file.Files.createTempDirectory("graft-text-jobs")
       .toString + "/index"
     def toks(rows: Seq[(Long, String)]) = rows.toDF("doc_id", "body")
       .select(col("doc_id").cast("string").as("doc_id"),
         graft.functions.TextFunctions.tokens(col("body")).as("toks"))
-    def stats(): (Double, Double) = {
-      val r = LiveTextIndex.read(spark, root).stats
-        .select(col("n"), col("avgdl")).head
-      (r.getDouble(0), r.getDouble(1))
-    }
     LiveTextIndex.writeDelta(toks(Seq(1L -> "three word doc",
       2L -> "five little words right here")), root, 0L)
-    LiveTextIndex.writeDelta(toks(Seq(3L -> "four more words arrive")),
-      root, 1L)
-    // Simulate an index written before the sidecar existed.
-    deleteDir(s"$root/stats")
-    assert(stats() == (3.0, 4.0),
-      "read fallback must recover stats from the doclen store")
-    // The first delta on the upgraded store backfills epochs 0-1's
-    // corpus into its own row; the sidecar sum is complete from then on.
-    LiveTextIndex.writeDelta(toks(Seq(2L -> "two words")), root, 2L)
-    assert(stats() == (3.0, 3.0)) // dl 3,2,4 after the upsert
-    // And a replay of the backfill epoch rewrites the identical row.
-    LiveTextIndex.writeDelta(toks(Seq(2L -> "two words")), root, 2L)
-    assert(stats() == (3.0, 3.0))
-    LiveTextIndex.compact(spark, root, shards = 2)
-    assert(stats() == (3.0, 3.0))
+    // Each executed query by what it does: the store dir it writes, or
+    // "action" for one that returns rows to the driver.
+    val queries = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    observingQueries(qe => queries.add(qe.logical.collectFirst {
+      case c: InsertIntoHadoopFsRelationCommand =>
+        c.outputPath.toString.stripPrefix("file:").stripPrefix(root + "/")
+    }.getOrElse("action"))) {
+      LiveTextIndex.writeDelta(toks(Seq(2L -> "two words", 3L -> "a new doc")),
+        root, 1L)
+    }
+    assert(queries.toArray.toSeq.filterNot(_.toString.contains("graft-marker")) ==
+      Seq("postings/epoch=1", "stats/epoch=1", "doclen/epoch=1"))
+    val r = LiveTextIndex.read(spark, root).stats.select("n", "avgdl").head
+    assert((r.getDouble(0), r.getDouble(1)) == (3.0, 8.0 / 3))
   }
 
   test("EpochStore.status: the operational surface reports delta backlog, " +

@@ -24,7 +24,7 @@ class NbLocalSpec extends SparkSpec {
       .select(col("doc_id"), col("lang"), lower(col("text")).as("lo"))
       .select(col("doc_id"), col("lang"), charNgrams(col("lo"), 3).as("toks"))
     val model = NaiveBayes.trainMulti(docs, col("lang"))
-    val local = NaiveBayes.localize(model)
+    val local = NaiveBayes.localize(model).get
 
     val exchange = NaiveBayes.scoreMulti(docs, model)
       .select(col("doc_id"), col("cls"), Par.r2(col("score")).as("r"))
@@ -79,7 +79,7 @@ class NbLocalSpec extends SparkSpec {
     val lab = graft.queries.Tables.t(spark, sfDir, "documents")
       .select(col("doc_id"), tokens(col("text")).as("toks"), col("lang"))
     val model = NaiveBayes.train(lab, col("lang") === "en")
-    val local = NaiveBayes.localizeBinary(model)
+    val local = NaiveBayes.localizeBinary(model).get
     assert(local.classes.toSeq == Seq("pos") && local.priors.head == model.bias)
     val join = NaiveBayes.score(lab, model)
       .select(col("doc_id"), Par.r2(col("log_odds")).as("r"))
@@ -103,7 +103,7 @@ class NbLocalSpec extends SparkSpec {
       (2L, Seq("the", "dog"), "en"),
       (3L, Seq("el", "perro"), "es")).toDF("doc_id", "toks", "cls")
     val model = NaiveBayes.trainMulti(df, col("cls"))
-    val local = NaiveBayes.localize(model)
+    val local = NaiveBayes.localize(model).get
     assert(local.classes.toSeq == Seq("de", "en", "es"))
     val priors = model.priors.as[(String, Double)].collect().toMap
     local.classes.zipWithIndex.foreach { case (c, i) =>
@@ -118,5 +118,59 @@ class NbLocalSpec extends SparkSpec {
       local.classes.zipWithIndex.foreach { case (c, i) =>
         assert(vec(i) == wTbl((c, t)), s"w($c,$t)") }
     }
+  }
+
+  test("localize and localizeBinary decline a weight table of MaxRows + 1 " +
+      "rows without collecting it") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
+    import org.apache.spark.sql.execution.command.DataWritingCommand
+    import graft.operators.DriverLocal.MaxRows
+    val ids = spark.range(MaxRows + 1)
+    val binary = NaiveBayes.NbModel(
+      ids.select(col("id").cast("string").as("term"), col("id").cast("double").as("w")),
+      0.0)
+    val multi = NaiveBayes.NbMultiModel(
+      ids.select(lit("en").as("cls"), col("id").cast("string").as("term"),
+        col("id").cast("double").as("w")),
+      Seq(("en", 0.0)).toDF("cls", "prior"))
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    observingQueries(qe => plans.add(qe.logical)) {
+      assert(NaiveBayes.localizeBinary(binary).isEmpty)
+      assert(NaiveBayes.localize(multi).isEmpty)
+    }
+    // The size check's two global counts (plus the listener's own
+    // marker write); no query returns the weight rows.
+    val queries = plans.toArray(Array.empty[LogicalPlan]).toSeq
+      .filterNot(_.exists(_.isInstanceOf[DataWritingCommand]))
+    assert(queries.size == 2)
+    queries.foreach { p =>
+      assert(p match {
+        case a: Aggregate => a.groupingExpressions.isEmpty
+        case _ => false
+      }, s"not a global count:\n$p")
+    }
+  }
+
+  test("past the driver gate, q51b's and q106's join spellings emit the " +
+      "kernel spellings' rows") {
+    import graft.functions.TextFunctions.{charNgrams, tokens}
+    import graft.queries.TrainingData
+    val docs = graft.queries.Tables.t(spark, sfDir, "documents")
+    val grams = docs
+      .select(col("doc_id"), col("lang"), lower(col("text")).as("lo"))
+      .select(col("doc_id"), col("lang"), charNgrams(col("lo"), 3).as("toks"))
+    val multi = NaiveBayes.trainMulti(grams, col("lang"))
+    val langid = TrainingData.langidScored(grams, Right(NaiveBayes.localize(multi).get))
+      .collect().toSeq
+    assert(langid.nonEmpty)
+    assert(TrainingData.langidScored(grams, Left(multi)).collect().toSeq == langid)
+    val lab = docs.select(col("doc_id"), tokens(col("text")).as("toks"), col("lang"))
+    val binary = NaiveBayes.train(lab, col("lang") === "en")
+    val quality = TrainingData.nbQualityScored(lab,
+        Right(NaiveBayes.localizeBinary(binary).get))
+      .collect().toSeq
+    assert(quality.nonEmpty)
+    assert(TrainingData.nbQualityScored(lab, Left(binary)).collect().toSeq == quality)
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.Maintenance
+import graft.streaming.IndexSink
 import graft.sources.KinesisShaped
 import graft.sources.KinesisShaped.StreamConfig
 
@@ -166,7 +167,7 @@ class SourcesSpec extends SparkSpec {
     assert(remaining.count() == 100 - deleted)
     // A16/A13: sharded catalog table round-trip.
     Maintenance.createIndex("graft_test_index", remaining, shards = 4)
-    assert(Maintenance.countIndex(spark, "graft_test_index") == 100 - deleted)
+    assert(IndexSink.count(spark, "graft_test_index") == 100 - deleted)
     assert(spark.table("graft_test_index").rdd.getNumPartitions == 4)
     Maintenance.dropIndex(spark, "graft_test_index")
     assert(!spark.catalog.tableExists("graft_test_index"))
